@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.IndexLayout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -559,7 +560,7 @@ object Similarity {
   def semDedupServe(spark: SparkSession, path: String, batch: DataFrame,
                     eps: Double = 0.8, nprobe: Int = 2): DataFrame = {
     import spark.implicits._
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = IndexLayout.Ivf.read(spark, path, "centroids")
     val lists = liveLists(spark, path)
       .select($"cell", $"neighbor_id", $"vc".cast("array<float>").as("vc"), $"nc")
     val q = batch
@@ -1087,7 +1088,7 @@ object Similarity {
     * manifest read every index consumer starts from. */
   private[graft] def ivfCommitted(spark: SparkSession, path: String): Seq[String] = {
     import spark.implicits._
-    spark.read.parquet(s"$path/commits").as[String].collect().toSeq
+    IndexLayout.Ivf.read(spark, path, "commits").as[String].collect().toSeq
   }
 
   /** Committed tombstones (neighbor_id) — empty if no delete ever ran. */
@@ -1096,7 +1097,7 @@ object Similarity {
     import spark.implicits._
     val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
     if (del.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(del))
-      spark.read.parquet(s"$path/deletes")
+      IndexLayout.Ivf.read(spark, path, "deletes")
         .filter($"batch_id".isin(committed: _*)).select($"neighbor_id")
     else spark.emptyDataset[Long].toDF("neighbor_id")
   }
@@ -1115,7 +1116,8 @@ object Similarity {
 
   /** The LIVE view of the on-disk lists: committed batches only,
     * tombstoned vectors anti-joined out (tombstones are bounded
-    * curation metadata — broadcast), partition column pinned to int.
+    * curation metadata — broadcast), `cell` an int by the declared
+    * [[IndexLayout.Ivf]] schema.
     * Every reader — serve, retrain, compact — starts here, so a torn
     * append or a deleted vector can never be probed, averaged into a
     * retrain centroid, or migrated. `snapshot` pins the view to an
@@ -1124,8 +1126,7 @@ object Similarity {
                                snapshot: Option[Seq[String]] = None): DataFrame = {
     import spark.implicits._
     val committed = snapshot.getOrElse(ivfCommitted(spark, path))
-    spark.read.parquet(s"$path/lists")
-      .withColumn("cell", $"cell".cast("int"))
+    IndexLayout.Ivf.read(spark, path, "lists")
       .filter($"batch_id".isin(committed: _*))
       .join(broadcast(ivfTombstones(spark, path, committed)),
         Seq("neighbor_id"), "left_anti")
@@ -1167,7 +1168,7 @@ object Similarity {
   private[graft] def ivfAppendRaw(spark: SparkSession, path: String,
                                   newVecs: DataFrame, commit: Boolean): Unit = {
     import spark.implicits._
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = IndexLayout.Ivf.read(spark, path, "centroids")
     val batchId = java.util.UUID.randomUUID.toString
     val e = Tables.fanout(newVecs)
       .select($"vec_id", $"embedding", sqrt(dotF($"embedding", $"embedding")).as("norm"))
@@ -1279,7 +1280,7 @@ object Similarity {
       .groupBy($"cid").agg(array_sort(collect_list(struct($"pos", $"m"))).as("pm"))
       .select($"cid", expr("transform(pm, x -> cast(x.m as float))").as("mvec"))
       .withColumn("mnorm", sqrt(dotF($"mvec", $"mvec")))
-    val row = means.join(spark.read.parquet(s"$path/centroids"), Seq("cid"))
+    val row = means.join(IndexLayout.Ivf.read(spark, path, "centroids"), Seq("cid"))
       .select(when($"mnorm" * $"cnorm" === 0d, 0d)
         .otherwise(lit(1.0) - dotF($"mvec", col("cvec")) / ($"mnorm" * $"cnorm"))
         .as("d"))
@@ -1307,7 +1308,7 @@ object Similarity {
   def ivfReclaimableFraction(spark: SparkSession, path: String): Double = {
     import spark.implicits._
     val committed = ivfCommitted(spark, path)
-    val counts = spark.read.parquet(s"$path/lists")
+    val counts = IndexLayout.Ivf.read(spark, path, "lists")
       .select($"batch_id", $"neighbor_id")
       .join(broadcast(ivfTombstones(spark, path, committed))
         .withColumn("dead", lit(1)), Seq("neighbor_id"), "left_outer")
@@ -1348,8 +1349,7 @@ object Similarity {
     // rows physically (one scan that reads only cell/batch_id/
     // neighbor_id — parquet prunes the payload columns)
     val committed = ivfCommitted(spark, path)
-    val raw = spark.read.parquet(s"$path/lists")
-      .withColumn("cell", $"cell".cast("int"))
+    val raw = IndexLayout.Ivf.read(spark, path, "lists")
     val dead = ivfTombstones(spark, path, committed)
     val dirty = raw.join(dead, Seq("neighbor_id"), "left_semi").select($"cell")
       .unionAll(raw.filter(!$"batch_id".isin(committed: _*)).select($"cell"))
@@ -1410,13 +1410,14 @@ object Similarity {
                             snapshot: Option[Seq[String]] = None): IvfCtx = {
     import spark.implicits._
     // the LIVE view: committed batches only (torn appends invisible),
-    // tombstoned vectors filtered, partition column pinned to int so
-    // the routing filter and the probe equi-join never depend on
-    // partitionColumnTypeInference session conf. An explicit
-    // `snapshot` (ivfSnapshot) pins the view — snapshot isolation
-    // against concurrent appends/deletes.
+    // tombstoned vectors filtered; every directory reads under its
+    // declared IndexLayout.Ivf schema (no footer-inference job, `cell`
+    // an int for the routing filter and the probe equi-join whatever
+    // the partitionColumnTypeInference conf). An explicit `snapshot`
+    // (ivfSnapshot) pins the view — snapshot isolation against
+    // concurrent appends/deletes.
     IvfCtx(
-      spark.read.parquet(s"$path/centroids").localCheckpoint(),
+      IndexLayout.Ivf.read(spark, path, "centroids").localCheckpoint(),
       liveLists(spark, path, snapshot)
         .select($"cell", $"neighbor_id",
           $"vc".cast("array<float>").as("vc"), $"nc", $"label", $"q8", $"qn"))
@@ -1443,8 +1444,7 @@ object Similarity {
     // the candidate scan touches. RecallSpec pins files-opened ==
     // probed cells.
     val routed = ivfRoute(ctx.centroids, panel, nprobe).localCheckpoint()
-    val probedCells = routed.select($"cell").distinct()
-      .collect().map(_.getAs[Number](0).intValue()).toSeq
+    val probedCells = IndexLayout.partitionsOf(routed.select($"cell"))
     val probed = lists.filter($"cell".isin(probedCells: _*))
     // external queries number their OWN id namespace: a batch vector
     // that happens to share a corpus id must not lose that corpus
@@ -2124,7 +2124,7 @@ object Similarity {
     * treat a mismatch as "everything is uncoded". */
   private def pqStamp(spark: SparkSession, path: String): String = {
     import spark.implicits._
-    pqStampOf(spark.read.parquet(s"$path/centroids")
+    pqStampOf(IndexLayout.Ivf.read(spark, path, "centroids")
       .select($"cid", $"cvec").collect())
   }
 
@@ -2155,11 +2155,10 @@ object Similarity {
         .select($"cell", $"neighbor_id",
           lit(null).cast("array<int>").as("codes"), $"nc")
     val stamp = pqStamp(spark, path)
-    val committed = spark.read.parquet(s"$path/pq/commits")
+    val committed = IndexLayout.Pq.read(spark, path, "pq/commits")
       .filter($"cstamp" === stamp)
       .select($"pq_batch").as[String].collect().toSeq
-    spark.read.parquet(s"$path/pq/codes")
-      .withColumn("cell", $"cell".cast("int"))
+    IndexLayout.Pq.read(spark, path, "pq/codes")
       .filter($"pq_batch".isin(committed: _*))
       .join(broadcast(ivfTombstones(spark, path, ivfCommitted(spark, path))),
         Seq("neighbor_id"), "left_anti")
@@ -2171,7 +2170,7 @@ object Similarity {
   private def pqResiduals(spark: SparkSession, path: String,
                           rows: DataFrame): DataFrame = {
     import spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = IndexLayout.Ivf.read(spark, path, "centroids")
       .select($"cid".as("cell"), $"cvec")
     rows.join(broadcast(cents), Seq("cell"))
       .select($"neighbor_id".as("vec_id"), $"cell", $"nc",
@@ -2199,7 +2198,7 @@ object Similarity {
     import spark.implicits._
     // one centroid collect serves both the stamp and the dimension
     // (r17 opt: the attach used to run two centroid jobs back-to-back)
-    val centRows = spark.read.parquet(s"$path/centroids")
+    val centRows = IndexLayout.Ivf.read(spark, path, "centroids")
       .select($"cid", $"cvec").collect()
     val stamp = pqStampOf(centRows)
     val live = liveLists(spark, path)
@@ -2258,10 +2257,10 @@ object Similarity {
   }
 
   /** The attach-time OPQ rotation persisted on the books rows — None
-    * for a plain-PQ sidecar. Driver-side dim² floats (broadcast-scale
-    * metadata, like the centroids). */
+    * for a plain-PQ sidecar (and for books written before the column
+    * existed, which read it as null). Driver-side dim² floats
+    * (broadcast-scale metadata, like the centroids). */
   private def pqRotation(bk: DataFrame): Option[Array[Float]] = {
-    if (!bk.columns.contains("rot")) return None
     val r = bk.select(col("rot")).head()
     if (r.isNullAt(0)) None else Some(r.getSeq[Float](0).toArray)
   }
@@ -2298,7 +2297,7 @@ object Similarity {
     * [[pqReattach]], which [[Retention.retentionSweep]] runs
     * automatically after a sweep-driven retrain. */
   def pqBooksStale(spark: SparkSession, path: String): Boolean = {
-    val bk = spark.read.parquet(s"$path/pq/books")
+    val bk = IndexLayout.Pq.read(spark, path, "pq/books")
     bk.select(col("cstamp")).head().getString(0) != pqStamp(spark, path)
   }
 
@@ -2311,16 +2310,15 @@ object Similarity {
     * the live lists + the bounded Lloyd step), and it inherits
     * [[pqAttach]]'s lease/pin/commit-last discipline. */
   def pqReattach(spark: SparkSession, path: String): Unit = {
-    val bk = spark.read.parquet(s"$path/pq/books")
-    val meta = bk.select(col("m"), col("kpq")).head()
+    val meta = IndexLayout.Pq.read(spark, path, "pq/books")
+      .select(col("m"), col("kpq"), col("opq_iters")).head()
     // the OPQ posture persists with the books: a reattach after a
     // retrain re-learns the rotation over the NEW residuals with the
     // attach-time iteration budget. Books persisted before the OPQ
-    // column existed carry no opq_iters — they were trained plain-PQ,
-    // so default 0 (stay plain) instead of throwing; the sweep
-    // automates this call over whatever sidecar vintage it finds.
-    val iters = if (bk.columns.contains("opq_iters"))
-      bk.select(col("opq_iters")).head().getInt(0) else 0
+    // column existed read opq_iters as null — they were trained
+    // plain-PQ, so default 0 (stay plain) instead of throwing; the
+    // sweep automates this call over whatever sidecar vintage it finds.
+    val iters = if (meta.isNullAt(2)) 0 else meta.getInt(2)
     pqAttach(spark, path, meta.getInt(0), meta.getInt(1), iters)
   }
 
@@ -2342,7 +2340,7 @@ object Similarity {
                                   commit: Boolean): Unit = {
     import spark.implicits._
     val stamp = pqStamp(spark, path)
-    val bk = spark.read.parquet(s"$path/pq/books")
+    val bk = IndexLayout.Pq.read(spark, path, "pq/books")
     val meta = bk.select($"m", $"dsub").head()
     val (m, dsub) = (meta.getInt(0), meta.getInt(1))
     val books = bk.select($"sub", $"code", $"cvec", $"chalf")
@@ -2393,11 +2391,10 @@ object Similarity {
     val committed =
       if (!hfs.exists(new org.apache.hadoop.fs.Path(s"$path/pq/commits")))
         Seq.empty[String]
-      else spark.read.parquet(s"$path/pq/commits")
+      else IndexLayout.Pq.read(spark, path, "pq/commits")
         .filter($"cstamp" === stamp)
         .select($"pq_batch").as[String].collect().toSeq
-    val raw = spark.read.parquet(s"$path/pq/codes")
-      .withColumn("cell", $"cell".cast("int"))
+    val raw = IndexLayout.Pq.read(spark, path, "pq/codes")
     val dead = ivfTombstones(spark, path, ivfCommitted(spark, path))
     val dirty = raw.join(dead, Seq("neighbor_id"), "left_semi").select($"cell")
       .unionAll(raw.filter(!$"pq_batch".isin(committed: _*)).select($"cell"))
@@ -2453,7 +2450,7 @@ object Similarity {
 
   private[graft] def pqCtx(spark: SparkSession, path: String): PqCtx = {
     import spark.implicits._
-    val bk = spark.read.parquet(s"$path/pq/books").localCheckpoint()
+    val bk = IndexLayout.Pq.read(spark, path, "pq/books").localCheckpoint()
     val meta = bk.select($"m", $"dsub").head()
     PqCtx(ivfCtx(spark, path), bk.select($"sub", $"code", $"cvec", $"chalf"),
       meta.getInt(0), meta.getInt(1), pqRotation(bk), pqLiveCodes(spark, path))
@@ -2474,8 +2471,7 @@ object Similarity {
       .getOrElse(lists.filter($"neighbor_id" < nQueries)
         .select($"neighbor_id".as("vec_id"), $"vc".as("embedding"), $"nc".as("norm")))
     val routed = ivfRoute(ctx.ivf.centroids, panel, nprobe).localCheckpoint()
-    val probedCells = routed.select($"cell").distinct()
-      .collect().map(_.getAs[Number](0).intValue()).toSeq
+    val probedCells = IndexLayout.partitionsOf(routed.select($"cell"))
     // an OPQ sidecar builds each query's LUT from the ROTATED query
     // (q·r = (qR)·(rR)); qcdot and the exact rerank stay unrotated
     val lutPanel = ctx.rotation.fold(panel.select($"vec_id", $"embedding"))(r =>

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftConfig, Tables}
+import graft.sources.IndexLayout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -328,9 +329,8 @@ object TextAnalysis {
     val dead = lineIndexDeletes(spark, path, committed)
     val newLines = segs(newDocs).select($"doc_id", $"line")
       .distinct().localCheckpoint()
-    val buckets = newLines
-      .select(pmod(xxhash64($"line"), lit(nBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val buckets = IndexLayout.partitionsOf(newLines
+      .select(pmod(xxhash64($"line"), lit(nBuckets)).cast("int").as("b")))
     val dfIndex = spark.read.parquet(s"$path/lines")
       .select($"bucket".cast("int").as("bucket"), $"line", $"doc_id", $"batch_id")
       .filter($"bucket".isin(buckets: _*))
@@ -3024,9 +3024,8 @@ object TextAnalysis {
     val qp = queries.localCheckpoint()
     val qTokens = qp.select($"t1".as("token"))
       .unionAll(qp.select($"t2".as("token"))).distinct().localCheckpoint()
-    val buckets = qTokens
-      .select(pmod(xxhash64($"token"), lit(nBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val buckets = IndexLayout.partitionsOf(qTokens
+      .select(pmod(xxhash64($"token"), lit(nBuckets)).cast("int").as("b")))
     val posQ = spark.read.parquet(s"$path/pos")
       .select($"bucket".cast("int").as("bucket"), $"token", $"doc_id", $"p",
         $"batch_id")
@@ -3650,8 +3649,8 @@ object TextAnalysis {
                     qMod: Int = 20, queries: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     val root = impactRoot(spark, path)
-    val post0 = spark.read.parquet(s"$root/postings")
-      .select($"bucket".cast("int").as("bucket"), $"token", $"doc_id", $"impact")
+    val post0 = IndexLayout.ImpactBm25.read(spark, root, "postings")
+      .select($"bucket", $"token", $"doc_id", $"impact")
     bm25ServeRouted(spark, root, post0, k, qMod, queries)
   }
 
@@ -3670,8 +3669,8 @@ object TextAnalysis {
                         qMod: Int = 20, queries: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     val root = impactRoot(spark, path)
-    val post0 = spark.read.parquet(s"$root/postings")
-      .select($"bucket".cast("int").as("bucket"), $"token", $"doc_id", $"impact")
+    val post0 = IndexLayout.ImpactBm25.read(spark, root, "postings")
+      .select($"bucket", $"token", $"doc_id", $"impact")
       .join(impactDeletesAt(spark, root), Seq("doc_id"), "left_anti")
     bm25ServeRouted(spark, root, post0, k, qMod, queries)
   }
@@ -3685,12 +3684,11 @@ object TextAnalysis {
     import spark.implicits._
     queries match {
       case Some(q0) =>
-        val nBuckets = spark.read.parquet(s"$root/stats")
+        val nBuckets = IndexLayout.ImpactBm25.read(spark, root, "stats")
           .head().getAs[Int]("n_buckets")
         val q = q0.select($"query_id", $"token").localCheckpoint()
-        val buckets = q
-          .select(pmod(xxhash64($"token"), lit(nBuckets)).cast("int").as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
+        val buckets = IndexLayout.partitionsOf(q
+          .select(pmod(xxhash64($"token"), lit(nBuckets)).cast("int").as("b")))
         bm25TopK(post0.filter($"bucket".isin(buckets: _*)).drop("bucket"), q, k)
       case None =>
         val q = post0.filter($"doc_id" % qMod === 0)
@@ -3720,7 +3718,7 @@ object TextAnalysis {
     import spark.implicits._
     val del = new org.apache.hadoop.fs.Path(s"$root/deletes")
     if (del.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(del))
-      spark.read.parquet(s"$root/deletes").select($"doc_id").distinct()
+      IndexLayout.ImpactBm25.read(spark, root, "deletes").select($"doc_id").distinct()
     else spark.emptyDataset[Long].toDF("doc_id")
   }
 
@@ -3733,10 +3731,10 @@ object TextAnalysis {
   def bm25DeletedFraction(spark: SparkSession, path: String): Double = {
     import spark.implicits._
     val root = impactRoot(spark, path)
-    val n = spark.read.parquet(s"$root/stats").head().getAs[Long]("n_docs")
+    val n = IndexLayout.ImpactBm25.read(spark, root, "stats").head().getAs[Long]("n_docs")
     if (n == 0L) return 0.0
     val dead = impactDeletesAt(spark, root)
-      .join(spark.read.parquet(s"$root/postings").select($"doc_id"),
+      .join(IndexLayout.ImpactBm25.read(spark, root, "postings").select($"doc_id"),
         Seq("doc_id"), "left_semi")
       .count()
     dead.toDouble / n
@@ -3763,7 +3761,7 @@ object TextAnalysis {
       // reads either the old complete state or the new complete state,
       // never a mix, and a crash mid-rebuild is invisible
       val root = impactRoot(spark, path)
-      val st = spark.read.parquet(s"$root/stats").head()
+      val st = IndexLayout.ImpactBm25.read(spark, root, "stats").head()
       val survivors = docs.join(impactDeletesAt(spark, root),
         Seq("doc_id"), "left_anti")
       bm25WriteImpactFrom(survivors, path,
@@ -3895,13 +3893,45 @@ object TextAnalysis {
     * consistency-checked on every read, so an index can never be
     * served or appended under the wrong modulus. */
   private[graft] def rawIndexMeta(spark: SparkSession, path: String): (Seq[String], Int) = {
+    val (log, nb) = rawIndexLog(spark, path)
+    (log.map(_.batchId), nb)
+  }
+
+  /** One stats-log row: a committed append's (or delete's) deltas. */
+  private[graft] final case class RawLogRow(batchId: String, nDocsDelta: Long,
+                                            sumDlDelta: Long)
+
+  /** [[rawIndexMeta]] with the log's deltas: the whole stats log in one
+    * collect, so a serve derives N and avgdl without a second scan. */
+  private[graft] def rawIndexLog(spark: SparkSession, path: String): (Seq[RawLogRow], Int) = {
     import spark.implicits._
-    val rows = spark.read.parquet(s"$path/stats_log")
-      .select($"batch_id", $"n_buckets").collect()
+    val rows = IndexLayout.RawBm25.read(spark, path, "stats_log")
+      .select($"batch_id", $"n_buckets", $"n_docs_delta", $"sum_dl_delta").collect()
     val nb = rows.map(_.getInt(1)).distinct
     require(nb.length == 1,
       s"inconsistent n_buckets in $path/stats_log: ${nb.mkString(",")}")
-    (rows.map(_.getString(0)).toSeq, nb.head)
+    (rows.toSeq.map(r => RawLogRow(r.getString(0), r.getLong(2), r.getLong(3))), nb.head)
+  }
+
+  /** (n_docs, am) of a raw index at the `committed` batch set, summed
+    * on the driver from its stats-log rows: n_docs = Σ n_docs_delta,
+    * am = (1000 · Σ sum_dl_delta) div n_docs — the integers the SQL
+    * aggregate `(1000 * t_tok) div n_docs` yields (exact long
+    * arithmetic, division truncating toward zero). Both are None when
+    * no committed row exists (SQL's sum over no rows). am is also None
+    * when n_docs is 0: no live doc is left to score, so the serve
+    * answers empty instead of dividing by zero. */
+  private[graft] def rawIndexStats(log: Seq[RawLogRow],
+                                   committed: Seq[String]): (Option[Long], Option[Long]) = {
+    val keep = committed.toSet
+    val live = log.filter(r => keep(r.batchId))
+    if (live.isEmpty) (None, None)
+    else {
+      val nDocs = live.map(_.nDocsDelta).reduce(Math.addExact(_: Long, _: Long))
+      val tTok = live.map(_.sumDlDelta).reduce(Math.addExact(_: Long, _: Long))
+      (Some(nDocs),
+        if (nDocs == 0L) None else Some(Math.multiplyExact(1000L, tTok) / nDocs))
+    }
   }
 
   /** Committed tombstones (doc_id) of a raw index — empty if none
@@ -3912,7 +3942,7 @@ object TextAnalysis {
     import spark.implicits._
     val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
     if (del.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(del))
-      spark.read.parquet(s"$path/deletes")
+      IndexLayout.RawBm25.read(spark, path, "deletes")
         .filter($"batch_id".isin(committed: _*)).select($"doc_id")
     else spark.emptyDataset[Long].toDF("doc_id")
   }
@@ -3934,7 +3964,7 @@ object TextAnalysis {
     import spark.implicits._
     val (committed, nBuckets) = rawIndexMeta(spark, path)
     val batchId = java.util.UUID.randomUUID.toString
-    val doclens = spark.read.parquet(s"$path/doclens")
+    val doclens = IndexLayout.RawBm25.read(spark, path, "doclens")
       .filter($"batch_id".isin(committed: _*))
     // eager: victims feed the tombstone write AND the stats delta
     val victims = doclens.join(ids.select($"doc_id").distinct(), Seq("doc_id"))
@@ -3962,7 +3992,7 @@ object TextAnalysis {
   def bm25ReclaimableFraction(spark: SparkSession, path: String): Double = {
     import spark.implicits._
     val (committed, _) = rawIndexMeta(spark, path)
-    val post = spark.read.parquet(s"$path/postings")
+    val post = IndexLayout.RawBm25.read(spark, path, "postings")
       .select($"batch_id", $"doc_id")
     val counts = post
       .join(rawIndexDeletes(spark, path, committed).withColumn("dead", lit(1)),
@@ -3995,8 +4025,7 @@ object TextAnalysis {
     graft.sources.Lake.requireUnpinned(spark, path, "bm25Vacuum")
     import spark.implicits._
     val (committed, _) = rawIndexMeta(spark, path)
-    val post = spark.read.parquet(s"$path/postings")
-      .withColumn("bucket", $"bucket".cast("int"))
+    val post = IndexLayout.RawBm25.read(spark, path, "postings")
     val del = rawIndexDeletes(spark, path, committed)
     // dirty = has orphan or tombstoned rows (one scan that reads only
     // bucket/batch_id/doc_id — parquet prunes the rest) ∪ fragmented
@@ -4043,8 +4072,9 @@ object TextAnalysis {
   def bm25Snapshot(spark: SparkSession, path: String): Seq[String] =
     rawIndexMeta(spark, path)._1
 
-  /** Serve BM25 from a raw appendable index: global stats sum off the
-    * log (one tiny scan), df counts per token off its own bucket, the
+  /** Serve BM25 from a raw appendable index: global stats summed from
+    * the log rows the manifest read already collected
+    * ([[rawIndexStats]]), df counts per token off its own bucket, the
     * SAME integer impact formula, the same scoring tail. Only
     * COMMITTED batches are visible (batch_id ∈ stats_log — the
     * [[bm25Append]] crash-safety contract) and committed tombstones
@@ -4061,22 +4091,18 @@ object TextAnalysis {
                    queries: Option[DataFrame] = None,
                    snapshot: Option[Seq[String]] = None): DataFrame = {
     import spark.implicits._
-    val (committedNow, nBuckets) = rawIndexMeta(spark, path)
-    val committed = snapshot.getOrElse(committedNow)
-    val stats = spark.read.parquet(s"$path/stats_log")
-      .filter($"batch_id".isin(committed: _*))
-      .agg(sum($"n_docs_delta").as("n_docs"), sum($"sum_dl_delta").as("t_tok"))
-      .select($"n_docs", expr("(1000 * t_tok) div n_docs").as("am"))
+    val (log, nBuckets) = rawIndexLog(spark, path)
+    val committed = snapshot.getOrElse(log.map(_.batchId))
+    val (nDocs, am) = rawIndexStats(log, committed)
+    val stats = Seq((nDocs, am)).toDF("n_docs", "am")
     val dead = rawIndexDeletes(spark, path, committed)
-    val post0 = spark.read.parquet(s"$path/postings")
-      .select($"bucket".cast("int").as("bucket"), $"token", $"doc_id", $"dl",
-        $"tf", $"batch_id")
+    val post0 = IndexLayout.RawBm25.read(spark, path, "postings")
+      .select($"bucket", $"token", $"doc_id", $"dl", $"tf", $"batch_id")
     val pruned = queries match {
       case Some(q0) =>
         val q = q0.select($"query_id", $"token").localCheckpoint()
-        val buckets = q
-          .select(pmod(xxhash64($"token"), lit(nBuckets)).cast("int").as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
+        val buckets = IndexLayout.partitionsOf(q
+          .select(pmod(xxhash64($"token"), lit(nBuckets)).cast("int").as("b")))
         (post0.filter($"bucket".isin(buckets: _*)), Some(q))
       case None => (post0, None)
     }

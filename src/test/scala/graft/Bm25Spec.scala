@@ -455,6 +455,43 @@ class Bm25Spec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("raw serve stats: driver-summed n_docs/am equal the SQL aggregate over the stats log; empty states serve empty") {
+    val s = spark
+    val TA = operators.TextAnalysis
+    val idx = java.nio.file.Files.createTempDirectory("graft_bm25_stats").toFile
+    val path = idx.getAbsolutePath
+    val docs = mkDocs(40).toDF("doc_id", "text")
+    TA.bm25WriteRaw(docs.filter(col("doc_id") < 28), path)
+    val snap = TA.bm25Snapshot(s, path)
+    TA.bm25Append(docs.filter(col("doc_id") >= 28), path)
+    TA.bm25Delete(s, path, docs.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
+    val (log, _) = TA.rawIndexLog(s, path)
+    // the pre-change form: one more scan of the log, aggregated in SQL
+    def sqlStats(committed: Seq[String]): (Option[Long], Option[Long]) = {
+      val r = s.read.parquet(s"$path/stats_log")
+        .filter(col("batch_id").isin(committed: _*))
+        .agg(sum(col("n_docs_delta")).as("n_docs"), sum(col("sum_dl_delta")).as("t_tok"))
+        .select(col("n_docs"), expr("(1000 * t_tok) div n_docs").as("am")).head()
+      (Option(r.getAs[java.lang.Long](0)).map(_.longValue),
+        Option(r.getAs[java.lang.Long](1)).map(_.longValue))
+    }
+    for (committed <- Seq(log.map(_.batchId), snap))
+      assert(TA.rawIndexStats(log, committed) == sqlStats(committed),
+        s"driver stats must equal the SQL aggregate at $committed")
+    assert(TA.rawIndexStats(log, Seq.empty) == ((None, None)),
+      "nothing committed: no N and no avgdl, like SQL's sum over no rows")
+    assert(TA.bm25ServeRaw(s, path, qMod = 1, snapshot = Some(Seq.empty)).count() == 0)
+    // every doc deleted: N = 0 leaves nothing to score in either mode
+    TA.bm25Delete(s, path, docs.select(col("doc_id")))
+    val q = Seq((1L, "w1 w2 w3")).toDF("query_id", "token")
+    assert(TA.rawIndexStats(TA.rawIndexLog(s, path)._1, TA.bm25Snapshot(s, path))._1
+      .contains(0L))
+    assert(TA.bm25ServeRaw(s, path, qMod = 1).count() == 0)
+    assert(TA.bm25ServeRaw(s, path, queries = Some(q)).count() == 0)
+    org.apache.commons.io.FileUtils.deleteDirectory(idx)
+    spark.catalog.clearCache()
+  }
+
   test("delete: exact erasure, untouched buckets byte-identical, idempotent, vacuum purges") {
     val s = spark
     val idx = java.nio.file.Files.createTempDirectory("graft_bm25_del").toFile
