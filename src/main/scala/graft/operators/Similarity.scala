@@ -2,9 +2,10 @@ package graft.operators
 
 import graft.Tables
 import graft.sources.IndexLayout
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2 C5-C7):
   * cosine near-dup pairs, brute-force ANN (the correctness baseline),
@@ -856,8 +857,11 @@ object Similarity {
                        nprobe: Int, k: Int, queries: DataFrame): DataFrame =
     ivfScore(ivfRoute(centroids, queries, nprobe), lists, k)
 
-  /** Query routing: (cell, query_id, vq, nq) per probed cell. */
-  private def ivfRoute(centroids: DataFrame, queries: DataFrame,
+  /** Query routing: (cell, query_id, vq, nq) per probed cell — the
+    * Spark-side router of the memo-served probes, and the reference
+    * [[ivfRouteLocal]] (the persisted-index serves' driver router) is
+    * specified against. */
+  private[graft] def ivfRoute(centroids: DataFrame, queries: DataFrame,
                        nprobe: Int): DataFrame = {
     import centroids.sparkSession.implicits._
     nearestCell(queries, centroids, "p", nprobe)
@@ -1085,11 +1089,10 @@ object Similarity {
   }
 
   /** Committed batch ids — O(appends + deletes) driver metadata, the
-    * manifest read every index consumer starts from. */
-  private[graft] def ivfCommitted(spark: SparkSession, path: String): Seq[String] = {
-    import spark.implicits._
-    IndexLayout.Ivf.read(spark, path, "commits").as[String].collect().toSeq
-  }
+    * manifest read every index consumer starts from, read on the
+    * driver without a job ([[IndexLayout.Layout.local]]). */
+  private[graft] def ivfCommitted(spark: SparkSession, path: String): Seq[String] =
+    IndexLayout.Ivf.local(spark, path, "commits").map(_.getString(0))
 
   /** Committed tombstones (neighbor_id) — empty if no delete ever ran. */
   private[graft] def ivfTombstones(spark: SparkSession, path: String,
@@ -1224,9 +1227,8 @@ object Similarity {
     val assigned = nearestCell(e.select($"vec_id", $"embedding", $"norm"), newCent, "l", 1)
       .join(e.select($"vec_id", $"old_cell"), Seq("vec_id"))
       .localCheckpoint()
-    val changed = assigned.filter($"lcid" =!= $"old_cell")
-      .select(explode(array($"lcid", $"old_cell")).as("c")).distinct()
-      .collect().map(_.getAs[Number](0).intValue()).toSet
+    val changed = IndexLayout.partitionsOf(assigned.filter($"lcid" =!= $"old_cell")
+      .select(explode(array($"lcid".cast("int"), $"old_cell".cast("int"))).as("c"))).toSet
     if (changed.nonEmpty) {
       val rows = listRows(assigned,
           lists.select($"neighbor_id".as("vec_id"), $"label"))
@@ -1250,8 +1252,7 @@ object Similarity {
       // Hadoop FileSystem API, not java.io.File: on HDFS/S3 the local
       // API silently no-ops and the drained cell's stale vectors
       // would double-serve after retrain.
-      val stillThere = rows.select($"cell").distinct()
-        .collect().map(_.getAs[Number](0).intValue()).toSet
+      val stillThere = IndexLayout.partitionsOf(rows.select($"cell".cast("int"))).toSet
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sessionState.newHadoopConf())
       (changed -- stillThere).foreach { c =>
@@ -1351,9 +1352,9 @@ object Similarity {
     val committed = ivfCommitted(spark, path)
     val raw = IndexLayout.Ivf.read(spark, path, "lists")
     val dead = ivfTombstones(spark, path, committed)
-    val dirty = raw.join(dead, Seq("neighbor_id"), "left_semi").select($"cell")
-      .unionAll(raw.filter(!$"batch_id".isin(committed: _*)).select($"cell"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val dirty = IndexLayout.partitionsOf(
+      raw.join(dead, Seq("neighbor_id"), "left_semi").select($"cell")
+        .unionAll(raw.filter(!$"batch_id".isin(committed: _*)).select($"cell"))).toSet
     val targets = fragmented ++ dirty
     if (targets.nonEmpty) {
       // eager: the rewrite reads the very files it replaces — material-
@@ -1368,8 +1369,7 @@ object Similarity {
         .partitionBy("cell").parquet(s"$path/lists")
       // a target cell with zero live rows writes no partition — drop
       // its stale directory explicitly
-      val stillThere = clean.select($"cell").distinct()
-        .collect().map(_.getAs[Number](0).intValue()).toSet
+      val stillThere = IndexLayout.partitionsOf(clean.select($"cell")).toSet
       (targets -- stillThere).foreach { c =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$path/lists/cell=$c"), true)
       }
@@ -1381,11 +1381,11 @@ object Similarity {
     * in-process memo (RecallSpec pins result equality). `cell` is the
     * lists' partition column, so the probe join touches nprobe/nlist
     * of the index and never the raw corpus. Pass `queries` (vec_id,
-    * embedding) for real serving — an external query batch routes via
-    * the broadcast-sized centroids alone; when omitted, the
-    * self-query panel (vec_id < nQueries) is derived FROM the lists
-    * table, which necessarily scans it once — the self-test mode,
-    * not the serving path. */
+    * embedding) for real serving — an external query batch routes on
+    * the driver against the centroids alone ([[ivfRouteLocal]]); when
+    * omitted, the self-query panel (vec_id < nQueries) is derived FROM
+    * the lists table, which necessarily scans it once — the self-test
+    * mode, not the serving path. */
   def annIvfServe(spark: SparkSession, path: String, nprobe: Int = 2,
                   k: Int = 5, nQueries: Int = 50,
                   queries: Option[DataFrame] = None,
@@ -1396,15 +1396,14 @@ object Similarity {
       queries, shortlist, selfPanel)
 
   /** READ-ONCE serving context for a persisted index: the centroids
-    * (localCheckpoint'd — nlist rows of metadata) and the LIVE lists
-    * plan (committed batches only, tombstones filtered — the commit
-    * log is collected exactly once, at context build). An adaptive
-    * probe loop used to re-run the same centroid/commit-metadata jobs
-    * on EVERY width round (guide §2.6: sequential small driver jobs
-    * are the serve path's real cost); the context pays them once per
-    * serve session. The lists stay a lazy PLAN — corpus-sized data is
-    * never materialized, only the routing metadata is. */
-  private[graft] final case class IvfCtx(centroids: DataFrame, lists: DataFrame)
+    * (nlist driver rows, read without a job by
+    * [[IndexLayout.Layout.local]] — the driver router's input) and the
+    * LIVE lists plan (committed batches only, tombstones filtered — the
+    * commit log is read exactly once, at context build). An adaptive
+    * probe loop shares one context across its width rounds. The lists
+    * stay a lazy PLAN — corpus-sized data is never materialized, only
+    * the routing metadata is. */
+  private[graft] final case class IvfCtx(centroids: Seq[Row], lists: DataFrame)
 
   private[graft] def ivfCtx(spark: SparkSession, path: String,
                             snapshot: Option[Seq[String]] = None): IvfCtx = {
@@ -1417,10 +1416,50 @@ object Similarity {
     // (ivfSnapshot) pins the view — snapshot isolation against
     // concurrent appends/deletes.
     IvfCtx(
-      IndexLayout.Ivf.read(spark, path, "centroids").localCheckpoint(),
+      IndexLayout.Ivf.local(spark, path, "centroids"),
       liveLists(spark, path, snapshot)
         .select($"cell", $"neighbor_id",
           $"vc".cast("array<float>").as("vc"), $"nc", $"label", $"q8", $"qn"))
+  }
+
+  /** A query panel routed on the driver: `panel` (vec_id, embedding,
+    * norm) as a local relation, `probes` its (cell, query_id, vq, nq)
+    * rows — [[ivfRoute]]'s output — plus `qcdot` (the query's dot with
+    * its cell's centroid) when asked, and the distinct probed `cells`. */
+  private final case class Routed(panel: DataFrame, probes: DataFrame, cells: Seq[Int])
+
+  /** The persisted-index serves' router: the panel — an external query
+    * batch or the self-test panel, a serving batch small by contract —
+    * is collected once (a local relation collects without a job) and
+    * routed on the driver against the context's centroids
+    * ([[graft.sources.IndexRoute.nearest]], the same cells [[ivfRoute]]
+    * picks). The routed rows go back to Spark as a local relation, and
+    * the cell list statically prunes the lists read: DPP does not fire
+    * on the probe join (measured — all 16 dirs opened), so the serve
+    * does what an ANN server does and reads only the probed
+    * partitions. RecallSpec pins files-opened == probed cells. */
+  private def ivfRouteLocal(centroids: Seq[Row], panel0: DataFrame, nprobe: Int,
+                            qcdot: Boolean): Routed = {
+    import scala.jdk.CollectionConverters._
+    val spark = panel0.sparkSession
+    val rows = panel0.select(col("vec_id"), col("embedding"), col("norm")).collect().toSeq
+    val panel = spark.createDataFrame(rows.asJava, panel0.schema)
+    val near = graft.sources.IndexRoute.nearest(spark,
+      rows.map(r => (r.get(1), r.get(2))), centroids, nprobe)
+    val probes = rows.zip(near).flatMap { case (q, cs) =>
+      cs.map { i =>
+        val c = centroids(i)
+        val base = Seq(c.getAs[Int]("cid"), q.get(0), q.get(1), q.get(2))
+        Row.fromSeq(if (qcdot) base :+ graft.sources.IndexRoute.dot(q.get(1), c.getAs[Any]("cvec"))
+          else base)
+      }
+    }
+    val schema = StructType(Seq(StructField("cell", IntegerType),
+        panel0.schema("vec_id").copy(name = "query_id"),
+        panel0.schema("embedding").copy(name = "vq"), panel0.schema("norm").copy(name = "nq")) ++
+      (if (qcdot) Seq(StructField("qcdot", DoubleType)) else Nil))
+    Routed(panel, spark.createDataFrame(probes.asJava, schema),
+      probes.map(_.getInt(0)).distinct)
   }
 
   private[graft] def annIvfServeOn(ctx: IvfCtx, nprobe: Int,
@@ -1428,23 +1467,18 @@ object Similarity {
                                    queries: Option[DataFrame],
                                    shortlist: Option[Int],
                                    selfPanel: Boolean): DataFrame = {
-    val spark = ctx.centroids.sparkSession
-    import spark.implicits._
     val lists = ctx.lists
+    val spark = lists.sparkSession
+    import spark.implicits._
     val panel = queries.map(q => q
         .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
         .withColumn("norm", sqrt(dotF($"embedding", $"embedding"))))
       .getOrElse(lists.filter($"neighbor_id" < nQueries)
         .select($"neighbor_id".as("vec_id"), $"vc".as("embedding"), $"nc".as("norm")))
-    // route FIRST, then statically prune the lists read to the probed
-    // cell directories: DPP does not fire on this join shape (measured
-    // — all 16 dirs opened), so the serving path does what an ANN
-    // server does: the routing result (O(queries·nprobe) ints — a
-    // serving batch is small by definition) decides which partitions
-    // the candidate scan touches. RecallSpec pins files-opened ==
-    // probed cells.
-    val routed = ivfRoute(ctx.centroids, panel, nprobe).localCheckpoint()
-    val probedCells = IndexLayout.partitionsOf(routed.select($"cell"))
+    // route FIRST, on the driver, then statically prune the lists read
+    // to the probed cell directories
+    val Routed(_, routed, probedCells) = ivfRouteLocal(ctx.centroids, panel, nprobe,
+      qcdot = false)
     val probed = lists.filter($"cell".isin(probedCells: _*))
     // external queries number their OWN id namespace: a batch vector
     // that happens to share a corpus id must not lose that corpus
@@ -2122,13 +2156,10 @@ object Similarity {
     * moves centroids, silently invalidating every residual, so the
     * stamp rides the codebooks and [[pqCoverageGap]]/[[pqRefresh]]
     * treat a mismatch as "everything is uncoded". */
-  private def pqStamp(spark: SparkSession, path: String): String = {
-    import spark.implicits._
-    pqStampOf(IndexLayout.Ivf.read(spark, path, "centroids")
-      .select($"cid", $"cvec").collect())
-  }
+  private def pqStamp(spark: SparkSession, path: String): String =
+    pqStampOf(IndexLayout.Ivf.local(spark, path, "centroids"))
 
-  private def pqStampOf(centRows: Array[org.apache.spark.sql.Row]): String = {
+  private def pqStampOf(centRows: Seq[org.apache.spark.sql.Row]): String = {
     val rows = centRows
       .map(r => s"${r.getAs[Number]("cid")}:${r.getSeq[Float](1).mkString(",")}")
       .sorted.mkString(";")
@@ -2154,16 +2185,18 @@ object Similarity {
       return liveLists(spark, path).filter(lit(false))
         .select($"cell", $"neighbor_id",
           lit(null).cast("array<int>").as("codes"), $"nc")
-    val stamp = pqStamp(spark, path)
-    val committed = IndexLayout.Pq.read(spark, path, "pq/commits")
-      .filter($"cstamp" === stamp)
-      .select($"pq_batch").as[String].collect().toSeq
+    val committed = pqCommitted(spark, path, pqStamp(spark, path))
     IndexLayout.Pq.read(spark, path, "pq/codes")
       .filter($"pq_batch".isin(committed: _*))
       .join(broadcast(ivfTombstones(spark, path, ivfCommitted(spark, path))),
         Seq("neighbor_id"), "left_anti")
       .drop("pq_batch")
   }
+
+  /** The sidecar's committed code batches under centroid stamp `stamp`. */
+  private def pqCommitted(spark: SparkSession, path: String, stamp: String): Seq[String] =
+    IndexLayout.Pq.local(spark, path, "pq/commits")
+      .filter(_.getAs[String]("cstamp") == stamp).map(_.getAs[String]("pq_batch"))
 
   /** Residuals of an explicit live-row set against the index's CURRENT
     * centroids: (vec_id, embedding=r, cell, nc). */
@@ -2196,10 +2229,9 @@ object Similarity {
       graft.sources.Lake.withWriterLock(spark, path, "pqAttach") {
     graft.sources.Lake.requireUnpinned(spark, path, "pqAttach")
     import spark.implicits._
-    // one centroid collect serves both the stamp and the dimension
-    // (r17 opt: the attach used to run two centroid jobs back-to-back)
-    val centRows = IndexLayout.Ivf.read(spark, path, "centroids")
-      .select($"cid", $"cvec").collect()
+    // one driver-side centroid read serves both the stamp and the
+    // dimension
+    val centRows = IndexLayout.Ivf.local(spark, path, "centroids")
     val stamp = pqStampOf(centRows)
     val live = liveLists(spark, path)
       .select($"cell", $"neighbor_id", $"vc".cast("array<float>").as("vc"), $"nc")
@@ -2391,14 +2423,12 @@ object Similarity {
     val committed =
       if (!hfs.exists(new org.apache.hadoop.fs.Path(s"$path/pq/commits")))
         Seq.empty[String]
-      else IndexLayout.Pq.read(spark, path, "pq/commits")
-        .filter($"cstamp" === stamp)
-        .select($"pq_batch").as[String].collect().toSeq
+      else pqCommitted(spark, path, stamp)
     val raw = IndexLayout.Pq.read(spark, path, "pq/codes")
     val dead = ivfTombstones(spark, path, ivfCommitted(spark, path))
-    val dirty = raw.join(dead, Seq("neighbor_id"), "left_semi").select($"cell")
-      .unionAll(raw.filter(!$"pq_batch".isin(committed: _*)).select($"cell"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val dirty = IndexLayout.partitionsOf(
+      raw.join(dead, Seq("neighbor_id"), "left_semi").select($"cell")
+        .unionAll(raw.filter(!$"pq_batch".isin(committed: _*)).select($"cell"))).toSet
     val fragmented = graft.sources.Lake.fragmentedPartitions(
       spark, s"$path/pq/codes", "cell", maxFilesPerCell)
     val targets = dirty ++ fragmented
@@ -2411,8 +2441,7 @@ object Similarity {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cell").parquet(s"$path/pq/codes")
-      val stillThere = clean.select($"cell").distinct()
-        .collect().map(_.getAs[Number](0).intValue()).toSet
+      val stillThere = IndexLayout.partitionsOf(clean.select($"cell")).toSet
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sessionState.newHadoopConf())
       (targets -- stillThere).foreach { c =>
@@ -2421,8 +2450,8 @@ object Similarity {
     }
   }
 
-  /** [[annIvfPq]] served from the persisted sidecar: route via the
-    * broadcast-sized centroids, ADC over ONLY the probed cells' code
+  /** [[annIvfPq]] served from the persisted sidecar: route on the
+    * driver against the centroids, ADC over ONLY the probed cells' code
     * partitions (statically pruned like [[annIvfServe]] — the wide
     * pass reads m-byte codes + one scalar norm, never a float
     * vector), exact-cosine rerank of the bounded shortlist fetching
@@ -2437,23 +2466,25 @@ object Similarity {
       queries, selfPanel)
 
   /** [[IvfCtx]] extended with the sidecar's read-once artifacts: the
-    * codebooks (localCheckpoint'd — m·kpq metadata rows; the m/dsub
-    * geometry and the OPQ rotation extracted once from them) and the
-    * live-codes PLAN (centroid stamp + pq commit log collected once
-    * at context build). The adaptive ADC loop used to pay the books
-    * head(), the stamp collect and two commit-log collects on every
-    * width round. */
+    * codebooks (m·kpq metadata rows read on the driver and served back
+    * as a local relation; the m/dsub geometry and the OPQ rotation
+    * extracted once from them) and the live-codes PLAN (centroid stamp
+    * + pq commit log read once at context build). The adaptive ADC
+    * loop shares one context across its width rounds. */
   private[graft] final case class PqCtx(ivf: IvfCtx, books: DataFrame,
                                         m: Int, dsub: Int,
                                         rotation: Option[Array[Float]],
                                         codes: DataFrame)
 
   private[graft] def pqCtx(spark: SparkSession, path: String): PqCtx = {
-    import spark.implicits._
-    val bk = IndexLayout.Pq.read(spark, path, "pq/books").localCheckpoint()
-    val meta = bk.select($"m", $"dsub").head()
-    PqCtx(ivfCtx(spark, path), bk.select($"sub", $"code", $"cvec", $"chalf"),
-      meta.getInt(0), meta.getInt(1), pqRotation(bk), pqLiveCodes(spark, path))
+    import scala.jdk.CollectionConverters._
+    val rows = IndexLayout.Pq.local(spark, path, "pq/books")
+    val bk = spark.createDataFrame(rows.asJava, IndexLayout.Pq.dirs("pq/books"))
+    val meta = rows.head
+    PqCtx(ivfCtx(spark, path), bk.select(col("sub"), col("code"), col("cvec"), col("chalf")),
+      meta.getAs[Int]("m"), meta.getAs[Int]("dsub"),
+      Option(meta.getAs[scala.collection.Seq[Float]]("rot")).map(_.toArray),
+      pqLiveCodes(spark, path))
   }
 
   private[graft] def annIvfPqServeOn(ctx: PqCtx, nprobe: Int, shortlist: Int,
@@ -2465,22 +2496,19 @@ object Similarity {
     val (m, dsub, books) = (ctx.m, ctx.dsub, ctx.books)
     val lists = ctx.ivf.lists
       .select($"cell", $"neighbor_id", $"vc", $"nc")
-    val panel = queries.map(q => q
+    val panel0 = queries.map(q => q
         .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
         .withColumn("norm", sqrt(dotF($"embedding", $"embedding"))))
       .getOrElse(lists.filter($"neighbor_id" < nQueries)
         .select($"neighbor_id".as("vec_id"), $"vc".as("embedding"), $"nc".as("norm")))
-    val routed = ivfRoute(ctx.ivf.centroids, panel, nprobe).localCheckpoint()
-    val probedCells = IndexLayout.partitionsOf(routed.select($"cell"))
+    // routed on the driver, qcdot (q·c(cell)) included
+    val Routed(panel, routed, probedCells) = ivfRouteLocal(ctx.ivf.centroids, panel0,
+      nprobe, qcdot = true)
     // an OPQ sidecar builds each query's LUT from the ROTATED query
     // (q·r = (qR)·(rR)); qcdot and the exact rerank stay unrotated
     val lutPanel = ctx.rotation.fold(panel.select($"vec_id", $"embedding"))(r =>
       panel.select($"vec_id", rotateF($"embedding", r, m * dsub).as("embedding")))
-    val probes = routed
-      .join(broadcast(ctx.ivf.centroids.select($"cid".as("cell"), $"cvec")), Seq("cell"))
-      .withColumn("qcdot", dotF($"vq", $"cvec"))
-      .drop("cvec")
-      .join(pqLut(lutPanel, books, m, dsub), Seq("query_id"))
+    val probes = routed.join(pqLut(lutPanel, books, m, dsub), Seq("query_id"))
     val codes = ctx.codes.filter($"cell".isin(probedCells: _*))
     // selfPanel marks an EXPLICIT query frame as the index's own
     // members (the adaptive loop re-serves a shrinking self-panel):
@@ -2567,7 +2595,7 @@ object Similarity {
     // one centroid/books/commit-metadata read instead of re-running
     // those driver jobs every round (guide §2.6)
     val ctx = pqCtx(spark, path)
-    val nlist = ctx.ivf.centroids.count().toInt
+    val nlist = ctx.ivf.centroids.length
     val panel = ctx.ivf.lists.filter($"neighbor_id" < nQueries)
       .select($"neighbor_id".as("vec_id"), $"vc".as("embedding"), $"nc".as("norm"))
     adaptiveProbeLoop(panel, nlist, minProbe, (q, w) =>
@@ -2590,7 +2618,7 @@ object Similarity {
     import spark.implicits._
     // read-once serve context shared by every width round (guide §2.6)
     val ctx = ivfCtx(spark, path)
-    val nlist = ctx.centroids.count().toInt
+    val nlist = ctx.centroids.length
     val panel = ctx.lists.filter($"neighbor_id" < nQueries)
       .select($"neighbor_id".as("vec_id"), $"vc".as("embedding"), $"nc".as("norm"))
     adaptiveProbeLoop(panel, nlist, minProbe, (q, w) =>

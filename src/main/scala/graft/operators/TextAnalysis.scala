@@ -286,9 +286,9 @@ object TextAnalysis {
     val post = spark.read.parquet(s"$path/lines")
       .withColumn("bucket", $"bucket".cast("int"))
     val del = lineIndexDeletes(spark, path, committed)
-    val dirty = post.join(del, Seq("doc_id"), "left_semi").select($"bucket")
-      .unionAll(post.filter(!$"batch_id".isin(committed: _*)).select($"bucket"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val dirty = IndexLayout.partitionsOf(
+      post.join(del, Seq("doc_id"), "left_semi").select($"bucket")
+        .unionAll(post.filter(!$"batch_id".isin(committed: _*)).select($"bucket"))).toSet
     val fragmented = graft.sources.Lake.fragmentedPartitions(
       spark, s"$path/lines", "bucket", maxFilesPerBucket)
     val targets = dirty ++ fragmented
@@ -302,8 +302,7 @@ object TextAnalysis {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket").parquet(s"$path/lines")
-      val stillThere = clean.select($"bucket").distinct()
-        .collect().map(_.getAs[Number](0).intValue()).toSet
+      val stillThere = IndexLayout.partitionsOf(clean.select($"bucket")).toSet
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sessionState.newHadoopConf())
       (targets -- stillThere).foreach { b =>
@@ -3314,7 +3313,7 @@ object TextAnalysis {
     * integer feature-hash vectors (exact in float32) into a persisted
     * IVF index ([[graft.operators.Similarity.ivfWriteFrom]]) and
     * probes it ([[graft.operators.Similarity.annIvfServe]] — external
-    * queries route via broadcast-sized centroids; the gate probes
+    * queries route on the driver against the centroids; the gate probes
     * nprobe = nlist, the exact configuration, so the answer
     * hash-gates; production turns nprobe down and trades recall like
     * C7b/C7c, graded elsewhere). The lexical side serves the
@@ -3636,15 +3635,17 @@ object TextAnalysis {
         s"no committed index version at $path — build with bm25Write first"))
 
   /** BM25 served from a persisted [[bm25Write]] index. An EXTERNAL
-    * query batch (query_id, token) routes first: its tokens' hash
+    * query batch (query_id, token) routes on the driver first
+    * ([[bm25Route]]): the bucket count comes from the `stats` row read
+    * without a job, the batch is collected once, and its tokens' hash
     * buckets — O(query terms) driver ints, what a search frontend's
     * shard router holds — statically prune the postings read to those
     * bucket directories, so a short query touches a handful of the
     * index partitions and never the corpus (the annIvfServe posture
-    * applied to text). Without `queries`, the self-test panel (every
-    * `qMod`-th doc's terms) derives FROM the postings, which
-    * necessarily scans them once — that mode hash-gates serve ≡
-    * `bm25_retrieve` exactly. */
+    * applied to text). Spark runs only the scoring query. Without
+    * `queries`, the self-test panel (every `qMod`-th doc's terms)
+    * derives FROM the postings, which necessarily scans them once —
+    * that mode hash-gates serve ≡ `bm25_retrieve` exactly. */
   def bm25ServeFrom(spark: SparkSession, path: String, k: Int = 10,
                     qMod: Int = 20, queries: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
@@ -3675,6 +3676,21 @@ object TextAnalysis {
     bm25ServeRouted(spark, root, post0, k, qMod, queries)
   }
 
+  /** The BM25 router of both persisted layouts: an external query
+    * batch (query_id, token) — a serving batch, small by contract — is
+    * collected once (a local relation collects without a job), its
+    * tokens' buckets are computed on the driver
+    * ([[graft.sources.IndexRoute.buckets]], the writers' own hash), and
+    * the rows come back as a local relation for the scoring query. */
+  private def bm25Route(q0: DataFrame, nBuckets: Int): (DataFrame, Seq[Int]) = {
+    import scala.jdk.CollectionConverters._
+    val q = q0.select(col("query_id"), col("token"))
+    val rows = q.collect().toSeq
+    (q0.sparkSession.createDataFrame(rows.asJava, q.schema),
+      graft.sources.IndexRoute.buckets(rows.map(_.get(1)), q.schema("token").dataType,
+        nBuckets).distinct)
+  }
+
   /** `root` is a RESOLVED version directory ([[impactRoot]]) — the
     * whole serve (stats, postings, panel) reads one committed version,
     * immune to a concurrent refresh's swap. */
@@ -3684,11 +3700,9 @@ object TextAnalysis {
     import spark.implicits._
     queries match {
       case Some(q0) =>
-        val nBuckets = IndexLayout.ImpactBm25.read(spark, root, "stats")
-          .head().getAs[Int]("n_buckets")
-        val q = q0.select($"query_id", $"token").localCheckpoint()
-        val buckets = IndexLayout.partitionsOf(q
-          .select(pmod(xxhash64($"token"), lit(nBuckets)).cast("int").as("b")))
+        val nBuckets = IndexLayout.ImpactBm25.local(spark, root, "stats")
+          .head.getAs[Int]("n_buckets")
+        val (q, buckets) = bm25Route(q0, nBuckets)
         bm25TopK(post0.filter($"bucket".isin(buckets: _*)).drop("bucket"), q, k)
       case None =>
         val q = post0.filter($"doc_id" % qMod === 0)
@@ -3731,7 +3745,7 @@ object TextAnalysis {
   def bm25DeletedFraction(spark: SparkSession, path: String): Double = {
     import spark.implicits._
     val root = impactRoot(spark, path)
-    val n = IndexLayout.ImpactBm25.read(spark, root, "stats").head().getAs[Long]("n_docs")
+    val n = IndexLayout.ImpactBm25.local(spark, root, "stats").head.getAs[Long]("n_docs")
     if (n == 0L) return 0.0
     val dead = impactDeletesAt(spark, root)
       .join(IndexLayout.ImpactBm25.read(spark, root, "postings").select($"doc_id"),
@@ -3761,7 +3775,7 @@ object TextAnalysis {
       // reads either the old complete state or the new complete state,
       // never a mix, and a crash mid-rebuild is invisible
       val root = impactRoot(spark, path)
-      val st = IndexLayout.ImpactBm25.read(spark, root, "stats").head()
+      val st = IndexLayout.ImpactBm25.local(spark, root, "stats").head
       val survivors = docs.join(impactDeletesAt(spark, root),
         Seq("doc_id"), "left_anti")
       bm25WriteImpactFrom(survivors, path,
@@ -3902,15 +3916,16 @@ object TextAnalysis {
                                             sumDlDelta: Long)
 
   /** [[rawIndexMeta]] with the log's deltas: the whole stats log in one
-    * collect, so a serve derives N and avgdl without a second scan. */
+    * driver-side read ([[IndexLayout.Layout.local]], no job), so a serve
+    * derives N and avgdl without a second scan. */
   private[graft] def rawIndexLog(spark: SparkSession, path: String): (Seq[RawLogRow], Int) = {
-    import spark.implicits._
-    val rows = IndexLayout.RawBm25.read(spark, path, "stats_log")
-      .select($"batch_id", $"n_buckets", $"n_docs_delta", $"sum_dl_delta").collect()
-    val nb = rows.map(_.getInt(1)).distinct
+    val rows = IndexLayout.RawBm25.local(spark, path, "stats_log")
+    val nb = rows.map(_.getAs[Int]("n_buckets")).distinct
+    require(nb.nonEmpty, s"no committed batch in $path/stats_log")
     require(nb.length == 1,
       s"inconsistent n_buckets in $path/stats_log: ${nb.mkString(",")}")
-    (rows.toSeq.map(r => RawLogRow(r.getString(0), r.getLong(2), r.getLong(3))), nb.head)
+    (rows.map(r => RawLogRow(r.getAs[String]("batch_id"), r.getAs[Long]("n_docs_delta"),
+      r.getAs[Long]("sum_dl_delta"))), nb.head)
   }
 
   /** (n_docs, am) of a raw index at the `committed` batch set, summed
@@ -4030,9 +4045,9 @@ object TextAnalysis {
     // dirty = has orphan or tombstoned rows (one scan that reads only
     // bucket/batch_id/doc_id — parquet prunes the rest) ∪ fragmented
     // (driver listing, O(buckets) metadata like a format manifest)
-    val dirty = post.join(del, Seq("doc_id"), "left_semi").select($"bucket")
-      .unionAll(post.filter(!$"batch_id".isin(committed: _*)).select($"bucket"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val dirty = IndexLayout.partitionsOf(
+      post.join(del, Seq("doc_id"), "left_semi").select($"bucket")
+        .unionAll(post.filter(!$"batch_id".isin(committed: _*)).select($"bucket"))).toSet
     val postingsPath = new org.apache.hadoop.fs.Path(s"$path/postings")
     val fs = postingsPath.getFileSystem(spark.sessionState.newHadoopConf())
     val fragmented = graft.sources.Lake.fragmentedPartitions(
@@ -4050,8 +4065,7 @@ object TextAnalysis {
         .partitionBy("bucket").parquet(s"$path/postings")
       // a target bucket with zero surviving rows writes no partition —
       // drop its stale directory explicitly
-      val stillThere = clean.select($"bucket").distinct()
-        .collect().map(_.getInt(0)).toSet
+      val stillThere = IndexLayout.partitionsOf(clean.select($"bucket")).toSet
       (targets -- stillThere).foreach { b =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$path/postings/bucket=$b"), true)
       }
@@ -4100,9 +4114,7 @@ object TextAnalysis {
       .select($"bucket", $"token", $"doc_id", $"dl", $"tf", $"batch_id")
     val pruned = queries match {
       case Some(q0) =>
-        val q = q0.select($"query_id", $"token").localCheckpoint()
-        val buckets = IndexLayout.partitionsOf(q
-          .select(pmod(xxhash64($"token"), lit(nBuckets)).cast("int").as("b")))
+        val (q, buckets) = bm25Route(q0, nBuckets)
         (post0.filter($"bucket".isin(buckets: _*)), Some(q))
       case None => (post0, None)
     }

@@ -3,6 +3,7 @@
 
     python3 tools/spans.py perfbench/results/spans-serve-304.json [more.json ...]
     python3 tools/spans.py --warmup perfbench/results/spans-serve-304.json
+    python3 tools/spans.py --diff BASE.json NEW.json
 
 Reads the span file a `--trace 1` run of perfbench/run.py writes and
 prints, per span name (`<Module>.<function>` for calls into graft, the
@@ -11,7 +12,10 @@ call, driver jobs per call, executor CPU seconds per call and self
 seconds in total (wall time not covered by a child span), sorted by
 total wall time. Calls made inside the `serve.warmup` span are left
 out, as in the benchmark's per-layer metrics, unless `--warmup` is
-given. Standard library only.
+given. With `--diff`, prints per span name the change between two traced
+runs (e.g. the parent commit's and a change's): calls, jobs per call and
+wall seconds per call, base -> new, with the difference; a span present in
+only one run reads `-` on the other side. Standard library only.
 """
 import argparse
 import json
@@ -51,12 +55,55 @@ def render(doc, warmup=False):
     return "\n".join(lines)
 
 
+def render_diff(base, new, warmup=False):
+    b = {r[0]: r for r in table(base, warmup)}
+    n = {r[0]: r for r in table(new, warmup)}
+    order = [r[0] for r in table(new, warmup)] + [k for k in b if k not in n]
+
+    def pair(name, i, fmt):
+        x = b[name][i] if name in b else None
+        y = n[name][i] if name in n else None
+        d = fmt(y - x, True) if x is not None and y is not None else "-"
+        return [fmt(x, False) if x is not None else "-",
+                fmt(y, False) if y is not None else "-", d]
+
+    def num(prec):
+        return lambda v, signed: f"{v:+.{prec}f}" if signed else f"{v:.{prec}f}"
+
+    def count(v, signed):
+        return f"{v:+d}" if signed else str(v)
+
+    head = ("span", "calls", "new", "diff", "jobs/call", "new", "diff",
+            "wall_s/call", "new", "diff")
+    body = [tuple([name] + pair(name, 1, count) + pair(name, 3, num(1))
+                  + pair(name, 2, num(3)))
+            for name in order]
+    widths = [max(len(r[i]) for r in [head] + body) for i in range(len(head))]
+    lines = ["  ".join(c.ljust(w) if i == 0 else c.rjust(w)
+                       for i, (c, w) in enumerate(zip(r, widths)))
+             for r in [head] + body]
+    lines.append(f"run_s {base['run_s']:.2f} -> {new['run_s']:.2f}  "
+                 f"uncovered_s {base['uncovered_s']:.2f} -> {new['uncovered_s']:.2f}")
+    return "\n".join(lines)
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("files", nargs="+", help="perfbench/results/spans-*.json")
+    ap.add_argument("files", nargs="*", help="perfbench/results/spans-*.json")
     ap.add_argument("--warmup", action="store_true",
                     help="count the calls made during serve.warmup too")
+    ap.add_argument("--diff", nargs=2, metavar=("BASE", "NEW"),
+                    help="per-span change from the BASE run to the NEW run")
     a = ap.parse_args()
+    if a.diff:
+        docs = []
+        for path in a.diff:
+            with open(path) as f:
+                docs.append(json.load(f))
+        print(render_diff(docs[0], docs[1], a.warmup))
+        return 0
+    if not a.files:
+        ap.error("give span files, or --diff BASE NEW")
     for i, path in enumerate(a.files):
         with open(path) as f:
             doc = json.load(f)
