@@ -1,22 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default matches the driver's bench environment (and OneBench)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // keep AQE from coalescing small-input/large-output stages (pair
-      // joins explode AFTER the shuffle AQE sizes partitions by)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
+    // keep AQE from coalescing small-input/large-output stages (pair
+    // joins explode AFTER the shuffle AQE sizes partitions by)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     spark.sparkContext.setLogLevel("WARN")
     // Self-adjudicating artifact: wall-clock alone can't distinguish a
     // plan regression from ambient machine load (three rounds of
@@ -55,7 +46,7 @@ object Bench {
       catch { case _: Throwable => () }
     }
     val warmupSec = (System.nanoTime() - warmT0) / 1e9
-    MemoLog.drain() // warmup's memo builds are not a timed query's cost
+    Artifacts.drain() // warmup's artifact builds are not a timed query's cost
     // per-query memo-build attribution: which timed query FIRST
     // materialized which shared memo table / index, and what that
     // one-time build cost — so a cross-round wall/cpu move caused by
@@ -76,7 +67,7 @@ object Bench {
         } catch {
           case e: Throwable => System.err.println(s"[bench] $name: $e"); -1.0
         }
-      val mb = MemoLog.drain()
+      val mb = Artifacts.drain().map(b => (b.key.label, b.seconds))
       if (mb.nonEmpty) memoBuilds(name) = mb
       spark.catalog.clearCache() // operators may persist intermediates
       // untimed: ContextCleaner frees broadcast/shuffle/cache blocks

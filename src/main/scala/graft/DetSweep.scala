@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main (not part of the library surface): registry-wide
   * determinism sweep. Runs EVERY SparkEntry query twice — once at 32
@@ -17,19 +16,13 @@ import org.apache.spark.sql.SparkSession
 object DetSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // AQE's partition coalescing would converge the 32- and
-      // 7-partition runs to near-identical physical partitioning at
-      // small scale, weakening the invariance probe — keep the two
-      // settings genuinely different
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(8)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    // AQE's partition coalescing would converge the 32- and
+    // 7-partition runs to near-identical physical partitioning at
+    // small scale, weakening the invariance probe — keep the two
+    // settings genuinely different
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     def canon(name: String): Seq[String] = {
       val r = SparkEntry.queries(name)(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-loop PHASE timer for the lifecycle serve entries — where inside
@@ -11,16 +10,10 @@ object DiagServe {
   def main(args: Array[String]): Unit = {
     val which = if (args.nonEmpty) args(0) else "pq_adaptive"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
+    // keep AQE from coalescing small-input/large-output stages (pair
+    // joins explode AFTER the shuffle AQE sizes partitions by)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Long)]()

@@ -1,16 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 /** Plan auditor: `runMain graft.Explain [query ...]` prints the
   * formatted physical plan of each named SparkEntry query (all when
   * none given) — the loop for checking pushdown/broadcast/codegen. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

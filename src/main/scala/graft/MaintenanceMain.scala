@@ -204,15 +204,7 @@ object MaintenanceMain {
       .getOrElse(throw new IllegalArgumentException(
         "no fleet manifest: pass a path or set fleetManifest in graft.conf"))
     val outPath = if (args.length > 1) args(1) else "maintenance_metrics.jsonl"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new Metrics(spark)
     val ok = try {

@@ -105,18 +105,3 @@ final class Metrics(spark: SparkSession) {
     snapshot.toDF()
   }
 }
-
-/** Build-cost log for the session-shared memo tables / indexes: which
-  * shared build ran and how long its materialization took. Bench
-  * drains this after each timed query, so a per-query wall/cpu move
-  * caused purely by memo OWNERSHIP (which query happened to FIRST
-  * materialize a shared table this round) is adjudicable from the
-  * bench artifact instead of flagging as "real plan cost" — the
-  * pagerank_pairs lesson from round 14's cross-round summary. */
-object MemoLog {
-  private val builds = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-  def record(tag: String, sec: Double): Unit =
-    synchronized { builds += ((tag, sec)) }
-  def drain(): Seq[(String, Double)] =
-    synchronized { val r = builds.toList; builds.clear(); r }
-}

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Time a single named SparkEntry query with the same session config
   * as Bench (honors SPARK_GRAFT_CPUS/SPARK_GRAFT_SF_DIR; defaults to
   * 32 cpus, matching the driver's bench environment), repeated N times
@@ -12,16 +10,10 @@ object OneBench {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
+    // keep AQE from coalescing small-input/large-output stages (pair
+    // joins explode AFTER the shuffle AQE sizes partitions by)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     spark.sparkContext.setLogLevel("WARN")
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Long, Long, Long)]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -307,7 +307,7 @@ object Govern {
     // freeze, F16's manifest exclusion and the audit report — one
     // gram pass instead of five (r16 opt; the pairs-memo precedent).
     // Output is small (flagged docs × two longs), eagerly checkpointed.
-    NearDup.Shared.memo(spark, s"decontam:$dir:$n") {
+    Artifacts.value(spark, Artifacts.Decontam, dir, n) {
       import spark.implicits._
       val grams = docGrams(Tables.fanout(
         Tables.documents(spark, dir).select($"doc_id", $"text")), n)
@@ -347,7 +347,7 @@ object Govern {
                                   n: Int = 4): DataFrame =
     // memoized per (session, dir, n): the frozen benchmark gram set
     // E21 broadcasts is also F19's freeze input (r16 opt)
-    NearDup.Shared.memo(spark, s"benchGrams:$dir:$n") {
+    Artifacts.value(spark, Artifacts.BenchGrams, dir, n) {
       import spark.implicits._
       docGrams(Tables.fanout(Tables.documents(spark, dir)
         .select($"doc_id", $"text")), n)
@@ -1208,7 +1208,7 @@ object Govern {
     // by its consumers (`stats_prune` prunes scans with it) — in one
     // process the memo plays the part of that table (same posture as
     // the near-dup edge memo and the IVF index)
-    NearDup.Shared.memo(spark, s"zorderLayout:$dir:$rowsPerFile") {
+    Artifacts.value(spark, Artifacts.ZorderLayout, dir, rowsPerFile) {
       zorderLayoutBuild(spark, dir, rowsPerFile).localCheckpoint()
     }
 
@@ -1483,7 +1483,7 @@ object Govern {
     // domain-cardinality metadata shared by F18 itself, E22's frozen
     // admission table, F19's freeze and the audit's blocked leg —
     // one normalize+flag pass instead of four (r16 opt).
-    NearDup.Shared.memo(spark, s"sourceBlock:$dir") {
+    Artifacts.value(spark, Artifacts.SourceBlock, dir) {
       sourceQualityBlockOf(
         Tables.fanout(Tables.documents(spark, dir)
           .select(col("doc_id"), col("text"), col("source"), col("n_chars")))
@@ -1664,7 +1664,7 @@ object Govern {
     * curation (benchmark members excluded), memoized per (session,
     * dir) — shared by the audit's dup leg and the freeze. */
   private[graft] def dupGroupsFor(spark: SparkSession, dir: String): DataFrame =
-    NearDup.Shared.memo(spark, s"dupGroups:$dir") {
+    Artifacts.value(spark, Artifacts.DupGroups, dir) {
       import spark.implicits._
       Tables.fanout(Tables.documents(spark, dir).select($"doc_id", $"text"))
         .filter($"doc_id" % BenchMod =!= 0)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,67 +36,13 @@ import org.apache.spark.sql.functions._
   * edges — and the last two on the same label-propagation closure and
   * keeper argmax. Run standalone each builds its own; run in one
   * process (Verify, Bench, the test suite — the registry sweep) the
-  * shared intermediates are memoized per (session, shuffle-partition
-  * setting, dir, params) in [[Shared]], so the edge pipeline is built
-  * and checkpointed ONCE and every consumer reads the materialized
-  * table — the "write the signature table once, feed every downstream
-  * decision from it" posture a production dedup pipeline ships
-  * (SURVEY §5). The shuffle-partition setting is part of the key so a
-  * partition-invariance sweep (DetSweep) still rebuilds from scratch
-  * per setting.
+  * shared intermediates are session artifacts ([[graft.Artifacts]]),
+  * so the edge pipeline is built and checkpointed ONCE and every
+  * consumer reads the materialized table — the "write the signature
+  * table once, feed every downstream decision from it" posture a
+  * production dedup pipeline ships (SURVEY §5).
   */
 object NearDup {
-
-  /** Process-level memo of the shared dedup intermediates. Keyed on
-    * the session identity (reference equality — a stopped session's
-    * entries are evicted on the next access) plus the session's
-    * shuffle-partition setting plus the builder tag; values are
-    * immutable plans over localCheckpoint'd blocks, safe to share
-    * across any number of consumer queries. `synchronized` (not
-    * ConcurrentHashMap.computeIfAbsent) because builds NEST — the
-    * keeper memo builds the closure memo builds the pair memo — and
-    * the JVM monitor is reentrant where computeIfAbsent is not.
-    * Retention is deliberate and small: the pinned frames are DECISION
-    * tables (pair edges, cluster labels, keeper rows — KBs at the
-    * bench SF), never corpus-sized intermediates (postings die with
-    * their enclosing build), so holding them for the session is the
-    * point, not a leak. */
-  private[graft] object Shared {
-    private val cache = scala.collection.mutable.HashMap[(SparkSession, String, String), AnyRef]()
-    // per-key build cells (r16 opt): DIFFERENT keys build concurrently
-    // (the multi-memo owners pre-warm their artifacts in Par.jobs —
-    // guide §2.6) while the same key still builds exactly once. The
-    // cell factory does no work inside computeIfAbsent (the r7
-    // nested-memo deadlock was about running builds there); nested
-    // builds of DIFFERENT keys (keeper → closure → pairs,
-    // sourceBlock → decontam) take distinct cells, and the build
-    // graph is acyclic, so no lock cycle exists.
-    private val cells =
-      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Object]()
-    def memo[T <: AnyRef](spark: SparkSession, tag: String)(build: => T): T = {
-      val key = (spark, spark.conf.get("spark.sql.shuffle.partitions", ""), tag)
-      // cells purge with the cache: a long-lived driver cycling
-      // sessions must not pin stopped SparkSession objects forever
-      cells.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      val cell = cells.computeIfAbsent(key, _ => new Object)
-      cell.synchronized {
-        synchronized {
-          cache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-          cache.get(key)
-        } match {
-          case Some(v) => v.asInstanceOf[T]
-          case None =>
-            // log the one-time materialization cost (memos eagerly
-            // localCheckpoint) so Bench can attribute memo OWNERSHIP
-            val t0 = System.nanoTime()
-            val v = build
-            graft.MemoLog.record(tag, (System.nanoTime() - t0) / 1e9)
-            synchronized { cache.update(key, v) }
-            v
-        }
-      }
-    }
-  }
 
   /** Planted-twin id offset, shared by every operator that unions a
     * synthetic re-crawl/re-ingest of the corpus (NearDup, TextAnalysis,
@@ -455,7 +401,7 @@ object NearDup {
     * was 43% of a full registry run). */
   def ngramJaccardDedup(spark: SparkSession, dir: String,
                         threshold: Double = 0.5, dfCap: Int = 100): DataFrame =
-    Shared.memo(spark, s"pairs:$dir:$threshold:$dfCap") {
+    Artifacts.value(spark, Artifacts.Pairs, dir, threshold, dfCap) {
       ngramJaccardPairs(corpus(spark, dir), threshold, dfCap).localCheckpoint()
     }
 
@@ -941,7 +887,7 @@ object NearDup {
     * Shingle rows are doc-local, so callers serving an id-filtered
     * slice of the snapshot filter this table identically. */
   private[graft] def neuShinglesFor(spark: SparkSession, dir: String): DataFrame =
-    Shared.memo(spark, s"neuShingles:$dir") {
+    Artifacts.value(spark, Artifacts.NeuShingles, dir) {
       import spark.implicits._
       val neu = Tables.documents(spark, dir)
         .select(($"doc_id" + BigOffset).as("doc_id"), $"text")
@@ -1038,7 +984,7 @@ object NearDup {
       // per session, r17 opt); the appends/deletes then mutate this
       // drill's OWN physical copy, so the lifecycle under test is
       // unchanged
-      graft.operators.TextAnalysis.promoteTemplate(spark)(
+      Artifacts.promote(spark,
         dedupSigTemplate(spark, dir, Some(cut), dfCap))(tmp)
       dedupIndexAppend(Tables.fanout(ref.filter($"doc_id" > cut)), tmp)
       dedupIndexDelete(spark, tmp, ref.filter($"doc_id" % 7 === 0).select($"doc_id"))
@@ -1055,9 +1001,8 @@ object NearDup {
   private[graft] def dedupSigTemplate(spark: SparkSession, dir: String,
                                       cutId: Option[Long],
                                       dfCap: Int = 100): String =
-    graft.sources.Lake.sharedIndex(spark,
-      graft.operators.TextAnalysis.indexTemplateKey("dedup_sig", dir,
-        cutId.fold("full")(_.toString), dfCap, 0)) { d =>
+    Artifacts.directory(spark, Artifacts.DedupSigTemplate, dir,
+      Seq(cutId.fold("full")(_.toString), dfCap)) { d =>
       import spark.implicits._
       val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
       dedupIndexWrite(Tables.fanout(
@@ -1094,10 +1039,10 @@ object NearDup {
       // snapshot per session, r17 opt); the drill still registers,
       // supersedes, vacuums and serves real files it owns
       graft.sources.Catalog.resolveOrBuild(spark, cat, "dedup_sig", key,
-        stamp = "epoch-1")(graft.operators.TextAnalysis.promoteTemplate(spark)(
+        stamp = "epoch-1")(Artifacts.promote(spark,
         dedupSigTemplate(spark, dir, Some(cut), dfCap)))
       graft.sources.Catalog.resolveOrBuild(spark, cat, "dedup_sig", key,
-        stamp = "epoch-2")(graft.operators.TextAnalysis.promoteTemplate(spark)(
+        stamp = "epoch-2")(Artifacts.promote(spark,
         dedupSigTemplate(spark, dir, None, dfCap)))
       graft.sources.Catalog.vacuum(spark, cat)
       val (path, stamp) =
@@ -1160,7 +1105,7 @@ object NearDup {
     * Oracle: recursive CTE over the identical edge set. */
   def dedupCluster(spark: SparkSession, dir: String, threshold: Double = 0.5,
                    maxIters: Int = 10): DataFrame =
-    Shared.memo(spark, s"lp:$dir:$threshold:$maxIters") {
+    Artifacts.value(spark, Artifacts.LabelProp, dir, threshold, maxIters) {
       labelPropagate(ngramJaccardDedup(spark, dir, threshold), maxIters)
     }
 
@@ -1349,7 +1294,7 @@ object NearDup {
     * keeper id set and skips that final join). */
   private def keepBestParts(spark: SparkSession, dir: String,
                             threshold: Double): (DataFrame, DataFrame) =
-    Shared.memo(spark, s"keepbest:$dir:$threshold") {
+    Artifacts.value(spark, Artifacts.KeepBest, dir, threshold) {
       keepBestPartsUncached(spark, dir, threshold)
     }
 
@@ -1448,7 +1393,7 @@ object NearDup {
     * join-aggs without per-iteration materialization barriers. */
   def pagerankPairs(spark: SparkSession, dir: String, iters: Int = 5,
                     threshold: Double = 0.5, dfCap: Int = 100): DataFrame =
-    Shared.memo(spark, s"pagerank:$dir:$threshold:$dfCap:$iters") {
+    Artifacts.value(spark, Artifacts.PageRank, dir, threshold, dfCap, iters) {
       import spark.implicits._
       pagerankGraph(corpus(spark, dir).select($"doc_id"),
         ngramJaccardDedup(spark, dir, threshold, dfCap), iters).localCheckpoint()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.sources.IndexLayout
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -228,7 +228,7 @@ object Similarity {
     * keeper rule against the same clustering the operator used. */
   private[graft] def semDedupMembers(spark: SparkSession, dir: String,
                                      nlist: Int = 16): DataFrame =
-    NearDup.Shared.memo(spark, s"semdedupMem:$dir:$nlist") {
+    Artifacts.value(spark, Artifacts.SemDedupMembers, dir, nlist) {
       import spark.implicits._
       semDedupMembersFrom(
         twinCorpus(spark, dir).select($"vec_id", $"embedding", lit(0).as("label")),
@@ -370,7 +370,7 @@ object Similarity {
 
   def semDedup(spark: SparkSession, dir: String, eps: Double = 0.8,
                nlist: Int = 16, cellCap: Int = 2000): DataFrame =
-    NearDup.Shared.memo(spark, s"semdedup:$dir:$eps:$nlist:$cellCap") {
+    Artifacts.value(spark, Artifacts.SemDedup, dir, eps, nlist, cellCap) {
       val mem = semDedupMembers(spark, dir, nlist)
       semDedupDrops(spark, mem, semDedupEdgesFor(spark, dir, eps, nlist, cellCap),
         centroidKeeper(mem))
@@ -381,7 +381,7 @@ object Similarity {
   private[graft] def semDedupEdgesFor(spark: SparkSession, dir: String,
                                       eps: Double, nlist: Int,
                                       cellCap: Int): DataFrame =
-    NearDup.Shared.memo(spark, s"semdedupEdges:$dir:$eps:$nlist:$cellCap") {
+    Artifacts.value(spark, Artifacts.SemDedupEdges, dir, eps, nlist, cellCap) {
       semDedupEdges(
         semDedupTag(semDedupMembers(spark, dir, nlist), cellCap), eps, cellCap)
     }
@@ -492,8 +492,7 @@ object Similarity {
   def semDedupBudget(spark: SparkSession, dir: String,
                      dropFrac: Double = 0.5, floor: Double = 0.8,
                      nlist: Int = 16, cellCap: Int = 2000): DataFrame =
-    NearDup.Shared.memo(spark,
-      s"semdedupBudget:$dir:$dropFrac:$floor:$nlist:$cellCap") {
+    Artifacts.value(spark, Artifacts.SemDedupBudget, dir, dropFrac, floor, nlist, cellCap) {
       import spark.implicits._
       require(dropFrac >= 0.0 && dropFrac <= 1.0,
         s"dropFrac must be in [0, 1]: $dropFrac")
@@ -813,7 +812,7 @@ object Similarity {
 
   /** Memoized IVF index — (refined centroids, inverted lists) per
     * (session, shuffle setting, dir, nlist), built ONCE per process via
-    * the [[NearDup.Shared]] memo and read by every consumer (`ann_ivf`,
+    * an [[Artifacts.value]] and read by every consumer (`ann_ivf`,
     * `knn_classify_ivf`, any future probe): the canonical "build the
     * index once, probe many times" artifact. Both frames are
     * materialized eagerly (localCheckpoint — see NearDup's
@@ -822,7 +821,7 @@ object Similarity {
     * cell) and this memo becomes a table read. */
   private[graft] def ivfIndex(spark: SparkSession, dir: String,
                               nlist: Int): (DataFrame, DataFrame) =
-    NearDup.Shared.memo(spark, s"ivfIndex:$dir:$nlist") {
+    Artifacts.value(spark, Artifacts.IvfIndex, dir, nlist) {
       ivfIndexFrom(Tables.embeddings(spark, dir), nlist)
     }
 
@@ -1597,13 +1596,12 @@ object Similarity {
     // the WRITTEN store is a session template (one Lloyd pass AND one
     // lists shuffle+encode per session, r17 opt); each caller promotes
     // a physical copy it then appends to / deletes from / compacts
-    val src = graft.sources.Lake.sharedIndex(spark,
-      graft.operators.TextAnalysis.indexTemplateKey(
-        "ivfpre", dir, cut.toString, 0, 0, nlist = nlist)) { d =>
+    val src = Artifacts.directory(spark, Artifacts.IvfPrefixTemplate, dir,
+      Seq(cut, nlist)) { d =>
       writeIndex(ivfIndexFrom(
         Tables.embeddings(spark, dir).filter($"vec_id" <= cut), nlist), d)
     }
-    graft.operators.TextAnalysis.promoteTemplate(spark)(src)(path)
+    Artifacts.promote(spark, src)(path)
     cut
   }
 
@@ -2082,7 +2080,7 @@ object Similarity {
     * the m-byte codes and the scalar norm. */
   private[graft] def pqIndex(spark: SparkSession, dir: String, nlist: Int,
                              m: Int, dsub: Int, kpq: Int): (DataFrame, DataFrame) =
-    NearDup.Shared.memo(spark, s"pqIndex:$dir:$nlist:$m:$dsub:$kpq") {
+    Artifacts.value(spark, Artifacts.PqIndex, dir, nlist, m, dsub, kpq) {
       import spark.implicits._
       val (centroids, lists) = ivfIndex(spark, dir, nlist)
       val resid = lists
@@ -2765,7 +2763,7 @@ object Similarity {
   private[graft] def opqIndex(spark: SparkSession, dir: String, nlist: Int,
                               m: Int, dsub: Int, kpq: Int)
       : (Array[Float], DataFrame, DataFrame) =
-    NearDup.Shared.memo(spark, s"opqIndex:$dir:$nlist:$m:$dsub:$kpq") {
+    Artifacts.value(spark, Artifacts.OpqIndex, dir, nlist, m, dsub, kpq) {
       import spark.implicits._
       val dim = m * dsub
       val (centroids, lists) = ivfIndex(spark, dir, nlist)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftConfig, Tables}
+import graft.{Artifacts, GraftConfig, Tables}
 import graft.sources.IndexLayout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -365,7 +365,7 @@ object TextAnalysis {
       // prefix build promotes from the session template ("ref3" snap —
       // this family's reference excludes the mm third); appends and
       // deletes mutate this drill's own copy (r17 opt)
-      promoteTemplate(spark)(lineDfRef3Template(spark, dir, Some(cut)))(tmp)
+      Artifacts.promote(spark, lineDfRef3Template(spark, dir, Some(cut)))(tmp)
       lineIndexAppend(Tables.fanout(ref.filter($"doc_id" > cut)), tmp)
       lineIndexDelete(spark, tmp, docs.filter($"doc_id" % 7 === 0).select($"doc_id"))
       lineDedupServe(spark, tmp, Tables.fanout(neu))
@@ -400,10 +400,10 @@ object TextAnalysis {
       // (doc_id % 3 == 0 arrives as the batch), so its artifacts must
       // never alias the fleet's full-corpus line_df template
       graft.sources.Catalog.resolveOrBuild(spark, cat, "line_df", key,
-        stamp = "epoch-1")(promoteTemplate(spark)(
+        stamp = "epoch-1")(Artifacts.promote(spark,
         lineDfRef3Template(spark, dir, Some(cut))))
       graft.sources.Catalog.resolveOrBuild(spark, cat, "line_df", key,
-        stamp = "epoch-2")(promoteTemplate(spark)(
+        stamp = "epoch-2")(Artifacts.promote(spark,
         lineDfRef3Template(spark, dir, None)))
       graft.sources.Catalog.vacuum(spark, cat)
       val (path, stamp) =
@@ -540,7 +540,7 @@ object TextAnalysis {
     graft.sources.Lake.withScratchIndex(spark, "graft_para_idx") { tmp =>
       // prefix build promotes from the session template shared with
       // stream_para_index; the lifecycle mutates this drill's own copy
-      promoteTemplate(spark)(paraDfRef3Template(spark, dir, cut))(tmp)
+      Artifacts.promote(spark, paraDfRef3Template(spark, dir, cut))(tmp)
       paraIndexAppend(Tables.fanout(ref.filter($"doc_id" > cut)), tmp)
       lineIndexDelete(spark, tmp, docs.filter($"doc_id" % 7 === 0).select($"doc_id"))
       paraDedupServe(spark, tmp, Tables.fanout(neu))
@@ -1284,7 +1284,7 @@ object TextAnalysis {
     * per-occurrence double sums are order/term-set-shaped and must
     * not become tf-weighted products. */
   private[graft] def unigramTfFor(spark: SparkSession, dir: String): DataFrame =
-    NearDup.Shared.memo(spark, s"unigramTf:$dir") {
+    Artifacts.value(spark, Artifacts.UnigramTf, dir) {
       import spark.implicits._
       Tables.fanout(Tables.documents(spark, dir).select($"doc_id", $"text"))
         .select($"doc_id", explode(toks($"text")).as("token"))
@@ -1301,7 +1301,7 @@ object TextAnalysis {
     * occurrence per pass (guide §2.3 "aggregate before you shuffle" —
     * here, before every downstream pass). */
   private[graft] def bpeWordCountsFor(spark: SparkSession, dir: String): DataFrame =
-    NearDup.Shared.memo(spark, s"bpeWordCounts:$dir") {
+    Artifacts.value(spark, Artifacts.BpeWordCounts, dir) {
       import spark.implicits._
       unigramTfFor(spark, dir)
         .groupBy($"token").agg(sum($"tf").as("n_occ"))
@@ -1392,7 +1392,7 @@ object TextAnalysis {
   private[graft] def nbTrainFor(spark: SparkSession, dir: String,
                                 dim: Int = 64,
                                 trainMod: Int = 4): (DataFrame, DataFrame) =
-    NearDup.Shared.memo(spark, s"nbModel:$dir:$dim:$trainMod") {
+    Artifacts.value(spark, Artifacts.NbModel, dir, dim, trainMod) {
       import spark.implicits._
       nbTrain(Tables.fanout(Tables.documents(spark, dir)
         .select($"doc_id", $"text")), dim, trainMod,
@@ -1541,7 +1541,7 @@ object TextAnalysis {
       .select($"doc_id", $"text"))
     // the frozen prefix pair is a session artifact like nbTrainFor's
     // full-corpus one — train it once per (dir, dim) (r17 opt)
-    val (model, priors) = NearDup.Shared.memo(spark, s"nbModelPrefix:$dir:$dim") {
+    val (model, priors) = Artifacts.value(spark, Artifacts.NbModelPrefix, dir, dim) {
       nbTrain(docs.filter($"doc_id" % 10 < 7), dim,
         tf = Some(unigramTfFor(spark, dir).filter($"doc_id" % 10 < 7)))
     }
@@ -1604,13 +1604,13 @@ object TextAnalysis {
       // prefix model promotes from a session template — one prefix
       // train per session, r17 opt)
       graft.sources.Catalog.resolveOrBuild(spark, cat, "nbmodel", key,
-        stamp = "epoch-1")(promoteTemplate(spark)(
+        stamp = "epoch-1")(Artifacts.promote(spark,
         nbModelTemplate(spark, dir, Some(cut), dim)))
       // the corpus drifted: the stamped epoch-2 resolve retrains on
       // the full corpus and supersedes — never serves stale (the full
       // train is the nbTrainFor memo's)
       graft.sources.Catalog.resolveOrBuild(spark, cat, "nbmodel", key,
-        stamp = "epoch-2")(promoteTemplate(spark)(
+        stamp = "epoch-2")(Artifacts.promote(spark,
         nbModelTemplate(spark, dir, None, dim)))
       graft.sources.Catalog.vacuum(spark, cat)
       val (path, stamp) =
@@ -1702,7 +1702,7 @@ object TextAnalysis {
   private[graft] def dsirFitFor(spark: SparkSession, dir: String,
                                 dim: Int = 64, selectFrac: Double = 0.25)
       : (DataFrame, DataFrame, Option[Long]) =
-    NearDup.Shared.memo(spark, s"dsirFit:$dir:$dim:$selectFrac") {
+    Artifacts.value(spark, Artifacts.DsirFit, dir, dim, selectFrac) {
       import spark.implicits._
       dsirFit(Tables.fanout(Tables.documents(spark, dir)
         .select($"doc_id", $"text")), dim, selectFrac,
@@ -1906,8 +1906,7 @@ object TextAnalysis {
       .select($"doc_id", $"text"))
     // the frozen prefix (ratio, eps) is a session artifact like
     // dsirFitFor's full-corpus one — train it once per key (r17 opt)
-    val (ratio, eps) = NearDup.Shared.memo(spark,
-      s"dsirPrefix:$dir:$dim:$selectFrac") {
+    val (ratio, eps) = Artifacts.value(spark, Artifacts.DsirPrefix, dir, dim, selectFrac) {
       dsirTrain(docs.filter($"doc_id" % 10 < 7), dim, selectFrac,
         tf = Some(unigramTfFor(spark, dir).filter($"doc_id" % 10 < 7)))
     }
@@ -2321,14 +2320,14 @@ object TextAnalysis {
   /** The trained merge table, memoized per (session, dir, rounds) —
     * the train-once-apply-many economics C25b's scaladoc promises:
     * `bpe_train_merges`, `bpe_encode` and `tokenizer_fertility` all
-    * consume the SAME ≤26-row artifact, so one training pays (MemoLog
-    * attributes the build to whichever entry ran first) and the apply
-    * passes reuse it instead of re-running the 16-round argmax loop
-    * over the corpus per entry (r16 opt: 3 trainings → 1, ~290 CPU-s
-    * at sf0.1). */
+    * consume the SAME ≤26-row artifact, so one training pays (the
+    * [[Artifacts]] lineage attributes the build to whichever entry ran
+    * first) and the apply passes reuse it instead of re-running the
+    * 16-round argmax loop over the corpus per entry (r16 opt: 3
+    * trainings → 1, ~290 CPU-s at sf0.1). */
   private[graft] def bpeMergesFor(spark: SparkSession, dir: String,
                                   rounds: Int): DataFrame =
-    NearDup.Shared.memo(spark, s"bpeMerges:$dir:$rounds") {
+    Artifacts.value(spark, Artifacts.BpeMerges, dir, rounds) {
       bpeMergesOfCounts(bpeWordCountsFor(spark, dir), rounds).localCheckpoint()
     }
 
@@ -2790,7 +2789,7 @@ object TextAnalysis {
     * index build, E11 stream posts, C27's lexical side); one
     * tokenize pass per process instead of four. Already
     * checkpointed, so every consumer starts from the materialized
-    * rows (the NearDup.Shared contract). */
+    * rows (the [[Artifacts]] value contract). */
   /** Degenerate-corpus probe for the serve entries' early-return
     * guards: true iff no document reaches [[bm25TfTable]]'s 3-token
     * shingle floor — exactly when the tf table is empty (its filter
@@ -2806,7 +2805,7 @@ object TextAnalysis {
       .filter(size(toks(col("text"))) >= 3).isEmpty
 
   private[graft] def tfTableFor(spark: SparkSession, dir: String): DataFrame =
-    NearDup.Shared.memo(spark, s"bm25Tf:$dir") {
+    Artifacts.value(spark, Artifacts.Bm25Tf, dir) {
       bm25TfTable(Tables.fanout(
         Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
         .localCheckpoint()
@@ -3355,7 +3354,7 @@ object TextAnalysis {
     * — the IVF build and the serve panel share one materialization. */
   private[graft] def docEmbedDense(spark: SparkSession, dir: String,
                                    dim: Int): DataFrame =
-    NearDup.Shared.memo(spark, s"docEmbedDense:$dir:$dim") {
+    Artifacts.value(spark, Artifacts.DocEmbedDense, dir, dim) {
       import spark.implicits._
       docEmbed(spark, dir, dim)
         .groupBy($"doc_id")
@@ -3466,8 +3465,8 @@ object TextAnalysis {
     // the two INDEPENDENT legs overlap (guide §2.6), the one-commit
     // registerAll lands strictly after both
     graft.Par.jobs(
-      () => promoteCopy(spark, bm25ImpactTemplate(spark, dir, cutId, dfCap), bmDir),
-      () => promoteCopy(spark, ivfTemplate(spark, dir, cutId, dim), ivDir))
+      () => Artifacts.promote(spark, bm25ImpactTemplate(spark, dir, cutId, dfCap))(bmDir),
+      () => Artifacts.promote(spark, ivfTemplate(spark, dir, cutId, dim))(ivDir))
     graft.sources.Catalog.registerAll(spark, cat, Seq(
       ("bm25impact", key, bmDir, stamp), ("ivf", key, ivDir, stamp)))
   }
@@ -3805,7 +3804,7 @@ object TextAnalysis {
       // the full-corpus impact build promotes from the session
       // template (sharedImpactIndex's key); the staleness lifecycle
       // (mark + ε-gated refresh) mutates this drill's own copy (r17 opt)
-      promoteTemplate(spark)(bm25ImpactTemplate(spark, dir, None, dfCap))(tmp)
+      Artifacts.promote(spark, bm25ImpactTemplate(spark, dir, None, dfCap))(tmp)
       bm25MarkDeleted(spark, tmp, docs.filter($"doc_id" % 5 === 3))
       bm25RefreshIfStale(Tables.fanout(docs), tmp, eps = 0.25)
       bm25ServeFromLive(spark, tmp, k, qMod)
@@ -4196,7 +4195,7 @@ object TextAnalysis {
   }
 
   /** The SHARED impact-index directory for `dir` — built once per
-    * (session, dir, dfCap) via [[graft.sources.Lake.sharedIndex]] and
+    * (session, dir, dfCap) as an [[Artifacts.directory]] and
     * reused by every read-only serve (C23b, C27b): the
     * build-once-serve-many economics made literal inside one process.
     * Read-only by contract (the impact layout cannot be appended or
@@ -4254,12 +4253,12 @@ object TextAnalysis {
       // snapshot per session, r17 opt); the drill still registers,
       // supersedes, vacuums and serves REAL files it owns.
       graft.sources.Catalog.resolveOrBuild(spark, cat, "bm25impact", key,
-        stamp = "epoch-1")(promoteTemplate(spark)(
+        stamp = "epoch-1")(Artifacts.promote(spark,
         bm25ImpactTemplate(spark, dir, Some(cut), dfCap)))
       // the corpus drifted: the stamped epoch-2 resolve rebuilds on
       // the full corpus and supersedes — never serves stale
       graft.sources.Catalog.resolveOrBuild(spark, cat, "bm25impact", key,
-        stamp = "epoch-2")(promoteTemplate(spark)(
+        stamp = "epoch-2")(Artifacts.promote(spark,
         bm25ImpactTemplate(spark, dir, None, dfCap)))
       // reclaim the superseded epoch-1 store (lease + pin gates)
       graft.sources.Catalog.vacuum(spark, cat)
@@ -4325,6 +4324,99 @@ object TextAnalysis {
   private[graft] val FleetKinds =
     Seq("bm25impact", "ivf", "dedup_sig", "line_df")
 
+  /** ONE canonical builder per template kind (the r16 ADVICE fix made
+    * structural: whichever caller runs first defines the artifact for
+    * every consumer, so every key-sharing call site — the fleet and
+    * hybrid cutovers, the catalog/rollback/stream drills and the
+    * read-only serves — routes through THESE, and each one's
+    * [[Artifacts]] key carries the corpus snapshot and every parameter
+    * its callers vary). The bm25 impacts build from the memoized tf
+    * table — per-doc tf rows are doc-local, so filtering the full tf to
+    * a doc-id prefix ≡ tokenizing the prefix (the r17-run-1 lesson: a
+    * fresh tokenize inside the template cost 10 s where the memo-fed
+    * build costs 2 s). */
+  private[graft] def bm25ImpactTemplate(spark: SparkSession, dir: String,
+                                        cutId: Option[Long],
+                                        dfCap: Int = 100): String =
+    Artifacts.directory(spark, Artifacts.Bm25ImpactTemplate, dir,
+      Seq(snap(cutId), dfCap)) { d =>
+      val tf = cutId.fold(tfTableFor(spark, dir))(c =>
+        tfTableFor(spark, dir).filter(col("doc_id") <= c))
+      bm25WriteImpactTf(tf, d, 16, dfCap)
+    }
+
+  private def snap(cutId: Option[Long]): String = cutId.fold("full")(_.toString)
+
+  private[graft] def ivfTemplate(spark: SparkSession, dir: String,
+                                 cutId: Option[Long], dim: Int = 64): String =
+    Artifacts.directory(spark, Artifacts.IvfTemplate, dir, Seq(snap(cutId), dim)) { d =>
+      graft.operators.Similarity.ivfWriteFrom(
+        cutId.fold(docEmbedDense(spark, dir, dim))(c =>
+          docEmbedDense(spark, dir, dim).filter(col("vec_id") <= c)),
+        d, nlist = 16)
+    }
+
+  /** line_df over the FULL corpus (the fleet family). */
+  private[graft] def lineDfTemplate(spark: SparkSession, dir: String,
+                                    cutId: Option[Long]): String =
+    Artifacts.directory(spark, Artifacts.LineDfTemplate, dir, Seq(snap(cutId))) { d =>
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+      lineIndexWrite(Tables.fanout(
+        cutId.fold(docs)(c => docs.filter(col("doc_id") <= c))), d)
+    }
+
+  /** line_df over the mm-excluded reference (doc_id % 3 != 0 — the
+    * C30 drill family; its own kind, so it can never alias the fleet's
+    * full-corpus artifacts). */
+  private[graft] def lineDfRef3Template(spark: SparkSession, dir: String,
+                                        cutId: Option[Long]): String =
+    Artifacts.directory(spark, Artifacts.LineDfRef3Template, dir, Seq(snap(cutId))) { d =>
+      val ref = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+        .filter(col("doc_id") % 3 =!= 0)
+      lineIndexWrite(Tables.fanout(
+        cutId.fold(ref)(c => ref.filter(col("doc_id") <= c))), d)
+    }
+
+  /** para_df over the mm-excluded reference PREFIX — C38b
+    * (`para_dedup_serve`) and E29 (`stream_para_index`) both
+    * initialize their lifecycle from the same 70% ref3 prefix; the
+    * drills' appends/deletes/serves mutate their own promoted copy. */
+  private[graft] def paraDfRef3Template(spark: SparkSession, dir: String,
+                                        cut: Long): String =
+    Artifacts.directory(spark, Artifacts.ParaDfRef3Template, dir, Seq(cut)) { d =>
+      val ref = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+        .filter(col("doc_id") % 3 =!= 0)
+      paraIndexWrite(Tables.fanout(ref.filter(col("doc_id") <= cut)), d)
+    }
+
+  /** The 60% id-mod KN count-store prefix — C21i (`kn_append`) and
+    * E31 (`stream_kn_append`) both initialize from it; counts are
+    * additive integers, so each drill's appends/retractions fold into
+    * its own promoted copy exactly as into a fresh write. */
+  private[graft] def knPrefixStoreTemplate(spark: SparkSession, dir: String): String =
+    Artifacts.directory(spark, Artifacts.KnPrefixStoreTemplate, dir) { d =>
+      val all = Tables.fanout(Tables.documents(spark, dir)
+        .select(col("doc_id"), col("text")))
+      knStoreWrite(all.filter(col("doc_id") % 10 < 6), d)
+    }
+
+  /** The persisted NB model template — full-corpus models come from
+    * the nbTrainFor memo; prefix models train once per key. */
+  private[graft] def nbModelTemplate(spark: SparkSession, dir: String,
+                                     cutId: Option[Long],
+                                     dim: Int = 64): String =
+    Artifacts.directory(spark, Artifacts.NbModelTemplate, dir, Seq(snap(cutId), dim)) { d =>
+      val docs = Tables.fanout(Tables.documents(spark, dir)
+        .select(col("doc_id"), col("text")))
+      cutId match {
+        case Some(c) => nbModelWrite(docs.filter(col("doc_id") <= c), d, dim,
+          trained = Some(nbTrain(docs.filter(col("doc_id") <= c), dim,
+            tf = Some(unigramTfFor(spark, dir).filter(col("doc_id") <= c)))))
+        case None => nbModelWrite(docs, d, dim,
+          trained = Some(nbTrainFor(spark, dir, dim)))
+      }
+    }
+
   /** One maintenance epoch for the whole fleet: build all four kinds
     * against the same corpus snapshot (`cutId` bounds the prefix; None
     * = full), then flip them visible together in one registerAll
@@ -4338,166 +4430,10 @@ object TextAnalysis {
     * not re-tokenize the corpus four more times to obtain the same
     * artifacts the cutover drill (C27d) already built; one maintenance
     * job pays the build, every catalog that registers it pays a copy.
-    * The one-time build cost stays visible — MemoLog attributes it to
-    * whichever bench entry built first (bench_out's memo_builds) — and
-    * every drill still registers, vacuums and reclaims REAL files it
-    * exclusively owns. */
-  /** The canonical session-template key per (kind, corpus snapshot,
-    * params) — ONE vocabulary for every template-and-promote cutover
-    * (fleet, hybrid) AND the read-only serves (C23b's shared impact
-    * dir, the hybrid IVF), so the same physical artifact is built
-    * once per session no matter which entry needs it first (r16 opt:
-    * the hybrid cutover used to rebuild what the fleet cutover had
-    * already built). Keys carry EVERY parameter that shapes the
-    * artifact (dfCap shapes postings; dim shapes embeddings;
-    * nBuckets/nlist shape the physical layout) so a parameter drift
-    * at one build site can never silently serve the other callers a
-    * mismatched artifact — callers that deviate from the registry
-    * defaults get their own template. */
-  private[graft] def indexTemplateKey(kind: String, dir: String, snap: String,
-                                      dfCap: Int, dim: Int,
-                                      nBuckets: Int = 16,
-                                      nlist: Int = 16): String = kind match {
-    case "bm25impact" => s"tmpl:bm25impact:$dir:$snap:$dfCap:nb$nBuckets"
-    case "ivf"        => s"tmpl:ivf:$dir:$snap:$dim:nl$nlist"
-    case "dedup_sig"  => s"tmpl:dedup_sig:$dir:$snap:$dfCap:nb$nBuckets"
-    case "line_df"    => s"tmpl:line_df:$dir:$snap:nb$nBuckets"
-    case "para_df"    => s"tmpl:para_df:$dir:$snap:nb$nBuckets"
-    case "kn2store"   => s"tmpl:kn2store:$dir:$snap"
-    case "ivfpre"     => s"tmpl:ivfpre:$dir:$snap:nl$nlist"
-    case "nbmodel"    => s"tmpl:nbmodel:$dir:$snap:$dim"
-    case other => throw new IllegalArgumentException(s"unknown template kind $other")
-  }
-
-  /** Physically COPY a resolved session template into a destination
-    * store dir (the promote step of every template-and-promote drill,
-    * r17 opt — the r16 verdict's deferred item). The drill's subject
-    * is the register/supersede/vacuum/rollback lifecycle over real
-    * files it exclusively owns, not the build, so the epoch artifacts
-    * promote from one session build instead of re-running a corpus
-    * pass per epoch per entry; MemoLog attributes the one-time build
-    * to whichever entry needed it first. `src` is by-name so a
-    * resolveOrBuild HIT never resolves (or builds) the template. */
-  private[graft] def promoteTemplate(spark: SparkSession)(src: => String)
-      : String => Unit = d => {
-    // an empty pre-created scratch dir (withScratchIndex) is replaced
-    // wholesale so the copy lands AS `d`, not under it
-    val dp = new org.apache.hadoop.fs.Path(d)
-    val fs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dp)) fs.delete(dp, true)
-    promoteCopy(spark, src, d)
-  }
-
-  /** ONE canonical builder per template kind (the r16 ADVICE fix made
-    * structural: whichever caller runs first defines the artifact for
-    * every consumer, so every key-sharing call site routes through
-    * THESE — a parameter drift at one site is now impossible, and the
-    * builds feed from the session memos). The bm25 impacts build from
-    * the memoized tf table — per-doc tf rows are doc-local, so
-    * filtering the full tf to a doc-id prefix ≡ tokenizing the prefix
-    * (the r17-run-1 lesson: a fresh tokenize inside the template cost
-    * 10 s where the memo-fed build costs 2 s). */
-  private[graft] def bm25ImpactTemplate(spark: SparkSession, dir: String,
-                                        cutId: Option[Long],
-                                        dfCap: Int = 100): String =
-    graft.sources.Lake.sharedIndex(spark,
-      indexTemplateKey("bm25impact", dir, cutId.fold("full")(_.toString),
-        dfCap, 0)) { d =>
-      val tf = cutId.fold(tfTableFor(spark, dir))(c =>
-        tfTableFor(spark, dir).filter(col("doc_id") <= c))
-      bm25WriteImpactTf(tf, d, 16, dfCap)
-    }
-
-  private[graft] def ivfTemplate(spark: SparkSession, dir: String,
-                                 cutId: Option[Long], dim: Int = 64): String =
-    graft.sources.Lake.sharedIndex(spark,
-      indexTemplateKey("ivf", dir, cutId.fold("full")(_.toString), 0, dim)) { d =>
-      graft.operators.Similarity.ivfWriteFrom(
-        cutId.fold(docEmbedDense(spark, dir, dim))(c =>
-          docEmbedDense(spark, dir, dim).filter(col("vec_id") <= c)),
-        d, nlist = 16)
-    }
-
-  /** line_df over the FULL corpus (the fleet family). */
-  private[graft] def lineDfTemplate(spark: SparkSession, dir: String,
-                                    cutId: Option[Long]): String =
-    graft.sources.Lake.sharedIndex(spark,
-      indexTemplateKey("line_df", dir, cutId.fold("full")(_.toString), 0, 0)) { d =>
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      lineIndexWrite(Tables.fanout(
-        cutId.fold(docs)(c => docs.filter(col("doc_id") <= c))), d)
-    }
-
-  /** line_df over the mm-excluded reference (doc_id % 3 != 0 — the
-    * C30 drill family; "ref3" snaps so it can never alias the fleet's
-    * full-corpus artifacts). */
-  private[graft] def lineDfRef3Template(spark: SparkSession, dir: String,
-                                        cutId: Option[Long]): String =
-    graft.sources.Lake.sharedIndex(spark,
-      indexTemplateKey("line_df", dir,
-        cutId.fold("ref3:full")(c => s"ref3:$c"), 0, 0)) { d =>
-      val ref = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-        .filter(col("doc_id") % 3 =!= 0)
-      lineIndexWrite(Tables.fanout(
-        cutId.fold(ref)(c => ref.filter(col("doc_id") <= c))), d)
-    }
-
-  /** para_df over the mm-excluded reference PREFIX — C38b
-    * (`para_dedup_serve`) and E29 (`stream_para_index`) both
-    * initialize their lifecycle from the same 70% ref3 prefix; the
-    * drills' appends/deletes/serves mutate their own promoted copy. */
-  private[graft] def paraDfRef3Template(spark: SparkSession, dir: String,
-                                        cut: Long): String =
-    graft.sources.Lake.sharedIndex(spark,
-      indexTemplateKey("para_df", dir, s"ref3:$cut", 0, 0)) { d =>
-      val ref = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-        .filter(col("doc_id") % 3 =!= 0)
-      paraIndexWrite(Tables.fanout(ref.filter(col("doc_id") <= cut)), d)
-    }
-
-  /** The 60% id-mod KN count-store prefix — C21i (`kn_append`) and
-    * E31 (`stream_kn_append`) both initialize from it; counts are
-    * additive integers, so each drill's appends/retractions fold into
-    * its own promoted copy exactly as into a fresh write. */
-  private[graft] def knPrefixStoreTemplate(spark: SparkSession, dir: String): String =
-    graft.sources.Lake.sharedIndex(spark,
-      indexTemplateKey("kn2store", dir, "mod10lt6", 0, 0)) { d =>
-      val all = Tables.fanout(Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")))
-      knStoreWrite(all.filter(col("doc_id") % 10 < 6), d)
-    }
-
-  /** The persisted NB model template — full-corpus models come from
-    * the nbTrainFor memo; prefix models train once per key. */
-  private[graft] def nbModelTemplate(spark: SparkSession, dir: String,
-                                     cutId: Option[Long],
-                                     dim: Int = 64): String =
-    graft.sources.Lake.sharedIndex(spark,
-      indexTemplateKey("nbmodel", dir, cutId.fold("full")(_.toString),
-        0, dim)) { d =>
-      val docs = Tables.fanout(Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")))
-      cutId match {
-        case Some(c) => nbModelWrite(docs.filter(col("doc_id") <= c), d, dim,
-          trained = Some(nbTrain(docs.filter(col("doc_id") <= c), dim,
-            tf = Some(unigramTfFor(spark, dir).filter(col("doc_id") <= c)))))
-        case None => nbModelWrite(docs, d, dim,
-          trained = Some(nbTrainFor(spark, dir, dim)))
-      }
-    }
-
-  /** Physical copy of a finished template index into a catalog-owned
-    * store directory — the promote step of every template-and-promote
-    * cutover (the drill registers, vacuums and reclaims REAL files it
-    * exclusively owns while the session template stays reusable). */
-  private[graft] def promoteCopy(spark: SparkSession, src: String, dst: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sp = new org.apache.hadoop.fs.Path(src)
-    val dp = new org.apache.hadoop.fs.Path(dst)
-    org.apache.hadoop.fs.FileUtil.copy(sp.getFileSystem(conf), sp,
-      dp.getFileSystem(conf), dp, false, conf)
-  }
-
+    * The one-time build cost stays visible — the [[Artifacts]] lineage
+    * attributes it to whichever bench entry built first (bench_out's
+    * memo_builds) — and every drill still registers, vacuums and
+    * reclaims REAL files it exclusively owns. */
   private[graft] def fleetCatalogCutover(spark: SparkSession, dir: String,
                                          cat: String, key: String,
                                          stamp: String, cutId: Option[Long],
@@ -4515,11 +4451,11 @@ object TextAnalysis {
     // the one-commit registerAll strictly after all four land. Every
     // leg routes through its kind's CANONICAL template builder (r17).
     graft.Par.jobs(
-      () => promoteCopy(spark, bm25ImpactTemplate(spark, dir, cutId, dfCap), bm),
-      () => promoteCopy(spark, ivfTemplate(spark, dir, cutId, dim), iv),
-      () => promoteCopy(spark,
-        graft.operators.NearDup.dedupSigTemplate(spark, dir, cutId, dfCap), sg),
-      () => promoteCopy(spark, lineDfTemplate(spark, dir, cutId), ln))
+      () => Artifacts.promote(spark, bm25ImpactTemplate(spark, dir, cutId, dfCap))(bm),
+      () => Artifacts.promote(spark, ivfTemplate(spark, dir, cutId, dim))(iv),
+      () => Artifacts.promote(spark,
+        graft.operators.NearDup.dedupSigTemplate(spark, dir, cutId, dfCap))(sg),
+      () => Artifacts.promote(spark, lineDfTemplate(spark, dir, cutId))(ln))
     graft.sources.Catalog.registerAll(spark, cat, Seq(
       ("bm25impact", key, bm, stamp), ("ivf", key, iv, stamp),
       ("dedup_sig", key, sg, stamp), ("line_df", key, ln, stamp)))
@@ -4607,10 +4543,10 @@ object TextAnalysis {
       // subject is the supersede/rollback/vacuum lifecycle, which
       // still runs over real files it owns
       graft.sources.Catalog.resolveOrBuild(spark, cat, "bm25impact", key,
-        stamp = "epoch-1")(promoteTemplate(spark)(
+        stamp = "epoch-1")(Artifacts.promote(spark,
         bm25ImpactTemplate(spark, dir, Some(cut), dfCap)))
       graft.sources.Catalog.resolveOrBuild(spark, cat, "bm25impact", key,
-        stamp = "epoch-2")(promoteTemplate(spark)(
+        stamp = "epoch-2")(Artifacts.promote(spark,
         bm25ImpactTemplate(spark, dir, None, dfCap)))
       // the cutover discipline that makes rollback possible at all
       graft.sources.Catalog.vacuum(spark, cat, keepEpochs = 2)
@@ -4734,7 +4670,7 @@ object TextAnalysis {
     * bucket from: one LM fit + one scoring pass instead of three
     * (r16 opt). Four narrow columns per doc, eagerly checkpointed. */
   private[graft] def pplScoresFor(spark: SparkSession, dir: String): DataFrame =
-    NearDup.Shared.memo(spark, s"pplScores:$dir") {
+    Artifacts.value(spark, Artifacts.PplScores, dir) {
       perplexityOf(Tables.fanout(Tables.documents(spark, dir)
         .select(col("doc_id"), col("text")))).localCheckpoint()
     }
@@ -4744,7 +4680,7 @@ object TextAnalysis {
     * full-corpus LM consumer in the session. */
   private[graft] def perplexityLmFor(spark: SparkSession,
                                      dir: String): (DataFrame, DataFrame) =
-    NearDup.Shared.memo(spark, s"pplLm:$dir") {
+    Artifacts.value(spark, Artifacts.PplLm, dir) {
       import spark.implicits._
       // the LM's count table IS the session word-frequency memo (sum
       // of tf over docs ≡ counting the token stream — exact integers;
@@ -5057,7 +4993,7 @@ object TextAnalysis {
     graft.sources.Lake.withScratchIndex(spark, "graft_kn_store") { tmp =>
       // 60% initial write promotes from the session template shared
       // with stream_kn_append; the deltas fold into this drill's copy
-      promoteTemplate(spark)(knPrefixStoreTemplate(spark, dir))(tmp)
+      Artifacts.promote(spark, knPrefixStoreTemplate(spark, dir))(tmp)
       knStoreAppend(all.filter($"doc_id" % 10 === 6 || $"doc_id" % 10 === 7), tmp)
       knStoreAppend(all.filter($"doc_id" % 10 >= 8), tmp)
       knStoreRetract(all.filter($"doc_id" % 7 === 0), tmp)
@@ -5099,7 +5035,7 @@ object TextAnalysis {
       .select($"doc_id", $"text"))
     // the frozen prefix bigram tables are a session artifact — train
     // once per dir (r17 opt; the nbModelPrefix/dsirPrefix pattern)
-    val lm = NearDup.Shared.memo(spark, s"kn2Prefix:$dir") {
+    val lm = Artifacts.value(spark, Artifacts.Kn2Prefix, dir) {
       knBigramLm(docsAll.filter($"doc_id" % 10 < 7))
     }
     knStaleServeFrom(docsAll, lm)
@@ -5382,7 +5318,7 @@ object TextAnalysis {
       .select($"doc_id", $"text"))
     // the frozen prefix trigram tables are a session artifact — train
     // once per dir (r17 opt; the nbModelPrefix/dsirPrefix pattern)
-    val tables = NearDup.Shared.memo(spark, s"kn3Prefix:$dir") {
+    val tables = Artifacts.value(spark, Artifacts.Kn3Prefix, dir) {
       knTrigramTables(trigramStream(docsAll.filter($"doc_id" % 10 < 7)))
     }
     knTrigramStaleServeFrom(docsAll, tables)
@@ -5517,7 +5453,7 @@ object TextAnalysis {
     * [[pplScoresFor]], and E24 derives its thresholds from this table
     * instead of re-bucketing from scratch). */
   private[graft] def ccnetBucketsFor(spark: SparkSession, dir: String): DataFrame =
-    NearDup.Shared.memo(spark, s"ccnetBuckets:$dir") {
+    Artifacts.value(spark, Artifacts.CcnetBuckets, dir) {
       import spark.implicits._
       ccnetBucketsOf(Tables.fanout(Tables.documents(spark, dir)
         .select($"doc_id", $"lang", $"text")),
@@ -5622,7 +5558,7 @@ object TextAnalysis {
       .select($"doc_id", $"lang", $"text"))
     // the frozen prefix LM + per-lang cuts are session artifacts like
     // perplexityLmFor's full-corpus ones — train once per dir (r17 opt)
-    val (counts, scal, cuts) = NearDup.Shared.memo(spark, s"ccnetPrefix:$dir") {
+    val (counts, scal, cuts) = Artifacts.value(spark, Artifacts.CcnetPrefix, dir) {
       val prefix = docsAll.filter($"doc_id" % 10 < 7)
       val (c, s) = perplexityLm(prefix.select($"doc_id", $"text"))
       (c, s, ccnetThresholds(prefix).localCheckpoint())

@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CROSS-PROCESS INDEX CATALOG — the persisted form of
-  * [[Lake.sharedIndex]]'s build-once-serve-many economics.
+  * [[graft.Artifacts.directory]]'s build-once-serve-many economics.
   *
-  * `sharedIndex` memoizes per (session, key): one process builds a
-  * serving index once and every later caller in that process reuses
-  * it. At deployment scale the builder and the servers are DIFFERENT
+  * A directory artifact is built once per (session, key): one process
+  * builds a serving index once and every later caller in that process
+  * reuses it. At deployment scale the builder and the servers are DIFFERENT
   * processes (a nightly maintenance job; a fleet of query servers),
   * so the memo must live on disk: a manifest mapping
   * (kind, key) → (index path, stamp) that any process can read. The
@@ -105,7 +105,7 @@ object Catalog {
         (r.getAs[String]("path"), r.getAs[String]("stamp")))
   }
 
-  /** Resolve-or-build: the cross-process [[Lake.sharedIndex]]. A
+  /** Resolve-or-build: the cross-process [[graft.Artifacts.directory]]. A
     * registered index for (kind, key) is reused as-is — the build
     * callback never runs, which is the whole economics: one
     * maintenance process pays the build, every serving process pays a

@@ -17,96 +17,6 @@ object Lake {
 
   val CorruptCol = "_corrupt_record"
 
-  private val sharedDirs =
-    scala.collection.mutable.HashMap[(SparkSession, String), String]()
-  // per-(session, key) build cells: two DIFFERENT keys build
-  // concurrently (the fleet cutover overlaps its four kind builds —
-  // guide §2.6) while the SAME key still builds exactly once. The
-  // cell factory does no work inside computeIfAbsent (the documented
-  // nested-memo deadlock is about running builds there). Same-key
-  // REENTRY from inside a build is a bug, not a feature — the monitor
-  // would re-admit the thread before sharedDirs is populated and run
-  // the build twice (double store dir + double registration with a
-  // catalog), so sharedIndex fails fast on it via inFlight.
-  private val sharedCells =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Object]()
-  private val inFlight = new java.lang.ThreadLocal[Set[(SparkSession, String)]] {
-    override def initialValue(): Set[(SparkSession, String)] = Set.empty
-  }
-
-  /** Session-lifetime SHARED serving index: `build` runs once per
-    * (session, key); every later caller reuses the directory — the
-    * literal build-once-serve-many economics inside one process.
-    * READ-ONLY by contract: mutating lifecycles (the append/delete/
-    * vacuum gates) must keep private scratches via
-    * [[withScratchIndex]].
-    *
-    * With a CATALOG configured (`catalogDir` here, or `catalogDir:`
-    * in graft.conf), the memo upgrades to the cross-process form: the
-    * build lands durably in the catalog's store and registers in its
-    * manifest ([[Catalog.resolveOrBuild]]), so a maintenance process
-    * and a fleet of serving processes share one physical index — the
-    * in-session map then only saves the manifest lookup. Without one,
-    * the directory is session-scoped temp space, recursively deleted
-    * at JVM exit (a shutdown hook CAN remove non-empty dirs, unlike
-    * File.deleteOnExit).
-    *
-    * A non-empty `stamp` carries the corpus state the caller needs
-    * the index built from into [[Catalog.resolveOrBuild]]'s freshness
-    * contract: a catalog registration under an older stamp is rebuilt
-    * and superseded instead of served stale. The stamp is part of the
-    * in-session memo key too, so one session observing a corpus
-    * change re-resolves rather than serving its own stale memo. */
-  def sharedIndex(spark: SparkSession, key: String,
-                  catalogDir: Option[String] = None,
-                  stamp: String = "")
-                 (build: String => Unit): String = {
-    val mapKey = (spark, s"$key@$stamp")
-    require(!inFlight.get().contains(mapKey),
-      s"sharedIndex: same-key reentry during build of '$key' — a " +
-        "build that resolves its own key would run twice (and " +
-        "double-register with a catalog); route the nested need " +
-        "through the build's own directory instead")
-    // evict stopped-session entries so a long-lived driver cycling
-    // sessions doesn't pin them (dirs and cells purge together)
-    sharedDirs.synchronized {
-      sharedDirs.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    }
-    sharedCells.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val cell = sharedCells.computeIfAbsent(mapKey, _ => new Object)
-    cell.synchronized {
-      sharedDirs.synchronized(sharedDirs.get(mapKey)) match {
-        case Some(d) => d
-        case None =>
-          inFlight.set(inFlight.get() + mapKey)
-          val t0 = System.nanoTime()
-          val d = try {
-            val cat = catalogDir.orElse(
-              Some(graft.GraftConfig.ambient.catalogDir).filter(_.nonEmpty))
-            cat match {
-              case Some(c) => Catalog.resolveOrBuild(spark, c, "shared", key, stamp)(build)
-              case None =>
-                val tmp = java.nio.file.Files.createTempDirectory("graft_shared_idx").toString
-                Runtime.getRuntime.addShutdownHook(new Thread(() => {
-                  try {
-                    val p = new org.apache.hadoop.fs.Path(tmp)
-                    p.getFileSystem(new org.apache.hadoop.conf.Configuration()).delete(p, true)
-                  } catch { case _: Throwable => () }
-                }))
-                build(tmp)
-                tmp
-            }
-          } finally {
-            inFlight.set(inFlight.get() - mapKey)
-            graft.MemoLog.record(s"sharedIndex:$key",
-              (System.nanoTime() - t0) / 1e9)
-          }
-          sharedDirs.synchronized(sharedDirs.update(mapKey, d))
-          d
-      }
-    }
-  }
-
   /** Run `build` against a scratch on-disk index directory, eagerly
     * materialize its result (`localCheckpoint` — the returned frame
     * reads Spark blocks, not the scratch files), then recursively

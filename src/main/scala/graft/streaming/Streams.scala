@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -1112,7 +1112,7 @@ object Streams {
       // corpus snapshot per session, r17 opt); the mid-stream cutover
       // and reclaim still run over real files this drill owns
       graft.sources.Catalog.resolveOrBuild(spark, cat, "dedup_sig", key,
-        stamp = "epoch-1")(graft.operators.TextAnalysis.promoteTemplate(spark)(
+        stamp = "epoch-1")(Artifacts.promote(spark,
         NearDup.dedupSigTemplate(spark, dir, Some(cut), dfCap)))
       def serveBatch(b: org.apache.spark.sql.DataFrame,
                      pred: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
@@ -1129,7 +1129,7 @@ object Streams {
       // the cutover lands mid-stream; the old store is reclaimed, so
       // a sink that cached its path would crash — re-resolving doesn't
       graft.sources.Catalog.resolveOrBuild(spark, cat, "dedup_sig", key,
-        stamp = "epoch-2")(graft.operators.TextAnalysis.promoteTemplate(spark)(
+        stamp = "epoch-2")(Artifacts.promote(spark,
         NearDup.dedupSigTemplate(spark, dir, None, dfCap)))
       graft.sources.Catalog.vacuum(spark, cat)
       before.unionAll(serveBatch(neu.filter($"doc_id" % 2 === 1),
@@ -1171,7 +1171,7 @@ object Streams {
     graft.sources.Lake.withScratchIndex(spark, "graft_dedup_stream") { tmp =>
       // prefix build promotes from the session template; the streamed
       // appends mutate this drill's own copy (r17 opt)
-      graft.operators.TextAnalysis.promoteTemplate(spark)(
+      Artifacts.promote(spark,
         graft.operators.NearDup.dedupSigTemplate(spark, dir, Some(cut), dfCap))(tmp)
       (0 until nBatches).foreach { b =>
         graft.operators.NearDup.dedupIndexAppend(
@@ -1215,7 +1215,7 @@ object Streams {
     graft.sources.Lake.withScratchIndex(spark, "graft_line_stream") { tmp =>
       // prefix build promotes from the session template; the streamed
       // appends mutate this drill's own copy (r17 opt)
-      graft.operators.TextAnalysis.promoteTemplate(spark)(
+      Artifacts.promote(spark,
         graft.operators.TextAnalysis.lineDfRef3Template(spark, dir, Some(cut)))(tmp)
       (0 until nBatches).foreach { b =>
         graft.operators.TextAnalysis.lineIndexAppend(
@@ -1249,7 +1249,7 @@ object Streams {
     graft.sources.Lake.withScratchIndex(spark, "graft_para_stream") { tmp =>
       // prefix build promotes from the session template shared with
       // para_dedup_serve; the streamed appends mutate this drill's copy
-      TA.promoteTemplate(spark)(TA.paraDfRef3Template(spark, dir, cut))(tmp)
+      Artifacts.promote(spark, TA.paraDfRef3Template(spark, dir, cut))(tmp)
       (0 until nBatches).foreach { b =>
         TA.paraIndexAppend(Tables.fanout(ref.filter($"doc_id" > cut &&
           pmod($"doc_id", lit(nBatches)) === b)), tmp)
@@ -1281,7 +1281,7 @@ object Streams {
     graft.sources.Lake.withScratchIndex(spark, "graft_kn_stream") { tmp =>
       // 60% initial write promotes from the session template shared
       // with kn_append; the micro-batch deltas fold into this copy
-      TA.promoteTemplate(spark)(TA.knPrefixStoreTemplate(spark, dir))(tmp)
+      Artifacts.promote(spark, TA.knPrefixStoreTemplate(spark, dir))(tmp)
       (0 until nBatches).foreach { b =>
         TA.knStoreAppend(docs.filter($"doc_id" % 10 >= 6 &&
           pmod($"doc_id", lit(nBatches)) === b), tmp)

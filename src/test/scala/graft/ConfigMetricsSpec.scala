@@ -46,30 +46,33 @@ class ConfigMetricsSpec extends AnyFunSuite {
     assert(!hits(tuned.dfCap).contains(3L))
   }
 
-  test("config catalogDir upgrades sharedIndex to the durable cross-process catalog") {
+  test("config catalogDir upgrades a directory artifact to the durable catalog") {
     val s = spark
     import s.implicits._
     val cat = java.nio.file.Files.createTempDirectory("graft_cfg_cat").toString
     val docs = (0 until 12).map(i => (i.toLong, s"a$i b${i % 2}")).toDF("doc_id", "text")
     var builds = 0
+    def shared(build: String => Unit): String =
+      Artifacts.directory(s, Artifacts.Bm25ImpactTemplate, "cfgspec",
+        catalogDir = Some(cat))(build)
+    // the catalog key: kind, corpus dir and params of the artifact key
+    val key = "tmpl:bm25impact:cfgspec"
     // with a catalog configured, the shared index lands in its store
     // and registers in its manifest instead of session temp space
-    val dir = graft.sources.Lake.sharedIndex(s, "cfgspec:test-key", Some(cat)) { d =>
+    val dir = shared { d =>
       builds += 1
       operators.TextAnalysis.bm25WriteImpactFrom(docs, d)
     }
     assert(builds == 1 && dir.startsWith(cat),
       s"a configured catalog must own the shared index dir, got $dir")
-    assert(graft.sources.Catalog.lookup(s, cat, "shared", "cfgspec:test-key")
+    assert(graft.sources.Catalog.lookup(s, cat, "shared", key)
       .exists(_._1 == dir), "the build must register in the manifest")
     // the session memo short-circuits the manifest on repeat calls
-    val again = graft.sources.Lake.sharedIndex(s, "cfgspec:test-key", Some(cat)) {
-      _ => fail("memoized shared index must not rebuild")
-    }
+    val again = shared { _ => fail("memoized shared index must not rebuild") }
     assert(again == dir)
     // and a separate process (no session memo) resolves by manifest
     val cross = graft.sources.Catalog.resolveOrBuild(s, cat, "shared",
-      "cfgspec:test-key") { _ => fail("cross-process resolve must not rebuild") }
+      key) { _ => fail("cross-process resolve must not rebuild") }
     assert(cross == dir)
     val fs = new org.apache.hadoop.fs.Path(cat)
       .getFileSystem(s.sparkContext.hadoopConfiguration)

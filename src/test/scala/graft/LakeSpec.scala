@@ -506,7 +506,7 @@ class LakeSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("sharedIndex stamp: a corpus-state change re-resolves through the catalog's freshness contract") {
+  test("directory artifact stamp: a corpus-state change re-resolves through the catalog") {
     val s = spark
     import s.implicits._
     val cat = java.nio.file.Files.createTempDirectory("graft_shared_stamp").toString
@@ -515,19 +515,19 @@ class LakeSpec extends AnyFunSuite {
       builds += 1
       Seq((tag, 1L)).toDF("tag", "v").write.parquet(s"$dir/data")
     }
-    val p1 = graft.sources.Lake.sharedIndex(s, "stampspec:key",
-      Some(cat), stamp = "corpus-v1")(build("a"))
+    def shared(stamp: String)(b: String => Unit): String =
+      Artifacts.directory(s, Artifacts.LineDfTemplate, "stampspec",
+        stamp = stamp, catalogDir = Some(cat))(b)
+    val p1 = shared("corpus-v1")(build("a"))
     assert(builds == 1)
     // same stamp: in-session memo AND catalog both reuse
-    assert(graft.sources.Lake.sharedIndex(s, "stampspec:key",
-      Some(cat), stamp = "corpus-v1")(build("b")) == p1 && builds == 1)
+    assert(shared("corpus-v1")(build("b")) == p1 && builds == 1)
     // the corpus moved: the stamped resolve rebuilds and supersedes
-    val p2 = graft.sources.Lake.sharedIndex(s, "stampspec:key",
-      Some(cat), stamp = "corpus-v2")(build("c"))
+    val p2 = shared("corpus-v2")(build("c"))
     assert(builds == 2 && p2 != p1,
       "a new stamp must re-resolve instead of serving the stale memo")
     // an unstamped consumer now resolves the superseded-to index
-    assert(graft.sources.Catalog.lookup(s, cat, "shared", "stampspec:key")
+    assert(graft.sources.Catalog.lookup(s, cat, "shared", "tmpl:line_df:stampspec")
       .contains((p2, "corpus-v2")))
     val fs = new org.apache.hadoop.fs.Path(cat)
       .getFileSystem(s.sparkContext.hadoopConfiguration)

@@ -6,16 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // production parity: the same session extensions Verify/Bench and
-      // the driver run with (operators may use graft SQL functions)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // production parity: the same session settings Verify and Bench
+    // run with (operators may use graft SQL functions)
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
