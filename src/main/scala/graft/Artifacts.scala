@@ -65,7 +65,6 @@ object Artifacts {
 
   // near-duplicate family
   case object Pairs extends ValueKind("pairs")
-  case object NeuShingles extends ValueKind("neuShingles")
   case object LabelProp extends ValueKind("lp")
   case object KeepBest extends ValueKind("keepbest")
   case object PageRank extends ValueKind("pagerank")
@@ -78,7 +77,7 @@ object Artifacts {
   case object PqIndex extends ValueKind("pqIndex")
   case object OpqIndex extends ValueKind("opqIndex")
   // text family
-  case object UnigramTf extends ValueKind("unigramTf")
+  case object DocFeatures extends ValueKind("docFeatures")
   case object BpeWordCounts extends ValueKind("bpeWordCounts")
   case object BpeMerges extends ValueKind("bpeMerges")
   case object NbModel extends ValueKind("nbModel")

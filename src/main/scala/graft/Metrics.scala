@@ -1,6 +1,9 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -14,7 +17,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Captured per scope: wall, executor CPU, in-task GC, input
   * rows/bytes, output rows, shuffle read/write bytes, spilled bytes,
-  * task count. Listener-based — zero instrumentation inside
+  * task count; and, from the process rather than the tasks, the
+  * whole-stage codegen compiles (Janino) and the HotSpot JIT
+  * milliseconds, which say whether a scope is compile-bound.
+  * Listener-based — zero instrumentation inside
   * operators, and the numbers are the same task metrics the Spark UI
   * reports. Counters settle on the async listener bus before and
   * after each scope (task-end events trail job completion), the same
@@ -22,13 +28,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Single-session, sequential scopes (measure one operation at a
   * time — the Bench/maintenance-loop shape; concurrent scopes would
-  * attribute each other's tasks). */
+  * attribute each other's tasks, and the compile counters are
+  * process-wide, so a concurrent scope's compiles land in both). */
 object Metrics {
-  /** One measured scope's task-metric deltas. */
+  /** One measured scope's task-metric deltas, plus its codegen
+    * compiles (the delta of Spark's `CodegenMetrics` compilation
+    * count) and JIT time (the delta of the JVM's total compilation
+    * milliseconds; -1 where the JVM does not report it). */
   final case class Op(name: String, wallSec: Double, cpuSec: Double,
                       gcSec: Double, inputRows: Long, inputBytes: Long,
                       outputRows: Long, shuffleReadBytes: Long,
-                      shuffleWriteBytes: Long, spillBytes: Long, tasks: Long)
+                      shuffleWriteBytes: Long, spillBytes: Long, tasks: Long,
+                      codegenCompiles: Long, jitMs: Long)
+
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def jitMs: Long = {
+    val jit = ManagementFactory.getCompilationMXBean
+    if (jit != null && jit.isCompilationTimeMonitoringSupported) jit.getTotalCompilationTime
+    else -1L
+  }
 }
 
 final class Metrics(spark: SparkSession) {
@@ -83,15 +102,17 @@ final class Metrics(spark: SparkSession) {
   def measure[T](name: String)(body: => T): T = {
     settle()
     val c0 = counters
+    val (k0, j0) = (Metrics.compiles, Metrics.jitMs)
     val t0 = System.nanoTime()
     val out = body
     val wall = (System.nanoTime() - t0) / 1e9
+    val (k1, j1) = (Metrics.compiles, Metrics.jitMs)
     settle()
     val c1 = counters
     val d = c1.zip(c0).map { case (a, b) => a - b }
     ops.synchronized {
       ops += Op(name, wall, d(0) / 1e9, d(1) / 1e3, d(2), d(3), d(4),
-        d(5), d(6), d(7), d(8))
+        d(5), d(6), d(7), d(8), k1 - k0, if (j0 < 0) -1L else j1 - j0)
     }
     out
   }

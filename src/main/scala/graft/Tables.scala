@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Parquet loaders for the driver-generated testdata layout
   * (`<dir>/<table>.parquet`).
@@ -32,7 +33,6 @@ object Tables {
     * TIMESTAMP(MICROS), which both engines read natively. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{LongType, TimestampType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = table(spark, dir, "events")
     val ts = df.schema("ts").dataType match {
@@ -56,14 +56,23 @@ object Tables {
     }
     df.withColumn("ts", ts.cast("timestamp_ntz"))
   }
-  def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
+  /** `documents`' declared schema: the same in every generated scale
+    * and in the lake `Lake.quarantine` lands, so the read needs no
+    * footer-inference job. A lake written with only some of these
+    * columns reads the missing ones as null. */
+  val documentsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
+  def documents(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(documentsSchema).parquet(s"$dir/documents.parquet")
 
   /** Embeddings are read with an explicit schema (documents the dense
     * `array<float>` ingest contract and skips schema inference; note
     * file scans still force nullable flags on read — the vector kernel
     * handles null slots with HOF-equivalent semantics instead). */
   def embeddings(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType, containsNull = false)),

@@ -309,8 +309,7 @@ object Govern {
     // Output is small (flagged docs × two longs), eagerly checkpointed.
     Artifacts.value(spark, Artifacts.Decontam, dir, n) {
       import spark.implicits._
-      val grams = docGrams(Tables.fanout(
-        Tables.documents(spark, dir).select($"doc_id", $"text")), n)
+      val grams = DocFeatures.grams(DocFeatures.forDir(spark, dir), n)
       decontScore(
         grams.filter($"doc_id" % BenchMod =!= 0),
         grams.filter($"doc_id" % BenchMod === 0).select($"gh").distinct())
@@ -319,15 +318,8 @@ object Govern {
 
   /** Per-doc DISTINCT word-n-gram 64-bit hashes — the shared feature
     * of the batch decontam pass and the streaming scorer (E21). */
-  private[graft] def docGrams(docs: DataFrame, n: Int = 4): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs
-      .withColumn("toks", split(trim($"text"), "\\s+"))
-      .filter(size($"toks") >= n)
-      .select($"doc_id", explode(expr(
-        s"array_distinct(transform(sequence(0, size(toks)-$n), i -> xxhash64(concat_ws(' ', slice(toks, i+1, $n)))))"))
-        .as("gh"))
-  }
+  private[graft] def docGrams(docs: DataFrame, n: Int = 4): DataFrame =
+    DocFeatures.grams(DocFeatures.of(docs), n)
 
   /** SCORE gram-exploded docs against a frozen benchmark gram set:
     * one broadcast semi-join + one per-doc count — stateless, so the
@@ -349,8 +341,7 @@ object Govern {
     // E21 broadcasts is also F19's freeze input (r16 opt)
     Artifacts.value(spark, Artifacts.BenchGrams, dir, n) {
       import spark.implicits._
-      docGrams(Tables.fanout(Tables.documents(spark, dir)
-        .select($"doc_id", $"text")), n)
+      DocFeatures.grams(DocFeatures.forDir(spark, dir), n)
         .filter($"doc_id" % BenchMod === 0).select($"gh").distinct()
         .localCheckpoint()
     }

@@ -336,19 +336,11 @@ object NearDup {
     * — the posting rows of the inverted index; ONE definition shared
     * by the symmetric (C4) and incremental (`cross_dedup`) paths so
     * their shingle universes can never drift apart. */
-  private[graft] def shinglePostings(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs
-      .withColumn("toks", split(trim($"text"), "\\s+"))
-      .filter(size($"toks") >= 3)
-      .select($"doc_id", explode(expr(
-        """array_distinct(transform(sequence(0, size(toks)-3),
-          |  i -> xxhash64(toks[i], toks[i+1], toks[i+2])))""".stripMargin)).as("sh"))
-  }
+  private[graft] def shinglePostings(docs: DataFrame): DataFrame =
+    DocFeatures.shingles(DocFeatures.of(docs))
 
   def ngramJaccardPairs(docs: DataFrame, threshold: Double = 0.5,
                         dfCap: Int = 100): DataFrame = {
-    import docs.sparkSession.implicits._
     // Shingle hashes come straight off the token triples —
     // xxhash64(t0, t1, t2) — with no intermediate concat_ws string per
     // shingle; distinctness over the 64-bit hashes equals distinctness
@@ -363,7 +355,14 @@ object NearDup {
     // the cold run). Materializing once up front is the "write the
     // signature table" step of any production dedup; on a multi-executor
     // cluster make it a reliable checkpoint / parquet stage instead.
-    val postings = shinglePostings(docs).localCheckpoint()
+    pairsFromPostings(shinglePostings(docs).localCheckpoint(), threshold, dfCap)
+  }
+
+  /** [[ngramJaccardPairs]] over a materialized (doc_id, sh) postings
+    * table. */
+  private def pairsFromPostings(postings: DataFrame, threshold: Double,
+                                dfCap: Int): DataFrame = {
+    import postings.sparkSession.implicits._
     // the cap, skew-safe: the DROPPED side is what's broadcast. Hot
     // shingles (df > dfCap) are by construction few — boilerplate
     // headers, stopword runs — so the df aggregate reduces them
@@ -402,7 +401,11 @@ object NearDup {
   def ngramJaccardDedup(spark: SparkSession, dir: String,
                         threshold: Double = 0.5, dfCap: Int = 100): DataFrame =
     Artifacts.value(spark, Artifacts.Pairs, dir, threshold, dfCap) {
-      ngramJaccardPairs(corpus(spark, dir), threshold, dfCap).localCheckpoint()
+      // the postings are the session features' shingles, the twins' by
+      // id shift: an explode of the checkpointed features is already a
+      // materialized posting table, so no second checkpoint
+      pairsFromPostings(DocFeatures.shingles(DocFeatures.withTwins(
+        DocFeatures.forDir(spark, dir))), threshold, dfCap).localCheckpoint()
     }
 
   def ngramJaccardDedupSql(threshold: Double = 0.5, dfCap: Int = 100): String =
@@ -878,21 +881,16 @@ object NearDup {
     * boilerplate cutoff; rebuild to retune). `snapshot` pins the
     * serve to a [[dedupIndexMeta]] committed set, the bm25Snapshot
     * posture. */
-  /** The re-crawl snapshot's shingle postings (doc_id + BigOffset),
-    * memoized per (session, dir): every full-snapshot serve drill
-    * (cross_dedup_serve, the dedup/fleet/stream catalog drills,
-    * fleet_rollback_serve, stream_dedup_index) probes ITS OWN index
-    * with the SAME batch, and the batch-side shingling is an
-    * input-derived pass — one per session (the unigramTf posture).
+  /** The re-crawl snapshot's shingle postings (doc_id + BigOffset):
+    * every full-snapshot serve drill (cross_dedup_serve, the
+    * dedup/fleet/stream catalog drills, fleet_rollback_serve,
+    * stream_dedup_index) probes ITS OWN index with the SAME batch, whose
+    * shingles are the session [[DocFeatures]]' under the twin id shift.
     * Shingle rows are doc-local, so callers serving an id-filtered
     * slice of the snapshot filter this table identically. */
   private[graft] def neuShinglesFor(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.value(spark, Artifacts.NeuShingles, dir) {
-      import spark.implicits._
-      val neu = Tables.documents(spark, dir)
-        .select(($"doc_id" + BigOffset).as("doc_id"), $"text")
-      shinglePostings(Tables.fanout(neu)).localCheckpoint()
-    }
+    DocFeatures.shingles(DocFeatures.forDir(spark, dir)
+      .withColumn("doc_id", col("doc_id") + BigOffset))
 
   def dedupServe(spark: SparkSession, path: String, newDocs: DataFrame,
                  threshold: Double = 0.5, dfCap: Int = 100,
@@ -1270,7 +1268,7 @@ object NearDup {
 
   /** Extension `dedup_keep_best` — the decision step a dedup pipeline
     * actually ships: ONE representative per near-dup cluster, chosen by
-    * quality ([[TextAnalysis.qualityOf]], C9's scorer), not by
+    * quality ([[TextAnalysis.qualityFrom]], C9's scorer), not by
     * lowest-id. Cluster membership comes from [[dedupCluster]] over the
     * same doubled corpus; documents outside every cluster (no near-dup)
     * form their own singleton cluster and keep themselves. Keeper =
@@ -1301,13 +1299,13 @@ object NearDup {
   private def keepBestPartsUncached(spark: SparkSession, dir: String,
                                     threshold: Double): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val q = TextAnalysis.qualityOf(spark, corpus(spark, dir))
+    val q = TextAnalysis.qualityFrom(DocFeatures.withTwins(DocFeatures.forDir(spark, dir)))
       .select($"doc_id", $"quality")
     val clusters = dedupCluster(spark, dir, threshold)
       .select($"doc_id", $"cluster_id")
     // eager (materialization contract, see header): lab feeds the
-    // max-quality agg AND both join probes — lazy, each consumer
-    // re-runs the regex-heavy quality projection over the corpus
+    // max-quality agg AND both join probes here and in the manifest's
+    // keeper set — lazy, each consumer re-runs the cluster join
     val lab = q.join(clusters, Seq("doc_id"), "left")
       .select($"doc_id",
         coalesce($"cluster_id", $"doc_id").as("cluster_id"), $"quality")

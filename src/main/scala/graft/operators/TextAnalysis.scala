@@ -1,10 +1,13 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import graft.{Artifacts, GraftConfig, Tables}
 import graft.sources.IndexLayout
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
 /** Text-analysis operators over `documents` (SURVEY.md §2 C1, C8-C10,
   * C12-C13) — the realized form of the reference's declared-but-stubbed
@@ -20,7 +23,7 @@ import org.apache.spark.sql.functions._
 object TextAnalysis {
 
   /** Word tokens of a whitespace-separated text column (empty text → empty array). */
-  private def toks(c: Column): Column =
+  private[operators] def toks(c: Column): Column =
     when(length(trim(c)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(c), "\\s+"))
 
@@ -872,20 +875,15 @@ object TextAnalysis {
     * All ratios are single divisions of integers → bit-identical across
     * engines; per-row, codegen'd, no shuffle. */
   def qualityScore(spark: SparkSession, dir: String): DataFrame =
-    qualityOf(spark, Tables.documents(spark, dir))
+    qualityFrom(DocFeatures.forDir(spark, dir))
 
-  /** [[qualityScore]]'s scorer over an arbitrary (doc_id, text) frame —
-    * shared with `dedup_keep_best`, which scores the doubled near-dup
-    * corpus rather than `documents` directly. */
-  private[operators] def qualityOf(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val t = toks($"text")
-    docs
-      .select($"doc_id",
-        length($"text").as("n_chars_m"),
-        size(t).as("n_tokens"),
-        size(array_distinct(t)).as("n_distinct"),
-        regexp_count(lower($"text"), lit("\\b(the|a|of|to|and|is|in)\\b")).as("n_stop"))
+  /** [[qualityScore]]'s scorer over [[DocFeatures]] — shared with
+    * `dedup_keep_best`, which scores the doubled near-dup corpus
+    * (the features with their re-crawl twins) rather than `documents`
+    * directly. */
+  private[graft] def qualityFrom(f: DataFrame): DataFrame = {
+    import f.sparkSession.implicits._
+    f.select($"doc_id", $"n_chars".as("n_chars_m"), $"n_tokens", $"n_distinct", $"n_stop")
       .withColumn("len_score", least(lit(1.0), $"n_chars_m".cast("double") / lit(500.0)))
       .withColumn("diversity", $"n_distinct".cast("double") / greatest($"n_tokens", lit(1)).cast("double"))
       .withColumn("stop_ratio", $"n_stop".cast("double") / greatest($"n_tokens", lit(1)).cast("double"))
@@ -897,7 +895,7 @@ object TextAnalysis {
 
   /** [[qualityScoreSql]] parameterized on its source relation (a table
     * or CTE name with doc_id + text) — the oracle-side twin of
-    * [[qualityOf]]. */
+    * [[qualityFrom]]. */
   private[operators] def qualityScoreSqlFrom(src: String): String =
     s"""WITH base AS (
       |  SELECT doc_id,
@@ -1120,10 +1118,10 @@ object TextAnalysis {
   def keywordExtract(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     import spark.implicits._
     val w = Window.partitionBy($"doc_id").orderBy($"tf".desc, $"keyword")
-    // the per-(doc, token) counts ARE the session unigramTf memo —
-    // filter the stopwords on the aggregated table (exact: the filter
+    // the per-(doc, token) counts of the session features — filter
+    // the stopwords on the aggregated table (exact: the filter
     // commutes with the per-(doc, token) count; r17 opt)
-    unigramTfFor(spark, dir)
+    DocFeatures.tf(DocFeatures.forDir(spark, dir))
       .select($"doc_id", $"token".as("keyword"), $"tf")
       .filter(!$"keyword".isin(stopwords: _*) && length($"keyword") > 0)
       .withColumn("rank_kw", row_number().over(w))
@@ -1244,17 +1242,19 @@ object TextAnalysis {
     * op, ln of an exact integer ratio, feeds a floor like C22's
     * quantizer; C21 already gates raw log2 doubles).
     *
-    * Scale: one tokenize scan → two hash aggs (teacher labels, slot
-    * counts); the model is a broadcast 2×dim-row table; scoring is
-    * one broadcast join + one hash agg. No driver state, no window,
-    * nothing wider than (doc, slot) shuffles. */
+    * Scale: the features are the session [[DocFeatures]] (one
+    * tokenize per corpus). The fit is metadata-sized — 2·(dim+1)
+    * integer sums (per class: slot counts and the doc count) — so ONE
+    * job folds them to the driver, which quantizes the model and
+    * priors there with Catalyst's own log/floor
+    * ([[DocFeatures.microLn]]) and returns them as local relations.
+    * Scoring is a per-document projection (the dim-sized weights as
+    * a literal vector, an integer dot product over the doc's slot
+    * stream): one job, no shuffle, no join. */
   def nbQualityClassify(spark: SparkSession, dir: String,
                         dim: Int = 64): DataFrame = {
-    import spark.implicits._
     val (model, priors) = nbTrainFor(spark, dir, dim)
-    nbScore(Tables.fanout(Tables.documents(spark, dir)
-      .select($"doc_id", $"text")), model, priors, dim,
-      tf = Some(unigramTfFor(spark, dir)))
+    nbScoreFrom(DocFeatures.forDir(spark, dir), model, priors, dim)
   }
 
   /** Teacher word lists: the commerce/engine halves of
@@ -1267,193 +1267,128 @@ object TextAnalysis {
     * holds out every trainMod-th doc (scored, never trained on). */
   private[graft] def nbQualityClassifyOf(docs: DataFrame, dim: Int = 64,
                                          trainMod: Int = 4): DataFrame = {
-    val (model, priors) = nbTrain(docs, dim, trainMod)
-    nbScore(docs, model, priors, dim)
+    // eager: the features feed the fit and the scoring
+    val f = DocFeatures.of(docs).localCheckpoint()
+    val (model, priors) = nbTrainFrom(f, dim, trainMod)
+    nbScoreFrom(f, model, priors, dim)
   }
 
-  /** The hashed unigram slot counts NB trains and scores on
-    * (docEmbed's slot hash, unsigned). */
-  /** The session unigram tf table — fanout(documents) tokenized ONCE
-    * into distinct (doc_id, token, tf) rows (strictly smaller than
-    * the raw token stream). tf rows are doc-local, so a doc-id
-    * predicate over this table ≡ tokenizing the filtered corpus,
-    * and every EXACT-INTEGER training build (NB, DSIR — full corpus
-    * AND their 70%-prefix freezes) starts here instead of re-running
-    * its own corpus tokenize (guide §1.2). The double-summing LM
-    * families (perplexity, KN) stay on their own token streams: their
-    * per-occurrence double sums are order/term-set-shaped and must
-    * not become tf-weighted products. */
-  private[graft] def unigramTfFor(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.value(spark, Artifacts.UnigramTf, dir) {
-      import spark.implicits._
-      Tables.fanout(Tables.documents(spark, dir).select($"doc_id", $"text"))
-        .select($"doc_id", explode(toks($"text")).as("token"))
-        .groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
-    }
-
   /** The session word-frequency table (w, n_occ) — the corpus word
-    * stream compressed to its distinct words, derived from the
-    * unigramTf memo (summing tf over docs ≡ counting the stream; same
-    * tokenizer, exact integers). Vocabulary-sized, so the iterative
-    * BPE trainer and the vocabulary/pair-ranking entries run their
-    * counting over this table instead of re-streaming every word
-    * occurrence per pass (guide §2.3 "aggregate before you shuffle" —
-    * here, before every downstream pass). */
+    * stream compressed to its distinct words, counted from the
+    * session [[DocFeatures]] token streams (exact integers).
+    * Vocabulary-sized, so the iterative BPE trainer and the
+    * vocabulary/pair-ranking entries run their counting over this
+    * table instead of re-streaming every word occurrence per pass
+    * (guide §2.3 "aggregate before you shuffle" — here, before every
+    * downstream pass). */
   private[graft] def bpeWordCountsFor(spark: SparkSession, dir: String): DataFrame =
     Artifacts.value(spark, Artifacts.BpeWordCounts, dir) {
       import spark.implicits._
-      unigramTfFor(spark, dir)
-        .groupBy($"token").agg(sum($"tf").as("n_occ"))
-        .select($"token".as("w"), $"n_occ")
+      DocFeatures.forDir(spark, dir)
+        .select(explode($"toks").as("w"))
+        .groupBy($"w").agg(count(lit(1)).as("n_occ"))
         .localCheckpoint()
     }
 
-  private def nbFeatures(docs: DataFrame, dim: Int,
-                         tf: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    // a caller-provided (doc_id, token, tf) table (the session
-    // unigramTf memo, optionally id-filtered) replaces the tokenize
-    // outright — the slot sums below are the same exact integers
-    tf.getOrElse(docs.select($"doc_id", explode(toks($"text")).as("token"))
-        .groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf")))
-      .withColumn("slot",
-        (conv(substring(md5($"token"), 1, 8), 16, 10).cast("long") % dim).cast("int"))
-      .groupBy($"doc_id", $"slot").agg(sum($"tf").as("x"))
-  }
+  /** Occurrences in the doc's token stream of any of `words`. */
+  private def hits(words: Seq[String]): Column =
+    size(filter(col("toks"), t => t.isin(words: _*)))
 
-  /** TRAIN the NB filter: teacher-label the train split (every
-    * trainMod-th doc held out), aggregate per-(class, slot) counts,
-    * quantize log-probs to integer micro-units. Returns the
-    * (model, priors) pair — classes × dim + classes rows, both
-    * eagerly materialized: this is the nightly training job whose
-    * frozen output the batch scorer AND the streaming scorer (E19)
-    * broadcast. */
+  private val modelSchema = new StructType()
+    .add("label", StringType).add("slot", IntegerType).add("w", LongType)
+  private val priorsSchema = new StructType().add("label", StringType).add("prior", LongType)
+
+  /** TRAIN the NB filter on a frame's documents: teacher-label the
+    * train split (every trainMod-th doc held out), aggregate
+    * per-(class, slot) counts, quantize log-probs to integer
+    * micro-units. */
   private[graft] def nbTrain(docs: DataFrame, dim: Int = 64,
-                             trainMod: Int = 4,
-                             tf: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    import docs.sparkSession.implicits._
-    val spark = docs.sparkSession
-    val keepList = nbKeepWords.map(w => s"'$w'").mkString(", ")
-    val dropList = nbDropWords.map(w => s"'$w'").mkString(", ")
-    // eager: the tf table feeds the teacher labels AND the feature
-    // counts (materialization contract). A caller-provided tf table
-    // (the session unigramTf memo) replaces the tokenize outright —
-    // tf rows are doc-local, so the id-mod filter commutes with the
-    // tokenize, and every count below is an exact-integer tf-weighted
-    // sum of what the raw stream summed per occurrence.
-    val tokTf = tf.map(_.filter($"doc_id" % trainMod =!= 0)).getOrElse(
-      docs.filter($"doc_id" % trainMod =!= 0)
-        .select($"doc_id", explode(toks($"text")).as("token"))
-        .groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
-        .localCheckpoint())
-    val labels = tokTf
-      .groupBy($"doc_id")
-      .agg(sum(expr(s"if(token in ($keepList), tf, 0L)")).as("np"),
-        sum(expr(s"if(token in ($dropList), tf, 0L)")).as("nn"))
-      .select($"doc_id",
-        when($"np" >= $"nn", lit("keep")).otherwise(lit("drop")).as("label"))
-    val trainFeat = tokTf
-      .withColumn("slot",
-        (conv(substring(md5($"token"), 1, 8), 16, 10).cast("long") % dim).cast("int"))
-      .groupBy($"doc_id", $"slot").agg(sum($"tf").as("x"))
-      .join(labels, Seq("doc_id"))
-    val slotCounts = trainFeat.groupBy($"label", $"slot").agg(sum($"x").as("n"))
-    val classTotals = trainFeat.groupBy($"label").agg(sum($"x").as("t"))
-    val classDocs = labels.groupBy($"label").agg(count(lit(1)).as("dc"))
-    // dense classes × dim model grid (Laplace: unseen slots get n=0);
-    // all metadata-sized, the scalar-broadcast posture
-    val grid = Seq("keep", "drop").toDF("label")
-      .crossJoin(spark.range(dim).select($"id".cast("int").as("slot")))
-    val model = grid
-      .join(slotCounts, Seq("label", "slot"), "left")
-      .na.fill(0L, Seq("n"))
-      .join(classTotals, Seq("label"))
-      .select($"label", $"slot",
-        floor(lit(1e6) * log(($"n" + 1).cast("double") / ($"t" + dim).cast("double")))
-          .cast("long").as("w"))
-      .localCheckpoint()
-    val priors = classDocs
-      .crossJoin(broadcast(labels.agg(count(lit(1)).as("dn"))))
-      .select($"label",
-        floor(lit(1e6) * log($"dc".cast("double") / $"dn".cast("double")))
-          .cast("long").as("prior"))
-      .localCheckpoint()
-    (model, priors)
+                             trainMod: Int = 4): (DataFrame, DataFrame) =
+    nbTrainFrom(DocFeatures.of(docs), dim, trainMod)
+
+  /** [[nbTrain]] over [[DocFeatures]]: the (model, priors) pair —
+    * classes × dim + classes rows, local relations — that the batch
+    * scorer AND the streaming scorer (E19) score against. A class
+    * with no labeled doc has neither weights nor a prior (the
+    * single-class model [[nbScoreFrom]] refuses). */
+  private[graft] def nbTrainFrom(f: DataFrame, dim: Int = 64,
+                                 trainMod: Int = 4): (DataFrame, DataFrame) = {
+    val spark = f.sparkSession
+    val w = dim + 1
+    // per labeled train doc (≥ 1 token): class 0 keep / 1 drop by the
+    // teacher's marker counts, and its slot stream; per class the
+    // sums hold dim slot counts, then the doc count
+    val labeled = f.filter(col("doc_id") % trainMod =!= 0 && size(col("th")) > 0)
+      .select(when(hits(nbKeepWords) >= hits(nbDropWords), 0).otherwise(1),
+        DocFeatures.slots(dim))
+    val s = DocFeatures.driverSums(labeled, 2 * w) { (r, acc) =>
+      val base = r.getInt(0) * w
+      acc(base + dim) += 1
+      val sl = r.getArray(1)
+      var i = 0
+      while (i < sl.numElements()) { acc(base + sl.getInt(i)) += 1; i += 1 }
+    }
+    val classes = Seq("keep" -> 0, "drop" -> 1).filter { case (_, c) => s(c * w + dim) > 0 }
+    val dn = classes.map { case (_, c) => s(c * w + dim) }.sum
+    val model = classes.flatMap { case (l, c) =>
+      val t = (0 until dim).map(i => s(c * w + i)).sum
+      (0 until dim).map(i => Row(l, i, DocFeatures.microLn(spark, s(c * w + i) + 1, t + dim)))
+    }
+    val priors = classes.map { case (l, c) =>
+      Row(l, DocFeatures.microLn(spark, s(c * w + dim), dn)) }
+    (spark.createDataFrame(model.asJava, modelSchema),
+      spark.createDataFrame(priors.asJava, priorsSchema))
   }
 
   /** The full-corpus frozen (model, priors) pair, memoized per
     * (session, dir, dim, trainMod) — the nightly training job runs
     * ONCE and every consumer (C32's one-shot scorer, E19's streaming
     * scorer, C32b's calibration sweep, C32d's epoch-2 registry write,
-    * F19's freeze) broadcasts the same frozen artifact instead of
-    * retraining (r16 opt: 5 identical trainings → 1). Deterministic:
-    * integer micro-unit weights from exact integer counts. */
+    * F19's freeze) scores against the same frozen artifact instead of
+    * retraining. Deterministic: integer micro-unit weights from exact
+    * integer counts. */
   private[graft] def nbTrainFor(spark: SparkSession, dir: String,
                                 dim: Int = 64,
                                 trainMod: Int = 4): (DataFrame, DataFrame) =
     Artifacts.value(spark, Artifacts.NbModel, dir, dim, trainMod) {
-      import spark.implicits._
-      nbTrain(Tables.fanout(Tables.documents(spark, dir)
-        .select($"doc_id", $"text")), dim, trainMod,
-        tf = Some(unigramTfFor(spark, dir)))
+      nbTrainFrom(DocFeatures.forDir(spark, dir), dim, trainMod)
     }
 
-  /** SCORE a doc frame against a frozen (model, priors) pair: one
-    * broadcast join + one hash agg — stateless, so the identical call
-    * scores a batch corpus or an arriving micro-batch (E19). A doc's
-    * score depends on the model and ITS OWN tokens alone, which is
-    * what makes per-batch streaming scoring ≡ one-shot batch scoring
-    * (StreamingSpec pins it). */
-  /** Per-frozen-model cache of the two-class check below: the answer
-    * is fixed once the model is trained, but the check is an eager
-    * Spark action — without the memo every nbScore call (including
-    * each E19 micro-batch against the SAME frozen priors) pays two
-    * extra jobs. Weak identity keys: a priors frame is a stable
-    * localCheckpoint'ed object for its model's lifetime. */
-  private val nbTwoClass =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, java.lang.Boolean]())
-
+  /** SCORE a doc frame against a frozen (model, priors) pair —
+    * stateless, so the identical call scores a batch corpus or an
+    * arriving micro-batch (E19). A doc's score depends on the model
+    * and ITS OWN tokens alone, which is what makes per-batch
+    * streaming scoring ≡ one-shot batch scoring (StreamingSpec pins
+    * it). */
   private[graft] def nbScore(docs: DataFrame, model: DataFrame,
-                             priors: DataFrame, dim: Int = 64,
-                             tf: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
+                             priors: DataFrame, dim: Int = 64): DataFrame =
+    nbScoreFrom(DocFeatures.of(docs), model, priors, dim)
+
+  /** [[nbScore]] over [[DocFeatures]]: per doc,
+    * score = prior + Σ w(slot) over its tokens — the integer dot
+    * product Σ x·w of its slot counts — in one projection; a
+    * token-free doc scores its priors alone. */
+  private[graft] def nbScoreFrom(f: DataFrame, model: DataFrame,
+                                 priors: DataFrame, dim: Int = 64): DataFrame = {
+    val spark = f.sparkSession
+    import spark.implicits._
+    val prior = priors.collect().map(r =>
+      r.getAs[String]("label") -> r.getAs[Long]("prior")).toMap
     // DEGENERATE MODEL GUARD: a train split the teacher labeled all
-    // one way has no second class — the missing class's prior/weights
-    // vanish, the null coalesce below would make `pred` compare
-    // against NULL (classifying all-keep evidence as all-drop), and
+    // one way has no second class — no prior to compare against, and
     // the oracle's cross join against the empty prior relation
     // returns zero rows. Serve the oracle's answer: an un-trainable
     // classifier classifies nothing (r15 review's catch, spec-pinned).
-    // get/put, not computeIfAbsent: never hold the map monitor across
-    // a Spark action (a racing duplicate count is harmless)
-    val twoClass = Option(nbTwoClass.get(priors)).map(_.booleanValue())
-      .getOrElse {
-        val v = priors.select($"label").distinct().count() >= 2
-        nbTwoClass.put(priors, v)
-        v
-      }
-    if (!twoClass)
+    if (prior.size < 2)
       return Seq.empty[(Long, Long, Long, String)]
         .toDF("doc_id", "score_keep", "score_drop", "pred")
-    val partSc = nbFeatures(docs, dim, tf).join(broadcast(model), Seq("slot"))
-      .groupBy($"doc_id", $"label").agg(sum($"x" * $"w").as("lsum"))
-    val wide = partSc.join(broadcast(priors), Seq("label"))
-      .select($"doc_id", $"label", ($"lsum" + $"prior").as("score"))
-      .groupBy($"doc_id")
-      .agg(max(when($"label" === "keep", $"score")).as("sk"),
-        max(when($"label" === "drop", $"score")).as("sd"))
-    val pwide = priors
-      .groupBy().agg(max(when($"label" === "keep", $"prior")).as("pk"),
-        max(when($"label" === "drop", $"prior")).as("pd"))
-    // token-free docs fall back to priors alone
-    docs.select($"doc_id").distinct()
-      .join(wide, Seq("doc_id"), "left")
-      .crossJoin(broadcast(pwide))
-      .select($"doc_id",
-        coalesce($"sk", $"pk").as("score_keep"),
-        coalesce($"sd", $"pd").as("score_drop"))
+    val weights = model.collect().groupBy(_.getAs[String]("label")).map { case (l, rs) =>
+      val w = new Array[Long](dim)
+      rs.foreach(r => w(r.getAs[Int]("slot")) = r.getAs[Long]("w"))
+      l -> w
+    }
+    def score(l: String): Column = lit(prior(l)) + DocFeatures.dot(dim, weights(l))
+    f.select($"doc_id", score("keep").as("score_keep"), score("drop").as("score_drop"))
       .withColumn("pred",
         when($"score_keep" >= $"score_drop", lit("keep")).otherwise(lit("drop")))
   }
@@ -1537,15 +1472,13 @@ object TextAnalysis {
   def nbStaleServe(spark: SparkSession, dir: String,
                    dim: Int = 64): DataFrame = {
     import spark.implicits._
-    val docs = Tables.fanout(Tables.documents(spark, dir)
-      .select($"doc_id", $"text"))
+    val f = DocFeatures.forDir(spark, dir)
     // the frozen prefix pair is a session artifact like nbTrainFor's
     // full-corpus one — train it once per (dir, dim) (r17 opt)
     val (model, priors) = Artifacts.value(spark, Artifacts.NbModelPrefix, dir, dim) {
-      nbTrain(docs.filter($"doc_id" % 10 < 7), dim,
-        tf = Some(unigramTfFor(spark, dir).filter($"doc_id" % 10 < 7)))
+      nbTrainFrom(f.filter($"doc_id" % 10 < 7), dim)
     }
-    nbScore(docs, model, priors, dim, tf = Some(unigramTfFor(spark, dir)))
+    nbScoreFrom(f, model, priors, dim)
   }
 
   /** C32c oracle: the prefix-trained model scoring all docs — C32's
@@ -1559,10 +1492,11 @@ object TextAnalysis {
     * nightly training job commits. Integer micro-unit weights
     * round-trip parquet exactly, so a catalog-resolved model scores
     * bit-identically to the in-session one. */
-  private[graft] def nbModelWrite(docs: DataFrame, d: String,
-                                  dim: Int = 64,
-                                  trained: Option[(DataFrame, DataFrame)] = None): Unit = {
-    val (model, priors) = trained.getOrElse(nbTrain(docs, dim))
+  private[graft] def nbModelWrite(docs: DataFrame, d: String, dim: Int = 64): Unit =
+    nbModelWrite(d, nbTrain(docs, dim))
+
+  private def nbModelWrite(d: String, trained: (DataFrame, DataFrame)): Unit = {
+    val (model, priors) = trained
     model.coalesce(1).write.parquet(s"$d/model")
     priors.coalesce(1).write.parquet(s"$d/priors")
   }
@@ -1589,8 +1523,6 @@ object TextAnalysis {
   def nbCatalogServe(spark: SparkSession, dir: String,
                      dim: Int = 64): DataFrame = {
     import spark.implicits._
-    val docs = Tables.fanout(Tables.documents(spark, dir)
-      .select($"doc_id", $"text"))
     // empty-corpus guard: no docs → no cut, no model to register —
     // serve the empty scored frame (nbScore's schema)
     val maxId = Tables.documents(spark, dir).agg(max($"doc_id")).head()
@@ -1617,7 +1549,7 @@ object TextAnalysis {
         graft.sources.Catalog.lookup(spark, cat, "nbmodel", key).get
       require(stamp == "epoch-2", s"fleet must resolve the fresh epoch: $stamp")
       val (model, priors) = nbModelRead(spark, path)
-      nbScore(docs, model, priors, dim, tf = Some(unigramTfFor(spark, dir)))
+      nbScoreFrom(DocFeatures.forDir(spark, dir), model, priors, dim)
     }
   }
 
@@ -1677,17 +1609,22 @@ object TextAnalysis {
     * and the selected flag. Boundary ties are ALL kept (selected ⇔
     * logw ≥ eps) — deterministic without a global total order.
     *
-    * Scale: one tokenize scan → (doc, slot) hash agg; the two
-    * distributions are dim-row aggregates (broadcast); scoring is one
-    * broadcast join + one hash agg. The order statistic NEVER sorts
-    * the corpus: a coarse ⌊logw/10⁶⌋ histogram (driver metadata,
-    * bounded by the micro-unit range) locates rank k's bucket, and
-    * only that bucket's rows take the exact top-(k−above) — the
+    * Scale: the features are the session [[DocFeatures]]. The fit is
+    * metadata-sized — per slot the raw and target counts, plus the
+    * doc count: ONE job folds those 2·dim+1 integer sums to the
+    * driver, which quantizes the two slot models there with
+    * Catalyst's own log/floor ([[DocFeatures.microLn]]) and returns
+    * the ratio as a local relation. A doc's weight is a per-document
+    * projection (the ratio as a literal vector, an integer dot
+    * product over its slot stream), so scoring is one job with no
+    * shuffle. The order statistic NEVER sorts the corpus: a coarse
+    * ⌊logw/10⁶⌋ histogram (driver metadata, bounded by the
+    * micro-unit range, one job) locates rank k's bucket, and only
+    * that bucket's rows take the exact top-(k−above) (one job) — the
     * semdedup_budget selection pattern. Selection itself is a
-    * stateless filter against the 1-row threshold. */
+    * stateless filter against the threshold. */
   def dsirSelect(spark: SparkSession, dir: String, dim: Int = 64,
                  selectFrac: Double = 0.25): DataFrame = {
-    import spark.implicits._
     val (_, weighted, epsOpt) = dsirFitFor(spark, dir, dim, selectFrac)
     dsirSelected(weighted, epsOpt)
   }
@@ -1703,17 +1640,15 @@ object TextAnalysis {
                                 dim: Int = 64, selectFrac: Double = 0.25)
       : (DataFrame, DataFrame, Option[Long]) =
     Artifacts.value(spark, Artifacts.DsirFit, dir, dim, selectFrac) {
-      import spark.implicits._
-      dsirFit(Tables.fanout(Tables.documents(spark, dir)
-        .select($"doc_id", $"text")), dim, selectFrac,
-        tf = Some(unigramTfFor(spark, dir)))
+      dsirFitFrom(DocFeatures.forDir(spark, dir), dim, selectFrac)
     }
 
   /** Frame-based core of C33 (docs = (doc_id, text)). */
   private[graft] def dsirSelectOf(docs: DataFrame, dim: Int = 64,
                                   selectFrac: Double = 0.25): DataFrame = {
-    import docs.sparkSession.implicits._
-    val (_, weighted, epsOpt) = dsirFit(docs, dim, selectFrac)
+    // eager: the features feed the fit, the threshold and the scoring
+    val (_, weighted, epsOpt) =
+      dsirFitFrom(DocFeatures.of(docs).localCheckpoint(), dim, selectFrac)
     dsirSelected(weighted, epsOpt)
   }
 
@@ -1731,126 +1666,100 @@ object TextAnalysis {
     }
   }
 
-  /** The shared fit: the dim-row log-ratio model, the checkpointed
-    * (doc_id, logw) corpus, and the selection threshold (None when
-    * ⌊selectFrac·N⌋ = 0). */
-  /** The dim-row log-ratio model alone: p̂_target vs p̂_raw fitted
-    * over `docs` (the reference corpus), checkpointed. Shared by the
-    * full fit and the drift measure, which compares a FROZEN ratio
-    * against a fresh one without ever building the weighted corpus. */
-  private[graft] def dsirRatioOf(docs: DataFrame, dim: Int = 64): DataFrame = {
-    val tf0 = dsirTf(docs)
-    dsirRatioParts(tf0, dsirFeat(tf0, dim), dim)
-  }
+  private val ratioSchema = new StructType().add("slot", IntegerType).add("r", LongType)
 
-  /** ONE tokenize pass shared by the ratio model's two slot models,
-    * the target-doc flags and the weighted corpus — the fit used to
-    * re-run the explode+aggregate per consumer (guide §1.2). Distinct
-    * (doc, token) counts: strictly smaller than the raw token stream,
-    * and every downstream measure derives from it exactly. */
-  private def dsirTf(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select($"doc_id", explode(toks($"text")).as("token"))
-      .groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
-  }
-
-  /** [[nbFeatures]]' (doc_id, slot, x) table derived from the shared
-    * tf counts — docs × dim bounded, checkpointed for its three
-    * readers (lt / lr slot models, weighted corpus). */
-  private def dsirFeat(tf0: DataFrame, dim: Int): DataFrame = {
-    import tf0.sparkSession.implicits._
-    tf0.withColumn("slot",
-        (conv(substring(md5($"token"), 1, 8), 16, 10).cast("long") % dim).cast("int"))
-      .groupBy($"doc_id", $"slot").agg(sum($"tf").as("x"))
-      .localCheckpoint()
-  }
-
-  private def dsirRatioParts(tf0: DataFrame, feat: DataFrame,
-                             dim: Int): DataFrame = {
-    val spark = feat.sparkSession
-    import spark.implicits._
-    val tgtList = dsirTargetWords.map(w => s"'$w'").mkString(", ")
-    // a doc is target iff it carries a target token — the tf rows
-    // witness exactly the same membership the raw token stream did
-    val tgtDocs = tf0.filter(expr(s"token in ($tgtList)"))
-      .select($"doc_id").distinct()
-    val tgtFeat = feat.join(tgtDocs, Seq("doc_id"), "left_semi")
-    def slotModel(f: DataFrame): DataFrame = {
-      val n = f.groupBy($"slot").agg(sum($"x").as("n"))
-      val t = f.agg(sum($"x").as("t"))
-      spark.range(dim).select($"id".cast("int").as("slot"))
-        .join(n, Seq("slot"), "left").na.fill(0L, Seq("n"))
-        .crossJoin(broadcast(t))
-        .select($"slot",
-          floor(lit(1e6) * log(($"n" + 1).cast("double") / ($"t" + dim).cast("double")))
-            .cast("long").as("lp"))
+  /** The dim-slot log-ratio model over a features frame (the
+    * reference corpus), fitted on the driver from one job's slot
+    * sums, and the frame's doc count. A slot's ratio is
+    * ⌊10⁶·ln((n_t+1)/(T_t+dim))⌋ − ⌊10⁶·ln((n_r+1)/(T_r+dim))⌋; with no
+    * target doc (or no token at all) the target total is undefined
+    * and every ratio is null, which weighs every doc 0. */
+  private def dsirModel(f: DataFrame, dim: Int): (Option[Array[Long]], Long) = {
+    val spark = f.sparkSession
+    // a doc is target iff it carries a target token; per slot: raw
+    // counts, then target counts, then the doc count
+    val rows = f.select(exists(col("toks"), t => t.isin(dsirTargetWords: _*)),
+      DocFeatures.slots(dim))
+    val s = DocFeatures.driverSums(rows, 2 * dim + 1) { (r, acc) =>
+      acc(2 * dim) += 1
+      val tgt = r.getBoolean(0)
+      val sl = r.getArray(1)
+      var i = 0
+      while (i < sl.numElements()) {
+        val k = sl.getInt(i)
+        acc(k) += 1
+        if (tgt) acc(dim + k) += 1
+        i += 1
+      }
     }
-    slotModel(tgtFeat).withColumnRenamed("lp", "lt")
-      .join(slotModel(feat).withColumnRenamed("lp", "lr"), Seq("slot"))
-      .select($"slot", ($"lt" - $"lr").as("r"))
-      .localCheckpoint()
+    val (tr, tt) = (s.slice(0, dim).sum, s.slice(dim, 2 * dim).sum)
+    val ratio = if (tr == 0L || tt == 0L) None else Some(Array.tabulate(dim) { i =>
+      DocFeatures.microLn(spark, s(dim + i) + 1, tt + dim) -
+        DocFeatures.microLn(spark, s(i) + 1, tr + dim)
+    })
+    (ratio, s(2 * dim))
   }
 
-  private def dsirFit(docs: DataFrame, dim: Int,
-                      selectFrac: Double,
-                      tf: Option[DataFrame] = None): (DataFrame, DataFrame, Option[Long]) = {
-    import docs.sparkSession.implicits._
+  private def ratioFrame(spark: SparkSession, ratio: Option[Array[Long]],
+                         dim: Int): DataFrame =
+    spark.createDataFrame((0 until dim).map(i =>
+      Row(i, ratio.map(r => java.lang.Long.valueOf(r(i))).orNull)).asJava, ratioSchema)
+
+  /** (doc_id, logw) of a features frame against a ratio: the integer
+    * dot product Σ x·r per doc, 0 for a token-free doc or a null
+    * ratio. */
+  private def dsirWeighted(f: DataFrame, ratio: Option[Array[Long]], dim: Int): DataFrame =
+    f.select(col("doc_id"),
+      ratio.map(r => DocFeatures.dot(dim, r)).getOrElse(lit(0L)).as("logw"))
+
+  /** The dim-row log-ratio model alone over (doc_id, text) docs — the
+    * drift measure compares a FROZEN ratio against a fresh one
+    * without building the weighted corpus. */
+  private[graft] def dsirRatioOf(docs: DataFrame, dim: Int = 64): DataFrame =
+    ratioFrame(docs.sparkSession, dsirModel(DocFeatures.of(docs), dim)._1, dim)
+
+  /** The shared fit: the dim-row log-ratio model, the (doc_id, logw)
+    * corpus, and the selection threshold (None when
+    * ⌊selectFrac·N⌋ = 0). */
+  private[graft] def dsirFitFrom(f: DataFrame, dim: Int,
+                                 selectFrac: Double): (DataFrame, DataFrame, Option[Long]) = {
+    val spark = f.sparkSession
+    import spark.implicits._
     require(selectFrac > 0.0 && selectFrac <= 1.0,
       s"selectFrac must be in (0, 1]: $selectFrac")
-    // a caller-provided tf table (the session unigramTf memo) replaces
-    // the fit's own tokenize — identical distinct (doc, token, tf)
-    // rows by the doc-local-commute argument on [[unigramTfFor]]
-    val tf0 = tf.getOrElse(dsirTf(docs))
-    val feat = dsirFeat(tf0, dim)
-    val ratio = dsirRatioParts(tf0, feat, dim)
-    // eager: the weighted corpus feeds the threshold histogram AND the
-    // output (materialization contract) — (doc_id, logw) only, two
-    // longs per doc
-    val weighted = docs.select($"doc_id").distinct()
-      .join(feat.join(broadcast(ratio), Seq("slot"))
-        .groupBy($"doc_id").agg(sum($"x" * $"r").as("logw")),
-        Seq("doc_id"), "left")
-      .na.fill(0L, Seq("logw"))
-      .localCheckpoint()
-    val n = weighted.count()
+    val (ratio, n) = dsirModel(f, dim)
+    val weighted = dsirWeighted(f, ratio, dim)
     val k = math.floor(selectFrac * n).toLong
-    if (k == 0L) (ratio, weighted, None)
-    else {
+    val eps = if (k == 0L) None else {
       // exact k-th largest integer logw without a global sort: coarse
       // 1e6-wide buckets locate rank k (driver metadata — the bucket
       // count is bounded by the micro-unit weight range, not N), then
       // only that bucket's rows take the exact within-bucket top
-      val hist = weighted
-        .select(org.apache.spark.sql.functions.floor($"logw" / 1000000L).as("b"))
-        .groupBy($"b").agg(count(lit(1)).as("c"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .sortBy(-_._1)
+      val bucket = org.apache.spark.sql.functions.floor($"logw" / 1000000L)
+      val hist = DocFeatures.driverHistogram(weighted.select(bucket)).toSeq.sortBy(-_._1)
       var cum = 0L; var i = 0
       while (cum + hist(i)._2 < k) { cum += hist(i)._2; i += 1 }
       val (bkt, inRank) = (hist(i)._1, k - cum)
       require(inRank <= Int.MaxValue.toLong,
         s"threshold bucket $bkt holds > Int.MaxValue rows at 1e6 " +
           "width — narrow the histogram before selecting")
-      val eps = weighted
-        .filter(org.apache.spark.sql.functions.floor($"logw" / 1000000L) === bkt)
-        .select($"logw").orderBy($"logw".desc)
-        .limit(inRank.toInt).agg(min($"logw")).head().getLong(0)
-      (ratio, weighted, Some(eps))
+      Some(weighted.filter(bucket === bkt).select($"logw")
+        .orderBy($"logw".desc).limit(inRank.toInt).collect().last.getLong(0))
     }
+    (ratioFrame(spark, ratio, dim), weighted, eps)
   }
 
   /** TRAIN the DSIR selector: the nightly job whose frozen output the
-    * streaming filter (E20) broadcasts — the dim-row log-ratio table
-    * plus the integer selection threshold eps fitted on the reference
-    * corpus. Both are exactly [[dsirSelectOf]]'s internals; a doc's
-    * (logw, selected) verdict against the frozen pair depends on the
-    * model and its own tokens alone, which is what makes per-batch
-    * scoring ≡ one-shot scoring. */
+    * streaming filter (E20) scores against — the dim-row log-ratio
+    * table plus the integer selection threshold eps fitted on the
+    * reference corpus. Both are exactly [[dsirSelectOf]]'s internals;
+    * a doc's (logw, selected) verdict against the frozen pair depends
+    * on the model and its own tokens alone, which is what makes
+    * per-batch scoring ≡ one-shot scoring. */
   private[graft] def dsirTrain(docs: DataFrame, dim: Int = 64,
-                               selectFrac: Double = 0.25,
-                               tf: Option[DataFrame] = None): (DataFrame, Option[Long]) = {
-    val (ratio, _, epsOpt) = dsirFit(docs, dim, selectFrac, tf)
+                               selectFrac: Double = 0.25): (DataFrame, Option[Long]) = {
+    val (ratio, _, epsOpt) =
+      dsirFitFrom(DocFeatures.of(docs).localCheckpoint(), dim, selectFrac)
     // epsOpt is None only when ⌊selectFrac·N⌋ = 0 (degenerate/empty
     // reference corpus) — the scorer then selects nothing, exactly
     // the batch k = 0 branch
@@ -1902,15 +1811,14 @@ object TextAnalysis {
   def dsirStaleServe(spark: SparkSession, dir: String, dim: Int = 64,
                      selectFrac: Double = 0.25): DataFrame = {
     import spark.implicits._
-    val docs = Tables.fanout(Tables.documents(spark, dir)
-      .select($"doc_id", $"text"))
+    val f = DocFeatures.forDir(spark, dir)
     // the frozen prefix (ratio, eps) is a session artifact like
     // dsirFitFor's full-corpus one — train it once per key (r17 opt)
     val (ratio, eps) = Artifacts.value(spark, Artifacts.DsirPrefix, dir, dim, selectFrac) {
-      dsirTrain(docs.filter($"doc_id" % 10 < 7), dim, selectFrac,
-        tf = Some(unigramTfFor(spark, dir).filter($"doc_id" % 10 < 7)))
+      val (r, _, e) = dsirFitFrom(f.filter($"doc_id" % 10 < 7), dim, selectFrac)
+      (r, e)
     }
-    dsirScore(docs, ratio, eps, dim)
+    dsirScoreFrom(f, ratio, eps, dim)
   }
 
   /** C33b oracle: prefix-fitted models + prefix threshold, all docs
@@ -1959,26 +1867,20 @@ object TextAnalysis {
        |FROM weighted w, eps e""".stripMargin
   }
 
-  /** SCORE a doc frame against a frozen (ratio, eps) pair: one
-    * broadcast join + one hash agg + a stateless filter column — the
-    * identical call scores the batch corpus or an arriving micro-batch
-    * (E20). */
+  /** SCORE a doc frame against a frozen (ratio, eps) pair: a
+    * stateless per-document weight and filter column — the identical
+    * call scores the batch corpus or an arriving micro-batch (E20). */
   private[graft] def dsirScore(docs: DataFrame, ratio: DataFrame,
-                               eps: Option[Long], dim: Int = 64): DataFrame = {
-    import docs.sparkSession.implicits._
-    val weighted = docs.select($"doc_id").distinct()
-      .join(nbFeatures(docs, dim).join(broadcast(ratio), Seq("slot"))
-        .groupBy($"doc_id").agg(sum($"x" * $"r").as("logw")),
-        Seq("doc_id"), "left")
-      .na.fill(0L, Seq("logw"))
-    eps match {
-      case Some(e) =>
-        weighted.select($"doc_id", $"logw", lit(e).as("eps"),
-          ($"logw" >= e).as("selected"))
-      case None =>
-        weighted.select($"doc_id", $"logw", lit(null).cast("long").as("eps"),
-          lit(false).as("selected"))
-    }
+                               eps: Option[Long], dim: Int = 64): DataFrame =
+    dsirScoreFrom(DocFeatures.of(docs), ratio, eps, dim)
+
+  /** [[dsirScore]] over [[DocFeatures]]; a null ratio slot weighs 0. */
+  private def dsirScoreFrom(f: DataFrame, ratio: DataFrame,
+                            eps: Option[Long], dim: Int): DataFrame = {
+    val r = new Array[Long](dim)
+    ratio.collect().foreach(row =>
+      if (!row.isNullAt(row.fieldIndex("r"))) r(row.getAs[Int]("slot")) = row.getAs[Long]("r"))
+    dsirSelected(dsirWeighted(f, Some(r), dim), eps)
   }
 
   /** C33 oracle: the identical target/raw hashed-unigram models,
@@ -2045,44 +1947,28 @@ object TextAnalysis {
     * same plan, coarser margin key. */
   def nbQualityCalibrate(spark: SparkSession, dir: String,
                          dim: Int = 64): DataFrame = {
-    import spark.implicits._
-    nbQualityCalibrateOf(Tables.fanout(Tables.documents(spark, dir)
-      .select($"doc_id", $"text")), dim,
-      trained = Some(nbTrainFor(spark, dir, dim)),
-      tf = Some(unigramTfFor(spark, dir)))
+    nbQualityCalibrateFrom(DocFeatures.forDir(spark, dir), dim,
+      trained = Some(nbTrainFor(spark, dir, dim)))
   }
 
   /** Frame-based core of C32b (docs = (doc_id, text)). */
   private[graft] def nbQualityCalibrateOf(docs: DataFrame, dim: Int = 64,
-                                          trainMod: Int = 4,
-                                          trained: Option[(DataFrame, DataFrame)] = None,
-                                          tf: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    val keepList = nbKeepWords.map(w => s"'$w'").mkString(", ")
-    val dropList = nbDropWords.map(w => s"'$w'").mkString(", ")
-    val (model, priors) = trained.getOrElse(nbTrain(docs, dim, trainMod))
-    val held = docs.filter($"doc_id" % trainMod === 0)
-    // the held-out slice of the session tf memo serves BOTH the
-    // margin scoring and the teacher-truth aggregate (tf rows are
-    // doc-local, so the id-mod filter commutes; the marker counts are
-    // exact tf-weighted sums of the per-occurrence indicators)
-    val heldTf = tf.map(_.filter($"doc_id" % trainMod === 0))
-    val margins = nbScore(held, model, priors, dim, tf = heldTf)
+                                          trainMod: Int = 4): DataFrame =
+    nbQualityCalibrateFrom(DocFeatures.of(docs), dim, trainMod)
+
+  private def nbQualityCalibrateFrom(f: DataFrame, dim: Int = 64,
+                                     trainMod: Int = 4,
+                                     trained: Option[(DataFrame, DataFrame)] = None)
+      : DataFrame = {
+    import f.sparkSession.implicits._
+    val (model, priors) = trained.getOrElse(nbTrainFrom(f, dim, trainMod))
+    val held = f.filter($"doc_id" % trainMod === 0)
+    val margins = nbScoreFrom(held, model, priors, dim)
       .select($"doc_id", ($"score_keep" - $"score_drop").as("margin"))
     // the teacher's truth on the held-out docs (same marker rule the
     // training labels used; a token-free doc counts 0 ≥ 0 → keep)
-    val heldTok = heldTf.getOrElse(
-      held.select($"doc_id", explode(toks($"text")).as("token"))
-        .groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf")))
-    val truth = held.select($"doc_id").distinct()
-      .join(heldTok
-        .groupBy($"doc_id")
-        .agg(sum(expr(s"if(token in ($keepList), tf, 0L)")).as("np"),
-          sum(expr(s"if(token in ($dropList), tf, 0L)")).as("nn")),
-        Seq("doc_id"), "left")
-      .select($"doc_id",
-        when(coalesce($"np", lit(0L)) >= coalesce($"nn", lit(0L)), lit(1L))
-          .otherwise(lit(0L)).as("isk"))
+    val truth = held.select($"doc_id",
+      when(hits(nbKeepWords) >= hits(nbDropWords), lit(1L)).otherwise(lit(0L)).as("isk"))
     // per-distinct-margin confusion mass, banded for the cumsum;
     // eager: feeds the band aggregate AND the windowed main path
     val m = margins.join(truth, Seq("doc_id"))
@@ -2618,11 +2504,10 @@ object TextAnalysis {
     // corpus size as a broadcast 1-row aggregate: stays a lazy plan
     // (no count() action at construction time)
     val nDocs = Tables.documents(spark, dir).agg(count(lit(1)).as("n_docs"))
-    // the per-(doc, token) counts ARE the session unigramTf memo
-    // (same fanout + tokenizer + agg — one corpus tokenize per
-    // session, r17 opt); it arrives checkpointed, which the df
-    // aggregate + join probe fan-out requires anyway
-    val tf = unigramTfFor(spark, dir)
+    // the per-(doc, token) counts of the session features (one
+    // corpus tokenize per session); the df aggregate and the join
+    // probe read the same exchange
+    val tf = DocFeatures.tf(DocFeatures.forDir(spark, dir))
     val df = tf.groupBy($"token").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy($"doc_id").orderBy($"tfidf".desc, $"token")
     tf.join(df, Seq("token"))
@@ -4406,15 +4291,10 @@ object TextAnalysis {
                                      cutId: Option[Long],
                                      dim: Int = 64): String =
     Artifacts.directory(spark, Artifacts.NbModelTemplate, dir, Seq(snap(cutId), dim)) { d =>
-      val docs = Tables.fanout(Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")))
-      cutId match {
-        case Some(c) => nbModelWrite(docs.filter(col("doc_id") <= c), d, dim,
-          trained = Some(nbTrain(docs.filter(col("doc_id") <= c), dim,
-            tf = Some(unigramTfFor(spark, dir).filter(col("doc_id") <= c)))))
-        case None => nbModelWrite(docs, d, dim,
-          trained = Some(nbTrainFor(spark, dir, dim)))
-      }
+      nbModelWrite(d, cutId match {
+        case Some(c) => nbTrainFrom(DocFeatures.forDir(spark, dir).filter(col("doc_id") <= c), dim)
+        case None => nbTrainFor(spark, dir, dim)
+      })
     }
 
   /** One maintenance epoch for the whole fleet: build all four kinds
@@ -4671,8 +4551,7 @@ object TextAnalysis {
     * (r16 opt). Four narrow columns per doc, eagerly checkpointed. */
   private[graft] def pplScoresFor(spark: SparkSession, dir: String): DataFrame =
     Artifacts.value(spark, Artifacts.PplScores, dir) {
-      perplexityOf(Tables.fanout(Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")))).localCheckpoint()
+      perplexityFrom(DocFeatures.forDir(spark, dir)).localCheckpoint()
     }
 
   /** The full-corpus frozen unigram LM (counts + (N, V)), memoized per
@@ -4695,16 +4574,22 @@ object TextAnalysis {
 
   /** Frame-based core of `perplexity_score` (docs = (doc_id, text)) —
     * lets the spec pin the fluency ordering on crafted documents. */
-  def perplexityOf(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    val tok = docs.select($"doc_id", explode(toks($"text")).as("token"))
-    // eager (materialization contract): tok feeds the LM count
-    // aggregate AND the scoring join probe — lazy, both consumers
-    // re-run the tokenization concurrently
-    val tokCk = tok.localCheckpoint()
-    val counts = tokCk.groupBy($"token").agg(count(lit(1)).as("c"))
+  def perplexityOf(docs: DataFrame): DataFrame =
+    // eager (materialization contract): the token streams feed the LM
+    // count aggregate AND the scoring join probe — lazy, both
+    // consumers re-run the tokenization concurrently
+    perplexityFrom(DocFeatures.of(docs).select(col("doc_id"), col("toks")).localCheckpoint())
+
+  /** Self-trained perplexity over materialized [[DocFeatures]]: each
+    * doc's tokens stay contiguous and in stream order within one
+    * partition, so its per-occurrence double sum adds the same terms
+    * in the same order as the token stream. */
+  private def perplexityFrom(f: DataFrame): DataFrame = {
+    import f.sparkSession.implicits._
+    val tok = f.select($"doc_id", explode($"toks").as("token"))
+    val counts = tok.groupBy($"token").agg(count(lit(1)).as("c"))
     val scal = counts.agg(sum($"c").as("n_tok"), count(lit(1)).as("v_size"))
-    perplexityAgainst(tokCk, counts, scal)
+    perplexityAgainst(tok, counts, scal)
   }
 
   /** The frozen unigram LM (token counts + the (N, V) scalar) trained
@@ -4712,7 +4597,7 @@ object TextAnalysis {
     * sides eagerly materialized (the nightly LM-training job). */
   private[graft] def perplexityLm(docs: DataFrame): (DataFrame, DataFrame) = {
     import docs.sparkSession.implicits._
-    val counts = docs.select($"doc_id", explode(toks($"text")).as("token"))
+    val counts = DocFeatures.of(docs).select(explode($"toks").as("token"))
       .groupBy($"token").agg(count(lit(1)).as("c"))
       .localCheckpoint()
     val scal = counts.agg(sum($"c").as("n_tok"), count(lit(1)).as("v_size"))

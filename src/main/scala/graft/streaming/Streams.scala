@@ -329,7 +329,7 @@ object Streams {
   /** E19 `stream_quality_classify` — the LEARNED quality filter (C32)
     * applied AT INGEST: the NB model trains once batch-side (the
     * nightly teacher/train job, `nbTrain`) and each arriving doc
-    * micro-batch scores against the frozen broadcast classes×dim
+    * micro-batch scores against the frozen classes×dim
     * model (`nbScore`) — E5's stream-static stateless shape, so a
     * doc's verdict depends on the model and its own tokens alone and
     * per-batch scoring provably equals one-shot scoring (the gate:
@@ -337,12 +337,9 @@ object Streams {
     * drives real MemoryStream batches through a foreachBatch scorer
     * and pins row parity plus batch-composition irrelevance). */
   def streamQualityClassify(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.fanout(graft.Tables.documents(spark, dir)
-      .select($"doc_id", $"text"))
     val (model, priors) = graft.operators.TextAnalysis.nbTrainFor(spark, dir)
-    graft.operators.TextAnalysis.nbScore(docs, model, priors,
-      tf = Some(graft.operators.TextAnalysis.unigramTfFor(spark, dir)))
+    graft.operators.TextAnalysis.nbScoreFrom(
+      graft.operators.DocFeatures.forDir(spark, dir), model, priors)
   }
 
   /** E20 `stream_dsir_select` — the DSIR importance filter (C33)
@@ -562,8 +559,7 @@ object Streams {
     val Gov = graft.operators.Govern
     val bench = Gov.benchGramSet(spark, dir)
     Gov.decontScore(
-      Gov.docGrams(Tables.fanout(graft.Tables.documents(spark, dir)
-        .select($"doc_id", $"text")))
+      graft.operators.DocFeatures.grams(graft.operators.DocFeatures.forDir(spark, dir), 4)
         .filter($"doc_id" % Gov.BenchMod =!= 0),
       bench)
   }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The build-once artifact layer: a key follows what its artifact was
@@ -18,13 +19,22 @@ class ArtifactsSpec extends AnyFunSuite {
     import s.implicits._
     val lake = Files.createTempDirectory("graft_artifacts_rewrite").toString
     def land(ids: Range): Unit =
-      ids.map(i => (i.toLong, s"alpha$i beta$i gamma$i delta epsilon"))
+      ids.map(i => (i.toLong, s"alpha$i beta$i gamma$i delta epsilon " +
+          (if (i % 2 == 0) "order" else "spark")))
         .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$lake/documents.parquet")
-    // the value artifact (the corpus unigram tf table) and the directory
+    // the value artifact (the per-document features) and the directory
     // artifact (the full-corpus BM25 impact index) each answer with the
-    // doc ids they were built from
-    def tfIds: Set[Long] = operators.TextAnalysis.unigramTfFor(s, lake)
-      .select($"doc_id").distinct().as[Long].collect().toSet
+    // doc ids they were built from, and so does every curation step
+    // that reads the features
+    def ids(df: DataFrame): Set[Long] =
+      df.select($"doc_id").distinct().as[Long].collect().toSet.filter(_ < operators.NearDup.BigOffset)
+    def featureIds: Set[Long] = ids(operators.DocFeatures.forDir(s, lake))
+    def consumerIds: Seq[Set[Long]] = Seq(
+      ids(operators.NearDup.dedupKeepBest(s, lake)),
+      ids(operators.TextAnalysis.nbQualityClassify(s, lake)),
+      ids(operators.TextAnalysis.dsirSelect(s, lake)),
+      ids(operators.TextAnalysis.perplexityScore(s, lake)),
+      ids(operators.TextAnalysis.qualityScore(s, lake)))
     def indexIds: Set[Long] = operators.TextAnalysis.bm25ServeFrom(s,
       operators.TextAnalysis.bm25ImpactTemplate(s, lake, None), k = 10, qMod = 1)
       .select($"doc_id").distinct().as[Long].collect().toSet
@@ -32,23 +42,26 @@ class ArtifactsSpec extends AnyFunSuite {
     def built(): Map[Artifacts.Kind, Int] =
       Artifacts.drain().filter(_.key.dir == lake).groupBy(_.key.kind).map {
         case (k, bs) => k -> bs.size }
-    val once = Map[Artifacts.Kind, Int](Artifacts.UnigramTf -> 1,
+    val once = Map[Artifacts.Kind, Int](Artifacts.DocFeatures -> 1,
       Artifacts.Bm25ImpactTemplate -> 1)
     Artifacts.drain()
 
     land(0 until 6)
-    assert(tfIds == (0L until 6L).toSet && indexIds == (0L until 6L).toSet)
+    assert(featureIds == (0L until 6L).toSet && indexIds == (0L until 6L).toSet)
+    assert(consumerIds.forall(_ == (0L until 6L).toSet), consumerIds)
     assert(built().filter(kb => once.contains(kb._1)) == once)
 
     land(100 until 106)
-    assert(tfIds == (100L until 106L).toSet,
+    assert(featureIds == (100L until 106L).toSet,
       "a rewritten corpus must not be served from the stale value artifact")
+    assert(consumerIds.forall(_ == (100L until 106L).toSet),
+      s"every feature consumer serves the rewritten corpus: $consumerIds")
     assert(indexIds == (100L until 106L).toSet,
       "a rewritten corpus must not be served from the stale index directory")
     assert(built().filter(kb => once.contains(kb._1)) == once,
       "the rewrite rebuilds each artifact exactly once")
 
-    assert(tfIds == (100L until 106L).toSet && indexIds == (100L until 106L).toSet)
+    assert(featureIds == (100L until 106L).toSet && indexIds == (100L until 106L).toSet)
     val again = built()
     assert(again.isEmpty, s"an untouched corpus must not rebuild: $again")
     val fs = new org.apache.hadoop.fs.Path(lake).getFileSystem(s.sparkContext.hadoopConfiguration)

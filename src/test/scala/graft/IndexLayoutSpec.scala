@@ -100,6 +100,33 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("documents drift: the declared schema equals the inferred one on the generated lake and on a quarantine-landed lake") {
+    def check(lake: String): Unit = {
+      val inferred = spark.read.parquet(s"$lake/documents.parquet")
+      assert(loose(inferred.schema) == loose(Tables.documentsSchema),
+        s"$lake: written ${inferred.schema.simpleString}, " +
+          s"declared ${Tables.documentsSchema.simpleString}")
+      assert(Tables.documents(spark, lake).count() == inferred.count())
+    }
+    check(sf)
+    // the ingest path: jsonl.gz batches (one torn line) through
+    // readJsonl's PERMISSIVE read and quarantine, the clean rows landed
+    val batches = tmp("graft_layout_jsonl")
+    val lake = tmp("graft_layout_lake")
+    scratch ++= Seq(batches, lake)
+    Lake.writeJsonlGz(Tables.documents(spark, sf), s"$batches/b0")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$batches/b0/torn.jsonl"),
+      "{\"doc_id\": 7, \"text\": \"torn\n")
+    val ingest = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType),
+      StructField("lang", StringType), StructField("source", StringType),
+      StructField("n_chars", LongType)))
+    val (clean, bad) = Lake.quarantine(Lake.readJsonl(spark, s"$batches/b0", ingest))
+    assert(bad.count() == 1)
+    clean.write.mode("overwrite").parquet(s"$lake/documents.parquet")
+    check(lake)
+    assert(Tables.documents(spark, lake).count() == Tables.documents(spark, sf).count())
+  }
+
   test("local: every metadata directory reads on the driver the rows the declared read collects, with no job") {
     assert(built.flatMap(_._1.meta).toSet ==
       Set("stats", "stats_log", "commits", "centroids", "pq/books", "pq/commits"))
