@@ -874,7 +874,7 @@ object Similarity {
     * EXTERNAL query batch numbers its own namespace, where excluding
     * the same-numbered corpus vector would silently drop a legitimate
     * (possibly nearest) neighbor. */
-  private def ivfScore(probes: DataFrame, lists: DataFrame, k: Int,
+  private[graft] def ivfScore(probes: DataFrame, lists: DataFrame, k: Int,
                        excludeSelf: Boolean = true): DataFrame = {
     import probes.sparkSession.implicits._
     // the probe set is O(queries × nprobe) — a serving batch, small by
@@ -908,7 +908,7 @@ object Similarity {
     * within noise of the shortlist boundary, and shortlist ≫ k makes
     * losing a true top-k that way essentially impossible — recall is
     * governed by cell routing alone. */
-  private def ivfScoreRerank(probes: DataFrame, codes: DataFrame, vectors: DataFrame,
+  private[graft] def ivfScoreRerank(probes: DataFrame, codes: DataFrame, vectors: DataFrame,
                              shortlist: Int, k: Int,
                              excludeSelf: Boolean = true): DataFrame = {
     import probes.sparkSession.implicits._
@@ -1093,15 +1093,15 @@ object Similarity {
   private[graft] def ivfCommitted(spark: SparkSession, path: String): Seq[String] =
     IndexLayout.Ivf.local(spark, path, "commits").map(_.getString(0))
 
-  /** Committed tombstones (neighbor_id) — empty if no delete ever ran. */
+  /** Committed tombstones (neighbor_id) — none if no delete ever ran —
+    * read on the driver ([[IndexLayout.Layout.local]], no job) with the
+    * committed filter applied there: bounded curation metadata. */
   private[graft] def ivfTombstones(spark: SparkSession, path: String,
-                                   committed: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    if (del.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(del))
-      IndexLayout.Ivf.read(spark, path, "deletes")
-        .filter($"batch_id".isin(committed: _*)).select($"neighbor_id")
-    else spark.emptyDataset[Long].toDF("neighbor_id")
+                                   committed: Seq[String]): Seq[Long] = {
+    val keep = committed.toSet
+    IndexLayout.Ivf.local(spark, path, "deletes").collect {
+      case r if !r.isNullAt(0) && keep(r.getString(1)) => r.getLong(0)
+    }.distinct
   }
 
   /** The index's current committed batch set — pass it back into
@@ -1126,12 +1126,16 @@ object Similarity {
     * [[ivfSnapshot]] state. */
   private[graft] def liveLists(spark: SparkSession, path: String,
                                snapshot: Option[Seq[String]] = None): DataFrame = {
-    import spark.implicits._
     val committed = snapshot.getOrElse(ivfCommitted(spark, path))
+    liveListsAt(spark, path, committed, ivfTombstones(spark, path, committed))
+  }
+
+  private def liveListsAt(spark: SparkSession, path: String, committed: Seq[String],
+                          dead: Seq[Long]): DataFrame = {
+    import spark.implicits._
     IndexLayout.Ivf.read(spark, path, "lists")
       .filter($"batch_id".isin(committed: _*))
-      .join(broadcast(ivfTombstones(spark, path, committed)),
-        Seq("neighbor_id"), "left_anti")
+      .join(broadcast(dead.toDF("neighbor_id")), Seq("neighbor_id"), "left_anti")
       .drop("batch_id")
   }
 
@@ -1147,7 +1151,8 @@ object Similarity {
     val committed = ivfCommitted(spark, path)
     val batchId = java.util.UUID.randomUUID.toString
     ids.select($"vec_id".as("neighbor_id")).distinct()
-      .join(ivfTombstones(spark, path, committed), Seq("neighbor_id"), "left_anti")
+      .join(ivfTombstones(spark, path, committed).toDF("neighbor_id"), Seq("neighbor_id"),
+        "left_anti")
       .withColumn("batch_id", lit(batchId))
       .coalesce(1).write.mode("append").parquet(s"$path/deletes")
     ivfCommit(spark, path, batchId, overwrite = false)
@@ -1310,7 +1315,7 @@ object Similarity {
     val committed = ivfCommitted(spark, path)
     val counts = IndexLayout.Ivf.read(spark, path, "lists")
       .select($"batch_id", $"neighbor_id")
-      .join(broadcast(ivfTombstones(spark, path, committed))
+      .join(broadcast(ivfTombstones(spark, path, committed).toDF("neighbor_id"))
         .withColumn("dead", lit(1)), Seq("neighbor_id"), "left_outer")
       .agg(count(lit(1)).as("total"),
         sum(when($"dead".isNotNull || !$"batch_id".isin(committed: _*), 1L)
@@ -1350,7 +1355,7 @@ object Similarity {
     // neighbor_id — parquet prunes the payload columns)
     val committed = ivfCommitted(spark, path)
     val raw = IndexLayout.Ivf.read(spark, path, "lists")
-    val dead = ivfTombstones(spark, path, committed)
+    val dead = ivfTombstones(spark, path, committed).toDF("neighbor_id")
     val dirty = IndexLayout.partitionsOf(
       raw.join(dead, Seq("neighbor_id"), "left_semi").select($"cell")
         .unionAll(raw.filter(!$"batch_id".isin(committed: _*)).select($"cell"))).toSet
@@ -1381,10 +1386,11 @@ object Similarity {
     * lists' partition column, so the probe join touches nprobe/nlist
     * of the index and never the raw corpus. Pass `queries` (vec_id,
     * embedding) for real serving — an external query batch routes on
-    * the driver against the centroids alone ([[ivfRouteLocal]]); when
+    * the driver against the centroids alone and is scored by one
+    * [[graft.sources.IndexProbe]] job over the probed cells; when
     * omitted, the self-query panel (vec_id < nQueries) is derived FROM
     * the lists table, which necessarily scans it once — the self-test
-    * mode, not the serving path. */
+    * mode, not the serving path, and a Spark plan. */
   def annIvfServe(spark: SparkSession, path: String, nprobe: Int = 2,
                   k: Int = 5, nQueries: Int = 50,
                   queries: Option[DataFrame] = None,
@@ -1394,15 +1400,18 @@ object Similarity {
     annIvfServeOn(ivfCtx(spark, path, snapshot), nprobe, k, nQueries,
       queries, shortlist, selfPanel)
 
-  /** READ-ONCE serving context for a persisted index: the centroids
-    * (nlist driver rows, read without a job by
-    * [[IndexLayout.Layout.local]] — the driver router's input) and the
-    * LIVE lists plan (committed batches only, tombstones filtered — the
-    * commit log is read exactly once, at context build). An adaptive
-    * probe loop shares one context across its width rounds. The lists
-    * stay a lazy PLAN — corpus-sized data is never materialized, only
-    * the routing metadata is. */
-  private[graft] final case class IvfCtx(centroids: Seq[Row], lists: DataFrame)
+  /** READ-ONCE serving context for a persisted index at `path`: the
+    * centroids (nlist driver rows, read without a job by
+    * [[IndexLayout.Layout.local]] — the driver router's input), the
+    * committed batch ids and tombstoned ids (driver metadata, read the
+    * same way, exactly once at context build) and the LIVE lists plan
+    * they define (committed batches only, tombstones filtered). An
+    * adaptive probe loop shares one context across its width rounds.
+    * The lists stay a lazy PLAN — corpus-sized data is never
+    * materialized, only the metadata is. */
+  private[graft] final case class IvfCtx(path: String, centroids: Seq[Row],
+                                         committed: Seq[String], dead: Seq[Long],
+                                         lists: DataFrame)
 
   private[graft] def ivfCtx(spark: SparkSession, path: String,
                             snapshot: Option[Seq[String]] = None): IvfCtx = {
@@ -1414,9 +1423,10 @@ object Similarity {
     // the partitionColumnTypeInference conf). An explicit `snapshot`
     // (ivfSnapshot) pins the view — snapshot isolation against
     // concurrent appends/deletes.
-    IvfCtx(
-      IndexLayout.Ivf.local(spark, path, "centroids"),
-      liveLists(spark, path, snapshot)
+    val committed = snapshot.getOrElse(ivfCommitted(spark, path))
+    val dead = ivfTombstones(spark, path, committed)
+    IvfCtx(path, IndexLayout.Ivf.local(spark, path, "centroids"), committed, dead,
+      liveListsAt(spark, path, committed, dead)
         .select($"cell", $"neighbor_id",
           $"vc".cast("array<float>").as("vc"), $"nc", $"label", $"q8", $"qn"))
   }
@@ -1427,16 +1437,15 @@ object Similarity {
     * its cell's centroid) when asked, and the distinct probed `cells`. */
   private final case class Routed(panel: DataFrame, probes: DataFrame, cells: Seq[Int])
 
-  /** The persisted-index serves' router: the panel — an external query
-    * batch or the self-test panel, a serving batch small by contract —
-    * is collected once (a local relation collects without a job) and
-    * routed on the driver against the context's centroids
+  /** The router of the persisted-index serves that stay Spark plans
+    * (the self-test panels, the PQ serve): the panel — a serving batch
+    * small by contract — is collected once and routed on the driver
+    * against the context's centroids
     * ([[graft.sources.IndexRoute.nearest]], the same cells [[ivfRoute]]
     * picks). The routed rows go back to Spark as a local relation, and
     * the cell list statically prunes the lists read: DPP does not fire
     * on the probe join (measured — all 16 dirs opened), so the serve
-    * does what an ANN server does and reads only the probed
-    * partitions. RecallSpec pins files-opened == probed cells. */
+    * reads only the probed partitions. */
   private def ivfRouteLocal(centroids: Seq[Row], panel0: DataFrame, nprobe: Int,
                             qcdot: Boolean): Routed = {
     import scala.jdk.CollectionConverters._
@@ -1461,6 +1470,14 @@ object Similarity {
       probes.map(_.getInt(0)).distinct)
   }
 
+  /** `queries` given: routed on the driver and served by one
+    * [[graft.sources.IndexProbe]] job over the probed cells. External
+    * queries number their OWN id namespace: a batch vector that happens
+    * to share a corpus id must not lose that corpus neighbor, so
+    * self-exclusion applies only when `selfPanel` marks the batch as
+    * the index's own members (the adaptive loop's shrinking panel).
+    * Without `queries`, the self-test panel is served by the Spark plan
+    * ([[ivfScore]], or [[ivfScoreRerank]] with a shortlist). */
   private[graft] def annIvfServeOn(ctx: IvfCtx, nprobe: Int,
                                    k: Int, nQueries: Int,
                                    queries: Option[DataFrame],
@@ -1469,31 +1486,36 @@ object Similarity {
     val lists = ctx.lists
     val spark = lists.sparkSession
     import spark.implicits._
-    val panel = queries.map(q => q
-        .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-        .withColumn("norm", sqrt(dotF($"embedding", $"embedding"))))
-      .getOrElse(lists.filter($"neighbor_id" < nQueries)
-        .select($"neighbor_id".as("vec_id"), $"vc".as("embedding"), $"nc".as("norm")))
-    // route FIRST, on the driver, then statically prune the lists read
-    // to the probed cell directories
-    val Routed(_, routed, probedCells) = ivfRouteLocal(ctx.centroids, panel, nprobe,
-      qcdot = false)
-    val probed = lists.filter($"cell".isin(probedCells: _*))
-    // external queries number their OWN id namespace: a batch vector
-    // that happens to share a corpus id must not lose that corpus
-    // neighbor. Self-exclusion only applies to the self-panel mode.
-    shortlist match {
-      case Some(sl) =>
-        // two-stage serve: the wide pass reads ONLY the code columns
-        // (parquet column pruning — the float vectors never enter the
-        // wide scan), the rerank fetch reads floats for candidates in
-        // the probed cells alone.
-        ivfScoreRerank(routed,
-          probed.select($"cell", $"neighbor_id", $"q8", $"qn"),
-          probed.select($"neighbor_id", $"vc", $"nc"), sl, k,
-          excludeSelf = queries.isEmpty || selfPanel)
+    queries match {
+      case Some(q) =>
+        val panel = q.select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+          .withColumn("norm", sqrt(dotF($"embedding", $"embedding")))
+        val rows = panel.collect().toSeq
+        val near = graft.sources.IndexRoute.nearest(spark,
+          rows.map(r => (r.get(1), r.get(2))), ctx.centroids, nprobe)
+        graft.sources.IndexProbe.ivf(spark, ctx.path, ctx.committed, ctx.dead,
+          rows.zip(near).map { case (r, cs) => graft.sources.IndexProbe.RoutedQuery(
+            r.get(0), r.get(1), r.get(2), cs.map(ctx.centroids(_).getAs[Int]("cid"))) },
+          panel.schema("vec_id").copy(name = "query_id"), k, shortlist, selfPanel)
       case None =>
-        ivfScore(routed, probed, k, excludeSelf = queries.isEmpty || selfPanel)
+        val panel = lists.filter($"neighbor_id" < nQueries)
+          .select($"neighbor_id".as("vec_id"), $"vc".as("embedding"), $"nc".as("norm"))
+        // route FIRST, on the driver, then statically prune the lists
+        // read to the probed cell directories
+        val Routed(_, routed, probedCells) = ivfRouteLocal(ctx.centroids, panel, nprobe,
+          qcdot = false)
+        val probed = lists.filter($"cell".isin(probedCells: _*))
+        shortlist match {
+          case Some(sl) =>
+            // two-stage serve: the wide pass reads ONLY the code columns
+            // (parquet column pruning — the float vectors never enter
+            // the wide scan), the rerank fetch reads floats for
+            // candidates in the probed cells alone.
+            ivfScoreRerank(routed,
+              probed.select($"cell", $"neighbor_id", $"q8", $"qn"),
+              probed.select($"neighbor_id", $"vc", $"nc"), sl, k)
+          case None => ivfScore(routed, probed, k)
+        }
     }
   }
 
@@ -2186,8 +2208,8 @@ object Similarity {
     val committed = pqCommitted(spark, path, pqStamp(spark, path))
     IndexLayout.Pq.read(spark, path, "pq/codes")
       .filter($"pq_batch".isin(committed: _*))
-      .join(broadcast(ivfTombstones(spark, path, ivfCommitted(spark, path))),
-        Seq("neighbor_id"), "left_anti")
+      .join(broadcast(ivfTombstones(spark, path, ivfCommitted(spark, path))
+        .toDF("neighbor_id")), Seq("neighbor_id"), "left_anti")
       .drop("pq_batch")
   }
 
@@ -2423,7 +2445,7 @@ object Similarity {
         Seq.empty[String]
       else pqCommitted(spark, path, stamp)
     val raw = IndexLayout.Pq.read(spark, path, "pq/codes")
-    val dead = ivfTombstones(spark, path, ivfCommitted(spark, path))
+    val dead = ivfTombstones(spark, path, ivfCommitted(spark, path)).toDF("neighbor_id")
     val dirty = IndexLayout.partitionsOf(
       raw.join(dead, Seq("neighbor_id"), "left_semi").select($"cell")
         .unionAll(raw.filter(!$"pq_batch".isin(committed: _*)).select($"cell"))).toSet

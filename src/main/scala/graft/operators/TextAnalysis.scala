@@ -3519,25 +3519,20 @@ object TextAnalysis {
         s"no committed index version at $path — build with bm25Write first"))
 
   /** BM25 served from a persisted [[bm25Write]] index. An EXTERNAL
-    * query batch (query_id, token) routes on the driver first
-    * ([[bm25Route]]): the bucket count comes from the `stats` row read
-    * without a job, the batch is collected once, and its tokens' hash
-    * buckets — O(query terms) driver ints, what a search frontend's
-    * shard router holds — statically prune the postings read to those
-    * bucket directories, so a short query touches a handful of the
-    * index partitions and never the corpus (the annIvfServe posture
-    * applied to text). Spark runs only the scoring query. Without
-    * `queries`, the self-test panel (every `qMod`-th doc's terms)
-    * derives FROM the postings, which necessarily scans them once —
-    * that mode hash-gates serve ≡ `bm25_retrieve` exactly. */
+    * query batch (query_id, token) is one [[graft.sources.IndexProbe]]
+    * job: the bucket count comes from the `stats` row read without a
+    * job, the batch routes on the driver to its tokens' hash buckets —
+    * O(query terms) driver ints, what a search frontend's shard router
+    * holds — and one task per routed bucket directory sums its
+    * postings' impacts, so a short query touches a handful of the
+    * index partitions and never the corpus. The answer comes back as a
+    * local relation. Without `queries`, the self-test panel (every
+    * `qMod`-th doc's terms) derives FROM the postings, which
+    * necessarily scans them once — that mode stays a Spark plan and
+    * hash-gates serve ≡ `bm25_retrieve` exactly. */
   def bm25ServeFrom(spark: SparkSession, path: String, k: Int = 10,
-                    qMod: Int = 20, queries: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val root = impactRoot(spark, path)
-    val post0 = IndexLayout.ImpactBm25.read(spark, root, "postings")
-      .select($"bucket", $"token", $"doc_id", $"impact")
-    bm25ServeRouted(spark, root, post0, k, qMod, queries)
-  }
+                    qMod: Int = 20, queries: Option[DataFrame] = None): DataFrame =
+    bm25ServeImpact(spark, impactRoot(spark, path), live = false, k, qMod, queries)
 
   /** The STALENESS-BOUNDED serve of the impact layout: committed
     * tombstones ([[bm25MarkDeleted]]) are anti-joined out of the
@@ -3551,47 +3546,29 @@ object TextAnalysis {
     * production middle ground real impact-ordered engines ship:
     * tombstone masks at serve, periodic segment rebuild. */
   def bm25ServeFromLive(spark: SparkSession, path: String, k: Int = 10,
-                        qMod: Int = 20, queries: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val root = impactRoot(spark, path)
-    val post0 = IndexLayout.ImpactBm25.read(spark, root, "postings")
-      .select($"bucket", $"token", $"doc_id", $"impact")
-      .join(impactDeletesAt(spark, root), Seq("doc_id"), "left_anti")
-    bm25ServeRouted(spark, root, post0, k, qMod, queries)
-  }
-
-  /** The BM25 router of both persisted layouts: an external query
-    * batch (query_id, token) — a serving batch, small by contract — is
-    * collected once (a local relation collects without a job), its
-    * tokens' buckets are computed on the driver
-    * ([[graft.sources.IndexRoute.buckets]], the writers' own hash), and
-    * the rows come back as a local relation for the scoring query. */
-  private def bm25Route(q0: DataFrame, nBuckets: Int): (DataFrame, Seq[Int]) = {
-    import scala.jdk.CollectionConverters._
-    val q = q0.select(col("query_id"), col("token"))
-    val rows = q.collect().toSeq
-    (q0.sparkSession.createDataFrame(rows.asJava, q.schema),
-      graft.sources.IndexRoute.buckets(rows.map(_.get(1)), q.schema("token").dataType,
-        nBuckets).distinct)
-  }
+                        qMod: Int = 20, queries: Option[DataFrame] = None): DataFrame =
+    bm25ServeImpact(spark, impactRoot(spark, path), live = true, k, qMod, queries)
 
   /** `root` is a RESOLVED version directory ([[impactRoot]]) — the
-    * whole serve (stats, postings, panel) reads one committed version,
-    * immune to a concurrent refresh's swap. */
-  private def bm25ServeRouted(spark: SparkSession, root: String, post0: DataFrame,
+    * whole serve (stats, tombstones, postings, panel) reads one
+    * committed version, immune to a concurrent refresh's swap. `live`
+    * masks the version's tombstones. */
+  private def bm25ServeImpact(spark: SparkSession, root: String, live: Boolean,
                               k: Int, qMod: Int,
                               queries: Option[DataFrame]): DataFrame = {
     import spark.implicits._
+    val dead = if (live) impactDeletesAt(spark, root) else Nil
     queries match {
-      case Some(q0) =>
+      case Some(q) =>
         val nBuckets = IndexLayout.ImpactBm25.local(spark, root, "stats")
           .head.getAs[Int]("n_buckets")
-        val (q, buckets) = bm25Route(q0, nBuckets)
-        bm25TopK(post0.filter($"bucket".isin(buckets: _*)).drop("bucket"), q, k)
+        graft.sources.IndexProbe.bm25Impact(root, q, nBuckets, dead, k)
       case None =>
-        val q = post0.filter($"doc_id" % qMod === 0)
-          .select($"doc_id".as("query_id"), $"token")
-        bm25TopK(post0.drop("bucket"), q, k)
+        val post = IndexLayout.ImpactBm25.read(spark, root, "postings")
+          .select($"token", $"doc_id", $"impact")
+          .join(dead.toDF("doc_id"), Seq("doc_id"), "left_anti")
+        bm25TopK(post, post.filter($"doc_id" % qMod === 0)
+          .select($"doc_id".as("query_id"), $"token"), k)
     }
   }
 
@@ -3606,19 +3583,14 @@ object TextAnalysis {
       .coalesce(1).write.mode("append")
       .parquet(s"${impactRoot(spark, path)}/deletes")
 
-  /** Distinct committed tombstones of an impact index — empty if none
-    * were ever marked. Tombstones live INSIDE the version directory:
-    * a refresh's new version starts clean by construction. */
-  private[graft] def impactDeletes(spark: SparkSession, path: String): DataFrame =
-    impactDeletesAt(spark, impactRoot(spark, path))
-
-  private def impactDeletesAt(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val del = new org.apache.hadoop.fs.Path(s"$root/deletes")
-    if (del.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(del))
-      IndexLayout.ImpactBm25.read(spark, root, "deletes").select($"doc_id").distinct()
-    else spark.emptyDataset[Long].toDF("doc_id")
-  }
+  /** Distinct tombstoned doc ids of the impact index version `root` —
+    * none if none were ever marked — read on the driver
+    * ([[IndexLayout.Layout.local]], no job): bounded curation
+    * metadata. Tombstones live INSIDE the version directory: a
+    * refresh's new version starts clean by construction. */
+  private def impactDeletesAt(spark: SparkSession, root: String): Seq[Long] =
+    IndexLayout.ImpactBm25.local(spark, root, "deletes")
+      .collect { case r if !r.isNullAt(0) => r.getLong(0) }.distinct
 
   /** Fraction of the index's docs that are tombstoned — the staleness
     * measure [[bm25RefreshIfStale]] thresholds on. Tombstones that
@@ -3631,7 +3603,7 @@ object TextAnalysis {
     val root = impactRoot(spark, path)
     val n = IndexLayout.ImpactBm25.local(spark, root, "stats").head.getAs[Long]("n_docs")
     if (n == 0L) return 0.0
-    val dead = impactDeletesAt(spark, root)
+    val dead = impactDeletesAt(spark, root).toDF("doc_id")
       .join(IndexLayout.ImpactBm25.read(spark, root, "postings").select($"doc_id"),
         Seq("doc_id"), "left_semi")
       .count()
@@ -3660,7 +3632,8 @@ object TextAnalysis {
       // never a mix, and a crash mid-rebuild is invisible
       val root = impactRoot(spark, path)
       val st = IndexLayout.ImpactBm25.local(spark, root, "stats").head
-      val survivors = docs.join(impactDeletesAt(spark, root),
+      import spark.implicits._
+      val survivors = docs.join(impactDeletesAt(spark, root).toDF("doc_id"),
         Seq("doc_id"), "left_anti")
       bm25WriteImpactFrom(survivors, path,
         st.getAs[Int]("n_buckets"), st.getAs[Int]("df_cap"))
@@ -3833,17 +3806,17 @@ object TextAnalysis {
     }
   }
 
-  /** Committed tombstones (doc_id) of a raw index — empty if none
-    * were ever written. Like postings, a tombstone batch is invisible
-    * until its stats-log row commits. */
+  /** Committed tombstones (doc_id) of a raw index — none if none
+    * were ever written — read on the driver
+    * ([[IndexLayout.Layout.local]], no job) with the committed filter
+    * applied there: bounded curation metadata. Like postings, a
+    * tombstone batch is invisible until its stats-log row commits. */
   private[graft] def rawIndexDeletes(spark: SparkSession, path: String,
-                                     committed: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    if (del.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(del))
-      IndexLayout.RawBm25.read(spark, path, "deletes")
-        .filter($"batch_id".isin(committed: _*)).select($"doc_id")
-    else spark.emptyDataset[Long].toDF("doc_id")
+                                     committed: Seq[String]): Seq[Long] = {
+    val keep = committed.toSet
+    IndexLayout.RawBm25.local(spark, path, "deletes").collect {
+      case r if !r.isNullAt(0) && keep(r.getString(1)) => r.getLong(0)
+    }.distinct
   }
 
   /** DELETE docs from a raw index — the forget path a curation
@@ -3867,7 +3840,7 @@ object TextAnalysis {
       .filter($"batch_id".isin(committed: _*))
     // eager: victims feed the tombstone write AND the stats delta
     val victims = doclens.join(ids.select($"doc_id").distinct(), Seq("doc_id"))
-      .join(rawIndexDeletes(spark, path, committed), Seq("doc_id"), "left_anti")
+      .join(rawIndexDeletes(spark, path, committed).toDF("doc_id"), Seq("doc_id"), "left_anti")
       .select($"doc_id", $"dl").localCheckpoint()
     // 1. tombstones (invisible until the stats row commits)
     victims.select($"doc_id", lit(batchId).as("batch_id"))
@@ -3894,7 +3867,7 @@ object TextAnalysis {
     val post = IndexLayout.RawBm25.read(spark, path, "postings")
       .select($"batch_id", $"doc_id")
     val counts = post
-      .join(rawIndexDeletes(spark, path, committed).withColumn("dead", lit(1)),
+      .join(rawIndexDeletes(spark, path, committed).toDF("doc_id").withColumn("dead", lit(1)),
         Seq("doc_id"), "left_outer")
       .agg(count(lit(1)).as("total"),
         sum(when($"dead".isNotNull || !$"batch_id".isin(committed: _*), 1L)
@@ -3925,7 +3898,7 @@ object TextAnalysis {
     import spark.implicits._
     val (committed, _) = rawIndexMeta(spark, path)
     val post = IndexLayout.RawBm25.read(spark, path, "postings")
-    val del = rawIndexDeletes(spark, path, committed)
+    val del = rawIndexDeletes(spark, path, committed).toDF("doc_id")
     // dirty = has orphan or tombstoned rows (one scan that reads only
     // bucket/batch_id/doc_id — parquet prunes the rest) ∪ fragmented
     // (driver listing, O(buckets) metadata like a format manifest)
@@ -3980,8 +3953,9 @@ object TextAnalysis {
     * successful appends/deletes, never a torn one. The bucket count
     * comes from the index's own stats log — an index built with any
     * nBuckets routes external queries correctly. With `queries`, the
-    * postings read statically prunes to the query tokens' buckets
-    * ([[bm25ServeFrom]]'s routing). With `snapshot` (a
+    * serve is one [[graft.sources.IndexProbe]] job over the query
+    * tokens' buckets ([[bm25ServeFrom]]'s routing), tombstones and
+    * stats read on the driver. With `snapshot` (a
     * [[bm25Snapshot]] value), the serve reads exactly that committed
     * state — snapshot isolation against concurrent maintenance. */
   def bm25ServeRaw(spark: SparkSession, path: String, k: Int = 10,
@@ -3992,29 +3966,26 @@ object TextAnalysis {
     val (log, nBuckets) = rawIndexLog(spark, path)
     val committed = snapshot.getOrElse(log.map(_.batchId))
     val (nDocs, am) = rawIndexStats(log, committed)
-    val stats = Seq((nDocs, am)).toDF("n_docs", "am")
     val dead = rawIndexDeletes(spark, path, committed)
-    val post0 = IndexLayout.RawBm25.read(spark, path, "postings")
-      .select($"bucket", $"token", $"doc_id", $"dl", $"tf", $"batch_id")
-    val pruned = queries match {
-      case Some(q0) =>
-        val (q, buckets) = bm25Route(q0, nBuckets)
-        (post0.filter($"bucket".isin(buckets: _*)), Some(q))
-      case None => (post0, None)
+    queries match {
+      case Some(q) =>
+        graft.sources.IndexProbe.bm25Raw(path, q, nBuckets, committed, dead, nDocs, am,
+          dfCap, k)
+      case None =>
+        // tombstones are bounded curation metadata — broadcast the
+        // anti-join side
+        val tf = IndexLayout.RawBm25.read(spark, path, "postings")
+          .select($"token", $"doc_id", $"dl", $"tf", $"batch_id")
+          .filter($"batch_id".isin(committed: _*))
+          .join(broadcast(dead.toDF("doc_id")), Seq("doc_id"), "left_anti")
+          .drop("batch_id").localCheckpoint()
+        val dfc = tf.groupBy($"token").agg(count(lit(1)).as("df")).filter($"df" <= dfCap)
+        val post = tf.join(dfc, Seq("token"))
+          .crossJoin(broadcast(Seq((nDocs, am)).toDF("n_docs", "am")))
+          .select($"doc_id", $"token", expr(bm25ImpactExpr).as("impact"))
+        bm25TopK(post, tf.filter($"doc_id" % qMod === 0)
+          .select($"doc_id".as("query_id"), $"token"), k)
     }
-    // committed-batch filter + tombstone anti-join AFTER the bucket
-    // prune: both run over the pruned read. Tombstones are bounded
-    // curation metadata — broadcast the anti-join side.
-    val tf = pruned._1.filter($"batch_id".isin(committed: _*))
-      .join(broadcast(dead), Seq("doc_id"), "left_anti")
-      .drop("bucket", "batch_id").localCheckpoint()
-    val dfc = tf.groupBy($"token").agg(count(lit(1)).as("df")).filter($"df" <= dfCap)
-    val post = tf.join(dfc, Seq("token"))
-      .crossJoin(broadcast(stats))
-      .select($"doc_id", $"token", expr(bm25ImpactExpr).as("impact"))
-    val q = pruned._2.getOrElse(
-      tf.filter($"doc_id" % qMod === 0).select($"doc_id".as("query_id"), $"token"))
-    bm25TopK(post, q, k)
   }
 
   /** C23c `bm25_append` — the incremental text index under the gate:

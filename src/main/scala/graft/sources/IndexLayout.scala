@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -27,9 +28,10 @@ import org.apache.spark.sql.types._
   * against the schema Spark infers from a freshly built index.
   *
   * Each layout also names its METADATA directories: the few-KB tables
-  * (a stats row, a commit log, nlist centroids, codebooks) a serve or
-  * a maintenance step reads whole before it plans any data work.
-  * [[Layout.local]] reads those on the driver without a Spark job. */
+  * (a stats row, a commit log, nlist centroids, codebooks, tombstones)
+  * a serve or a maintenance step reads whole before it plans any data
+  * work. [[Layout.local]] reads those on the driver without a Spark
+  * job. */
 object IndexLayout {
 
   final case class Layout(name: String, dirs: Map[String, StructType],
@@ -43,36 +45,53 @@ object IndexLayout {
       * the driver with the reader a scan task runs
       * (`ParquetFileFormat.buildReaderWithPartitionValues`, row mode)
       * and converted to external rows of the declared schema: the rows
-      * `read(spark, root, dir).collect()` returns, with no job. Files
-      * whose names start with `_` or `.` (`_SUCCESS`, checksums) are
-      * skipped as Spark's own listing skips them; a missing directory
-      * holds no rows. Only the directories in `meta` qualify: a data
-      * directory (postings, lists, codes) is corpus-sized and must be
-      * read by a job. */
+      * `read(spark, root, dir).collect()` returns, with no job, from
+      * the files [[files]] lists. Only the directories in `meta`
+      * qualify: a data directory (postings, lists, codes) is
+      * corpus-sized and must be read by a job. */
     def local(spark: SparkSession, root: String, dir: String): Seq[Row] = {
       require(meta(dir), s"$name: $dir is not a metadata directory")
       val schema = dirs(dir)
       val conf = spark.sessionState.newHadoopConf()
-      val path = new Path(s"$root/$dir")
-      val fs = path.getFileSystem(conf)
-      if (!fs.exists(path)) return Seq.empty
-      val files = fs.listStatus(path).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.sortBy(_.getPath.getName)
-      if (files.isEmpty) return Seq.empty
-      val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
-        spark, schema, new StructType(), schema, Nil,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+      val found = files(conf, s"$root/$dir")
+      if (found.isEmpty) return Seq.empty
+      val reader = rowReader(spark, schema, conf)
       val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-      files.flatMap { st =>
-        val file = PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath),
-          0L, st.getLen, Array.empty[String], st.getModificationTime, st.getLen)
-        // convert while iterating: the reader reuses its row object
-        reader(file).map(r => toRow(r).asInstanceOf[Row]).toVector
-      }
+      // convert while iterating: the reader reuses its row object
+      found.flatMap(f => reader(f.partitioned).map(r => toRow(r).asInstanceOf[Row]).toVector)
     }
   }
+
+  /** A data file of an index directory, as a scan task opens it. */
+  private[sources] final case class DataFile(path: String, length: Long, modified: Long) {
+    def partitioned: PartitionedFile = PartitionedFile(InternalRow.empty,
+      SparkPath.fromPath(new Path(path)), 0L, length, Array.empty[String], modified, length)
+  }
+
+  /** The data files of the flat directory `dir`, sorted by name. Files
+    * whose names start with `_` or `.` (`_SUCCESS`, checksums) are
+    * skipped as Spark's own listing skips them; a missing directory
+    * holds none. */
+  private[sources] def files(conf: Configuration, dir: String): Seq[DataFile] = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    if (!fs.exists(path)) return Seq.empty
+    fs.listStatus(path).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+      .map(st => DataFile(st.getPath.toString, st.getLen, st.getModificationTime))
+  }
+
+  /** The reader a scan task runs over one parquet file
+    * (`ParquetFileFormat.buildReaderWithPartitionValues`, row mode),
+    * reading the columns of `schema` and nothing else. The function is
+    * serializable: a task built on the driver can carry it. */
+  private[sources] def rowReader(spark: SparkSession, schema: StructType,
+                conf: Configuration): PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
 
   private def schema(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (n, t) => StructField(n, t) })
@@ -86,7 +105,7 @@ object IndexLayout {
     "postings" -> schema("token" -> StringType, "doc_id" -> LongType,
       "impact" -> LongType, "bucket" -> IntegerType),
     "deletes" -> schema("doc_id" -> LongType)),
-    meta = Set("stats"))
+    meta = Set("stats", "deletes"))
 
   /** [[graft.operators.TextAnalysis.bm25WriteRaw]] and its appends. */
   val RawBm25: Layout = Layout("raw BM25", Map(
@@ -98,7 +117,7 @@ object IndexLayout {
     "doclens" -> schema("doc_id" -> LongType, "dl" -> LongType,
       "batch_id" -> StringType),
     "deletes" -> schema("doc_id" -> LongType, "batch_id" -> StringType)),
-    meta = Set("stats_log"))
+    meta = Set("stats_log", "deletes"))
 
   /** [[graft.operators.Similarity.ivfWrite]] and its maintenance. */
   val Ivf: Layout = Layout("IVF", Map(
@@ -110,7 +129,7 @@ object IndexLayout {
       "batch_id" -> StringType, "cell" -> IntegerType),
     "commits" -> schema("batch_id" -> StringType),
     "deletes" -> schema("neighbor_id" -> LongType, "batch_id" -> StringType)),
-    meta = Set("centroids", "commits"))
+    meta = Set("centroids", "commits", "deletes"))
 
   /** [[graft.operators.Similarity.pqAttach]]'s sidecar, under an IVF root. */
   val Pq: Layout = Layout("PQ sidecar", Map(

@@ -4,7 +4,7 @@ import graft.functions.VectorExpressions.DotProductFloat
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Divide, EvalMode,
-  Literal, Multiply, Pmod, XxHash64}
+  Expression, Literal, Multiply, Pmod, XxHash64}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.types._
 
@@ -38,13 +38,7 @@ object IndexRoute {
     * `cid` ascending. */
   def nearest(spark: SparkSession, queries: Seq[(Any, Any)], centroids: Seq[Row],
               nprobe: Int): Seq[Seq[Int]] = {
-    val arr = ArrayType(FloatType)
-    val mode = EvalMode.fromSQLConf(spark.sessionState.conf)
-    val cosine = Divide(
-      DotProductFloat(BoundReference(0, arr, nullable = true),
-        BoundReference(1, arr, nullable = true)),
-      Multiply(BoundReference(2, DoubleType, nullable = true),
-        BoundReference(3, DoubleType, nullable = true), mode), mode)
+    val cos = cosine(EvalMode.fromSQLConf(spark.sessionState.conf))
     val cents = centroids.map(r => (r.getAs[Int]("cid"),
       CatalystTypeConverters.convertToCatalyst(r.getAs[Any]("cvec")),
       r.getAs[Any]("cnorm")))
@@ -62,9 +56,21 @@ object IndexRoute {
       val q = CatalystTypeConverters.convertToCatalyst(vq)
       cents.indices.map { i =>
         val (cid, cvec, cnorm) = cents(i)
-        ((cosine.eval(InternalRow(q, cvec, nq, cnorm)), cid), i)
+        ((cos.eval(InternalRow(q, cvec, nq, cnorm)), cid), i)
       }.sortWith((a, b) => byCosine(a._1, b._1)).take(nprobe).map(_._2)
     }
+  }
+
+  /** The cosine the IVF plans compute, `dot(a, b) / (na * nb)`, over
+    * (a, b, na, nb) at ordinals 0-3: DotProductFloat, and Divide and
+    * Multiply under the evaluation mode `mode`. */
+  def cosine(mode: EvalMode.Value): Expression = {
+    val arr = ArrayType(FloatType)
+    Divide(
+      DotProductFloat(BoundReference(0, arr, nullable = true),
+        BoundReference(1, arr, nullable = true)),
+      Multiply(BoundReference(2, DoubleType, nullable = true),
+        BoundReference(3, DoubleType, nullable = true), mode), mode)
   }
 
   /** DotProductFloat of two array<float> values (external Scala Seqs),

@@ -146,17 +146,28 @@ class Bm25Spec extends AnyFunSuite {
     val qTokens = tf0.filter(col("doc_id") === 0).join(dfTab, "token")
       .orderBy(col("df"), col("token")).limit(2)
       .select(lit(777L).as("query_id"), col("token"))
-    val ext = operators.TextAnalysis.bm25ServeFrom(spark, idx.getAbsolutePath,
-      k = 50, queries = Some(qTokens))
-    val opened = filesOpened(ext)
+    // the serve is one IndexProbe job with a task per routed bucket
+    // directory: with the batch a local relation, as a request's is,
+    // the task count is the routed read
+    val qLocal = spark.createDataFrame(
+      java.util.Arrays.asList(qTokens.collect(): _*), qTokens.schema)
+    var ext: org.apache.spark.sql.DataFrame = null
+    val tasks = tasksOf {
+      ext = operators.TextAnalysis.bm25ServeFrom(spark, idx.getAbsolutePath,
+        k = 50, queries = Some(qLocal))
+    }
     // the impact layout is version-swapped: internals live under the
     // current committed version directory
     val vdir = new java.io.File(graft.sources.Lake
       .currentVersionDir(spark, idx.getAbsolutePath).get)
     val bucketDirs = new java.io.File(vdir, "postings").listFiles()
       .count(d => d.isDirectory && d.getName.startsWith("bucket="))
-    assert(opened <= 2 && opened < bucketDirs,
-      s"2-token query must open <= 2 of $bucketDirs bucket dirs, opened $opened")
+    val routed = graft.sources.IndexRoute.buckets(
+        qTokens.select(col("token")).collect().map(_.getString(0)).toSeq,
+        org.apache.spark.sql.types.StringType, 16).distinct
+      .count(b => new java.io.File(vdir, s"postings/bucket=$b").isDirectory)
+    assert(tasks == routed && tasks <= 2 && tasks < bucketDirs,
+      s"2-token query must read its $routed routed bucket dirs (<= 2 of $bucketDirs), ran $tasks tasks")
     // the source doc is retrieved through the pruned read (a planted
     // near-duplicate may legitimately outscore it on length, so pin
     // membership, not rank 1)

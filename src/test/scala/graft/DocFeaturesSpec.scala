@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.operators.{DocFeatures, Govern, NearDup, TextAnalysis}
-import org.apache.spark.SpecBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -234,25 +230,6 @@ class DocFeaturesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val selected = TextAnalysis.dsirSelectOf(tied, 64, 0.25)
       .filter($"selected").select($"doc_id").as[Long].collect().toSet
     assert(eps.nonEmpty && selected == (1L to 10L).toSet, s"all tied docs kept: $selected")
-  }
-
-  /** Every job the body submits, counted through a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobBudget"
-    val tag = java.util.UUID.randomUUID.toString
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      try body finally sc.setLocalProperty(key, null)
-      SpecBus.drain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("job budget: cold dedupKeepBest, nbQualityClassify and dsirSelect on a fresh lake") {

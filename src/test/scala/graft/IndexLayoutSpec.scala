@@ -1,11 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.operators.{Similarity, TextAnalysis}
 import graft.sources.{IndexLayout, IndexRoute, Lake}
-import org.apache.spark.SpecBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -34,26 +30,6 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     case a: ArrayType => ArrayType(loose(a.elementType), containsNull = true)
     case m: MapType => MapType(loose(m.keyType), loose(m.valueType), valueContainsNull = true)
     case o => o
-  }
-
-  /** Every job the body submits, including Par.jobs threads (local
-    * properties are inherited), counted through a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobBudget"
-    val tag = java.util.UUID.randomUUID.toString
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      try body finally sc.setLocalProperty(key, null)
-      SpecBus.drain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   /** One index of every layout, each mutated once (tombstones, an
@@ -90,6 +66,10 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("layout drift: every declared index schema equals the schema Spark infers from a fresh build") {
     assert(built.map(_._1).toSet == IndexLayout.all.toSet, "every layout is built here")
+    // the tombstone directories are driver-read metadata: each built
+    // index holds some, so the loop below checks their schemas too
+    for ((layout, root) <- built if layout.dirs.contains("deletes"))
+      assert(layout.read(spark, root, "deletes").count() > 0, s"${layout.name} deletes")
     for ((layout, root) <- built; (dir, declared) <- layout.dirs) {
       val inferred = spark.read.parquet(s"$root/$dir")
       assert(loose(inferred.schema) == loose(declared),
@@ -129,7 +109,7 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("local: every metadata directory reads on the driver the rows the declared read collects, with no job") {
     assert(built.flatMap(_._1.meta).toSet ==
-      Set("stats", "stats_log", "commits", "centroids", "pq/books", "pq/commits"))
+      Set("stats", "stats_log", "commits", "centroids", "deletes", "pq/books", "pq/commits"))
     for ((layout, root) <- built; dir <- layout.meta) {
       // Spark's writers leave _SUCCESS and checksum files next to the data
       val names = new java.io.File(s"$root/$dir").list().toSeq
@@ -152,7 +132,7 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(layout.local(spark, s"$none/absent", dir).isEmpty, s"${layout.name} $dir")
     for ((layout, dir) <- Seq(IndexLayout.ImpactBm25 -> "postings",
         IndexLayout.RawBm25 -> "postings", IndexLayout.Ivf -> "lists",
-        IndexLayout.Pq -> "pq/codes", IndexLayout.Ivf -> "deletes")) {
+        IndexLayout.Pq -> "pq/codes", IndexLayout.RawBm25 -> "doclens")) {
       val e = intercept[IllegalArgumentException](layout.local(spark, none, dir))
       assert(e.getMessage.contains(s"$dir is not a metadata directory"))
     }
@@ -261,7 +241,7 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     val toks = spark.read.parquet(s"${Lake.currentVersionDir(spark, bm).get}/postings")
       .select($"token").orderBy($"token").limit(2).as[String].collect().toSeq
     val vec = emb.filter($"vec_id" === 3L).select($"embedding").head().getSeq[Float](0)
-    // the benchmark's request: collect the top-k like a client would
+    // the benchmark's requests: collect the top-k like a client would
     def bm25(): Array[_] = TextAnalysis.bm25ServeFrom(spark, bm, k = 10,
         queries = Some(toks.map(t => (1L, t)).toDF("query_id", "token")))
       .select($"doc_id", $"rk", $"score").collect()
@@ -272,7 +252,34 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     val bmJobs = jobsOf(assert(bm25().nonEmpty))
     val annJobs = jobsOf(assert(ann().length == 5))
     info(s"bm25ServeFrom: $bmJobs jobs, annIvfServe: $annJobs jobs")
-    assert(bmJobs <= 4, s"bm25ServeFrom ran $bmJobs jobs")
-    assert(annJobs <= 5, s"annIvfServe ran $annJobs jobs")
+    // the budget has tightened since it was first set: each request is
+    // now one IndexProbe job
+    assert(bmJobs == 1, s"bm25ServeFrom ran $bmJobs jobs")
+    assert(annJobs == 1, s"annIvfServe ran $annJobs jobs")
+  }
+
+  test("job budget: a tombstoned bm25ServeRaw and annIvfServe run one job each") {
+    val emb = Tables.embeddings(spark, sf)
+    val vec = emb.filter($"vec_id" === 3L).select($"embedding").head().getSeq[Float](0)
+    // the maintenance indexes: the tombstoned raw and IVF indexes
+    val raw = built.collectFirst { case (IndexLayout.RawBm25, root) => root }.get
+    val ivfDel = built.collectFirst { case (IndexLayout.Ivf, root) => root }.get
+    assert(TextAnalysis.rawIndexDeletes(spark, raw, TextAnalysis.bm25Snapshot(spark, raw))
+      .nonEmpty && Similarity.ivfTombstones(spark, ivfDel, Similarity.ivfSnapshot(spark, ivfDel))
+      .nonEmpty, "the maintenance indexes carry committed tombstones")
+    val rawToks = IndexLayout.RawBm25.read(spark, raw, "postings").select($"token")
+      .orderBy($"token").limit(2).as[String].collect().toSeq
+    def bm25Raw(): Array[_] = TextAnalysis.bm25ServeRaw(spark, raw, k = 10,
+        queries = Some(rawToks.map(t => (1L, t)).toDF("query_id", "token")))
+      .select($"doc_id", $"rk", $"score").collect()
+    def ann(): Array[_] = Similarity.annIvfServe(spark, ivfDel, nprobe = 10, k = 5,
+        queries = Some(Seq((1L, vec)).toDF("vec_id", "embedding")), shortlist = Some(32))
+      .select($"neighbor_id", $"rank_nn").collect()
+    assert(bm25Raw().nonEmpty && ann().length == 5, "warm-up answers")
+    val budget = Seq(
+      "bm25ServeRaw" -> jobsOf(assert(bm25Raw().nonEmpty)),
+      "annIvfServe" -> jobsOf(assert(ann().length == 5)))
+    info(budget.map { case (n, j) => s"$n: $j jobs" }.mkString(", "))
+    for ((name, jobs) <- budget) assert(jobs == 1, s"$name ran $jobs jobs")
   }
 }

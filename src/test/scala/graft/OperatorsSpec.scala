@@ -29,6 +29,53 @@ object TestSpark {
     all(df.queryExecution.executedPlan)
       .collect { case f: FileSourceScanExec => f.metrics("numFiles").value }.sum
   }
+
+  /** What the body's Spark work amounted to, as a listener saw it: the
+    * jobs it started, the tasks they ran, and the partial rows
+    * [[graft.sources.IndexProbe]] tasks returned to the driver. Work the
+    * body submits from other threads counts too (Par.jobs threads
+    * inherit the tagging local property). */
+  final case class Observed(jobs: Int, tasks: Int, partials: Long)
+
+  def observe(body: => Unit): Observed = {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val key = "graft.spec.observe"
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new AtomicInteger()
+    val tasks = new AtomicInteger()
+    val partials = new AtomicLong()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) {
+          tasks.incrementAndGet()
+          e.taskInfo.accumulables
+            .filter(_.name.contains(graft.sources.IndexProbe.PartialsAccumulator))
+            .foreach(a => partials.addAndGet(a.update.get.asInstanceOf[Long]))
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, null)
+      org.apache.spark.SpecBus.drain(sc)
+      Observed(jobs.get, tasks.get, partials.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Every job the body submits. */
+  def jobsOf(body: => Unit): Int = observe(body).jobs
+
+  /** Every task the body's jobs run. */
+  def tasksOf(body: => Unit): Int = observe(body).tasks
 }
 
 /** Invariant checks per operator (the DuckDB hash gate is the strong

@@ -241,17 +241,24 @@ class RecallSpec extends AnyFunSuite {
     assert(mism == 0, s"external ranks 2..k must equal memo ranks 1..k-1 ($mism differ)")
     servedExt.unpersist()
     // ...and the candidate scan touches ONLY the probed cells: the
-    // routed query set decides the partitions (static pruning — DPP
-    // does not fire on this join shape); with 3 queries x nprobe 2,
-    // at most 6 of the 16 cell dirs open (the routing itself is
-    // checkpointed, so the executed plan's only file scan is lists)
-    val threeQ = Tables.embeddings(spark, sf)
+    // serve is one IndexProbe job with a task per routed cell
+    // directory, routed on the driver; with 3 queries x nprobe 2 (a
+    // local batch, as a request's is), at most 6 of the 16 cell dirs
+    // are read
+    val threeQ0 = Tables.embeddings(spark, sf)
       .filter(col("vec_id") < 3).select(col("vec_id"), col("embedding"))
-    val small = operators.Similarity.annIvfServe(
-      spark, idx.getAbsolutePath, queries = Some(threeQ))
-    val opened = filesOpened(small)
-    assert(opened <= 6 && opened < cells,
-      s"probed-cells scan must open <= 6 of $cells dirs, opened $opened")
+    val threeQ = spark.createDataFrame(
+      java.util.Arrays.asList(threeQ0.collect(): _*), threeQ0.schema)
+    val centroids = graft.sources.IndexLayout.Ivf.local(spark, idx.getAbsolutePath, "centroids")
+    val routedCells = graft.sources.IndexRoute.nearest(spark,
+        threeQ.collect().toSeq.map(r => (r.getSeq[Float](1),
+          math.sqrt(r.getSeq[Float](1).map(x => x.toDouble * x).sum))), centroids, 2)
+      .flatten.map(centroids(_).getAs[Int]("cid")).distinct
+      .count(c => new java.io.File(idx, s"lists/cell=$c").isDirectory)
+    val tasks = tasksOf(operators.Similarity.annIvfServe(
+      spark, idx.getAbsolutePath, queries = Some(threeQ)))
+    assert(tasks == routedCells && tasks <= 6 && tasks < cells,
+      s"probed-cells read must cover the $routedCells routed of $cells dirs (<= 6), ran $tasks tasks")
     // two-stage serve parity: the disk-served rerank path must equal
     // the memo-served rerank operator row-for-row
     val memoRr = operators.Similarity.annIvfRerank(spark, sf)
@@ -260,13 +267,12 @@ class RecallSpec extends AnyFunSuite {
     assert(memoRr.count() == servedRr.count() &&
       memoRr.exceptAll(servedRr).count() == 0,
       "table-served two-stage probe must equal the memo-served rerank operator")
-    // ...and its file bound: code scan + float fetch are two scans,
-    // each statically pruned to the probed cells -> <= 2 x 6 dirs
-    val smallRr = operators.Similarity.annIvfServe(
-      spark, idx.getAbsolutePath, queries = Some(threeQ), shortlist = Some(8))
-    val openedRr = filesOpened(smallRr)
-    assert(openedRr <= 12,
-      s"two-stage probed-cells scans must open <= 12 dirs, opened $openedRr")
+    // ...and its read bound: the code pass and the float rerank read
+    // the same routed cell directories, one task each
+    val tasksRr = tasksOf(operators.Similarity.annIvfServe(
+      spark, idx.getAbsolutePath, queries = Some(threeQ), shortlist = Some(8)))
+    assert(tasksRr == routedCells && tasksRr <= 6,
+      s"two-stage probed-cells read must cover the $routedCells routed dirs (<= 6), ran $tasksRr tasks")
     spark.catalog.clearCache()
   }
 

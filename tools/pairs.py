@@ -7,12 +7,18 @@ PARENT and CHANGE are each a `perfbench/results/runs.jsonl` file or a
 checkout containing one. Runs are matched by workload and seed (the
 last run of a tree for a (workload, seed) wins), so interleaved runs of
 the two trees on the same seeds reduce to pairs. For every metric both
-runs of a pair report, prints the parent and change medians, their
-ratio (change / parent) and how many pairs the change won: lower wins
-unless BENCHMARK.json (next to this tool's repository root) declares the
-metric "better": "higher". A pair whose values are equal is a win for
-neither. Only untraced runs are read unless --trace 1 is given; traced
-runs add the per-layer metrics.
+runs of a pair report, prints the parent's and the change's quartiles
+[q1, median, q3], the ratio of the medians (change / parent), how many
+pairs the change won, and whether a claim of a gain on that metric
+holds: at least 10 pairs, at least 9 in 10 of them won, and the medians
+apart by more than the parent's interquartile range, in the change's
+favour. Lower wins unless BENCHMARK.json (next to this tool's repository
+root) declares the metric "better": "higher". A pair whose values are
+equal is a win for neither. The per-kind latency medians a run records
+in its `detail` (bm25_p50_ms, ivf_p50_ms, ...) are listed after the
+metrics, so a serve change shows which index request moved. Only
+untraced runs are read unless --trace 1 is given; traced runs add the
+per-layer metrics.
 
 Standard library only.
 """
@@ -33,8 +39,14 @@ def runs_file(path):
     return path
 
 
+# per-kind request latencies perfbench records in a run's `detail`
+DETAIL = ("bm25_p50_ms", "ivf_p50_ms", "probe_p50_ms", "append_p50_ms",
+          "delete_p50_ms", "reclaim_p50_ms")
+
+
 def load(path, workload, trace):
-    """{(workload, seed): {metric: value}} of the matching runs."""
+    """{(workload, seed): {metric: value}} of the matching runs; the
+    `detail` latencies are keyed `detail.<name>`."""
     out = {}
     with open(runs_file(path)) as f:
         for line in f:
@@ -50,6 +62,10 @@ def load(path, workload, trace):
                     v = m.get("value") if isinstance(m, dict) else m
                     if isinstance(v, (int, float)):
                         vals[name] = float(v)
+            for name in DETAIL:
+                v = (r.get("detail") or {}).get(name)
+                if isinstance(v, (int, float)):
+                    vals["detail." + name] = float(v)
             out[(r.get("workload"), r.get("seed"))] = vals
     return out
 
@@ -81,16 +97,36 @@ def main():
     for wl in sorted({k[0] for k in keys}, key=str):
         wkeys = [k for k in keys if k[0] == wl]
         print(f"{wl}: {len(wkeys)} pairs, seeds {', '.join(str(k[1]) for k in wkeys)}")
-        print(f"  {'metric':<40} {'parent':>10} {'change':>10} {'ratio':>7}  wins")
-        names = sorted(set.intersection(*(set(base[k]) & set(new[k]) for k in wkeys)))
+        print(f"  {'metric':<28} {'parent [q1, median, q3]':>30} "
+              f"{'change [q1, median, q3]':>30} {'ratio':>7}  wins   claim")
+        names = sorted(set.intersection(*(set(base[k]) & set(new[k]) for k in wkeys)),
+                       key=lambda n: (n.startswith("detail."), n))
         for name in names:
             p = [base[k][name] for k in wkeys]
             c = [new[k][name] for k in wkeys]
-            pm, cm = statistics.median(p), statistics.median(c)
+            pq, cq = quartiles(p), quartiles(c)
             sign = -1 if name in up else 1
             wins = sum(1 for x, y in zip(p, c) if sign * (y - x) < 0)
-            ratio = f"{cm / pm:7.3f}" if pm else "      -"
-            print(f"  {name:<40} {pm:10.3f} {cm:10.3f} {ratio}  {wins}/{len(wkeys)}")
+            ratio = f"{cq[1] / pq[1]:7.3f}" if pq[1] else "      -"
+            gap = sign * (pq[1] - cq[1])
+            holds = (len(wkeys) >= 10 and 10 * wins >= 9 * len(wkeys)
+                     and gap > pq[2] - pq[0])
+            print(f"  {name:<28} {fmt(pq):>30} {fmt(cq):>30} {ratio}  "
+                  f"{wins:>2}/{len(wkeys):<2}  {'holds' if holds else 'no'}")
+
+
+def quartiles(xs):
+    """(q1, median, q3); statistics' exclusive method, the median for
+    all three when there are fewer than two values."""
+    if len(xs) < 2:
+        m = statistics.median(xs)
+        return (m, m, m)
+    q1, q2, q3 = statistics.quantiles(xs, n=4)
+    return (q1, statistics.median(xs), q3)
+
+
+def fmt(q):
+    return "[" + ", ".join(f"{v:.3f}" for v in q) + "]"
 
 
 if __name__ == "__main__":
