@@ -1407,28 +1407,32 @@ object Similarity {
     * same way, exactly once at context build) and the LIVE lists plan
     * they define (committed batches only, tombstones filtered). An
     * adaptive probe loop shares one context across its width rounds.
-    * The lists stay a lazy PLAN — corpus-sized data is never
-    * materialized, only the metadata is. */
-  private[graft] final case class IvfCtx(path: String, centroids: Seq[Row],
-                                         committed: Seq[String], dead: Seq[Long],
-                                         lists: DataFrame)
-
-  private[graft] def ivfCtx(spark: SparkSession, path: String,
-                            snapshot: Option[Seq[String]] = None): IvfCtx = {
-    import spark.implicits._
+    * The lists plan is built on first use: an external query batch is
+    * served by [[graft.sources.IndexProbe]] from the metadata alone,
+    * and building the plan costs a listing of every cell directory
+    * plus analysis. Only the self-test panels (the adaptive loops'
+    * included) and the PQ serve use it.
+    * Corpus-sized data is never materialized, only the metadata is. */
+  private[graft] final case class IvfCtx(spark: SparkSession, path: String,
+                                         centroids: Seq[Row], committed: Seq[String],
+                                         dead: Seq[Long]) {
     // the LIVE view: committed batches only (torn appends invisible),
     // tombstoned vectors filtered; every directory reads under its
     // declared IndexLayout.Ivf schema (no footer-inference job, `cell`
     // an int for the routing filter and the probe equi-join whatever
-    // the partitionColumnTypeInference conf). An explicit `snapshot`
-    // (ivfSnapshot) pins the view — snapshot isolation against
-    // concurrent appends/deletes.
+    // the partitionColumnTypeInference conf)
+    lazy val lists: DataFrame = liveListsAt(spark, path, committed, dead)
+      .select(col("cell"), col("neighbor_id"), col("vc").cast("array<float>").as("vc"),
+        col("nc"), col("label"), col("q8"), col("qn"))
+  }
+
+  private[graft] def ivfCtx(spark: SparkSession, path: String,
+                            snapshot: Option[Seq[String]] = None): IvfCtx = {
+    // an explicit `snapshot` (ivfSnapshot) pins the view — snapshot
+    // isolation against concurrent appends/deletes
     val committed = snapshot.getOrElse(ivfCommitted(spark, path))
-    val dead = ivfTombstones(spark, path, committed)
-    IvfCtx(path, IndexLayout.Ivf.local(spark, path, "centroids"), committed, dead,
-      liveListsAt(spark, path, committed, dead)
-        .select($"cell", $"neighbor_id",
-          $"vc".cast("array<float>").as("vc"), $"nc", $"label", $"q8", $"qn"))
+    IvfCtx(spark, path, IndexLayout.Ivf.local(spark, path, "centroids"), committed,
+      ivfTombstones(spark, path, committed))
   }
 
   /** A query panel routed on the driver: `panel` (vec_id, embedding,
@@ -1483,8 +1487,7 @@ object Similarity {
                                    queries: Option[DataFrame],
                                    shortlist: Option[Int],
                                    selfPanel: Boolean): DataFrame = {
-    val lists = ctx.lists
-    val spark = lists.sparkSession
+    val spark = ctx.spark
     import spark.implicits._
     queries match {
       case Some(q) =>
@@ -1498,6 +1501,7 @@ object Similarity {
             r.get(0), r.get(1), r.get(2), cs.map(ctx.centroids(_).getAs[Int]("cid"))) },
           panel.schema("vec_id").copy(name = "query_id"), k, shortlist, selfPanel)
       case None =>
+        val lists = ctx.lists
         val panel = lists.filter($"neighbor_id" < nQueries)
           .select($"neighbor_id".as("vec_id"), $"vc".as("embedding"), $"nc".as("norm"))
         // route FIRST, on the driver, then statically prune the lists

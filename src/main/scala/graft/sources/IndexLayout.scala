@@ -1,7 +1,10 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -52,10 +55,9 @@ object IndexLayout {
     def local(spark: SparkSession, root: String, dir: String): Seq[Row] = {
       require(meta(dir), s"$name: $dir is not a metadata directory")
       val schema = dirs(dir)
-      val conf = spark.sessionState.newHadoopConf()
-      val found = files(conf, s"$root/$dir")
+      val found = files(spark.sessionState.newHadoopConf(), s"$root/$dir")
       if (found.isEmpty) return Seq.empty
-      val reader = rowReader(spark, schema, conf)
+      val reader = rowReader(spark, schema)
       val toRow = CatalystTypeConverters.createToScalaConverter(schema)
       // convert while iterating: the reader reuses its row object
       found.flatMap(f => reader(f.partitioned).map(r => toRow(r).asInstanceOf[Row]).toVector)
@@ -71,12 +73,14 @@ object IndexLayout {
   /** The data files of the flat directory `dir`, sorted by name. Files
     * whose names start with `_` or `.` (`_SUCCESS`, checksums) are
     * skipped as Spark's own listing skips them; a missing directory
-    * holds none. */
+    * holds none. One `listStatus` call: a missing directory answers it
+    * with FileNotFoundException, so no separate `exists` call (a second
+    * round trip on a remote file system) is made. */
   private[sources] def files(conf: Configuration, dir: String): Seq[DataFile] = {
     val path = new Path(dir)
-    val fs = path.getFileSystem(conf)
-    if (!fs.exists(path)) return Seq.empty
-    fs.listStatus(path).toSeq.filter { st =>
+    val listed = try path.getFileSystem(conf).listStatus(path).toSeq
+      catch { case _: FileNotFoundException => return Seq.empty }
+    listed.filter { st =>
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }.sortBy(_.getPath.getName)
@@ -86,12 +90,38 @@ object IndexLayout {
   /** The reader a scan task runs over one parquet file
     * (`ParquetFileFormat.buildReaderWithPartitionValues`, row mode),
     * reading the columns of `schema` and nothing else. The function is
-    * serializable: a task built on the driver can carry it. */
-  private[sources] def rowReader(spark: SparkSession, schema: StructType,
-                conf: Configuration): PartitionedFile => Iterator[InternalRow] =
-    new ParquetFileFormat().buildReaderWithPartitionValues(
+    * serializable: a task built on the driver can carry it.
+    *
+    * Built once per (SparkContext, schema, session SQL conf entries)
+    * and reused: every build broadcasts the session's Hadoop
+    * configuration (a block held until GC lets the ContextCleaner drop
+    * it), and a serve request reads a few metadata directories and
+    * probes once, each with a reader. The SQL conf entries are the key
+    * because the build reads them twice: from the session's SQL conf
+    * (pushdown, rebase and vectorization settings) and from the Hadoop
+    * configuration `newHadoopConf` layers them onto; a `set` or `unset`
+    * therefore builds a new reader. Entries of stopped contexts are
+    * evicted on the next build, as [[graft.Artifacts]] evicts its
+    * cells. The build runs outside the map's lock: two threads that
+    * miss together both build, and the first to land is kept. */
+  private[sources] def rowReader(spark: SparkSession,
+                                 schema: StructType): PartitionedFile => Iterator[InternalRow] = {
+    val key = (spark.sparkContext, schema, spark.sessionState.conf.getAllConfs)
+    val hit = readers.get(key)
+    if (hit != null) return hit
+    readers.keySet.removeIf(_._1.isStopped)
+    val built = new ParquetFileFormat().buildReaderWithPartitionValues(
       spark, schema, new StructType(), schema, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
+    Option(readers.putIfAbsent(key, built)).getOrElse(built)
+  }
+
+  private val readers = new java.util.concurrent.ConcurrentHashMap[
+    (SparkContext, StructType, Map[String, String]), PartitionedFile => Iterator[InternalRow]]()
+
+  /** How many readers are kept for `sc`. */
+  private[sources] def readersOf(sc: SparkContext): Int =
+    readers.keySet.stream.filter(_._1 eq sc).count.toInt
 
   private def schema(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (n, t) => StructField(n, t) })

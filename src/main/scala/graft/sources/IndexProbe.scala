@@ -300,8 +300,7 @@ object IndexProbe {
       (IndexLayout.files(conf, s"$root/$dir/$partCol=$p"), payload)
     }.filter(_._1.nonEmpty)
     if (parts.isEmpty) return Array.empty[R]
-    val reader = IndexLayout.rowReader(spark,
-      StructType(columns.map(layout.dirs(dir)(_))), conf)
+    val reader = IndexLayout.rowReader(spark, StructType(columns.map(layout.dirs(dir)(_))))
     val sc = spark.sparkContext
     val partials = sc.longAccumulator(PartialsAccumulator)
     sc.parallelize(parts, parts.length).mapPartitions(_.flatMap { case (files, payload) =>

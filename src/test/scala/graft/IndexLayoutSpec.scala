@@ -282,4 +282,54 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     info(budget.map { case (n, j) => s"$n: $j jobs" }.mkString(", "))
     for ((name, jobs) <- budget) assert(jobs == 1, s"$name ran $jobs jobs")
   }
+
+  test("warm requests build no parquet reader: after one bm25ServeFrom and one annIvfServe, five more create no broadcast and run one job each") {
+    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
+    val emb = Tables.embeddings(spark, sf)
+    val bm = tmp("graft_warm_bm25")
+    val iv = tmp("graft_warm_ivf")
+    scratch ++= Seq(bm, iv)
+    TextAnalysis.bm25WriteImpactFrom(Tables.fanout(docs), bm)
+    Similarity.ivfWriteFrom(emb, iv)
+    val toks = IndexLayout.ImpactBm25.read(spark, Lake.currentVersionDir(spark, bm).get, "postings")
+      .select($"token").distinct().orderBy($"token").limit(6).as[String].collect().toSeq
+    val vecs = emb.filter($"vec_id" < 6L).orderBy($"vec_id").select($"embedding")
+      .as[Seq[Float]].collect().toSeq
+    def bm25(i: Int): Array[_] = TextAnalysis.bm25ServeFrom(spark, bm, k = 10,
+        queries = Some(toks.slice(i, i + 2).map(t => (1L, t)).toDF("query_id", "token")))
+      .select($"doc_id", $"rk", $"score").collect()
+    def ann(i: Int): Array[_] = Similarity.annIvfServe(spark, iv, nprobe = 10, k = 5,
+        queries = Some(Seq((1L, vecs(i))).toDF("vec_id", "embedding")), shortlist = Some(32))
+      .select($"neighbor_id", $"rank_nn").collect()
+    assert(bm25(0).nonEmpty && ann(0).length == 5, "warm-up answers")
+    // other tokens and vectors than the warm-up's: the readers are
+    // reused across requests, not across identical requests
+    val seen = (1 to 5).map { i =>
+      if (i % 2 == 1) s"bm25ServeFrom $i" -> observe(assert(bm25(i).nonEmpty))
+      else s"annIvfServe $i" -> observe(assert(ann(i).length == 5))
+    }
+    info(seen.map { case (n, o) => s"$n: ${o.jobs} job, ${o.broadcasts} broadcasts" }
+      .mkString("; "))
+    for ((name, o) <- seen) {
+      assert(o.broadcasts == 0, s"$name built ${o.broadcasts} broadcasts")
+      assert(o.jobs == 1, s"$name ran ${o.jobs} jobs")
+    }
+  }
+
+  test("readers of a stopped context are evicted when a new context builds one") {
+    // stopping a context would end the suite's shared session, so the
+    // check runs in a JVM of its own
+    val dir = tmp("graft_reader_lifetime")
+    scratch += dir
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val cmd = Seq(javaBin, "-Xmx768m", "-Dspark.ui.enabled=false") ++
+      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray().toSeq ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.sources.ReaderLifetimeMain", dir)
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val exit = scala.sys.process.Process(cmd)
+      .!(scala.sys.process.ProcessLogger(l => out.add(l), l => out.add(l)))
+    val lines = out.toArray.toSeq.map(_.toString)
+    assert(exit == 0 && lines.contains("evicted"),
+      s"exit $exit:\n${lines.takeRight(30).mkString("\n")}")
+  }
 }

@@ -109,6 +109,22 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
       TextAnalysis.bm25TopK(post, q, 5), "impact, tombstones ignored")
   }
 
+  /** bm25ServeRaw's plan, spelled out over the whole postings table. */
+  private def rawPlan(path: String, q: DataFrame, k: Int, dfCap: Int,
+                      snapshot: Option[Seq[String]]): DataFrame = {
+    val (log, _) = TextAnalysis.rawIndexLog(spark, path)
+    val committed = snapshot.getOrElse(log.map(_.batchId))
+    val (nDocs, am) = TextAnalysis.rawIndexStats(log, committed)
+    val dead = TextAnalysis.rawIndexDeletes(spark, path, committed)
+    val live = IndexLayout.RawBm25.read(spark, path, "postings")
+      .filter($"batch_id".isin(committed: _*))
+      .join(dead.toDF("doc_id"), Seq("doc_id"), "left_anti")
+    val dfc = live.groupBy($"token").agg(count(lit(1)).as("df")).filter($"df" <= dfCap)
+    TextAnalysis.bm25TopK(live.join(dfc, Seq("token"))
+      .crossJoin(Seq((nDocs, am)).toDF("n_docs", "am"))
+      .select($"doc_id", $"token", expr(TextAnalysis.bm25ImpactExpr).as("impact")), q, k)
+  }
+
   test("raw BM25: the probe equals the plan across a torn batch, tombstones and a snapshot") {
     val path = tmp("graft_probe_raw")
     val maxId = docs.agg(max($"doc_id")).head().getLong(0)
@@ -120,20 +136,6 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a torn append: postings and doclens land, the stats row never does
     TextAnalysis.bm25AppendRaw(docs.filter($"doc_id" > tornFrom), path, None,
       overwrite = false, commit = false)
-    /** bm25ServeRaw's plan, spelled out over the whole postings table. */
-    def plan(q: DataFrame, k: Int, dfCap: Int, snapshot: Option[Seq[String]]): DataFrame = {
-      val (log, _) = TextAnalysis.rawIndexLog(spark, path)
-      val committed = snapshot.getOrElse(log.map(_.batchId))
-      val (nDocs, am) = TextAnalysis.rawIndexStats(log, committed)
-      val dead = TextAnalysis.rawIndexDeletes(spark, path, committed)
-      val live = IndexLayout.RawBm25.read(spark, path, "postings")
-        .filter($"batch_id".isin(committed: _*))
-        .join(dead.toDF("doc_id"), Seq("doc_id"), "left_anti")
-      val dfc = live.groupBy($"token").agg(count(lit(1)).as("df")).filter($"df" <= dfCap)
-      TextAnalysis.bm25TopK(live.join(dfc, Seq("token"))
-        .crossJoin(Seq((nDocs, am)).toDF("n_docs", "am"))
-        .select($"doc_id", $"token", expr(TextAnalysis.bm25ImpactExpr).as("impact")), q, k)
-    }
     val post = IndexLayout.RawBm25.read(spark, path, "postings").select($"token", $"doc_id")
     val toks = sampleTokens(post)
     // a token of a torn doc and one of a tombstoned doc ride along
@@ -145,20 +147,20 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (k <- Seq(1, 4, 1000); dfCap <- Seq(2, 100)) {
       val got = assertSame(
         TextAnalysis.bm25ServeRaw(spark, path, k = k, dfCap = dfCap, queries = Some(q)),
-        plan(q, k, dfCap, None), s"raw k=$k dfCap=$dfCap")
+        rawPlan(path, q, k, dfCap, None), s"raw k=$k dfCap=$dfCap")
       assert(got.nonEmpty, s"k=$k dfCap=$dfCap")
     }
     // the impact expression is parsed per evaluation mode
     withAnsi(on = false) {
       assertSame(TextAnalysis.bm25ServeRaw(spark, path, k = 4, queries = Some(q)),
-        plan(q, 4, 100, None), "raw without ANSI")
+        rawPlan(path, q, 4, 100, None), "raw without ANSI")
     }
     assertSame(TextAnalysis.bm25ServeRaw(spark, path, k = 6, queries = Some(q),
         snapshot = Some(beforeDelete)),
-      plan(q, 6, 100, Some(beforeDelete)), "raw snapshot before the delete")
+      rawPlan(path, q, 6, 100, Some(beforeDelete)), "raw snapshot before the delete")
     assertSame(TextAnalysis.bm25ServeRaw(spark, path, k = 6, queries = Some(q),
         snapshot = Some(Seq.empty)),
-      plan(q, 6, 100, Some(Seq.empty)), "raw, empty snapshot")
+      rawPlan(path, q, 6, 100, Some(Seq.empty)), "raw, empty snapshot")
   }
 
   /** A small IVF index of integer-valued vectors with exact duplicates
@@ -193,8 +195,8 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def ivfPair(batch: Seq[IndexProbe.RoutedQuery], k: Int, shortlist: Option[Int],
-                      excludeSelf: Boolean): (() => DataFrame, () => DataFrame) = {
-    val path = ivfIndex._1
+                      excludeSelf: Boolean,
+                      path: String = ivfIndex._1): (() => DataFrame, () => DataFrame) = {
     val committed = Similarity.ivfSnapshot(spark, path)
     val dead = Similarity.ivfTombstones(spark, path, committed)
     val probe = () => IndexProbe.ivf(spark, path, committed, dead, batch,
@@ -292,5 +294,98 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
       routedDirs, "a null token routes nowhere")
     assertSame(got, TextAnalysis.bm25TopK(post, unknown, 10), "unknown tokens")
     assert(got.isEmpty)
+  }
+
+  test("reused readers: every serve answers the current state through each mutation; a conf change builds a new reader") {
+    val maxId = docs.agg(max($"doc_id")).head().getLong(0)
+    val cut = maxId / 2
+    // impact BM25: tombstones, then the refresh's version swap
+    val impact = tmp("graft_life_impact")
+    TextAnalysis.bm25Write(spark, sf, impact)
+    def impactPost = IndexLayout.ImpactBm25.read(spark,
+      Lake.currentVersionDir(spark, impact).get, "postings").select($"token", $"doc_id", $"impact")
+    val toks = sampleTokens(impactPost)
+    // a token of a doc only the raw index's append brings in
+    val late = impactPost.filter($"doc_id" > cut).orderBy($"doc_id", $"token")
+      .select($"token").as[String].head()
+    val q = bm25Batch(toks.take(4) :+ toks.last)
+      .unionAll(Seq((7L, late), (7L, toks(1))).toDF("query_id", "token"))
+    def impactServes(what: String): Unit = {
+      val root = Lake.currentVersionDir(spark, impact).get
+      val live = if (!new java.io.File(s"$root/deletes").isDirectory) impactPost
+        else impactPost.join(IndexLayout.ImpactBm25.read(spark, root, "deletes"),
+          Seq("doc_id"), "left_anti")
+      for (k <- Seq(3, 1000)) {
+        assertSame(TextAnalysis.bm25ServeFrom(spark, impact, k = k, queries = Some(q)),
+          TextAnalysis.bm25TopK(impactPost, q, k), s"impact $what k=$k")
+        assertSame(TextAnalysis.bm25ServeFromLive(spark, impact, k = k, queries = Some(q)),
+          TextAnalysis.bm25TopK(live, q, k), s"impact live $what k=$k")
+      }
+    }
+    impactServes("fresh")
+    TextAnalysis.bm25MarkDeleted(spark, impact, docs.filter($"doc_id" % 3 === 1))
+    impactServes("tombstoned")
+    val before = Lake.currentVersionDir(spark, impact).get
+    assert(TextAnalysis.bm25RefreshIfStale(docs, impact), "a third tombstoned is stale")
+    assert(Lake.currentVersionDir(spark, impact).get != before, "the refresh swaps versions")
+    impactServes("refreshed")
+
+    // raw BM25: append, delete, vacuum
+    val raw = tmp("graft_life_raw")
+    TextAnalysis.bm25WriteRaw(docs.filter($"doc_id" <= cut), raw)
+    def rawServes(what: String): Unit = for (k <- Seq(3, 1000)) {
+      assertSame(TextAnalysis.bm25ServeRaw(spark, raw, k = k, queries = Some(q)),
+        rawPlan(raw, q, k, 100, None), s"raw $what k=$k")
+    }
+    rawServes("fresh")
+    TextAnalysis.bm25Append(docs.filter($"doc_id" > cut), raw)
+    rawServes("appended")
+    TextAnalysis.bm25Delete(spark, raw, docs.filter($"doc_id" % 4 === 1))
+    rawServes("deleted")
+    TextAnalysis.bm25Vacuum(spark, raw)
+    rawServes("vacuumed")
+
+    // IVF: append, delete, compact, retrain; then a PQ sidecar
+    val (_, vecs) = ivfIndex
+    val ivf = tmp("graft_life_ivf")
+    def frame(vs: Seq[(Long, Seq[Float])]) =
+      vs.map { case (i, v) => (i, v, 0) }.toDF("vec_id", "embedding", "label")
+    Similarity.ivfWriteFrom(frame(vecs.take(60)), ivf, nlist = 4)
+    val ext = Seq(9000L -> vecs(1)._2, 9001L -> vecs(70)._2, 9002L -> vecs(5)._2.map(_ * 3f))
+    def cids = IndexLayout.Ivf.local(spark, ivf, "centroids").map(_.getAs[Int]("cid"))
+    def ivfServes(what: String): Unit = for (sl <- Seq(None, Some(8))) {
+      val (_, plan) = ivfPair(routed(ext, cids), 3, sl, excludeSelf = false, path = ivf)
+      assertSame(Similarity.annIvfServe(spark, ivf, nprobe = cids.size, k = 3,
+          queries = Some(ext.toDF("vec_id", "embedding")), shortlist = sl),
+        plan(), s"ivf $what shortlist=$sl")
+    }
+    ivfServes("fresh")
+    Similarity.ivfAppend(spark, ivf, frame(vecs.drop(60)))
+    ivfServes("appended")
+    Similarity.ivfDelete(spark, ivf, Seq(5L, 70L, 101L).toDF("vec_id"))
+    ivfServes("deleted")
+    Similarity.ivfCompact(spark, ivf)
+    ivfServes("compacted")
+    Similarity.ivfRetrain(spark, ivf)
+    ivfServes("retrained")
+    // a shortlist past every candidate makes the ADC serve exact
+    Similarity.pqAttach(spark, ivf, m = 2, kpq = 8)
+    val (_, exact) = ivfPair(routed(ext, cids), 3, None, excludeSelf = false, path = ivf)
+    assertSame(Similarity.annIvfPqServe(spark, ivf, nprobe = cids.size, shortlist = 10000,
+        k = 3, queries = Some(ext.toDF("vec_id", "embedding"))), exact(), "PQ serve")
+    ivfServes("PQ attached")
+
+    // the readers are keyed by the session's SQL conf: a reader setting
+    // builds new ones, and unsetting it finds the old ones again
+    def request(): DataFrame = TextAnalysis.bm25ServeFrom(spark, impact, k = 3, queries = Some(q))
+    assert(observe(request()).broadcasts == 0, "a warm request builds no reader")
+    spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+    try {
+      var got: DataFrame = null
+      assert(observe { got = request() }.broadcasts > 0, "a conf change builds new readers")
+      assertSame(got, TextAnalysis.bm25TopK(impactPost, q, 3), "impact, pushdown off")
+      assert(observe(request()).broadcasts == 0, "then reuses them")
+    } finally spark.conf.unset("spark.sql.parquet.filterPushdown")
+    assert(observe(request()).broadcasts == 0, "the first conf's readers are kept")
   }
 }

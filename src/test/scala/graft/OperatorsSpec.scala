@@ -31,29 +31,37 @@ object TestSpark {
   }
 
   /** What the body's Spark work amounted to, as a listener saw it: the
-    * jobs it started, the tasks they ran, and the partial rows
-    * [[graft.sources.IndexProbe]] tasks returned to the driver. Work the
-    * body submits from other threads counts too (Par.jobs threads
-    * inherit the tagging local property). */
-  final case class Observed(jobs: Int, tasks: Int, partials: Long)
+    * jobs it started, the tasks they ran, the partial rows
+    * [[graft.sources.IndexProbe]] tasks returned to the driver, and the
+    * broadcasts it created besides the task binary every submitted
+    * stage broadcasts (a parquet reader build's Hadoop configuration, a
+    * broadcast join's relation). Work the body submits from other
+    * threads counts too (Par.jobs threads inherit the tagging local
+    * property); broadcasts are counted from the session's id sequence,
+    * so the body must be the session's only user. */
+  final case class Observed(jobs: Int, tasks: Int, partials: Long, broadcasts: Long)
 
   def observe(body: => Unit): Observed = {
     import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-      SparkListenerTaskEnd}
+      SparkListenerStageSubmitted, SparkListenerTaskEnd}
     val sc = spark.sparkContext
     val key = "graft.spec.observe"
     val tag = java.util.UUID.randomUUID.toString
     val jobs = new AtomicInteger()
     val tasks = new AtomicInteger()
+    val submitted = new AtomicInteger()
     val partials = new AtomicLong()
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    def tagged(p: java.util.Properties) = Option(p).exists(_.getProperty(key) == tag)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) {
+        if (tagged(e.properties)) {
           jobs.incrementAndGet()
           e.stageIds.foreach(stages.add)
         }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (tagged(e.properties)) submitted.incrementAndGet()
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (stages.contains(e.stageId)) {
           tasks.incrementAndGet()
@@ -64,10 +72,13 @@ object TestSpark {
     }
     sc.addSparkListener(listener)
     try {
+      val first = sc.broadcast(0)
       sc.setLocalProperty(key, tag)
       try body finally sc.setLocalProperty(key, null)
+      val last = sc.broadcast(0)
+      Seq(first, last).foreach(_.destroy())
       org.apache.spark.SpecBus.drain(sc)
-      Observed(jobs.get, tasks.get, partials.get)
+      Observed(jobs.get, tasks.get, partials.get, last.id - first.id - 1 - submitted.get)
     } finally sc.removeSparkListener(listener)
   }
 
