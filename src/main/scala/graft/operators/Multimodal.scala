@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.IndexLayout
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -580,16 +581,13 @@ object Multimodal {
                                   overwrite: Boolean,
                                   commit: Boolean = true): Unit = {
     val spark = bmp.sparkSession
-    import spark.implicits._
-    val mode = if (overwrite) "overwrite" else "append"
-    val nBuckets = nBucketsOpt.getOrElse(phashIndexMeta(spark, path)._2)
-    val batchId = java.util.UUID.randomUUID.toString
-    phashBandsWriteFrame(bmp, nBuckets, batchId)
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode(mode).parquet(s"$path/bands")
-    if (commit)
-      Seq((batchId, nBuckets)).toDF("batch_id", "n_buckets")
-        .coalesce(1).write.mode(mode).parquet(s"$path/commits")
+    val L = IndexLayout.Phash
+    val nBuckets = nBucketsOpt.getOrElse(L.pinned(L.log(spark, path), path, "n_buckets"))
+    L.append(spark, path, overwrite, commit) { (batchId, mode) =>
+      phashBandsWriteFrame(bmp, nBuckets, batchId)
+        .repartition(col("bucket"))
+        .write.partitionBy("bucket").mode(mode).parquet(s"$path/bands")
+    }(L.row(spark, _, nBuckets))
   }
 
   /** The band-postings frame an index write/append lands, up to the
@@ -613,40 +611,6 @@ object Multimodal {
         $"doc_id", $"bands", lit(batchId).as("batch_id"))
   }
 
-  private def phashIndexMeta(spark: SparkSession,
-                             path: String): (Seq[String], Int) = {
-    val c = spark.read.parquet(s"$path/commits").collect()
-    val nb = c.map(_.getInt(1)).distinct
-    require(nb.length == 1,
-      s"inconsistent n_buckets in $path/commits: ${nb.mkString(",")}")
-    (c.map(_.getString(0)).toSeq, nb.head)
-  }
-
-  private def phashIndexDeletes(spark: SparkSession, path: String,
-                                committed: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    if (del.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(del))
-      spark.read.parquet(s"$path/deletes")
-        .filter($"batch_id".isin(committed: _*)).select($"doc_id")
-    else spark.emptyDataset[Long].toDF("doc_id")
-  }
-
-  /** Tombstone images out of the band index (the line-index delete
-    * protocol): their postings stop serving immediately, zero
-    * posting rewrites, idempotent, commit row last. */
-  def phashIndexDelete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    import spark.implicits._
-    val (committed, nBuckets) = phashIndexMeta(spark, path)
-    val batchId = java.util.UUID.randomUUID.toString
-    ids.select($"doc_id").distinct()
-      .join(phashIndexDeletes(spark, path, committed), Seq("doc_id"), "left_anti")
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write.mode("append").parquet(s"$path/deletes")
-    Seq((batchId, nBuckets)).toDF("batch_id", "n_buckets")
-      .coalesce(1).write.mode("append").parquet(s"$path/commits")
-  }
-
   /** Serve an arriving media batch against the accumulated band
     * index: D6b's exact semantics (shared band candidacy under the
     * drop-bucket cap over index ∪ batch, exact hamming verify)
@@ -662,14 +626,14 @@ object Multimodal {
       .select($"pos".as("band_idx"), $"col".as("band_val"),
         $"doc_id", $"bands")
       .localCheckpoint()
-    val (committed, nBuckets) = phashIndexMeta(spark, path)
-    val dead = phashIndexDeletes(spark, path, committed)
-    val buckets = neuBands
-      .select(pmod(xxhash64($"band_idx", $"band_val"), lit(nBuckets))
-        .cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val refRows = spark.read.parquet(s"$path/bands")
-      .filter($"bucket".cast("int").isin(buckets: _*))
+    val L = IndexLayout.Phash
+    val log = L.log(spark, path)
+    val (committed, nBuckets) = (L.batches(log), L.pinned(log, path, "n_buckets"))
+    val dead = L.tombstones(spark, path, committed).toDF("doc_id")
+    val buckets = IndexLayout.partitionsOf(neuBands
+      .select(pmod(xxhash64($"band_idx", $"band_val"), lit(nBuckets)).cast("int").as("b")))
+    val refRows = L.read(spark, path, "bands")
+      .filter($"bucket".isin(buckets: _*))
       .filter($"batch_id".isin(committed: _*))
       .join(broadcast(dead), Seq("doc_id"), "left_anti")
       .join(neuBands.select($"band_idx", $"band_val").distinct(),
@@ -718,8 +682,7 @@ object Multimodal {
     graft.sources.Lake.withScratchIndex(spark, "graft_phash_idx") { tmp =>
       phashIndexWrite(Tables.fanout(ref.filter($"doc_id" <= cut)), tmp)
       phashIndexAppend(Tables.fanout(ref.filter($"doc_id" > cut)), tmp)
-      phashIndexDelete(spark, tmp,
-        ref.filter($"doc_id" % 5 === 0).select($"doc_id"))
+      IndexLayout.Phash.delete(spark, tmp, ref.filter($"doc_id" % 5 === 0))
       mmPhashServe(spark, tmp, Tables.fanout(neu))
     }
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Artifacts, Tables}
+import graft.sources.IndexLayout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -531,8 +532,9 @@ object NearDup {
   //                        by summing per-shingle deltas instead of
   //                        rescanning accumulated posting lists
   //   deletes/            doc tombstones (commit-gated)
-  //   commits/            (batch_id, n_buckets) — the commit record,
-  //                        written LAST; only committed batches serve
+  //   commits/            (batch_id, n_buckets, df_cap) — the commit
+  //                        record, written LAST; only committed
+  //                        batches serve (IndexLayout.DedupSig)
   // The index stores the SHINGLING — the part that is expensive to
   // redo over a 100 TB reference corpus. Serve recomputes df/hot and
   // capped sizes from the live postings (two-long-per-row columnar
@@ -559,10 +561,13 @@ object NearDup {
                                          dfCapOpt: Option[Int] = None): Unit = {
     import docs.sparkSession.implicits._
     val spark = docs.sparkSession
-    val mode = if (overwrite) "overwrite" else "append"
+    val L = IndexLayout.DedupSig
     val (nBuckets, cap) =
       if (overwrite) (nBucketsOpt.get, dfCapOpt.getOrElse(100))
-      else { val m = dedupIndexMeta(spark, path); (m._2, m._3) }
+      else {
+        val log = L.log(spark, path)
+        (L.pinned(log, path, "n_buckets"), L.pinned(log, path, "df_cap"))
+      }
     // One-time migration for an index persisted before the df-delta
     // sidecar existed: without a dfs/ baseline the cap-crossing sum
     // below would see only THIS batch's deltas and silently undercount
@@ -582,195 +587,90 @@ object NearDup {
         // (the second entrant re-checks under the lease and skips)
         graft.sources.Lake.withWriterLock(spark, path, "dedupDfsBackfill") {
           if (!dfsFs.exists(dfsP)) {
-            val committed = dedupIndexMeta(spark, path)._1
+            val committed = L.committed(spark, path)
             require(committed.nonEmpty,
               s"dedup index at $path has no committed batches — cannot " +
                 "backfill the dfs/ sidecar from an empty/corrupt commit log")
-            spark.read.parquet(s"$path/postings")
-              .select($"bucket".cast("int").as("bucket"), $"sh", $"doc_id", $"batch_id")
-              .filter($"batch_id".isin(committed: _*))
-              .join(broadcast(dedupIndexDeletes(spark, path, committed)),
-                Seq("doc_id"), "left_anti")
-              .groupBy($"bucket", $"sh").agg(count(lit(1)).as("n_new"))
-              .withColumn("batch_id", lit(committed.head))
-              .repartition(col("bucket"))
-              .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/dfs")
+            dedupRecompactDfs(spark, path, committed, L.tombstones(spark, path, committed))
           }
         }
       }
-    }
-    val batchId = java.util.UUID.randomUUID.toString
-    if (overwrite) {
-      val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
-      del.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(del, true)
     }
     // eager: the batch postings feed the postings write, the size
     // aggregate AND the hot-candidate probe
     val batch = shinglePostings(docs)
       .select(pmod($"sh", lit(nBuckets)).cast("int").as("bucket"), $"sh", $"doc_id")
       .localCheckpoint()
-    // postings + the two stats sidecars write CONCURRENTLY (guide
-    // §2.6 — all three derive from the checkpointed batch and target
-    // disjoint directories; every one must land before the commit row
-    // below, which Par.jobs' join guarantees):
-    //   postings — invisible until the commit row lands;
-    //   sizes    — the per-doc RAW size sidecar (the serve's Jaccard
-    //              denominators: an O(docs) two-long read instead of
-    //              an O(postings) aggregate; exact under deletes
-    //              because tombstones are doc-level);
-    //   dfs      — the DF-DELTA sidecar: one (bucket, sh, n_new) row
-    //              per distinct batch shingle — O(batch) to write, and
-    //              the ONLY store the cap-crossing detection below
-    //              reads. Each row collapses a whole per-batch posting
-    //              list to one count, so the cumulative read is
-    //              per-SHINGLE-per-batch, never per-posting.
-    graft.Par.jobs(
-      () => batch.withColumn("batch_id", lit(batchId))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode(mode).parquet(s"$path/postings"),
-      () => batch.groupBy($"doc_id").agg(count(lit(1)).as("n_raw"))
+    L.append(spark, path, overwrite, commit) { (batchId, mode) =>
+      // postings + the two stats sidecars write CONCURRENTLY (guide
+      // §2.6 — all three derive from the checkpointed batch and target
+      // disjoint directories; every one must land before the commit
+      // row, which Par.jobs' join guarantees):
+      //   postings — invisible until the commit row lands;
+      //   sizes    — the per-doc RAW size sidecar (the serve's Jaccard
+      //              denominators: an O(docs) two-long read instead of
+      //              an O(postings) aggregate; exact under deletes
+      //              because tombstones are doc-level);
+      //   dfs      — the DF-DELTA sidecar: one (bucket, sh, n_new) row
+      //              per distinct batch shingle — O(batch) to write, and
+      //              the ONLY store the cap-crossing detection below
+      //              reads. Each row collapses a whole per-batch posting
+      //              list to one count, so the cumulative read is
+      //              per-SHINGLE-per-batch, never per-posting.
+      graft.Par.jobs(
+        () => batch.withColumn("batch_id", lit(batchId))
+          .repartition(col("bucket"))
+          .write.partitionBy("bucket").mode(mode).parquet(s"$path/postings"),
+        () => batch.groupBy($"doc_id").agg(count(lit(1)).as("n_raw"))
+          .withColumn("batch_id", lit(batchId))
+          .coalesce(1).write.mode(mode).parquet(s"$path/sizes"),
+        () => batch.groupBy($"bucket", $"sh")
+          .agg(count(lit(1)).as("n_new"))
+          .withColumn("batch_id", lit(batchId))
+          .repartition(col("bucket"))
+          .write.partitionBy("bucket").mode(mode).parquet(s"$path/dfs"))
+      // … the HOT-CANDIDATE log: a shingle's df can only grow when new
+      // (sh, doc) rows land — i.e. only for shingles IN this batch — so
+      // summing the batch's shingles' df deltas across the dfs sidecar
+      // (bucket-pruned; a shingle's whole delta history lives in one
+      // bucket, and the batch's shingle set broadcasts so ONLY matched
+      // rows ever reach an exchange — the shuffle stays O(batch
+      // overlap) no matter how large the accumulated sidecar grows,
+      // which is exactly what ScaleProbe's dedup_append_corpus_indep
+      // ratio asserts) catches every possible cap crossing WITHOUT
+      // touching the postings store. Dead/uncommitted rows may
+      // overcount df here: the log is a SUPERSET — the serve recomputes
+      // the candidates' exact live df from their buckets, so a delete
+      // that un-hots a shingle is still scored exactly …
+      val touched = IndexLayout.partitionsOf(batch.select($"bucket"))
+      L.read(spark, path, "dfs")
+        .filter($"bucket".isin(touched: _*))
+        .join(broadcast(batch.select($"sh").distinct()), Seq("sh"), "left_semi")
+        .groupBy($"sh").agg(sum($"n_new").as("df"))
+        .filter($"df" > cap)
+        .select($"sh", pmod($"sh", lit(nBuckets)).cast("int").as("bucket"))
         .withColumn("batch_id", lit(batchId))
-        .coalesce(1).write.mode(mode).parquet(s"$path/sizes"),
-      () => batch.groupBy($"bucket", $"sh")
-        .agg(count(lit(1)).as("n_new"))
-        .withColumn("batch_id", lit(batchId))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode(mode).parquet(s"$path/dfs"))
-    // … the HOT-CANDIDATE log: a shingle's df can only grow when new
-    // (sh, doc) rows land — i.e. only for shingles IN this batch — so
-    // summing the batch's shingles' df deltas across the dfs sidecar
-    // (bucket-pruned; a shingle's whole delta history lives in one
-    // bucket, and the batch's shingle set broadcasts so ONLY matched
-    // rows ever reach an exchange — the shuffle stays O(batch
-    // overlap) no matter how large the accumulated sidecar grows,
-    // which is exactly what ScaleProbe's dedup_append_corpus_indep
-    // ratio asserts) catches every possible cap crossing WITHOUT
-    // touching the postings store. Dead/uncommitted rows may
-    // overcount df here: the log is a SUPERSET — the serve recomputes
-    // the candidates' exact live df from their buckets, so a delete
-    // that un-hots a shingle is still scored exactly …
-    val touched = batch.select($"bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(s"$path/dfs")
-      .select($"bucket".cast("int").as("bucket"), $"sh", $"n_new")
-      .filter($"bucket".isin(touched: _*))
-      .join(broadcast(batch.select($"sh").distinct()), Seq("sh"), "left_semi")
-      .groupBy($"sh").agg(sum($"n_new").as("df"))
-      .filter($"df" > cap)
-      .select($"sh", pmod($"sh", lit(nBuckets)).cast("int").as("bucket"))
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write.mode(mode).parquet(s"$path/hotcand")
-    // … the commit row LAST
-    if (commit)
-      Seq((batchId, nBuckets, cap)).toDF("batch_id", "n_buckets", "df_cap")
-        .coalesce(1).write.mode(mode).parquet(s"$path/commits")
+        .coalesce(1).write.mode(mode).parquet(s"$path/hotcand")
+    }(L.row(spark, _, nBuckets, cap)) // … the commit row LAST
   }
 
-  private[graft] def dedupIndexMeta(spark: SparkSession,
-                                    path: String): (Seq[String], Int, Int) = {
-    import spark.implicits._
-    val rows = spark.read.parquet(s"$path/commits")
-      .select($"batch_id", $"n_buckets", $"df_cap").collect()
-    val nb = rows.map(_.getInt(1)).distinct
-    require(nb.length == 1,
-      s"inconsistent n_buckets in $path/commits: ${nb.mkString(",")}")
-    val caps = rows.map(_.getInt(2)).distinct
-    require(caps.length == 1,
-      s"inconsistent df_cap in $path/commits: ${caps.mkString(",")}")
-    (rows.map(_.getString(0)).toSeq, nb.head, caps.head)
-  }
-
-  private def dedupIndexDeletes(spark: SparkSession, path: String,
-                                committed: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    if (del.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(del))
-      spark.read.parquet(s"$path/deletes")
-        .filter($"batch_id".isin(committed: _*)).select($"doc_id")
-    else spark.emptyDataset[Long].toDF("doc_id")
-  }
-
-  /** Tombstone reference docs out of the index — zero posting
-    * rewrites; serve recomputes df/hot/sizes from the survivors, so
-    * the scores equal a from-scratch index on the surviving reference
-    * (the gate proves it). Idempotent; commit row last. */
-  def dedupIndexDelete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    import spark.implicits._
-    val (committed, nBuckets, cap) = dedupIndexMeta(spark, path)
-    val batchId = java.util.UUID.randomUUID.toString
-    ids.select($"doc_id").distinct()
-      .join(dedupIndexDeletes(spark, path, committed), Seq("doc_id"), "left_anti")
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write.mode("append").parquet(s"$path/deletes")
-    Seq((batchId, nBuckets, cap)).toDF("batch_id", "n_buckets", "df_cap")
-      .coalesce(1).write.mode("append").parquet(s"$path/commits")
-  }
-
-  /** Fraction of the signature index's posting rows a
-    * [[dedupIndexVacuum]] would physically drop — tombstoned or
-    * orphaned (uncommitted) rows over total; the self-tuning measure
-    * [[graft.operators.Retention.retentionSweep]] thresholds the
-    * rewrite on ([[graft.operators.TextAnalysis.bm25ReclaimableFraction]]'s
-    * posture for the dedup family). One scan reading only
-    * batch_id/doc_id against metadata-sized tombstones. */
-  def dedupIndexReclaimableFraction(spark: SparkSession, path: String): Double = {
-    import spark.implicits._
-    val (committed, _, _) = dedupIndexMeta(spark, path)
-    val counts = spark.read.parquet(s"$path/postings")
-      .select($"batch_id", $"doc_id")
-      .join(dedupIndexDeletes(spark, path, committed)
-        .withColumn("dead", lit(1)), Seq("doc_id"), "left_outer")
-      .agg(count(lit(1)).as("total"),
-        sum(when($"dead".isNotNull || !$"batch_id".isin(committed: _*), 1L)
-          .otherwise(0L)).as("reclaimable"))
-      .head()
-    if (counts.getLong(0) == 0L) 0.0
-    else counts.getLong(1).toDouble / counts.getLong(0)
-  }
-
-  /** VACUUM the signature index — the physical reclaim behind
-    * [[dedupIndexDelete]]'s zero-rewrite tombstones, mirroring
-    * [[graft.operators.TextAnalysis.bm25Vacuum]] bucket for bucket:
-    * drop orphaned (uncommitted) and tombstoned postings, defragment
-    * buckets past `maxFilesPerBucket`, rewrite ONLY dirty buckets
-    * (dynamic partition overwrite — clean buckets byte-for-byte),
-    * drained buckets' directories dropped through the Hadoop FS API.
-    * Runs under the writer lease; refuses while a read pin is live
-    * (a pinned [[dedupServe]] snapshot may still reference the
-    * tombstoned rows). deletes/ and commits/ stay — metadata-sized,
-    * and retained tombstones keep re-deletes idempotent. */
+  /** VACUUM the signature index — the physical reclaim behind its
+    * zero-rewrite tombstones: the shared partition rewrite
+    * ([[IndexLayout.Appendable.rewrite]]) of the postings, plus the
+    * sidecars this layout keeps beside them. Runs under the writer
+    * lease; refuses while a read pin is live (a pinned [[dedupServe]]
+    * snapshot may still reference the tombstoned rows). */
   def dedupIndexVacuum(spark: SparkSession, path: String,
                        maxFilesPerBucket: Int = 1): Unit =
-      graft.sources.Lake.withWriterLock(spark, path, "dedupIndexVacuum") {
-    graft.sources.Lake.requireUnpinned(spark, path, "dedupIndexVacuum")
+      IndexLayout.maintain(spark, path, "dedupIndexVacuum") {
     import spark.implicits._
-    val (committed, nBuckets, cap) = dedupIndexMeta(spark, path)
-    val post = spark.read.parquet(s"$path/postings")
-      .withColumn("bucket", $"bucket".cast("int"))
-    val del = dedupIndexDeletes(spark, path, committed)
-    val dirty = post.join(del, Seq("doc_id"), "left_semi").select($"bucket")
-      .unionAll(post.filter(!$"batch_id".isin(committed: _*)).select($"bucket"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val fragmented = graft.sources.Lake.fragmentedPartitions(
-      spark, s"$path/postings", "bucket", maxFilesPerBucket)
-    val targets = dirty ++ fragmented
-    if (targets.nonEmpty) {
-      // eager: the rewrite replaces the very files being read
-      val clean = post.filter($"bucket".isin(targets.toSeq: _*))
-        .filter($"batch_id".isin(committed: _*))
-        .join(broadcast(del), Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      clean.repartition(col("bucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(s"$path/postings")
-      val stillThere = clean.select($"bucket").distinct()
-        .collect().map(_.getAs[Number](0).intValue()).toSet
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      (targets -- stillThere).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/postings/bucket=$b"), true)
-      }
+    val L = IndexLayout.DedupSig
+    val log = L.log(spark, path)
+    val (committed, nBuckets, cap) =
+      (L.batches(log), L.pinned(log, path, "n_buckets"), L.pinned(log, path, "df_cap"))
+    val dead = L.tombstones(spark, path, committed)
+    if (L.rewrite(spark, path, committed, dead, maxFilesPerBucket).nonEmpty) {
+      val del = broadcast(dead.toDF("doc_id"))
       // the metadata-scale sidecars reclaim in the same pass: dead and
       // orphaned size rows rewrite away, and the hot-candidate log
       // re-counts its shingles' LIVE df so entries un-hotted by the
@@ -778,22 +678,20 @@ object NearDup {
       // cap re-logs them). Rewritten rows ride an existing committed
       // batch id — sidecar reads are commit-gated, and the pin gate
       // above is what protects snapshot readers from any rewrite here.
-      val liveSizes = spark.read.parquet(s"$path/sizes")
+      val liveSizes = L.read(spark, path, "sizes")
         .filter($"batch_id".isin(committed: _*))
-        .join(broadcast(del), Seq("doc_id"), "left_anti")
+        .join(del, Seq("doc_id"), "left_anti")
         .localCheckpoint()
       liveSizes.coalesce(1).write.mode("overwrite").parquet(s"$path/sizes")
-      val cand = spark.read.parquet(s"$path/hotcand")
+      val cand = L.read(spark, path, "hotcand")
         .filter($"batch_id".isin(committed: _*))
-        .select($"sh", $"bucket".cast("int").as("bucket"))
+        .select($"sh", $"bucket")
         .distinct().localCheckpoint()
-      val candBuckets = cand.select($"bucket").distinct()
-        .collect().map(_.getAs[Number](0).intValue()).toSeq
-      val stillHot = spark.read.parquet(s"$path/postings")
-        .select($"bucket".cast("int").as("bucket"), $"sh", $"doc_id", $"batch_id")
+      val candBuckets = IndexLayout.partitionsOf(cand.select($"bucket"))
+      val stillHot = L.read(spark, path, "postings")
         .filter($"bucket".isin(candBuckets: _*))
         .filter($"batch_id".isin(committed: _*))
-        .join(broadcast(del), Seq("doc_id"), "left_anti")
+        .join(del, Seq("doc_id"), "left_anti")
         .join(cand.select($"sh").distinct(), Seq("sh"), "left_semi")
         .groupBy($"sh").agg(count(lit(1)).as("df"))
         .filter($"df" > cap)
@@ -806,32 +704,30 @@ object NearDup {
       // resume their cumulative sums from the live floor instead of
       // carrying reclaimed rows' overcounts forward. O(index), like
       // the posting rewrite this pass already paid for.
-      dedupRecompactDfs(spark, path, committed, del)
+      dedupRecompactDfs(spark, path, committed, dead)
     }
     // dfs-only bloat: a run of appends with zero tombstones and no
     // file fragmentation still grows the delta history the detection
     // scan reads — recompact it even when the postings need nothing
     // (the cheap fraction probe gates the O(postings) recount)
     else if (dedupDfsReclaimableFraction(spark, path) > 0.0)
-      dedupRecompactDfs(spark, path, committed, del)
+      dedupRecompactDfs(spark, path, committed, dead)
   }
 
-  /** Recompact the df-delta sidecar to the exact live per-shingle
-    * counts — one row per surviving (bucket, shingle): appends resume
-    * their cumulative sums from the live floor instead of carrying
-    * reclaimed or duplicated history forward. O(postings), like the
-    * rewrite pass that usually precedes it. */
+  /** Recompact (or backfill) the df-delta sidecar to the exact live
+    * per-shingle counts — one row per surviving (bucket, shingle):
+    * appends resume their cumulative sums from the live floor instead
+    * of carrying reclaimed or duplicated history forward. O(postings),
+    * like the rewrite pass that usually precedes it. */
   private def dedupRecompactDfs(spark: SparkSession, path: String,
-                                committed: Seq[String], del: DataFrame): Unit = {
+                                committed: Seq[String], dead: Seq[Long]): Unit = {
     import spark.implicits._
-    val liveDfs = spark.read.parquet(s"$path/postings")
-      .select($"bucket".cast("int").as("bucket"), $"sh", $"doc_id", $"batch_id")
+    IndexLayout.DedupSig.read(spark, path, "postings")
       .filter($"batch_id".isin(committed: _*))
-      .join(broadcast(del), Seq("doc_id"), "left_anti")
+      .join(broadcast(dead.toDF("doc_id")), Seq("doc_id"), "left_anti")
       .groupBy($"bucket", $"sh").agg(count(lit(1)).as("n_new"))
       .withColumn("batch_id", lit(committed.head))
-      .localCheckpoint()
-    liveDfs.repartition(col("bucket"))
+      .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/dfs")
   }
 
@@ -851,7 +747,7 @@ object NearDup {
     val dfs = new org.apache.hadoop.fs.Path(s"$path/dfs")
     if (!dfs.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dfs))
       return 0.0
-    val r = spark.read.parquet(s"$path/dfs")
+    val r = IndexLayout.DedupSig.read(spark, path, "dfs")
       .agg(count(lit(1)).as("total"),
         countDistinct($"bucket", $"sh").as("live")).head()
     val total = r.getLong(0)
@@ -879,8 +775,8 @@ object NearDup {
     * `dfCap` must equal the cap the index was built with (persisted
     * in the commit log — a serve can never silently retune the
     * boilerplate cutoff; rebuild to retune). `snapshot` pins the
-    * serve to a [[dedupIndexMeta]] committed set, the bm25Snapshot
-    * posture. */
+    * serve to a committed set (`IndexLayout.DedupSig.committed`), the
+    * bm25Snapshot posture. */
   /** The re-crawl snapshot's shingle postings (doc_id + BigOffset):
     * every full-snapshot serve drill (cross_dedup_serve, the
     * dedup/fleet/stream catalog drills, fleet_rollback_serve,
@@ -897,14 +793,15 @@ object NearDup {
                  snapshot: Option[Seq[String]] = None,
                  shingled: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    val (committedNow, nBuckets, cap) = dedupIndexMeta(spark, path)
+    val L = IndexLayout.DedupSig
+    val log = L.log(spark, path)
+    val (nBuckets, cap) = (L.pinned(log, path, "n_buckets"), L.pinned(log, path, "df_cap"))
     require(dfCap == cap,
       s"dedupServe: dfCap=$dfCap differs from the index's pinned df_cap=$cap " +
         s"at $path — retuning the cutoff needs a rebuild, not a serve flag")
-    val committed = snapshot.getOrElse(committedNow)
-    val dead = dedupIndexDeletes(spark, path, committed)
-    def livePost(bs: Seq[Int]): DataFrame = spark.read.parquet(s"$path/postings")
-      .select($"bucket".cast("int").as("bucket"), $"sh", $"doc_id", $"batch_id")
+    val committed = snapshot.getOrElse(L.batches(log))
+    val dead = L.tombstones(spark, path, committed).toDF("doc_id")
+    def livePost(bs: Seq[Int]): DataFrame = L.read(spark, path, "postings")
       .filter($"bucket".isin(bs: _*))
       .filter($"batch_id".isin(committed: _*))
       .join(broadcast(dead), Seq("doc_id"), "left_anti")
@@ -923,17 +820,16 @@ object NearDup {
         // already checkpointed; the bucket set still derives per serve
         // (nBuckets is the index's own parameter)
         pn = shingled.getOrElse(shinglePostings(newDocs).localCheckpoint())
-        buckets = pn.select(pmod($"sh", lit(nBuckets)).cast("int").as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
+        buckets = IndexLayout.partitionsOf(
+          pn.select(pmod($"sh", lit(nBuckets)).cast("int").as("b")))
       },
       () => {
         // exact hot set from the candidate log (bucket-bounded re-count)
-        cand = spark.read.parquet(s"$path/hotcand")
+        cand = L.read(spark, path, "hotcand")
           .filter($"batch_id".isin(committed: _*))
-          .select($"sh", $"bucket".cast("int").as("bucket"))
+          .select($"sh", $"bucket")
           .distinct().localCheckpoint()
-        candBuckets = cand.select($"bucket").distinct()
-          .collect().map(_.getAs[Number](0).intValue()).toSeq
+        candBuckets = IndexLayout.partitionsOf(cand.select($"bucket"))
       })
     // eager: the candidates' live rows feed the hot re-count AND the
     // per-doc size correction
@@ -945,7 +841,7 @@ object NearDup {
     // capped ref sizes: sidecar raw counts minus live hot-row counts
     val hotCnt = hotRows.join(hot, Seq("sh"), "left_semi")
       .groupBy($"doc_id").agg(count(lit(1)).as("n_hot"))
-    val sizesR = spark.read.parquet(s"$path/sizes")
+    val sizesR = L.read(spark, path, "sizes")
       .filter($"batch_id".isin(committed: _*))
       .join(broadcast(dead), Seq("doc_id"), "left_anti")
       .groupBy($"doc_id").agg(sum($"n_raw").as("n_raw"))
@@ -985,7 +881,7 @@ object NearDup {
       Artifacts.promote(spark,
         dedupSigTemplate(spark, dir, Some(cut), dfCap))(tmp)
       dedupIndexAppend(Tables.fanout(ref.filter($"doc_id" > cut)), tmp)
-      dedupIndexDelete(spark, tmp, ref.filter($"doc_id" % 7 === 0).select($"doc_id"))
+      IndexLayout.DedupSig.delete(spark, tmp, ref.filter($"doc_id" % 7 === 0))
       dedupServe(spark, tmp, Tables.fanout(neu), threshold, dfCap,
         shingled = Some(neuShinglesFor(spark, dir)))
     }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.IndexLayout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,10 +22,10 @@ import org.apache.spark.sql.functions._
   *
   * The tick is SELF-TUNING: the physical reclaim is a rewrite, so it
   * runs only when the index's own measures say it is worth paying —
-  * the reclaimable row fraction ([[TextAnalysis.bm25ReclaimableFraction]],
-  * [[Similarity.ivfReclaimableFraction]]) exceeds `minReclaim`, or a
-  * partition has fragmented past `maxFiles*`
-  * ([[graft.sources.Lake.fragmentedPartitions]]). Below both
+  * the reclaimable row fraction
+  * ([[IndexLayout.Appendable.reclaimableFraction]]) exceeds
+  * `minReclaim`, or a partition has fragmented past `maxFiles*`
+  * ([[IndexLayout.Appendable.fragmented]]). Below both
   * thresholds the tick SKIPS the rewrite and the dead weight simply
   * accumulates toward a later tick — the
   * [[TextAnalysis.bm25RefreshIfStale]] ε-posture generalized to the
@@ -48,25 +49,6 @@ object Retention {
     * reclaim — retry next tick (the re-drivable deferral). */
   case object Deferred extends Tick
 
-  /** Tombstone every doc whose `tsCol` in `meta` is strictly older
-    * than `cutoff` from a raw BM25 index. `meta` is the corpus's
-    * metadata table (doc_id + timestamp — the pipeline's own landed
-    * table, not the index); unindexed and already-deleted ids are
-    * no-ops by [[TextAnalysis.bm25Delete]]'s idempotence. */
-  def bm25DeleteOlderThan(spark: SparkSession, path: String,
-                          meta: DataFrame, tsCol: String,
-                          cutoff: Column): Unit =
-    TextAnalysis.bm25Delete(spark, path,
-      meta.filter(col(tsCol) < cutoff).select(col("doc_id")))
-
-  /** Tombstone every vector whose `tsCol` in `meta` is strictly older
-    * than `cutoff` from a persisted IVF index. */
-  def ivfDeleteOlderThan(spark: SparkSession, path: String,
-                         meta: DataFrame, tsCol: String,
-                         cutoff: Column): Unit =
-    Similarity.ivfDelete(spark, path,
-      meta.filter(col(tsCol) < cutoff).select(col("doc_id").as("vec_id")))
-
   /** One scheduled maintenance tick for a raw BM25 index: expire by
     * age, measure, then reclaim only when the measures justify the
     * rewrite (reclaimable fraction > `minReclaim`, or any bucket
@@ -75,30 +57,51 @@ object Retention {
     * tombstones are committed either way, so expired docs stop being
     * served immediately — only the disk reclaim waits. Pass `metrics`
     * to record the expire/reclaim phases as named scopes (the
-    * operational trail a monitor alerts on). */
+    * operational trail a monitor alerts on). `meta` is the corpus's
+    * metadata table (doc_id + timestamp — the pipeline's own landed
+    * table, not the index); unindexed and already-deleted ids are
+    * no-ops by the delete's idempotence. */
   def bm25RetentionCycle(spark: SparkSession, path: String,
                          meta: DataFrame, tsCol: String, cutoff: Column,
                          maxFilesPerBucket: Int = 1,
                          minReclaim: Double = 0.0,
-                         metrics: Option[graft.Metrics] = None): Tick = {
-    scoped(metrics, "bm25_retention_expire") {
-      bm25DeleteOlderThan(spark, path, meta, tsCol, cutoff)
+                         metrics: Option[graft.Metrics] = None): Tick =
+    cycle(spark, RawBm25, "bm25", path, meta, tsCol, cutoff, maxFilesPerBucket, minReclaim,
+      metrics)
+
+  /** One scheduled maintenance tick for a persisted IVF index —
+    * [[bm25RetentionCycle]]'s shape: expire by age, then compact only
+    * when the dead-row fraction or cell fragmentation justifies it,
+    * deferring (not failing) under a pin or lease. */
+  def ivfRetentionCycle(spark: SparkSession, path: String,
+                        meta: DataFrame, tsCol: String, cutoff: Column,
+                        maxFilesPerCell: Int = 1,
+                        minReclaim: Double = 0.0,
+                        metrics: Option[graft.Metrics] = None): Tick =
+    cycle(spark, Ivf, "ivf", path, meta, tsCol, cutoff, maxFilesPerCell, minReclaim, metrics)
+
+  private def cycle(spark: SparkSession, kind: IndexKind, tag: String, path: String,
+                    meta: DataFrame, tsCol: String, cutoff: Column, maxFiles: Int,
+                    minReclaim: Double, metrics: Option[graft.Metrics]): Tick = {
+    scoped(metrics, s"${tag}_retention_expire") {
+      kind.expire(spark, path, meta.filter(col(tsCol) < cutoff))
     }
-    val worth =
-      TextAnalysis.bm25ReclaimableFraction(spark, path) > minReclaim ||
-        graft.sources.Lake.fragmentedPartitions(
-          spark, s"$path/postings", "bucket", maxFilesPerBucket).nonEmpty
+    val worth = kind.deadWeight(spark, path) > minReclaim ||
+      kind.fragmented(spark, path, maxFiles)
     if (!worth) Skipped
-    else try {
-      scoped(metrics, "bm25_retention_reclaim") {
-        TextAnalysis.bm25Vacuum(spark, path, maxFilesPerBucket)
-      }
+    else deferring {
+      scoped(metrics, s"${tag}_retention_reclaim")(kind.reclaim(spark, path, maxFiles))
       Reclaimed
-    } catch {
+    }
+  }
+
+  /** `body`'s outcome, or [[Deferred]] when a read pin or another
+    * maintainer's lease blocks it. */
+  private def deferring(body: => Tick): Tick =
+    try body catch {
       case _: graft.sources.Lake.PinnedSnapshotException => Deferred
       case _: graft.sources.Lake.ConcurrentMaintenanceException => Deferred
     }
-  }
 
   /** One scheduled maintenance tick for an IMPACT-layout BM25 index
     * (the version-swapped, rebuild-on-refresh family): expire by age
@@ -121,41 +124,11 @@ object Retention {
       TextAnalysis.bm25MarkDeleted(spark, path,
         meta.filter(col(tsCol) < cutoff).select(col("doc_id")))
     }
-    try {
+    deferring {
       val rebuilt = scoped(metrics, "bm25_impact_retention_refresh") {
         TextAnalysis.bm25RefreshIfStale(docs, path, eps)
       }
       if (rebuilt) Reclaimed else Skipped
-    } catch {
-      case _: graft.sources.Lake.ConcurrentMaintenanceException => Deferred
-    }
-  }
-
-  /** One scheduled maintenance tick for a persisted IVF index —
-    * [[bm25RetentionCycle]]'s shape: expire by age, then compact only
-    * when the dead-row fraction or cell fragmentation justifies it,
-    * deferring (not failing) under a pin or lease. */
-  def ivfRetentionCycle(spark: SparkSession, path: String,
-                        meta: DataFrame, tsCol: String, cutoff: Column,
-                        maxFilesPerCell: Int = 1,
-                        minReclaim: Double = 0.0,
-                        metrics: Option[graft.Metrics] = None): Tick = {
-    scoped(metrics, "ivf_retention_expire") {
-      ivfDeleteOlderThan(spark, path, meta, tsCol, cutoff)
-    }
-    val worth =
-      Similarity.ivfReclaimableFraction(spark, path) > minReclaim ||
-        graft.sources.Lake.fragmentedPartitions(
-          spark, s"$path/lists", "cell", maxFilesPerCell).nonEmpty
-    if (!worth) Skipped
-    else try {
-      scoped(metrics, "ivf_retention_reclaim") {
-        Similarity.ivfCompact(spark, path, maxFilesPerCell)
-      }
-      Reclaimed
-    } catch {
-      case _: graft.sources.Lake.PinnedSnapshotException => Deferred
-      case _: graft.sources.Lake.ConcurrentMaintenanceException => Deferred
     }
   }
 
@@ -185,36 +158,68 @@ object Retention {
         f.isFile && f.getPath.getName.endsWith(".parquet")) > maxFilesPerPartition
     }
     if (!fragmented) Skipped
-    else try {
+    else deferring {
       scoped(metrics, "lake_compaction") {
         graft.sources.Lake.compactTable(spark, path, maxFilesPerPartition, targetBytes)
       }
       Reclaimed
-    } catch {
-      case _: graft.sources.Lake.PinnedSnapshotException => Deferred
-      case _: graft.sources.Lake.ConcurrentMaintenanceException => Deferred
     }
   }
 
   /** The index families the sweep can maintain — one entry per
-    * persisted-index layout the library ships. */
-  sealed trait IndexKind
-  /** A raw appendable BM25 index ([[TextAnalysis.bm25WriteRaw]]). */
-  case object RawBm25 extends IndexKind
+    * persisted-index layout the library ships. An appendable family
+    * expires through its layout's tombstone delete and is measured by
+    * its layout's reclaimable fraction and partition fragmentation;
+    * the overrides are each family's own logic. */
+  sealed abstract class IndexKind(layout: Option[IndexLayout.Appendable]) {
+    /** Tombstone the docs of `expired` (a frame with `doc_id`). */
+    def expire(spark: SparkSession, path: String, expired: DataFrame): Unit =
+      layout.get.delete(spark, path, expired.select(col("doc_id").as(layout.get.id.get)))
+    /** The dead-weight fraction a reclaim would drop. */
+    def deadWeight(spark: SparkSession, path: String): Double =
+      layout.get.reclaimableFraction(spark, path)
+    def fragmented(spark: SparkSession, path: String, maxFiles: Int): Boolean =
+      layout.get.fragmented(spark, path, maxFiles).nonEmpty
+    /** The physical reclaim (under the writer lease and the pin gate). */
+    def reclaim(spark: SparkSession, path: String, maxFiles: Int): Unit =
+      layout.get.vacuum(spark, path, maxFiles)
+  }
+  /** A raw appendable BM25 index ([[TextAnalysis.bm25WriteRaw]]): a
+    * delete also commits the negative stats-log row. */
+  case object RawBm25 extends IndexKind(Some(IndexLayout.RawBm25)) {
+    override def expire(spark: SparkSession, path: String, expired: DataFrame): Unit =
+      TextAnalysis.bm25Delete(spark, path, expired)
+  }
   /** A persisted IVF index ([[Similarity.ivfWriteFrom]]), including
     * its PQ sidecar when one is attached. */
-  case object Ivf extends IndexKind
+  case object Ivf extends IndexKind(Some(IndexLayout.Ivf))
   /** An impact-layout BM25 index ([[TextAnalysis.bm25Write]] — the
     * version-swapped, rebuild-on-refresh family). Its reclaim IS the
     * ε-gated refresh, so a [[Maintained]] of this kind must carry
-    * `docs` (the CURRENT corpus the rebuild reads). */
-  case object ImpactBm25 extends IndexKind
+    * `docs` (the CURRENT corpus the rebuild reads); its measure is the
+    * tombstoned doc fraction, and fragmentation never applies (each
+    * version is a one-shot write). */
+  case object ImpactBm25 extends IndexKind(None) {
+    override def expire(spark: SparkSession, path: String, expired: DataFrame): Unit =
+      TextAnalysis.bm25MarkDeleted(spark, path, expired)
+    override def deadWeight(spark: SparkSession, path: String): Double =
+      TextAnalysis.bm25DeletedFraction(spark, path)
+    override def fragmented(spark: SparkSession, path: String, maxFiles: Int): Boolean = false
+  }
   /** A persisted reference-signature dedup index
-    * ([[NearDup.dedupIndexWrite]]). */
-  case object DedupSig extends IndexKind
+    * ([[NearDup.dedupIndexWrite]]). The dfs delta-history fraction
+    * competes alongside the tombstone/orphan fraction: appends bloat
+    * the detection scan's read even with zero dead postings, and the
+    * same vacuum recompacts both. */
+  case object DedupSig extends IndexKind(Some(IndexLayout.DedupSig)) {
+    override def deadWeight(spark: SparkSession, path: String): Double =
+      math.max(super.deadWeight(spark, path), NearDup.dedupDfsReclaimableFraction(spark, path))
+    override def reclaim(spark: SparkSession, path: String, maxFiles: Int): Unit =
+      NearDup.dedupIndexVacuum(spark, path, maxFiles)
+  }
   /** A persisted line-frequency (boilerplate-df) index
     * ([[TextAnalysis.lineIndexWrite]]). */
-  case object LineDf extends IndexKind
+  case object LineDf extends IndexKind(Some(IndexLayout.Lines))
 
   /** One index under the sweep's care: where it lives, which family's
     * forget/reclaim paths apply, and the expiry rule (metadata frame +
@@ -238,8 +243,8 @@ object Retention {
     * policy on top of the per-index ticks: EXPIRE everywhere first
     * (tombstones are correctness and always commit — no budget ever
     * delays an erasure), then reclaim in descending order of each
-    * index's measured dead weight ([[TextAnalysis.bm25ReclaimableFraction]] /
-    * [[Similarity.ivfReclaimableFraction]]), at most `maxReclaims`
+    * index's measured dead weight ([[IndexKind.deadWeight]]), at most
+    * `maxReclaims`
     * rewrites per sweep. Below-ε indexes [[Skipped]]; over-budget,
     * pinned or leased ones [[Deferred]] — both normal outcomes the
     * next sweep retries, so a nightly cron spends its rewrite budget
@@ -251,44 +256,14 @@ object Retention {
                      minReclaim: Double = 0.0,
                      maxReclaims: Int = Int.MaxValue,
                      metrics: Option[graft.Metrics] = None): Map[String, Tick] = {
-    def expiredIds(ix: Maintained): DataFrame =
-      ix.meta.filter(col(ix.tsCol) < ix.cutoff).select(col("doc_id"))
     indexes.foreach { ix =>
       scoped(metrics, s"sweep_expire_${ix.name}") {
-        ix.kind match {
-          case RawBm25    => bm25DeleteOlderThan(spark, ix.path, ix.meta, ix.tsCol, ix.cutoff)
-          case Ivf        => ivfDeleteOlderThan(spark, ix.path, ix.meta, ix.tsCol, ix.cutoff)
-          case ImpactBm25 => TextAnalysis.bm25MarkDeleted(spark, ix.path, expiredIds(ix))
-          case DedupSig   => NearDup.dedupIndexDelete(spark, ix.path, expiredIds(ix))
-          case LineDf     => TextAnalysis.lineIndexDelete(spark, ix.path, expiredIds(ix))
-        }
+        ix.kind.expire(spark, ix.path, ix.meta.filter(col(ix.tsCol) < ix.cutoff))
       }
     }
     val measured = indexes.map { ix =>
-      val (frac, fragmented) = ix.kind match {
-        case RawBm25 => (TextAnalysis.bm25ReclaimableFraction(spark, ix.path),
-          graft.sources.Lake.fragmentedPartitions(
-            spark, s"${ix.path}/postings", "bucket", ix.maxFiles).nonEmpty)
-        case Ivf => (Similarity.ivfReclaimableFraction(spark, ix.path),
-          graft.sources.Lake.fragmentedPartitions(
-            spark, s"${ix.path}/lists", "cell", ix.maxFiles).nonEmpty)
-        // the impact layout's reclaim is the ε-gated REBUILD, so its
-        // measure is the tombstoned doc fraction; fragmentation never
-        // applies (each version is a one-shot write)
-        case ImpactBm25 => (TextAnalysis.bm25DeletedFraction(spark, ix.path), false)
-        case DedupSig => (
-          // the dfs delta-history fraction competes alongside the
-          // tombstone/orphan fraction: appends bloat the detection
-          // scan's read even with zero dead postings, and the same
-          // vacuum recompacts both
-          math.max(NearDup.dedupIndexReclaimableFraction(spark, ix.path),
-            NearDup.dedupDfsReclaimableFraction(spark, ix.path)),
-          graft.sources.Lake.fragmentedPartitions(
-            spark, s"${ix.path}/postings", "bucket", ix.maxFiles).nonEmpty)
-        case LineDf => (TextAnalysis.lineIndexReclaimableFraction(spark, ix.path),
-          graft.sources.Lake.fragmentedPartitions(
-            spark, s"${ix.path}/lines", "bucket", ix.maxFiles).nonEmpty)
-      }
+      val frac = ix.kind.deadWeight(spark, ix.path)
+      val fragmented = ix.kind.fragmented(spark, ix.path, ix.maxFiles)
       // the drift trigger arms an IVF index's slot even with zero dead
       // rows: routing decay is a rewrite-worthy measurement too, and
       // the drift magnitude competes for the budget like a fraction.
@@ -317,12 +292,9 @@ object Retention {
     val outcomes = ordered.zipWithIndex.map { case ((ix, _, _, drifted), i) =>
       ix.name -> {
         if (i >= maxReclaims) Deferred
-        else try {
+        else deferring {
           scoped(metrics, s"sweep_reclaim_${ix.name}") {
             ix.kind match {
-              case RawBm25 =>
-                TextAnalysis.bm25Vacuum(spark, ix.path, ix.maxFiles)
-                Reclaimed: Tick
               // the impact layout's slot IS the staleness-bounded
               // refresh: rebuild from the current corpus and publish
               // the version atomically (read pins never block the
@@ -332,12 +304,6 @@ object Retention {
                   s"${ix.name}: ImpactBm25 needs docs (the corpus the refresh rebuilds from)"))
                 if (TextAnalysis.bm25RefreshIfStale(docs, ix.path, eps = minReclaim))
                   Reclaimed else Skipped
-              case DedupSig =>
-                NearDup.dedupIndexVacuum(spark, ix.path, ix.maxFiles)
-                Reclaimed
-              case LineDf =>
-                TextAnalysis.lineIndexVacuum(spark, ix.path, ix.maxFiles)
-                Reclaimed
               // a drifted index spends its slot on the retrain (which
               // also migrates rows); dead-row compaction, if any
               // remains, wins a later sweep's slot. The retrain stales
@@ -349,7 +315,7 @@ object Retention {
                   Similarity.pqReattach(spark, ix.path)
                 Reclaimed
               case Ivf =>
-                Similarity.ivfCompact(spark, ix.path, ix.maxFiles)
+                Ivf.reclaim(spark, ix.path, ix.maxFiles)
                 if (Similarity.pqSidecarPresent(spark, ix.path)) {
                   // sidecar upkeep rides the slot: reclaim dead code
                   // rows, re-fit stale books (a retrain outside the
@@ -361,11 +327,11 @@ object Retention {
                     Similarity.pqRefresh(spark, ix.path)
                 }
                 Reclaimed
+              case kind =>
+                kind.reclaim(spark, ix.path, ix.maxFiles)
+                Reclaimed
             }
           }
-        } catch {
-          case _: graft.sources.Lake.PinnedSnapshotException => Deferred
-          case _: graft.sources.Lake.ConcurrentMaintenanceException => Deferred
         }
       }
     }

@@ -1057,51 +1057,17 @@ object Similarity {
   private def writeIndex(idx: (DataFrame, DataFrame), path: String): Unit = {
     val (centroids, lists) = idx
     val spark = lists.sparkSession
-    val batchId = java.util.UUID.randomUUID.toString
+    val L = IndexLayout.Ivf
     // a fresh build resets the whole index at this path — including
     // tombstones and the commit log of any previous index
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/deletes"), true)
-    // centroids and lists are independent writes to disjoint dirs
-    // (guide §2.6); the commit row still lands strictly after both
-    graft.Par.jobs(
-      () => centroids.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids"),
-      () => lists.withColumn("batch_id", lit(batchId)).repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite").parquet(s"$path/lists"))
-    ivfCommit(spark, path, batchId, overwrite = true)
-  }
-
-  /** The on-disk IVF index's commit log — same contract as the raw
-    * BM25 stats log: list rows are tagged with a per-attempt batch_id
-    * and become visible only once their id lands in `commits/`
-    * (written LAST). A crash between the lists write and the commit
-    * leaves orphan rows no reader ever serves, and re-driving the
-    * append (fresh batch_id) lands the batch once; [[ivfCompact]]
-    * reclaims orphans physically. */
-  private def ivfCommit(spark: SparkSession, path: String, batchId: String,
-                        overwrite: Boolean): Unit = {
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id").coalesce(1)
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .parquet(s"$path/commits")
-  }
-
-  /** Committed batch ids — O(appends + deletes) driver metadata, the
-    * manifest read every index consumer starts from, read on the
-    * driver without a job ([[IndexLayout.Layout.local]]). */
-  private[graft] def ivfCommitted(spark: SparkSession, path: String): Seq[String] =
-    IndexLayout.Ivf.local(spark, path, "commits").map(_.getString(0))
-
-  /** Committed tombstones (neighbor_id) — none if no delete ever ran —
-    * read on the driver ([[IndexLayout.Layout.local]], no job) with the
-    * committed filter applied there: bounded curation metadata. */
-  private[graft] def ivfTombstones(spark: SparkSession, path: String,
-                                   committed: Seq[String]): Seq[Long] = {
-    val keep = committed.toSet
-    IndexLayout.Ivf.local(spark, path, "deletes").collect {
-      case r if !r.isNullAt(0) && keep(r.getString(1)) => r.getLong(0)
-    }.distinct
+    L.append(spark, path, overwrite = true) { (batchId, mode) =>
+      // centroids and lists are independent writes to disjoint dirs
+      // (guide §2.6); the commit row still lands strictly after both
+      graft.Par.jobs(
+        () => centroids.coalesce(1).write.mode(mode).parquet(s"$path/centroids"),
+        () => lists.withColumn("batch_id", lit(batchId)).repartition(col("cell"))
+          .write.partitionBy("cell").mode(mode).parquet(s"$path/lists"))
+    }(L.row(spark, _))
   }
 
   /** The index's current committed batch set — pass it back into
@@ -1114,7 +1080,7 @@ object Similarity {
     * reclaim while the pin is live, and the pin expires by TTL if the
     * reader crashes. */
   def ivfSnapshot(spark: SparkSession, path: String): Seq[String] =
-    ivfCommitted(spark, path)
+    IndexLayout.Ivf.committed(spark, path)
 
   /** The LIVE view of the on-disk lists: committed batches only,
     * tombstoned vectors anti-joined out (tombstones are bounded
@@ -1126,8 +1092,8 @@ object Similarity {
     * [[ivfSnapshot]] state. */
   private[graft] def liveLists(spark: SparkSession, path: String,
                                snapshot: Option[Seq[String]] = None): DataFrame = {
-    val committed = snapshot.getOrElse(ivfCommitted(spark, path))
-    liveListsAt(spark, path, committed, ivfTombstones(spark, path, committed))
+    val committed = snapshot.getOrElse(IndexLayout.Ivf.committed(spark, path))
+    liveListsAt(spark, path, committed, IndexLayout.Ivf.tombstones(spark, path, committed))
   }
 
   private def liveListsAt(spark: SparkSession, path: String, committed: Seq[String],
@@ -1141,22 +1107,14 @@ object Similarity {
 
   /** DELETE vectors from a persisted index — the embedding side of the
     * forget path ([[graft.operators.TextAnalysis.bm25Delete]]'s
-    * posture): tombstones in `deletes/`, commit row last, zero list
-    * rewrites (untouched cell partitions stay byte-for-byte).
-    * [[liveLists]] filters the victims out of every serve, retrain
-    * and compaction read; [[ivfCompact]] reclaims the dead rows
-    * physically. Idempotent: already-tombstoned ids are skipped. */
-  def ivfDelete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    import spark.implicits._
-    val committed = ivfCommitted(spark, path)
-    val batchId = java.util.UUID.randomUUID.toString
-    ids.select($"vec_id".as("neighbor_id")).distinct()
-      .join(ivfTombstones(spark, path, committed).toDF("neighbor_id"), Seq("neighbor_id"),
-        "left_anti")
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write.mode("append").parquet(s"$path/deletes")
-    ivfCommit(spark, path, batchId, overwrite = false)
-  }
+    * posture, [[IndexLayout.Appendable.delete]]): tombstones, commit
+    * row last, zero list rewrites (untouched cell partitions stay
+    * byte-for-byte). [[liveLists]] filters the victims out of every
+    * serve, retrain and compaction read; [[ivfCompact]] reclaims the
+    * dead rows physically. Idempotent: already-tombstoned ids are
+    * skipped. */
+  def ivfDelete(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    IndexLayout.Ivf.delete(spark, path, ids.select(col("vec_id").as("neighbor_id")))
 
   /** Incremental index maintenance — assign a NEW embedding batch to
     * the index's existing (frozen) centroids and APPEND only the
@@ -1175,18 +1133,19 @@ object Similarity {
   private[graft] def ivfAppendRaw(spark: SparkSession, path: String,
                                   newVecs: DataFrame, commit: Boolean): Unit = {
     import spark.implicits._
-    val centroids = IndexLayout.Ivf.read(spark, path, "centroids")
-    val batchId = java.util.UUID.randomUUID.toString
+    val L = IndexLayout.Ivf
+    val centroids = L.read(spark, path, "centroids")
     val e = Tables.fanout(newVecs)
       .select($"vec_id", $"embedding", sqrt(dotF($"embedding", $"embedding")).as("norm"))
     // list rows first (invisible until the commit row lands) …
-    listRows(nearestCell(e, centroids, "l", 1), newVecs.select($"vec_id", $"label"))
-      .withColumn("batch_id", lit(batchId))
-      .repartition(col("cell"))
-      .write.partitionBy("cell").mode("append").parquet(s"$path/lists")
+    L.append(spark, path, overwrite = false, commit) { (batchId, mode) =>
+      listRows(nearestCell(e, centroids, "l", 1), newVecs.select($"vec_id", $"label"))
+        .withColumn("batch_id", lit(batchId))
+        .repartition(col("cell"))
+        .write.partitionBy("cell").mode(mode).parquet(s"$path/lists")
     // … the commit row LAST: a crash in between leaves orphans no
     // reader serves, and the re-driven append lands the batch once
-    if (commit) ivfCommit(spark, path, batchId, overwrite = false)
+    }(L.row(spark, _))
   }
 
   /** Index maintenance step 3 — RETRAIN the centroids [[ivfAppend]]
@@ -1207,10 +1166,9 @@ object Similarity {
     * the append→retrain→serve chain stays recall-graded end-to-end
     * (`ann_ivf_retrain`). */
   def ivfRetrain(spark: SparkSession, path: String): Unit =
-      graft.sources.Lake.withWriterLock(spark, path, "ivfRetrain") {
-    // retention: retrain rewrites changed cells in place — a live
-    // reader pin still references the pre-migration rows
-    graft.sources.Lake.requireUnpinned(spark, path, "ivfRetrain")
+      // retention: retrain rewrites changed cells in place — a live
+      // reader pin still references the pre-migration rows
+      IndexLayout.maintain(spark, path, "ivfRetrain") {
     import spark.implicits._
     // eager: the current LIVE lists (committed batches, tombstones
     // filtered — a deleted vector must not be averaged into the new
@@ -1244,24 +1202,18 @@ object Similarity {
       // migrated row live the moment its cell lands. A crash mid-
       // overwrite leaves a routable, committed index (some cells
       // migrated, some not); re-driving ivfRetrain converges it.
+      val L = IndexLayout.Ivf
       val retrainBatch = java.util.UUID.randomUUID.toString
-      ivfCommit(spark, path, retrainBatch, overwrite = false)
+      L.commit(path, L.row(spark, retrainBatch))
       rows.withColumn("batch_id", lit(retrainBatch))
         .repartition(col("cell"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cell").parquet(s"$path/lists")
       // a changed cell with ZERO members after migration writes no
-      // partition — drop its stale directory explicitly. Through the
-      // Hadoop FileSystem API, not java.io.File: on HDFS/S3 the local
-      // API silently no-ops and the drained cell's stale vectors
-      // would double-serve after retrain.
-      val stillThere = IndexLayout.partitionsOf(rows.select($"cell".cast("int"))).toSet
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      (changed -- stillThere).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/lists/cell=$c"), true)
-      }
+      // partition — drop its stale directory, or the drained cell's
+      // stale vectors would double-serve after retrain
+      L.drop(spark, path, changed -- IndexLayout.partitionsOf(rows.select($"cell".cast("int"))))
     }
     newCent.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
   }
@@ -1303,82 +1255,18 @@ object Similarity {
     if (ivfDriftMeasure(spark, path) <= eps) false
     else { ivfRetrain(spark, path); true }
 
-  /** Fraction of the on-disk list rows an [[ivfCompact]] would
-    * physically drop — tombstoned or orphaned (uncommitted) over
-    * total. The ε-gate measure for the vector side of the self-tuning
-    * maintenance tick ([[Retention.ivfRetentionCycle]]): compaction
-    * rewrites whole cells, so it should run when there is enough dead
-    * weight to reclaim, not on every tick. One scan reading only
-    * batch_id/neighbor_id (parquet prunes the embedding payload). */
-  def ivfReclaimableFraction(spark: SparkSession, path: String): Double = {
-    import spark.implicits._
-    val committed = ivfCommitted(spark, path)
-    val counts = IndexLayout.Ivf.read(spark, path, "lists")
-      .select($"batch_id", $"neighbor_id")
-      .join(broadcast(ivfTombstones(spark, path, committed).toDF("neighbor_id"))
-        .withColumn("dead", lit(1)), Seq("neighbor_id"), "left_outer")
-      .agg(count(lit(1)).as("total"),
-        sum(when($"dead".isNotNull || !$"batch_id".isin(committed: _*), 1L)
-          .otherwise(0L)).as("reclaimable"))
-      .head()
-    if (counts.getLong(0) == 0L) 0.0
-    else counts.getLong(1).toDouble / counts.getLong(0)
-  }
-
   /** Index maintenance step 2 — COMPACT the fragmentation
     * [[ivfAppend]] accumulates: every append adds a file per touched
     * cell, and a long-running maintenance loop (E12) would otherwise
     * degrade probes into many-small-file reads (the same pathology
     * F14 `compaction_plan` plans around for the lake at large).
-    * Rewrites ONLY cells exceeding `maxFilesPerCell`, each into one
-    * file, via dynamic partition overwrite — a writer-local option,
-    * never a session-conf mutation — so untouched cell partitions
-    * keep their files byte-for-byte. Fragmentation is read off the
-    * directory listing: O(cells) driver metadata, exactly what a
-    * lakehouse table format holds in its manifest. Listing goes
-    * through the Hadoop FileSystem API so the maintenance loop works
-    * on whatever filesystem the index lives on (java.io.File returns
-    * null off-local and compaction would silently never trigger). */
+    * Compaction doubles as the index's VACUUM
+    * ([[IndexLayout.Appendable.vacuum]]): cells past `maxFilesPerCell`
+    * and cells carrying orphan (uncommitted) or tombstoned rows
+    * rewrite to their live rows, one file each; untouched cells keep
+    * their files byte-for-byte. */
   def ivfCompact(spark: SparkSession, path: String, maxFilesPerCell: Int = 1): Unit =
-      graft.sources.Lake.withWriterLock(spark, path, "ivfCompact") {
-    // retention: compaction physically drops tombstoned/orphaned rows
-    // a live reader pin may still reference
-    graft.sources.Lake.requireUnpinned(spark, path, "ivfCompact")
-    import spark.implicits._
-    val listsPath = new org.apache.hadoop.fs.Path(s"$path/lists")
-    val fs = listsPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val fragmented = graft.sources.Lake.fragmentedPartitions(
-      spark, s"$path/lists", "cell", maxFilesPerCell)
-    // compaction doubles as the index's VACUUM: cells carrying orphan
-    // (uncommitted) or tombstoned rows rewrite too, dropping the dead
-    // rows physically (one scan that reads only cell/batch_id/
-    // neighbor_id — parquet prunes the payload columns)
-    val committed = ivfCommitted(spark, path)
-    val raw = IndexLayout.Ivf.read(spark, path, "lists")
-    val dead = ivfTombstones(spark, path, committed).toDF("neighbor_id")
-    val dirty = IndexLayout.partitionsOf(
-      raw.join(dead, Seq("neighbor_id"), "left_semi").select($"cell")
-        .unionAll(raw.filter(!$"batch_id".isin(committed: _*)).select($"cell"))).toSet
-    val targets = fragmented ++ dirty
-    if (targets.nonEmpty) {
-      // eager: the rewrite reads the very files it replaces — material-
-      // ize the target cells' LIVE rows before overwriting
-      val clean = raw.filter($"cell".isin(targets.toSeq: _*))
-        .filter($"batch_id".isin(committed: _*))
-        .join(broadcast(dead), Seq("neighbor_id"), "left_anti")
-        .localCheckpoint()
-      clean.repartition(col("cell")) // one task owns each cell -> one file
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell").parquet(s"$path/lists")
-      // a target cell with zero live rows writes no partition — drop
-      // its stale directory explicitly
-      val stillThere = IndexLayout.partitionsOf(clean.select($"cell")).toSet
-      (targets -- stillThere).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/lists/cell=$c"), true)
-      }
-    }
-  }
+    IndexLayout.Ivf.vacuum(spark, path, maxFilesPerCell)
 
   /** [[annIvf]] served from a persisted [[ivfWrite]] index: the
     * identical probe plan over the index tables instead of the
@@ -1430,9 +1318,9 @@ object Similarity {
                             snapshot: Option[Seq[String]] = None): IvfCtx = {
     // an explicit `snapshot` (ivfSnapshot) pins the view — snapshot
     // isolation against concurrent appends/deletes
-    val committed = snapshot.getOrElse(ivfCommitted(spark, path))
+    val committed = snapshot.getOrElse(IndexLayout.Ivf.committed(spark, path))
     IvfCtx(spark, path, IndexLayout.Ivf.local(spark, path, "centroids"), committed,
-      ivfTombstones(spark, path, committed))
+      IndexLayout.Ivf.tombstones(spark, path, committed))
   }
 
   /** A query panel routed on the driver: `panel` (vec_id, embedding,
@@ -2202,25 +2090,31 @@ object Similarity {
     * attach heals it instead of every reader throwing. */
   private def pqLiveCodes(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/pq/commits")) ||
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$path/pq/codes")))
+    if (!pqCodesPresent(spark, path))
       return liveLists(spark, path).filter(lit(false))
         .select($"cell", $"neighbor_id",
           lit(null).cast("array<int>").as("codes"), $"nc")
+    // a missing commit log reads as no committed batch
     val committed = pqCommitted(spark, path, pqStamp(spark, path))
     IndexLayout.Pq.read(spark, path, "pq/codes")
       .filter($"pq_batch".isin(committed: _*))
-      .join(broadcast(ivfTombstones(spark, path, ivfCommitted(spark, path))
-        .toDF("neighbor_id")), Seq("neighbor_id"), "left_anti")
+      .join(broadcast(pqDead(spark, path).toDF("neighbor_id")), Seq("neighbor_id"),
+        "left_anti")
       .drop("pq_batch")
   }
 
+  private def pqCodesPresent(spark: SparkSession, path: String): Boolean =
+    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+      .exists(new org.apache.hadoop.fs.Path(s"$path/pq/codes"))
+
+  /** The sidecar's tombstones: the IVF index's committed ones. */
+  private def pqDead(spark: SparkSession, path: String): Seq[Long] =
+    IndexLayout.Ivf.tombstones(spark, path, IndexLayout.Ivf.committed(spark, path))
+
   /** The sidecar's committed code batches under centroid stamp `stamp`. */
   private def pqCommitted(spark: SparkSession, path: String, stamp: String): Seq[String] =
-    IndexLayout.Pq.local(spark, path, "pq/commits")
-      .filter(_.getAs[String]("cstamp") == stamp).map(_.getAs[String]("pq_batch"))
+    IndexLayout.Pq.batches(IndexLayout.Pq.log(spark, path)
+      .filter(_.getAs[String]("cstamp") == stamp))
 
   /** Residuals of an explicit live-row set against the index's CURRENT
     * centroids: (vec_id, embedding=r, cell, nc). */
@@ -2250,8 +2144,7 @@ object Similarity {
     * deletes). */
   def pqAttach(spark: SparkSession, path: String, m: Int = 16,
                kpq: Int = 32, opqIters: Int = 0): Unit =
-      graft.sources.Lake.withWriterLock(spark, path, "pqAttach") {
-    graft.sources.Lake.requireUnpinned(spark, path, "pqAttach")
+      IndexLayout.maintain(spark, path, "pqAttach") {
     import spark.implicits._
     // one driver-side centroid read serves both the stamp and the
     // dimension
@@ -2290,26 +2183,26 @@ object Similarity {
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/pq"), true)
     val toCode = rotOpt.fold(resid.select($"vec_id", $"embedding"))(r =>
       resid.select($"vec_id", rotateF($"embedding", r, dim).as("embedding")))
-    val batch = java.util.UUID.randomUUID.toString
-    // books and codes are independent writes to disjoint dirs (both
-    // read the CHECKPOINTED books frame, not each other's files) —
-    // overlap them (guide §2.6); the commit row still lands LAST
-    graft.Par.jobs(
-      () => books
-        .withColumn("m", lit(m)).withColumn("dsub", lit(dsub))
-        .withColumn("kpq", lit(kpq)).withColumn("cstamp", lit(stamp))
-        .withColumn("opq_iters", lit(opqIters))
-        .withColumn("rot", rotOpt.map(r => typedLit(r.toSeq).cast("array<float>"))
-          .getOrElse(lit(null).cast("array<float>")))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/pq/books"),
-      () => pqEncode(toCode, books, m, dsub)
-        .join(resid.select($"vec_id", $"cell", $"nc"), Seq("vec_id"))
-        .select($"cell", $"vec_id".as("neighbor_id"), $"codes", $"nc")
-        .withColumn("pq_batch", lit(batch))
-        .repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite").parquet(s"$path/pq/codes"))
-    Seq((batch, stamp)).toDF("pq_batch", "cstamp").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/pq/commits")
+    val L = IndexLayout.Pq
+    L.append(spark, path, overwrite = true) { (batch, mode) =>
+      // books and codes are independent writes to disjoint dirs (both
+      // read the CHECKPOINTED books frame, not each other's files) —
+      // overlap them (guide §2.6); the commit row still lands LAST
+      graft.Par.jobs(
+        () => books
+          .withColumn("m", lit(m)).withColumn("dsub", lit(dsub))
+          .withColumn("kpq", lit(kpq)).withColumn("cstamp", lit(stamp))
+          .withColumn("opq_iters", lit(opqIters))
+          .withColumn("rot", rotOpt.map(r => typedLit(r.toSeq).cast("array<float>"))
+            .getOrElse(lit(null).cast("array<float>")))
+          .coalesce(1).write.mode(mode).parquet(s"$path/pq/books"),
+        () => pqEncode(toCode, books, m, dsub)
+          .join(resid.select($"vec_id", $"cell", $"nc"), Seq("vec_id"))
+          .select($"cell", $"vec_id".as("neighbor_id"), $"codes", $"nc")
+          .withColumn("pq_batch", lit(batch))
+          .repartition(col("cell"))
+          .write.partitionBy("cell").mode(mode).parquet(s"$path/pq/codes"))
+    }(L.row(spark, _, stamp))
   }
 
   /** The attach-time OPQ rotation persisted on the books rows — None
@@ -2412,16 +2305,15 @@ object Similarity {
     // space the attach trained
     val toCode = pqRotation(bk).fold(resid.select($"vec_id", $"embedding"))(r =>
       resid.select($"vec_id", rotateF($"embedding", r, m * dsub).as("embedding")))
-    val batch = java.util.UUID.randomUUID.toString
-    pqEncode(toCode, books, m, dsub)
-      .join(resid.select($"vec_id", $"cell", $"nc"), Seq("vec_id"))
-      .select($"cell", $"vec_id".as("neighbor_id"), $"codes", $"nc")
-      .withColumn("pq_batch", lit(batch))
-      .repartition(col("cell"))
-      .write.partitionBy("cell").mode("append").parquet(s"$path/pq/codes")
-    if (commit)
-      Seq((batch, stamp)).toDF("pq_batch", "cstamp").coalesce(1)
-        .write.mode("append").parquet(s"$path/pq/commits")
+    val L = IndexLayout.Pq
+    L.append(spark, path, overwrite = false, commit) { (batch, mode) =>
+      pqEncode(toCode, books, m, dsub)
+        .join(resid.select($"vec_id", $"cell", $"nc"), Seq("vec_id"))
+        .select($"cell", $"vec_id".as("neighbor_id"), $"codes", $"nc")
+        .withColumn("pq_batch", lit(batch))
+        .repartition(col("cell"))
+        .write.partitionBy("cell").mode(mode).parquet(s"$path/pq/codes")
+    }(L.row(spark, _, stamp))
   }
 
   /** Physical reclaim for the sidecar — [[ivfCompact]]'s posture over
@@ -2434,44 +2326,13 @@ object Similarity {
     * live (stale-stamp rows are exactly what a pinned pre-retrain
     * reader may still be ADC-scoring). */
   def pqVacuum(spark: SparkSession, path: String, maxFilesPerCell: Int = 1): Unit =
-      graft.sources.Lake.withWriterLock(spark, path, "pqVacuum") {
-    graft.sources.Lake.requireUnpinned(spark, path, "pqVacuum")
-    import spark.implicits._
-    val hfs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // no code files → nothing to reclaim (incl. the torn-attach state)
-    if (!hfs.exists(new org.apache.hadoop.fs.Path(s"$path/pq/codes"))) return
-    val stamp = pqStamp(spark, path)
+      IndexLayout.maintain(spark, path, "pqVacuum") {
+    // no code files → nothing to reclaim (incl. the torn-attach state);
     // a missing commit log (torn attach) orphans every code row: the
     // empty committed set marks them all dead and the rewrite drops them
-    val committed =
-      if (!hfs.exists(new org.apache.hadoop.fs.Path(s"$path/pq/commits")))
-        Seq.empty[String]
-      else pqCommitted(spark, path, stamp)
-    val raw = IndexLayout.Pq.read(spark, path, "pq/codes")
-    val dead = ivfTombstones(spark, path, ivfCommitted(spark, path)).toDF("neighbor_id")
-    val dirty = IndexLayout.partitionsOf(
-      raw.join(dead, Seq("neighbor_id"), "left_semi").select($"cell")
-        .unionAll(raw.filter(!$"pq_batch".isin(committed: _*)).select($"cell"))).toSet
-    val fragmented = graft.sources.Lake.fragmentedPartitions(
-      spark, s"$path/pq/codes", "cell", maxFilesPerCell)
-    val targets = dirty ++ fragmented
-    if (targets.nonEmpty) {
-      val clean = raw.filter($"cell".isin(targets.toSeq: _*))
-        .filter($"pq_batch".isin(committed: _*))
-        .join(broadcast(dead), Seq("neighbor_id"), "left_anti")
-        .localCheckpoint()
-      clean.repartition(col("cell"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell").parquet(s"$path/pq/codes")
-      val stillThere = IndexLayout.partitionsOf(clean.select($"cell")).toSet
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      (targets -- stillThere).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/pq/codes/cell=$c"), true)
-      }
-    }
+    if (pqCodesPresent(spark, path))
+      IndexLayout.Pq.rewrite(spark, path, pqCommitted(spark, path, pqStamp(spark, path)),
+        pqDead(spark, path), maxFilesPerCell)
   }
 
   /** [[annIvfPq]] served from the persisted sidecar: route on the

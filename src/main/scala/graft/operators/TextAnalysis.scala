@@ -193,125 +193,16 @@ object TextAnalysis {
                                         segs: DataFrame => DataFrame = positionedLines): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val mode = if (overwrite) "overwrite" else "append"
-    val nBuckets = nBucketsOpt.getOrElse(lineIndexMeta(spark, path)._2)
-    val batchId = java.util.UUID.randomUUID.toString
-    if (overwrite) {
-      val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
-      del.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(del, true)
-    }
-    // one row per (doc, line) — df counts DISTINCT docs; postings
-    // first (invisible until the commit row lands) …
-    segs(docs).select($"doc_id", $"line").distinct()
-      .select(pmod(xxhash64($"line"), lit(nBuckets)).cast("int").as("bucket"),
-        $"line", $"doc_id", lit(batchId).as("batch_id"))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode(mode).parquet(s"$path/lines")
-    // … the commit row LAST
-    if (commit)
-      Seq((batchId, nBuckets)).toDF("batch_id", "n_buckets")
-        .coalesce(1).write.mode(mode).parquet(s"$path/commits")
-  }
-
-  private[graft] def lineIndexMeta(spark: SparkSession,
-                                   path: String): (Seq[String], Int) = {
-    import spark.implicits._
-    val rows = spark.read.parquet(s"$path/commits")
-      .select($"batch_id", $"n_buckets").collect()
-    val nb = rows.map(_.getInt(1)).distinct
-    require(nb.length == 1,
-      s"inconsistent n_buckets in $path/commits: ${nb.mkString(",")}")
-    (rows.map(_.getString(0)).toSeq, nb.head)
-  }
-
-  private[graft] def lineIndexDeletes(spark: SparkSession, path: String,
-                                      committed: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    if (del.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(del))
-      spark.read.parquet(s"$path/deletes")
-        .filter($"batch_id".isin(committed: _*)).select($"doc_id")
-    else spark.emptyDataset[Long].toDF("doc_id")
-  }
-
-  /** Tombstone docs out of the line index — their lines stop counting
-    * toward df immediately (a banner that only ever appeared in
-    * since-erased docs is content again); zero posting rewrites;
-    * idempotent; commit row last. */
-  def lineIndexDelete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    import spark.implicits._
-    val (committed, nBuckets) = lineIndexMeta(spark, path)
-    val batchId = java.util.UUID.randomUUID.toString
-    ids.select($"doc_id").distinct()
-      .join(lineIndexDeletes(spark, path, committed), Seq("doc_id"), "left_anti")
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write.mode("append").parquet(s"$path/deletes")
-    Seq((batchId, nBuckets)).toDF("batch_id", "n_buckets")
-      .coalesce(1).write.mode("append").parquet(s"$path/commits")
-  }
-
-  /** Fraction of the line index's posting rows a [[lineIndexVacuum]]
-    * would physically drop — tombstoned or orphaned (uncommitted)
-    * rows over total; the sweep's self-tuning measure
-    * ([[bm25ReclaimableFraction]]'s posture for the line-df family).
-    * One scan reading only batch_id/doc_id against metadata-sized
-    * tombstones. */
-  def lineIndexReclaimableFraction(spark: SparkSession, path: String): Double = {
-    import spark.implicits._
-    val (committed, _) = lineIndexMeta(spark, path)
-    val counts = spark.read.parquet(s"$path/lines")
-      .select($"batch_id", $"doc_id")
-      .join(lineIndexDeletes(spark, path, committed)
-        .withColumn("dead", lit(1)), Seq("doc_id"), "left_outer")
-      .agg(count(lit(1)).as("total"),
-        sum(when($"dead".isNotNull || !$"batch_id".isin(committed: _*), 1L)
-          .otherwise(0L)).as("reclaimable"))
-      .head()
-    if (counts.getLong(0) == 0L) 0.0
-    else counts.getLong(1).toDouble / counts.getLong(0)
-  }
-
-  /** VACUUM the line index — the physical reclaim behind
-    * [[lineIndexDelete]]'s zero-rewrite tombstones, [[bm25Vacuum]]
-    * bucket for bucket: drop orphaned and tombstoned postings,
-    * defragment buckets past `maxFilesPerBucket`, rewrite ONLY dirty
-    * buckets (dynamic partition overwrite — clean buckets
-    * byte-for-byte), drained buckets' directories dropped through the
-    * Hadoop FS API. Writer lease + read-pin gate like every other
-    * physical reclaim; deletes/ and commits/ are retained
-    * (metadata-sized; tombstones keep re-deletes idempotent). */
-  def lineIndexVacuum(spark: SparkSession, path: String,
-                      maxFilesPerBucket: Int = 1): Unit =
-      graft.sources.Lake.withWriterLock(spark, path, "lineIndexVacuum") {
-    graft.sources.Lake.requireUnpinned(spark, path, "lineIndexVacuum")
-    import spark.implicits._
-    val (committed, _) = lineIndexMeta(spark, path)
-    val post = spark.read.parquet(s"$path/lines")
-      .withColumn("bucket", $"bucket".cast("int"))
-    val del = lineIndexDeletes(spark, path, committed)
-    val dirty = IndexLayout.partitionsOf(
-      post.join(del, Seq("doc_id"), "left_semi").select($"bucket")
-        .unionAll(post.filter(!$"batch_id".isin(committed: _*)).select($"bucket"))).toSet
-    val fragmented = graft.sources.Lake.fragmentedPartitions(
-      spark, s"$path/lines", "bucket", maxFilesPerBucket)
-    val targets = dirty ++ fragmented
-    if (targets.nonEmpty) {
-      // eager: the rewrite replaces the very files being read
-      val clean = post.filter($"bucket".isin(targets.toSeq: _*))
-        .filter($"batch_id".isin(committed: _*))
-        .join(broadcast(del), Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      clean.repartition(col("bucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(s"$path/lines")
-      val stillThere = IndexLayout.partitionsOf(clean.select($"bucket")).toSet
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      (targets -- stillThere).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/lines/bucket=$b"), true)
-      }
-    }
+    val L = IndexLayout.Lines
+    val nBuckets = nBucketsOpt.getOrElse(L.pinned(L.log(spark, path), path, "n_buckets"))
+    L.append(spark, path, overwrite, commit) { (batchId, mode) =>
+      // one row per (doc, line) — df counts DISTINCT docs
+      segs(docs).select($"doc_id", $"line").distinct()
+        .select(pmod(xxhash64($"line"), lit(nBuckets)).cast("int").as("bucket"),
+          $"line", $"doc_id", lit(batchId).as("batch_id"))
+        .repartition(col("bucket"))
+        .write.partitionBy("bucket").mode(mode).parquet(s"$path/lines")
+    }(L.row(spark, _, nBuckets))
   }
 
   /** Strike boilerplate from a NEW crawl batch against the
@@ -320,21 +211,22 @@ object TextAnalysis {
     * statically pruned to the batch's lines' buckets (distinct bucket
     * set ≤ nBuckets driver ints) and then semi-restricted to the
     * batch's own lines — df is only ever needed for lines the batch
-    * contains. `snapshot` pins the serve to a [[lineIndexMeta]]
-    * committed set (the bm25Snapshot posture). */
+    * contains. `snapshot` pins the serve to a committed set (the
+    * bm25Snapshot posture). */
   def lineDedupServe(spark: SparkSession, path: String, newDocs: DataFrame,
                      snapshot: Option[Seq[String]] = None,
                      segs: DataFrame => DataFrame = positionedLines): DataFrame = {
     import spark.implicits._
-    val (committedNow, nBuckets) = lineIndexMeta(spark, path)
-    val committed = snapshot.getOrElse(committedNow)
-    val dead = lineIndexDeletes(spark, path, committed)
+    val L = IndexLayout.Lines
+    val log = L.log(spark, path)
+    val nBuckets = L.pinned(log, path, "n_buckets")
+    val committed = snapshot.getOrElse(L.batches(log))
+    val dead = L.tombstones(spark, path, committed).toDF("doc_id")
     val newLines = segs(newDocs).select($"doc_id", $"line")
       .distinct().localCheckpoint()
     val buckets = IndexLayout.partitionsOf(newLines
       .select(pmod(xxhash64($"line"), lit(nBuckets)).cast("int").as("b")))
-    val dfIndex = spark.read.parquet(s"$path/lines")
-      .select($"bucket".cast("int").as("bucket"), $"line", $"doc_id", $"batch_id")
+    val dfIndex = L.read(spark, path, "lines")
       .filter($"bucket".isin(buckets: _*))
       .filter($"batch_id".isin(committed: _*))
       .join(broadcast(dead), Seq("doc_id"), "left_anti")
@@ -370,7 +262,7 @@ object TextAnalysis {
       // deletes mutate this drill's own copy (r17 opt)
       Artifacts.promote(spark, lineDfRef3Template(spark, dir, Some(cut)))(tmp)
       lineIndexAppend(Tables.fanout(ref.filter($"doc_id" > cut)), tmp)
-      lineIndexDelete(spark, tmp, docs.filter($"doc_id" % 7 === 0).select($"doc_id"))
+      IndexLayout.Lines.delete(spark, tmp, docs.filter($"doc_id" % 7 === 0))
       lineDedupServe(spark, tmp, Tables.fanout(neu))
     }
   }
@@ -545,7 +437,7 @@ object TextAnalysis {
       // stream_para_index; the lifecycle mutates this drill's own copy
       Artifacts.promote(spark, paraDfRef3Template(spark, dir, cut))(tmp)
       paraIndexAppend(Tables.fanout(ref.filter($"doc_id" > cut)), tmp)
-      lineIndexDelete(spark, tmp, docs.filter($"doc_id" % 7 === 0).select($"doc_id"))
+      IndexLayout.Lines.delete(spark, tmp, docs.filter($"doc_id" % 7 === 0))
       paraDedupServe(spark, tmp, Tables.fanout(neu))
     }
   }
@@ -2863,8 +2755,7 @@ object TextAnalysis {
   // external phrase query reads ONLY its tokens' buckets. The verify
   // legs stay bucket-local: a phrase hit's two rows both carry query
   // tokens, so the pruned read is sufficient, not just faster. Same
-  // commit-last protocol as the line/BM25 indexes ([[lineIndexMeta]]
-  // reads the shared commits/ layout).
+  // commit-last protocol as the line/BM25 indexes (IndexLayout.Phrase).
 
   def phraseIndexWrite(docs: DataFrame, path: String, nBuckets: Int = 16): Unit =
     phraseIndexAppendRaw(docs, path, Some(nBuckets), overwrite = true)
@@ -2879,18 +2770,16 @@ object TextAnalysis {
                                           commit: Boolean = true): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val mode = if (overwrite) "overwrite" else "append"
-    val nBuckets = nBucketsOpt.getOrElse(lineIndexMeta(spark, path)._2)
-    val batchId = java.util.UUID.randomUUID.toString
-    docs.withColumn("w", toks($"text")).filter(size($"w") >= 1)
-      .select($"doc_id", posexplode($"w"))
-      .select(pmod(xxhash64($"col"), lit(nBuckets)).cast("int").as("bucket"),
-        $"col".as("token"), $"doc_id", $"pos".as("p"), lit(batchId).as("batch_id"))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode(mode).parquet(s"$path/pos")
-    if (commit)
-      Seq((batchId, nBuckets)).toDF("batch_id", "n_buckets")
-        .coalesce(1).write.mode(mode).parquet(s"$path/commits")
+    val L = IndexLayout.Phrase
+    val nBuckets = nBucketsOpt.getOrElse(L.pinned(L.log(spark, path), path, "n_buckets"))
+    L.append(spark, path, overwrite, commit) { (batchId, mode) =>
+      docs.withColumn("w", toks($"text")).filter(size($"w") >= 1)
+        .select($"doc_id", posexplode($"w"))
+        .select(pmod(xxhash64($"col"), lit(nBuckets)).cast("int").as("bucket"),
+          $"col".as("token"), $"doc_id", $"pos".as("p"), lit(batchId).as("batch_id"))
+        .repartition(col("bucket"))
+        .write.partitionBy("bucket").mode(mode).parquet(s"$path/pos")
+    }(L.row(spark, _, nBuckets))
   }
 
   /** Serve an external phrase-query panel (query_id, t1, t2) against
@@ -2903,15 +2792,15 @@ object TextAnalysis {
   def phraseServe(spark: SparkSession, path: String, queries: DataFrame,
                   k: Int = 10): DataFrame = {
     import spark.implicits._
-    val (committed, nBuckets) = lineIndexMeta(spark, path)
+    val L = IndexLayout.Phrase
+    val log = L.log(spark, path)
+    val (committed, nBuckets) = (L.batches(log), L.pinned(log, path, "n_buckets"))
     val qp = queries.localCheckpoint()
     val qTokens = qp.select($"t1".as("token"))
       .unionAll(qp.select($"t2".as("token"))).distinct().localCheckpoint()
     val buckets = IndexLayout.partitionsOf(qTokens
       .select(pmod(xxhash64($"token"), lit(nBuckets)).cast("int").as("b")))
-    val posQ = spark.read.parquet(s"$path/pos")
-      .select($"bucket".cast("int").as("bucket"), $"token", $"doc_id", $"p",
-        $"batch_id")
+    val posQ = L.read(spark, path, "pos")
       .filter($"bucket".isin(buckets: _*))
       .filter($"batch_id".isin(committed: _*))
       .join(broadcast(qTokens), Seq("token"), "left_semi")
@@ -3715,74 +3604,57 @@ object TextAnalysis {
                                    tf: Option[DataFrame] = None): Unit = {
     import docs.sparkSession.implicits._
     val spark = docs.sparkSession
-    val mode = if (overwrite) "overwrite" else "append"
-    val nBuckets = nBucketsOpt.getOrElse(rawIndexMeta(spark, path)._2)
+    val L = IndexLayout.RawBm25
+    val nBuckets = nBucketsOpt.getOrElse(rawIndexLog(spark, path)._2)
     require(nBuckets > 0, s"n_buckets must be positive, got $nBuckets")
-    // batch_id is unique PER ATTEMPT, so a re-driven append after a
-    // mid-write crash cannot collide with its orphaned first attempt
-    val batchId = java.util.UUID.randomUUID.toString
     // eager: tf feeds the postings, doclens AND the stats row. A
     // caller-provided tf table (the session memo's id-filtered slice —
     // tf rows are doc-local, so the filter commutes with the
     // tokenize) arrives checkpointed and replaces the tokenize.
     val tfT = tf.getOrElse(bm25TfTable(docs).localCheckpoint())
-    if (overwrite) {
-      // a fresh build resets the whole index — including tombstones
-      // from a previous index at the same path
-      val del = new org.apache.hadoop.fs.Path(s"$path/deletes")
-      del.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(del, true)
-    }
     // the per-doc length table feeds BOTH the doclens sidecar and the
     // stats delta — aggregate it once (one row per doc, metadata-sized)
     // instead of re-running the groupBy per write (r17 opt, guide §1.2)
     val doclens = tfT.groupBy($"doc_id").agg(first($"dl").as("dl")).localCheckpoint()
-    // 1+2. postings and the per-doc length sidecar — independent
-    // writes to disjoint dirs off checkpointed inputs; overlap them
-    // (guide §2.6). Both stay invisible until the stats row commits.
-    graft.Par.jobs(
-      () => tfT.select(pmod(xxhash64($"token"), lit(nBuckets)).cast("int").as("bucket"),
-          $"token", $"doc_id", $"dl", $"tf", lit(batchId).as("batch_id"))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode(mode).parquet(s"$path/postings"),
-      () => doclens
-        .withColumn("batch_id", lit(batchId))
-        .coalesce(1).write.mode(mode).parquet(s"$path/doclens"))
-    // 3. the stats row LAST — this single-file write is the commit
-    if (commit)
+    // batch_id is unique PER ATTEMPT, so a re-driven append after a
+    // mid-write crash cannot collide with its orphaned first attempt
+    L.append(spark, path, overwrite, commit) { (batchId, mode) =>
+      // postings and the per-doc length sidecar — independent writes to
+      // disjoint dirs off checkpointed inputs; overlap them (guide
+      // §2.6). Both stay invisible until the stats row commits.
+      graft.Par.jobs(
+        () => tfT.select(pmod(xxhash64($"token"), lit(nBuckets)).cast("int").as("bucket"),
+            $"token", $"doc_id", $"dl", $"tf", lit(batchId).as("batch_id"))
+          .repartition(col("bucket"))
+          .write.partitionBy("bucket").mode(mode).parquet(s"$path/postings"),
+        () => doclens
+          .withColumn("batch_id", lit(batchId))
+          .coalesce(1).write.mode(mode).parquet(s"$path/doclens"))
+    } { batchId =>
+      // the stats row is the commit record
       doclens
         .agg(count(lit(1)).as("n_docs_delta"),
           coalesce(sum($"dl"), lit(0L)).as("sum_dl_delta"))
         .select(lit(batchId).as("batch_id"), $"n_docs_delta", $"sum_dl_delta",
           lit(nBuckets).as("n_buckets"))
-        .coalesce(1).write.mode(mode).parquet(s"$path/stats_log")
-  }
-
-  /** The raw index's self-description, read off the stats log:
-    * (committed batch ids, bucket count). O(appends + deletes) driver
-    * rows — maintenance-cycle metadata, what a table format keeps in
-    * its manifest. The bucket count is pinned at build time and
-    * consistency-checked on every read, so an index can never be
-    * served or appended under the wrong modulus. */
-  private[graft] def rawIndexMeta(spark: SparkSession, path: String): (Seq[String], Int) = {
-    val (log, nb) = rawIndexLog(spark, path)
-    (log.map(_.batchId), nb)
+    }
   }
 
   /** One stats-log row: a committed append's (or delete's) deltas. */
   private[graft] final case class RawLogRow(batchId: String, nDocsDelta: Long,
                                             sumDlDelta: Long)
 
-  /** [[rawIndexMeta]] with the log's deltas: the whole stats log in one
-    * driver-side read ([[IndexLayout.Layout.local]], no job), so a serve
-    * derives N and avgdl without a second scan. */
+  /** The raw index's self-description, read off the stats log on the
+    * driver ([[IndexLayout.Layout.local]], no job): every committed
+    * append's and delete's deltas, so a serve derives N and avgdl
+    * without a second scan, and the bucket count — pinned at build
+    * time and consistency-checked on every read, so an index can never
+    * be served or appended under the wrong modulus. */
   private[graft] def rawIndexLog(spark: SparkSession, path: String): (Seq[RawLogRow], Int) = {
-    val rows = IndexLayout.RawBm25.local(spark, path, "stats_log")
-    val nb = rows.map(_.getAs[Int]("n_buckets")).distinct
-    require(nb.nonEmpty, s"no committed batch in $path/stats_log")
-    require(nb.length == 1,
-      s"inconsistent n_buckets in $path/stats_log: ${nb.mkString(",")}")
+    val L = IndexLayout.RawBm25
+    val rows = L.log(spark, path)
     (rows.map(r => RawLogRow(r.getAs[String]("batch_id"), r.getAs[Long]("n_docs_delta"),
-      r.getAs[Long]("sum_dl_delta"))), nb.head)
+      r.getAs[Long]("sum_dl_delta"))), L.pinned(rows, path, "n_buckets"))
   }
 
   /** (n_docs, am) of a raw index at the `committed` batch set, summed
@@ -3806,128 +3678,43 @@ object TextAnalysis {
     }
   }
 
-  /** Committed tombstones (doc_id) of a raw index — none if none
-    * were ever written — read on the driver
-    * ([[IndexLayout.Layout.local]], no job) with the committed filter
-    * applied there: bounded curation metadata. Like postings, a
-    * tombstone batch is invisible until its stats-log row commits. */
-  private[graft] def rawIndexDeletes(spark: SparkSession, path: String,
-                                     committed: Seq[String]): Seq[Long] = {
-    val keep = committed.toSet
-    IndexLayout.RawBm25.local(spark, path, "deletes").collect {
-      case r if !r.isNullAt(0) && keep(r.getString(1)) => r.getLong(0)
-    }.distinct
-  }
-
   /** DELETE docs from a raw index — the forget path a curation
     * pipeline needs (GDPR erasure, dedup-loser removal): tombstones,
-    * not rewrites. Writes the victims' ids to `deletes/` and a
+    * not rewrites ([[IndexLayout.Appendable.delete]]), committed by a
     * NEGATIVE stats-log row (computed exactly from the doclens
     * sidecar — N and Σdl shrink by precisely the victims'
     * contribution), so a from-scratch build on the surviving corpus
     * and the tombstoned index serve identical scores: idf, avgdl and
     * df all shift exactly (the gate proves it). Untouched postings
     * buckets keep their files byte-for-byte; [[bm25Vacuum]] reclaims
-    * the dead rows physically. Same commit protocol as [[bm25Append]]
-    * (tombstones first, stats row last) and idempotent by
-    * construction: already-deleted and never-indexed ids contribute
-    * nothing to the delta, so re-driving a delete is harmless. */
+    * the dead rows physically. Idempotent by construction:
+    * already-deleted and never-indexed ids contribute nothing to the
+    * delta, so re-driving a delete is harmless. */
   def bm25Delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
     import spark.implicits._
-    val (committed, nBuckets) = rawIndexMeta(spark, path)
-    val batchId = java.util.UUID.randomUUID.toString
-    val doclens = IndexLayout.RawBm25.read(spark, path, "doclens")
+    val L = IndexLayout.RawBm25
+    val (log, nBuckets) = rawIndexLog(spark, path)
+    val committed = log.map(_.batchId)
+    val victims = L.read(spark, path, "doclens")
       .filter($"batch_id".isin(committed: _*))
-    // eager: victims feed the tombstone write AND the stats delta
-    val victims = doclens.join(ids.select($"doc_id").distinct(), Seq("doc_id"))
-      .join(rawIndexDeletes(spark, path, committed).toDF("doc_id"), Seq("doc_id"), "left_anti")
-      .select($"doc_id", $"dl").localCheckpoint()
-    // 1. tombstones (invisible until the stats row commits)
-    victims.select($"doc_id", lit(batchId).as("batch_id"))
-      .coalesce(1).write.mode("append").parquet(s"$path/deletes")
-    // 2. the negative stats row LAST — the commit
-    victims.agg(count(lit(1)).as("n"), coalesce(sum($"dl"), lit(0L)).as("s"))
-      .select(lit(batchId).as("batch_id"), (-$"n").as("n_docs_delta"),
-        (-$"s").as("sum_dl_delta"), lit(nBuckets).as("n_buckets"))
-      .coalesce(1).write.mode("append").parquet(s"$path/stats_log")
-  }
-
-  /** Fraction of a raw index's posting rows that a [[bm25Vacuum]]
-    * would physically drop — tombstoned or orphaned (uncommitted)
-    * rows over total. The measure a self-tuning maintenance loop
-    * thresholds the rewrite on ([[Retention.bm25RetentionCycle]]'s
-    * ε-gate — the [[bm25RefreshIfStale]] posture generalized to the
-    * raw layout): below ε the vacuum isn't worth its write cost, so
-    * the tick skips it and the fraction simply accumulates toward the
-    * next tick. One scan reading only batch_id/doc_id (parquet prunes
-    * the rest) against metadata-sized tombstones. */
-  def bm25ReclaimableFraction(spark: SparkSession, path: String): Double = {
-    import spark.implicits._
-    val (committed, _) = rawIndexMeta(spark, path)
-    val post = IndexLayout.RawBm25.read(spark, path, "postings")
-      .select($"batch_id", $"doc_id")
-    val counts = post
-      .join(rawIndexDeletes(spark, path, committed).toDF("doc_id").withColumn("dead", lit(1)),
-        Seq("doc_id"), "left_outer")
-      .agg(count(lit(1)).as("total"),
-        sum(when($"dead".isNotNull || !$"batch_id".isin(committed: _*), 1L)
-          .otherwise(0L)).as("reclaimable"))
-      .head()
-    if (counts.getLong(0) == 0L) 0.0
-    else counts.getLong(1).toDouble / counts.getLong(0)
-  }
-
-  /** VACUUM a raw index: physically drop orphaned (uncommitted) and
-    * tombstoned postings, and defragment buckets whose file count
-    * exceeded `maxFilesPerBucket` (every append adds a file per
-    * touched bucket — the ivfCompact pathology for text). Rewrites
-    * ONLY dirty buckets via dynamic partition overwrite; clean
-    * buckets keep their files byte-for-byte. stats_log, doclens and
-    * deletes/ are retained — the log rows stay the exact record of
-    * N/Σdl (tombstone removal does not change them) and retained
-    * tombstones keep re-deletes idempotent; both are
-    * metadata-sized. A bucket drained to zero live rows has its
-    * directory dropped through the Hadoop FileSystem API. */
-  def bm25Vacuum(spark: SparkSession, path: String,
-                 maxFilesPerBucket: Int = 1): Unit =
-      graft.sources.Lake.withWriterLock(spark, path, "bm25Vacuum") {
-    // retention: a live reader pin means some snapshot still
-    // references tombstoned/orphaned rows — reclaiming them now would
-    // corrupt that pinned view, so refuse and let the caller retry
-    graft.sources.Lake.requireUnpinned(spark, path, "bm25Vacuum")
-    import spark.implicits._
-    val (committed, _) = rawIndexMeta(spark, path)
-    val post = IndexLayout.RawBm25.read(spark, path, "postings")
-    val del = rawIndexDeletes(spark, path, committed).toDF("doc_id")
-    // dirty = has orphan or tombstoned rows (one scan that reads only
-    // bucket/batch_id/doc_id — parquet prunes the rest) ∪ fragmented
-    // (driver listing, O(buckets) metadata like a format manifest)
-    val dirty = IndexLayout.partitionsOf(
-      post.join(del, Seq("doc_id"), "left_semi").select($"bucket")
-        .unionAll(post.filter(!$"batch_id".isin(committed: _*)).select($"bucket"))).toSet
-    val postingsPath = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val fs = postingsPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val fragmented = graft.sources.Lake.fragmentedPartitions(
-      spark, s"$path/postings", "bucket", maxFilesPerBucket)
-    val targets = dirty ++ fragmented
-    if (targets.nonEmpty) {
-      // eager: the rewrite replaces the very files being read
-      val clean = post.filter($"bucket".isin(targets.toSeq: _*))
-        .filter($"batch_id".isin(committed: _*))
-        .join(del, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      clean.repartition(col("bucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(s"$path/postings")
-      // a target bucket with zero surviving rows writes no partition —
-      // drop its stale directory explicitly
-      val stillThere = IndexLayout.partitionsOf(clean.select($"bucket")).toSet
-      (targets -- stillThere).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/postings/bucket=$b"), true)
-      }
+      .join(ids.select($"doc_id").distinct(), Seq("doc_id"))
+      .select($"doc_id", $"dl")
+    L.delete(spark, path, victims, committed, eager = true) { (batchId, fresh) =>
+      fresh.agg(count(lit(1)).as("n"), coalesce(sum($"dl"), lit(0L)).as("s"))
+        .select(lit(batchId).as("batch_id"), (-$"n").as("n_docs_delta"),
+          (-$"s").as("sum_dl_delta"), lit(nBuckets).as("n_buckets"))
     }
   }
+
+  /** VACUUM a raw index ([[IndexLayout.Appendable.vacuum]]): drop
+    * orphaned (uncommitted) and tombstoned postings and defragment
+    * buckets past `maxFilesPerBucket` (every append adds a file per
+    * touched bucket), rewriting only those buckets. stats_log, doclens
+    * and deletes/ are retained — the log rows stay the exact record of
+    * N/Σdl (tombstone removal does not change them). */
+  def bm25Vacuum(spark: SparkSession, path: String,
+                 maxFilesPerBucket: Int = 1): Unit =
+    IndexLayout.RawBm25.vacuum(spark, path, maxFilesPerBucket)
 
   /** The raw index's current committed batch set — pass it back into
     * [[bm25ServeRaw]] as `snapshot` to pin a serve (or a whole query
@@ -3941,7 +3728,7 @@ object TextAnalysis {
     * vacuum refuses to reclaim while the pin is live, and the pin
     * expires by TTL if the reader crashes. */
   def bm25Snapshot(spark: SparkSession, path: String): Seq[String] =
-    rawIndexMeta(spark, path)._1
+    IndexLayout.RawBm25.committed(spark, path)
 
   /** Serve BM25 from a raw appendable index: global stats summed from
     * the log rows the manifest read already collected
@@ -3966,7 +3753,7 @@ object TextAnalysis {
     val (log, nBuckets) = rawIndexLog(spark, path)
     val committed = snapshot.getOrElse(log.map(_.batchId))
     val (nDocs, am) = rawIndexStats(log, committed)
-    val dead = rawIndexDeletes(spark, path, committed)
+    val dead = IndexLayout.RawBm25.tombstones(spark, path, committed)
     queries match {
       case Some(q) =>
         graft.sources.IndexProbe.bm25Raw(path, q, nBuckets, committed, dead, nDocs, am,
@@ -4789,15 +4576,18 @@ object TextAnalysis {
                                   commit: Boolean = true): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val mode = if (overwrite) "overwrite" else "append"
-    val batchId = java.util.UUID.randomUUID.toString
-    knBigramTypes(docs)
-      .select($"w1", $"w2", ($"cb" * lit(sign)).as("cb"),
-        lit(batchId).as("batch_id"))
-      .write.mode(mode).parquet(s"$path/counts")
-    if (commit)
-      Seq(batchId).toDF("batch_id")
-        .coalesce(1).write.mode(mode).parquet(s"$path/commits")
+    knStoreLand(knBigramTypes(docs).select($"w1", $"w2", ($"cb" * lit(sign)).as("cb")),
+      path, overwrite, commit)
+  }
+
+  /** Land (w1, w2, cb) count rows as one committed batch. */
+  private def knStoreLand(counts: DataFrame, path: String, overwrite: Boolean,
+                          commit: Boolean): Unit = {
+    val spark = counts.sparkSession
+    val L = IndexLayout.KnCounts
+    L.append(spark, path, overwrite, commit) { (batchId, mode) =>
+      counts.withColumn("batch_id", lit(batchId)).write.mode(mode).parquet(s"$path/counts")
+    }(L.row(spark, _))
   }
 
   /** The merged LM count table: committed deltas summed per bigram
@@ -4805,9 +4595,9 @@ object TextAnalysis {
     * One type-bounded aggregate — never a corpus read. */
   private[graft] def knStoreCounts(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val committed = spark.read.parquet(s"$path/commits").select($"batch_id")
-    spark.read.parquet(s"$path/counts")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
+    val L = IndexLayout.KnCounts
+    L.read(spark, path, "counts")
+      .filter($"batch_id".isin(L.committed(spark, path): _*))
       .groupBy($"w1", $"w2").agg(sum($"cb").as("cb"))
       .filter($"cb" > 0L)
   }
@@ -4825,15 +4615,9 @@ object TextAnalysis {
     * delta rows every merge re-reads). Merge-preserving by
     * construction; the eager checkpoint frees the read before the
     * overwrite lands. */
-  def knStoreVacuum(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val live = knStoreCounts(spark, path).localCheckpoint()
-    val batchId = java.util.UUID.randomUUID.toString
-    live.select($"w1", $"w2", $"cb", lit(batchId).as("batch_id"))
-      .write.mode("overwrite").parquet(s"$path/counts")
-    Seq(batchId).toDF("batch_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/commits")
-  }
+  def knStoreVacuum(spark: SparkSession, path: String): Unit =
+    knStoreLand(knStoreCounts(spark, path).localCheckpoint(), path,
+      overwrite = true, commit = true)
 
   /** C21i `kn_append` gate — build the store as a nightly lifecycle
     * would (60% initial write, two appends, retract every 7th doc)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.IndexLayout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -197,16 +198,16 @@ object Url {
   def urlDedupServe(spark: SparkSession, path: String,
                     links: DataFrame): DataFrame = {
     import spark.implicits._
-    val (committed, nBuckets) = TextAnalysis.lineIndexMeta(spark, path)
-    val dead = TextAnalysis.lineIndexDeletes(spark, path, committed)
+    val L = IndexLayout.Lines
+    val log = L.log(spark, path)
+    val (committed, nBuckets) = (L.batches(log), L.pinned(log, path, "n_buckets"))
+    val dead = L.tombstones(spark, path, committed).toDF("doc_id")
     val neu = canonicalizeOf(links).select($"doc_id", $"canonical_url")
       .localCheckpoint()
-    val buckets = neu
-      .select(pmod(xxhash64($"canonical_url"), lit(nBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val refRows = spark.read.parquet(s"$path/lines")
-      .select($"bucket".cast("int").as("bucket"),
-        $"line".as("canonical_url"), $"doc_id", $"batch_id")
+    val buckets = IndexLayout.partitionsOf(neu
+      .select(pmod(xxhash64($"canonical_url"), lit(nBuckets)).cast("int").as("b")))
+    val refRows = L.read(spark, path, "lines")
+      .withColumnRenamed("line", "canonical_url")
       .filter($"bucket".isin(buckets: _*))
       .filter($"batch_id".isin(committed: _*))
       .join(broadcast(dead), Seq("doc_id"), "left_anti")
@@ -236,8 +237,7 @@ object Url {
     graft.sources.Lake.withScratchIndex(spark, "graft_url_idx") { tmp =>
       urlIndexWrite(Tables.fanout(ref.filter($"doc_id" <= cut)), tmp)
       urlIndexAppend(Tables.fanout(ref.filter($"doc_id" > cut)), tmp)
-      TextAnalysis.lineIndexDelete(spark, tmp,
-        all.filter($"doc_id" % 7 === 0).select($"doc_id"))
+      IndexLayout.Lines.delete(spark, tmp, all.filter($"doc_id" % 7 === 0))
       urlDedupServe(spark, tmp, Tables.fanout(neu))
     }
   }

@@ -385,7 +385,7 @@ class Bm25Spec extends AnyFunSuite {
     // r10's serve hardcoded nBuckets=16: an 8-bucket index routed
     // external queries to the wrong dirs and silently dropped postings
     operators.TextAnalysis.bm25WriteRaw(docs, idx.getAbsolutePath, nBuckets = 8)
-    val meta = operators.TextAnalysis.rawIndexMeta(s, idx.getAbsolutePath)
+    val meta = operators.TextAnalysis.rawIndexLog(s, idx.getAbsolutePath)
     assert(meta._2 == 8, s"stats log must persist the bucket count, got ${meta._2}")
     val q = operators.TextAnalysis.bm25TfTable(docs)
       .filter(col("doc_id") === 7).select(lit(901L).as("query_id"), col("token"))

@@ -139,7 +139,7 @@ class ConfigMetricsSpec extends AnyFunSuite {
     assert(outcomes(s"catalog:$cat") == "Swept", s"$outcomes")
     // the tick really maintained: expired docs out + physically clean,
     // lake repacked, catalog's superseded epoch gone
-    assert(operators.TextAnalysis.bm25ReclaimableFraction(s, idx) == 0.0)
+    assert(graft.sources.IndexLayout.RawBm25.reclaimableFraction(s, idx) == 0.0)
     assert(operators.TextAnalysis.bm25ServeRaw(s, idx, qMod = 1)
       .filter($"doc_id" < 10).count() == 0, "expired docs must not serve")
     assert(new java.io.File(lake).listFiles()

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Similarity, TextAnalysis}
+import graft.operators.{Multimodal, NearDup, Similarity, TextAnalysis}
 import graft.sources.{IndexLayout, IndexRoute, Lake}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -52,9 +52,31 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("vec_id", $"vec_id" + 1000000L))
     Similarity.ivfDelete(spark, ivf, emb.filter($"vec_id" % 9 === 0))
     Similarity.pqAttach(spark, ivf)
-    scratch ++= Seq(impact, raw, ivf)
+    val lines = tmp("graft_layout_lines")
+    TextAnalysis.lineIndexWrite(docs.filter($"doc_id" <= cut), lines)
+    TextAnalysis.lineIndexAppend(docs.filter($"doc_id" > cut), lines)
+    IndexLayout.Lines.delete(spark, lines, docs.filter($"doc_id" % 7 === 0))
+    val phrase = tmp("graft_layout_phrase")
+    TextAnalysis.phraseIndexWrite(docs.filter($"doc_id" <= cut), phrase)
+    TextAnalysis.phraseIndexAppend(docs.filter($"doc_id" > cut), phrase)
+    val sig = tmp("graft_layout_sig")
+    NearDup.dedupIndexWrite(docs.filter($"doc_id" <= cut), sig)
+    NearDup.dedupIndexAppend(docs.filter($"doc_id" > cut), sig)
+    IndexLayout.DedupSig.delete(spark, sig, docs.filter($"doc_id" % 7 === 0))
+    val phash = tmp("graft_layout_phash")
+    val bmp = Multimodal.bmpTable(spark, sf).select($"doc_id", $"payload")
+    val bcut = bmp.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    Multimodal.phashIndexWrite(bmp.filter($"doc_id" <= bcut), phash)
+    Multimodal.phashIndexAppend(bmp.filter($"doc_id" > bcut), phash)
+    IndexLayout.Phash.delete(spark, phash, bmp.filter($"doc_id" % 5 === 0))
+    val kn = tmp("graft_layout_kn")
+    TextAnalysis.knStoreWrite(docs.filter($"doc_id" <= cut), kn)
+    TextAnalysis.knStoreAppend(docs.filter($"doc_id" > cut), kn)
+    scratch ++= Seq(impact, raw, ivf, lines, phrase, sig, phash, kn)
     Seq(IndexLayout.ImpactBm25 -> Lake.currentVersionDir(spark, impact).get,
-      IndexLayout.RawBm25 -> raw, IndexLayout.Ivf -> ivf, IndexLayout.Pq -> ivf)
+      IndexLayout.RawBm25 -> raw, IndexLayout.Ivf -> ivf, IndexLayout.Pq -> ivf,
+      IndexLayout.Lines -> lines, IndexLayout.Phrase -> phrase, IndexLayout.DedupSig -> sig,
+      IndexLayout.Phash -> phash, IndexLayout.KnCounts -> kn)
   }
 
   private val scratch = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -132,7 +154,11 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(layout.local(spark, s"$none/absent", dir).isEmpty, s"${layout.name} $dir")
     for ((layout, dir) <- Seq(IndexLayout.ImpactBm25 -> "postings",
         IndexLayout.RawBm25 -> "postings", IndexLayout.Ivf -> "lists",
-        IndexLayout.Pq -> "pq/codes", IndexLayout.RawBm25 -> "doclens")) {
+        IndexLayout.Pq -> "pq/codes", IndexLayout.RawBm25 -> "doclens",
+        IndexLayout.Lines -> "lines", IndexLayout.Phrase -> "pos",
+        IndexLayout.DedupSig -> "postings", IndexLayout.DedupSig -> "sizes",
+        IndexLayout.DedupSig -> "dfs", IndexLayout.DedupSig -> "hotcand",
+        IndexLayout.Phash -> "bands", IndexLayout.KnCounts -> "counts")) {
       val e = intercept[IllegalArgumentException](layout.local(spark, none, dir))
       assert(e.getMessage.contains(s"$dir is not a metadata directory"))
     }
@@ -150,6 +176,208 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(_.getAs[Int]("sub")).sorted == Seq(0, 1))
     val expected = IndexLayout.Pq.read(spark, root, "pq/books").collect().toSeq
     assert(rows.diff(expected).isEmpty && expected.diff(rows).isEmpty)
+  }
+
+  /** One appendable layout driven through the shared protocol steps:
+    * `build` writes and appends two committed batches, `torn` lands a
+    * batch without its commit row, `delete` tombstones ids (None for a
+    * layout without tombstones), `vacuum` is the family's reclaim, and
+    * `serve` answers from the committed state, its index ids picked
+    * out by `ids`. */
+  private case class Walk(layout: IndexLayout.Appendable, build: String => Unit,
+                          torn: String => Unit, delete: Option[(String, Seq[Long]) => Unit],
+                          vacuum: String => Unit, serve: String => Set[Row],
+                          ids: Row => Seq[Long])
+
+  /** The files of every partition directory of `layout`'s data
+    * directory: partition value -> (file name -> bytes). */
+  private def partitionFiles(layout: IndexLayout.Appendable,
+                             root: String): Map[Int, Map[String, Seq[Byte]]] = {
+    val part = layout.part.get
+    val dirs = Option(new java.io.File(s"$root/${layout.data}").listFiles()).toSeq.flatten
+      .filter(d => d.isDirectory && d.getName.startsWith(s"$part="))
+    dirs.map { d =>
+      d.getName.stripPrefix(s"$part=").toInt -> d.listFiles().filter(_.isFile).map(f =>
+        f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    }.toMap
+  }
+
+  test("shared protocol: every appendable layout hides a torn append, tombstones idempotently, and vacuums to zero dead weight") {
+    val words = Seq("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta")
+    val docs = (0 until 30).map { i =>
+      (i.toLong, (0 until 9).map(j => words((i * 7 + j * j + i * j) % 8))
+        .grouped(3).map(_.mkString(" ")).mkString(" the "))
+    }.toDF("doc_id", "text")
+    val first = docs.filter($"doc_id" < 20)
+    val second = docs.filter($"doc_id" >= 20)
+    // novel tokens, lines and shingles: the torn batch's rows land in
+    // partitions no committed row shares
+    val late = Seq((500L, "omega psi chi the phi rho sigma the tau upsilon nu"))
+      .toDF("doc_id", "text")
+    val twins = docs.filter($"doc_id" % 4 === 1).select(($"doc_id" + 1000L).as("doc_id"), $"text")
+    val emb = Tables.embeddings(spark, sf)
+    val bmp = Multimodal.bmpTable(spark, sf).select($"doc_id", $"payload")
+    val bcut = bmp.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val phrases = Seq((1L, "alpha", "beta"), (2L, "gamma", "delta"), (3L, "eta", "theta"))
+      .toDF("query_id", "t1", "t2")
+    def set(df: DataFrame): Set[Row] = df.collect().toSet
+    def ids(cols: String*)(r: Row): Seq[Long] = cols.map(c => r.getAs[Long](c))
+    val walks = Seq(
+      Walk(IndexLayout.RawBm25,
+        p => { TextAnalysis.bm25WriteRaw(first, p, nBuckets = 256)
+          TextAnalysis.bm25Append(second, p) },
+        p => TextAnalysis.bm25AppendRaw(late, p, None, overwrite = false, commit = false),
+        Some((p, v) => TextAnalysis.bm25Delete(spark, p, v.toDF("doc_id"))),
+        p => TextAnalysis.bm25Vacuum(spark, p, 1000),
+        p => set(TextAnalysis.bm25ServeRaw(spark, p, qMod = 1)), ids("query_id", "doc_id")),
+      Walk(IndexLayout.Ivf,
+        p => { Similarity.ivfWriteFrom(emb.filter($"vec_id" < 300), p)
+          Similarity.ivfAppend(spark, p, emb.filter($"vec_id" >= 300 && $"vec_id" < 400)) },
+        p => Similarity.ivfAppendRaw(spark, p, emb.filter($"vec_id" >= 400), commit = false),
+        Some((p, v) => Similarity.ivfDelete(spark, p, v.toDF("vec_id"))),
+        p => Similarity.ivfCompact(spark, p, 1000),
+        p => set(Similarity.annIvfServe(spark, p, nprobe = 16, k = 5, nQueries = 1000)),
+        ids("query_id", "neighbor_id")),
+      Walk(IndexLayout.Lines,
+        p => { TextAnalysis.lineIndexWrite(first, p, nBuckets = 256)
+          TextAnalysis.lineIndexAppend(second, p) },
+        p => TextAnalysis.lineIndexAppendRaw(late, p, None, overwrite = false, commit = false),
+        Some((p, v) => IndexLayout.Lines.delete(spark, p, v.toDF("doc_id"))),
+        p => IndexLayout.Lines.vacuum(spark, p, 1000),
+        p => set(TextAnalysis.lineDedupServe(spark, p, twins)), _ => Nil),
+      Walk(IndexLayout.Phrase,
+        p => { TextAnalysis.phraseIndexWrite(first, p, nBuckets = 256)
+          TextAnalysis.phraseIndexAppend(second, p) },
+        p => TextAnalysis.phraseIndexAppendRaw(late, p, None, overwrite = false,
+          commit = false),
+        None,
+        p => IndexLayout.Phrase.vacuum(spark, p, 1000),
+        p => set(TextAnalysis.phraseServe(spark, p, phrases, k = 100)), ids("doc_id")),
+      Walk(IndexLayout.DedupSig,
+        p => { NearDup.dedupIndexWrite(first, p, nBuckets = 256)
+          NearDup.dedupIndexAppend(second, p) },
+        p => NearDup.dedupIndexAppendRaw(late, p, None, overwrite = false, commit = false),
+        Some((p, v) => IndexLayout.DedupSig.delete(spark, p, v.toDF("doc_id"))),
+        p => NearDup.dedupIndexVacuum(spark, p, 1000),
+        p => set(NearDup.dedupServe(spark, p, twins, threshold = 0.3)), ids("ref_id")),
+      Walk(IndexLayout.Phash,
+        p => { Multimodal.phashIndexWrite(bmp.filter($"doc_id" <= bcut), p, nBuckets = 1024)
+          Multimodal.phashIndexAppend(bmp.filter($"doc_id" > bcut && $"doc_id" % 2 === 0), p) },
+        p => Multimodal.phashIndexAppendRaw(bmp.filter($"doc_id" > bcut && $"doc_id" % 2 =!= 0),
+          p, None, overwrite = false, commit = false),
+        Some((p, v) => IndexLayout.Phash.delete(spark, p, v.toDF("doc_id"))),
+        p => IndexLayout.Phash.vacuum(spark, p, 1000),
+        p => set(Multimodal.mmPhashServe(spark, p, Multimodal.bmpTwinTable(spark, sf))),
+        r => Seq(r.getAs[Long]("id1"), r.getAs[Long]("id2"))))
+    for (w <- walks) {
+      val L = w.layout
+      val root = tmp("graft_walk")
+      scratch += root
+      w.build(root)
+      assert(L.reclaimableFraction(spark, root) == 0.0, s"$L: a fresh build holds no dead rows")
+      val answer = w.serve(root)
+      assert(answer.nonEmpty, s"$L: the walk's serve answers")
+      // a torn append: rows landed, commit row absent
+      w.torn(root)
+      assert(w.serve(root) == answer, s"$L: a torn append is invisible")
+      assert(L.reclaimableFraction(spark, root) > 0.0, s"$L: torn rows are reclaimable")
+      val committed = L.committed(spark, root)
+      val rows = L.read(spark, root, L.data)
+      val part = col(L.part.get)
+      val id = col(L.id.get)
+      // the sparsest committed partition's ids: tombstoning them drains it
+      val victims = w.delete.fold(Seq.empty[Long]) { del =>
+        val sparse = rows.filter(col(L.batch).isin(committed: _*))
+          .groupBy(part).agg(countDistinct(id).as("n")).orderBy($"n", part).head().getInt(0)
+        val v = rows.filter(part === sparse && col(L.batch).isin(committed: _*))
+          .select(id).distinct().as[Long].collect().toSeq
+        del(root, v)
+        val dead = L.tombstones(spark, root, L.committed(spark, root)).toSet
+        assert(v.toSet.subsetOf(dead), s"$L: the victims are tombstoned")
+        val deletes = L.read(spark, root, "deletes").count()
+        val hidden = w.serve(root)
+        assert(hidden.forall(r => w.ids(r).forall(i => !v.contains(i))), s"$L: a delete hides its victims")
+        del(root, v)
+        assert(L.read(spark, root, "deletes").count() == deletes, s"$L: a re-delete adds no tombstone")
+        assert(w.serve(root) == hidden, s"$L: a re-delete is a no-op")
+        v
+      }
+      val served = w.serve(root)
+      val live = L.committed(spark, root)
+      val dirty = IndexLayout.partitionsOf(rows.filter(!col(L.batch).isin(live: _*) ||
+        id.isin(victims: _*)).select(part)).toSet
+      val drained = dirty -- IndexLayout.partitionsOf(rows.filter(col(L.batch).isin(live: _*) &&
+        !id.isin(victims: _*)).select(part))
+      assert(drained.nonEmpty, s"$L: the walk drains a partition")
+      val files = partitionFiles(L, root)
+      val pin = Lake.pinSnapshot(spark, root, owner = "walk")
+      intercept[Lake.PinnedSnapshotException](w.vacuum(root))
+      assert(partitionFiles(L, root) == files, s"$L: a refused vacuum rewrites nothing")
+      Lake.releasePin(spark, root, pin)
+      w.vacuum(root)
+      assert(L.reclaimableFraction(spark, root) == 0.0, s"$L: vacuum reclaims every dead row")
+      val after = partitionFiles(L, root)
+      assert(drained.forall(p => !after.contains(p)), s"$L: drained partitions are dropped")
+      assert(files.keySet -- dirty == after.keySet -- dirty &&
+        (files.keySet -- dirty).forall(p => files(p) == after(p)),
+        s"$L: clean partitions keep their files byte-for-byte")
+      assert(w.serve(root) == served, s"$L: vacuum serves the same answer")
+    }
+  }
+
+  test("shared protocol: the PQ sidecar and the KN count store hide a torn write and vacuum it away") {
+    val emb = Tables.embeddings(spark, sf)
+    val ivf = tmp("graft_walk_pq")
+    val kn = tmp("graft_walk_kn")
+    scratch ++= Seq(ivf, kn)
+    Similarity.ivfWriteFrom(emb.filter($"vec_id" < 300), ivf)
+    Similarity.pqAttach(spark, ivf, m = 4, kpq = 8)
+    Similarity.ivfAppend(spark, ivf, emb.filter($"vec_id" >= 300 && $"vec_id" < 340))
+    val gap = Similarity.pqCoverageGap(spark, ivf)
+    assert(gap == 40L)
+    Similarity.pqRefreshRaw(spark, ivf, commit = false)
+    assert(Similarity.pqCoverageGap(spark, ivf) == gap, "torn PQ codes are invisible")
+    val codes = IndexLayout.Pq.read(spark, ivf, "pq/codes").count()
+    val pin = Lake.pinSnapshot(spark, ivf, owner = "walk")
+    intercept[Lake.PinnedSnapshotException](Similarity.pqVacuum(spark, ivf, 1000))
+    Lake.releasePin(spark, ivf, pin)
+    Similarity.pqVacuum(spark, ivf, 1000)
+    assert(IndexLayout.Pq.read(spark, ivf, "pq/codes").count() == codes - gap,
+      "the PQ vacuum drops the torn codes")
+    Similarity.pqRefresh(spark, ivf)
+    assert(Similarity.pqCoverageGap(spark, ivf) == 0L)
+    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
+    TextAnalysis.knStoreWrite(docs, kn)
+    val counts = TextAnalysis.knStoreCounts(spark, kn).collect().toSet
+    TextAnalysis.knStoreDelta(docs.limit(5), kn, overwrite = false, sign = 1L, commit = false)
+    assert(TextAnalysis.knStoreCounts(spark, kn).collect().toSet == counts,
+      "a torn KN delta is invisible")
+    TextAnalysis.knStoreVacuum(spark, kn)
+    assert(IndexLayout.KnCounts.committed(spark, kn).size == 1)
+    assert(IndexLayout.KnCounts.read(spark, kn, "counts").count() == counts.size,
+      "the KN vacuum keeps only the merged live counts")
+    assert(TextAnalysis.knStoreCounts(spark, kn).collect().toSet == counts)
+  }
+
+  test("drift guard: the commit-log protocol lives in IndexLayout only") {
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala"))
+      .filter(_.getFileName.toString != "IndexLayout.scala").toSeq
+    val overwrites = for (p <- sources;
+                          (line, n) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+                          if line.contains("partitionOverwriteMode")) yield (p, n)
+    // ivfRetrain alone rewrites partitions itself: it commits first
+    assert(overwrites.map(_._1.getFileName.toString) == Seq("Similarity.scala") &&
+      overwrites.forall { case (p, n) =>
+        java.nio.file.Files.readAllLines(p).asScala.take(n).reverse
+          .find(_.trim.startsWith("def ")).exists(_.contains("def ivfRetrain")) },
+      s"partition rewrites go through IndexLayout.Appendable.rewrite: $overwrites")
+    val metaReads = "read\\s*\\.\\s*parquet\\([^)]*/(commits|deletes|stats_log)".r
+    val offenders = sources.filter(p => metaReads.findFirstIn(java.nio.file.Files.readString(p))
+      .isDefined)
+    assert(offenders.isEmpty,
+      s"commit logs and tombstones are read through IndexLayout: ${offenders.mkString(", ")}")
   }
 
   test("bm25 router: driver buckets equal SQL pmod(xxhash64(token), n)") {
@@ -264,8 +492,8 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the maintenance indexes: the tombstoned raw and IVF indexes
     val raw = built.collectFirst { case (IndexLayout.RawBm25, root) => root }.get
     val ivfDel = built.collectFirst { case (IndexLayout.Ivf, root) => root }.get
-    assert(TextAnalysis.rawIndexDeletes(spark, raw, TextAnalysis.bm25Snapshot(spark, raw))
-      .nonEmpty && Similarity.ivfTombstones(spark, ivfDel, Similarity.ivfSnapshot(spark, ivfDel))
+    assert(IndexLayout.RawBm25.tombstones(spark, raw, TextAnalysis.bm25Snapshot(spark, raw))
+      .nonEmpty && IndexLayout.Ivf.tombstones(spark, ivfDel, Similarity.ivfSnapshot(spark, ivfDel))
       .nonEmpty, "the maintenance indexes carry committed tombstones")
     val rawToks = IndexLayout.RawBm25.read(spark, raw, "postings").select($"token")
       .orderBy($"token").limit(2).as[String].collect().toSeq

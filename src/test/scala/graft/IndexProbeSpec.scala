@@ -115,7 +115,7 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (log, _) = TextAnalysis.rawIndexLog(spark, path)
     val committed = snapshot.getOrElse(log.map(_.batchId))
     val (nDocs, am) = TextAnalysis.rawIndexStats(log, committed)
-    val dead = TextAnalysis.rawIndexDeletes(spark, path, committed)
+    val dead = IndexLayout.RawBm25.tombstones(spark, path, committed)
     val live = IndexLayout.RawBm25.read(spark, path, "postings")
       .filter($"batch_id".isin(committed: _*))
       .join(dead.toDF("doc_id"), Seq("doc_id"), "left_anti")
@@ -142,7 +142,7 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val torn = post.filter($"doc_id" > tornFrom).select($"token").as[String].head()
     val q = bm25Batch(toks.take(4) :+ toks.last)
       .unionAll(Seq((7L, torn), (7L, toks(1))).toDF("query_id", "token"))
-    assert(TextAnalysis.rawIndexDeletes(spark, path, TextAnalysis.bm25Snapshot(spark, path))
+    assert(IndexLayout.RawBm25.tombstones(spark, path, TextAnalysis.bm25Snapshot(spark, path))
       .nonEmpty)
     for (k <- Seq(1, 4, 1000); dfCap <- Seq(2, 100)) {
       val got = assertSame(
@@ -198,7 +198,7 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
                       excludeSelf: Boolean,
                       path: String = ivfIndex._1): (() => DataFrame, () => DataFrame) = {
     val committed = Similarity.ivfSnapshot(spark, path)
-    val dead = Similarity.ivfTombstones(spark, path, committed)
+    val dead = IndexLayout.Ivf.tombstones(spark, path, committed)
     val probe = () => IndexProbe.ivf(spark, path, committed, dead, batch,
       StructField("query_id", LongType), k, shortlist, excludeSelf)
     val plan = () => {
@@ -215,7 +215,7 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("IVF: the probe equals ivfScore and ivfScoreRerank with tied cosines, under ANSI on and off") {
     val (path, vecs) = ivfIndex
-    assert(Similarity.ivfTombstones(spark, path, Similarity.ivfSnapshot(spark, path)).size == 3)
+    assert(IndexLayout.Ivf.tombstones(spark, path, Similarity.ivfSnapshot(spark, path)).size == 3)
     val cells = Similarity.liveLists(spark, path).select($"cell").distinct().as[Int]
       .collect().sorted.toSeq
     assert(cells.size > 2)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.Lake
+import graft.sources.{IndexLayout, Lake}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -336,7 +336,7 @@ class LakeSpec extends AnyFunSuite {
       .toDF("doc_id", "ingested")
     val cutoff = lit("2026-01-01").cast("date")
     operators.TextAnalysis.bm25WriteRaw(docs, idx)
-    assert(operators.TextAnalysis.bm25ReclaimableFraction(s, idx) == 0.0,
+    assert(IndexLayout.RawBm25.reclaimableFraction(s, idx) == 0.0,
       "a fresh index has nothing to reclaim")
     val rowsBefore = s.read.parquet(s"$idx/postings").count()
     val m = new Metrics(s)
@@ -350,7 +350,7 @@ class LakeSpec extends AnyFunSuite {
     val served = operators.TextAnalysis.bm25ServeRaw(s, idx, qMod = 1)
     assert(served.filter($"doc_id" < 2).count() == 0,
       "expired docs must stop serving even when the reclaim is skipped")
-    val frac = operators.TextAnalysis.bm25ReclaimableFraction(s, idx)
+    val frac = IndexLayout.RawBm25.reclaimableFraction(s, idx)
     assert(frac > 0.0 && frac < 0.5,
       s"the dead weight must be measurable and below the gate: $frac")
     // the same tick at a lower threshold pays the rewrite
@@ -358,7 +358,7 @@ class LakeSpec extends AnyFunSuite {
       maxFilesPerBucket = 1000, minReclaim = 0.01, metrics = Some(m))
       == operators.Retention.Reclaimed)
     assert(s.read.parquet(s"$idx/postings").count() < rowsBefore)
-    assert(operators.TextAnalysis.bm25ReclaimableFraction(s, idx) == 0.0,
+    assert(IndexLayout.RawBm25.reclaimableFraction(s, idx) == 0.0,
       "after the vacuum the reclaimable fraction must read zero")
     // the phases landed as named metric scopes (the operational trail)
     val names = m.snapshot.map(_.name)
@@ -369,11 +369,11 @@ class LakeSpec extends AnyFunSuite {
     val ivf = java.nio.file.Files.createTempDirectory("graft_eps_ivf").toString
     val emb = Tables.embeddings(s, sf)
     operators.Similarity.ivfWriteFrom(emb, ivf)
-    assert(operators.Similarity.ivfReclaimableFraction(s, ivf) == 0.0)
+    assert(IndexLayout.Ivf.reclaimableFraction(s, ivf) == 0.0)
     val n = emb.count()
     operators.Similarity.ivfDelete(s, ivf, emb.filter($"vec_id" % 10 === 0)
       .select($"vec_id"))
-    val ifrac = operators.Similarity.ivfReclaimableFraction(s, ivf)
+    val ifrac = IndexLayout.Ivf.reclaimableFraction(s, ivf)
     assert(math.abs(ifrac - emb.filter($"vec_id" % 10 === 0).count().toDouble / n) < 1e-9,
       s"the ivf fraction must equal the tombstoned share: $ifrac")
     val vmeta = emb.select($"vec_id".as("doc_id"))
@@ -383,7 +383,7 @@ class LakeSpec extends AnyFunSuite {
       "a tombstoned share below ε must not pay the cell rewrite")
     assert(operators.Retention.ivfRetentionCycle(s, ivf, vmeta, "ingested", cutoff,
       maxFilesPerCell = 1000, minReclaim = 0.05) == operators.Retention.Reclaimed)
-    assert(operators.Similarity.ivfReclaimableFraction(s, ivf) == 0.0)
+    assert(IndexLayout.Ivf.reclaimableFraction(s, ivf) == 0.0)
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(idx), true)
@@ -550,7 +550,7 @@ class LakeSpec extends AnyFunSuite {
     // fractions can't see
     (0 until 3).foreach(i => operators.NearDup.dedupIndexAppend(
       docs.select(($"doc_id" + (1000L * (i + 1))).as("doc_id"), $"text"), idx))
-    assert(operators.NearDup.dedupIndexReclaimableFraction(s, idx) == 0.0,
+    assert(IndexLayout.DedupSig.reclaimableFraction(s, idx) == 0.0,
       "no posting is dead — only the dfs history grew")
     val frac = operators.NearDup.dedupDfsReclaimableFraction(s, idx)
     assert(frac > 0.5, s"3 same-content appends must bloat dfs: $frac")
@@ -599,13 +599,13 @@ class LakeSpec extends AnyFunSuite {
     val lightServe = operators.TextAnalysis.bm25ServeRaw(s, light, qMod = 1)
     assert(lightServe.filter($"doc_id" < 2).count() == 0,
       "a deferred index's expiry must still serve-mask immediately")
-    assert(operators.TextAnalysis.bm25ReclaimableFraction(s, heavy) == 0.0)
-    assert(operators.TextAnalysis.bm25ReclaimableFraction(s, light) > 0.0)
+    assert(IndexLayout.RawBm25.reclaimableFraction(s, heavy) == 0.0)
+    assert(IndexLayout.RawBm25.reclaimableFraction(s, light) > 0.0)
     // sweep 2: the deferred reclaim lands; the already-clean index
     // skips (no dead weight, no fragmentation at this threshold)
     val r2 = Retention.retentionSweep(s, fleet, maxReclaims = 1)
     assert(r2 == Map("light" -> Retention.Reclaimed, "heavy" -> Retention.Skipped), s"$r2")
-    assert(operators.TextAnalysis.bm25ReclaimableFraction(s, light) == 0.0)
+    assert(IndexLayout.RawBm25.reclaimableFraction(s, light) == 0.0)
     // a pinned index defers even inside the budget
     operators.TextAnalysis.bm25Delete(s, heavy,
       (10 until 12).map(_.toLong).toDF("doc_id"))
@@ -741,15 +741,15 @@ class LakeSpec extends AnyFunSuite {
     val r1 = Retention.retentionSweep(s, fleet)
     assert(r1.values.forall(_ == Retention.Reclaimed), s"sweep 1: $r1")
     // every family is physically clean and serving only survivors
-    assert(TextAnalysis.bm25ReclaimableFraction(s, raw) == 0.0)
+    assert(IndexLayout.RawBm25.reclaimableFraction(s, raw) == 0.0)
     assert(TextAnalysis.bm25ServeRaw(s, raw, qMod = 1)
       .filter($"doc_id" % 2 === 0).count() == 0, "raw must not serve expired docs")
     assert(TextAnalysis.bm25DeletedFraction(s, imp) == 0.0,
       "the impact refresh must have rebuilt on survivors (fresh version, no tombstones)")
     assert(TextAnalysis.bm25ServeFrom(s, imp, qMod = 1)
       .filter($"doc_id" % 2 === 0).count() == 0, "impact must not serve expired docs")
-    assert(NearDup.dedupIndexReclaimableFraction(s, sig) == 0.0)
-    assert(TextAnalysis.lineIndexReclaimableFraction(s, lin) == 0.0)
+    assert(IndexLayout.DedupSig.reclaimableFraction(s, sig) == 0.0)
+    assert(IndexLayout.Lines.reclaimableFraction(s, lin) == 0.0)
     // the drifted vector index spent its slot on the retrain AND the
     // sidecar re-fit (a coverage-only refresh would leave stale books)
     assert(Similarity.ivfDriftMeasure(s, ivf) < drift0)

@@ -154,11 +154,11 @@ class TextDedupSpec extends AnyFunSuite {
     assert(served.toSeq == scratch.toSeq,
       "index serve must equal from-scratch line_dedup on the union")
     // snapshot BEFORE maintenance pins the strike decisions
-    val snap = operators.TextAnalysis.lineIndexMeta(s, idx)._1
+    val snap = sources.IndexLayout.Lines.committed(s, idx)
     // erasure: doc 11 forgotten → 'banner text here' drops to df 2
     // (doc 10 + new doc 21) — still struck; erase doc 10 too → df 1
     // ref-side 0 + new 1 → the banner is CONTENT again for doc 21
-    operators.TextAnalysis.lineIndexDelete(s, idx, Seq(10L, 11L).toDF("doc_id"))
+    sources.IndexLayout.Lines.delete(s, idx, Seq(10L, 11L).toDF("doc_id"))
     val afterErase = operators.TextAnalysis.lineDedupServe(s, idx, neu)
       .orderBy("doc_id").collect()
     assert(afterErase.map(_.getString(3)).toSeq ==
@@ -767,8 +767,8 @@ class TextDedupSpec extends AnyFunSuite {
 
       // tombstoning is immediate and idempotent
       val goners = full.map(_._1).filter(_ < 1000000L).take(3).toSeq
-      mm.phashIndexDelete(spark, tmp, goners.toDF("doc_id"))
-      mm.phashIndexDelete(spark, tmp, goners.toDF("doc_id")) // no-op re-drive
+      sources.IndexLayout.Phash.delete(spark, tmp, goners.toDF("doc_id"))
+      sources.IndexLayout.Phash.delete(spark, tmp, goners.toDF("doc_id")) // no-op re-drive
       val afterDel = mm.mmPhashServe(spark, tmp, neu)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(afterDel == full.filterNot(p => goners.contains(p._1)),
@@ -877,14 +877,14 @@ class TextDedupSpec extends AnyFunSuite {
       "index serve must equal the from-scratch cross pairs on the full reference")
     // delete every 3rd ref doc: no posting file rewritten, serve ==
     // from-scratch on survivors, snapshot pinned before still sees all
-    val snap = operators.NearDup.dedupIndexMeta(s, idx.getAbsolutePath)._1
+    val snap = sources.IndexLayout.DedupSig.committed(s, idx.getAbsolutePath)
     def files(): Map[String, Long] =
       new java.io.File(idx, "postings").listFiles()
         .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
         .flatMap(d => d.listFiles().filter(_.getName.endsWith(".parquet"))
           .map(f => s"${d.getName}/${f.getName}" -> f.length())).toMap
     val before = files()
-    operators.NearDup.dedupIndexDelete(s, idx.getAbsolutePath,
+    sources.IndexLayout.DedupSig.delete(s, idx.getAbsolutePath,
       ref.filter(col("doc_id") % 3 === 0).select(col("doc_id")))
     assert(files() == before, "delete must not rewrite any posting file")
     val afterDel = operators.NearDup.dedupServe(s, idx.getAbsolutePath, neu, 0.3)
@@ -919,7 +919,7 @@ class TextDedupSpec extends AnyFunSuite {
     // The candidate log still lists it (superset by design) — the
     // serve's bucket-bounded re-count must score it back IN, shifting
     // both the pair join and every survivor's capped size
-    operators.NearDup.dedupIndexDelete(s, idx.getAbsolutePath,
+    sources.IndexLayout.DedupSig.delete(s, idx.getAbsolutePath,
       Seq(3L, 4L).toDF("doc_id"))
     val survivors = ref.filter($"doc_id" < 3)
     assert(same(
