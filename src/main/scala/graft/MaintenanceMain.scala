@@ -74,9 +74,10 @@ object MaintenanceMain {
     case "ivf"         => operators.Retention.Ivf
     case "dedup_sig"   => operators.Retention.DedupSig
     case "line_df"     => operators.Retention.LineDf
+    case "phash"       => operators.Retention.Phash
     case other => throw new IllegalArgumentException(
       s"fleet manifest: unknown index kind '$other' " +
-        "(want raw_bm25|impact_bm25|ivf|dedup_sig|line_df)")
+        "(want raw_bm25|impact_bm25|ivf|dedup_sig|line_df|phash)")
   }
 
   /** Parse the fleet manifest. Strict: every token after the type

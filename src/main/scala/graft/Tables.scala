@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions}
 import org.apache.spark.sql.types._
 
 /** Parquet loaders for the driver-generated testdata layout
@@ -78,6 +78,14 @@ object Tables {
       StructField("embedding", ArrayType(FloatType, containsNull = false)),
       StructField("label", IntegerType)))
     spark.read.schema(schema).parquet(s"$dir/embeddings.parquet")
+  }
+
+  /** The 70% id prefix the lifecycle drills build their first index
+    * on (the rest arrives as appends, or as the next epoch):
+    * `max(id) * 7 / 10`, None on an empty frame. */
+  def prefixCut(df: DataFrame, id: String = "doc_id"): Option[Long] = {
+    val m = df.agg(functions.max(id)).head()
+    if (m.isNullAt(0)) None else Some(m.getLong(0) * 7 / 10)
   }
 
   /** Spread a scan across all cores before a compute-heavy fan-out

@@ -678,7 +678,7 @@ object Multimodal {
     val neu = bmpTwinTable(spark, dir)
     if (ref.isEmpty || neu.isEmpty)
       return Seq.empty[(Long, Long, Int)].toDF("id1", "id2", "hamming")
-    val cut = ref.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val cut = Tables.prefixCut(ref).get
     graft.sources.Lake.withScratchIndex(spark, "graft_phash_idx") { tmp =>
       phashIndexWrite(Tables.fanout(ref.filter($"doc_id" <= cut)), tmp)
       phashIndexAppend(Tables.fanout(ref.filter($"doc_id" > cut)), tmp)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Artifacts, Tables}
-import graft.sources.IndexLayout
+import graft.sources.{Catalog, IndexLayout}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -870,7 +870,7 @@ object NearDup {
     if (shinglePostings(ref).isEmpty)
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("new_id", "ref_id", "n_inter", "jaccard")
-    val cut = ref.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val cut = Tables.prefixCut(ref).get
     val neu = ref.select(($"doc_id" + BigOffset).as("doc_id"), $"text")
     graft.sources.Lake.withScratchIndex(spark, "graft_dedup_idx") { tmp =>
       // the 70%-prefix build promotes from the session template (the
@@ -888,7 +888,7 @@ object NearDup {
   }
 
   /** ONE canonical dedup_sig template builder per (corpus snapshot,
-    * dfCap) — every key-sharing call site (fleet cutover, catalog /
+    * dfCap) — every key-sharing call site (fleet drill, catalog /
     * stream drills, the lifecycle gates' prefix builds) routes
     * through here, so a parameter drift at one site is impossible
     * (the r16 ADVICE fix made structural). */
@@ -910,11 +910,11 @@ object NearDup {
     * into a catalog under kind `dedup_sig` (the SAME kind word
     * MaintenanceMain's fleet grammar uses, so a `catalog= key=` fleet
     * line resolves these registrations with no ckind mapping), the
-    * corpus drifts, the stamped epoch-2 resolve rebuilds on the full
-    * reference and supersedes by seq, `Catalog.vacuum` reclaims the
-    * superseded store, and a serving process that knows only the
-    * catalog root resolves by manifest lookup and serves the re-crawl
-    * snapshot. HASH-EQUAL to `cross_dedup`'s from-scratch oracle on
+    * corpus drifts, epoch-2 rebuilds on the full reference and
+    * supersedes by seq, the vacuum reclaims the superseded store
+    * ([[graft.sources.Catalog.drill]]), and a serving process that
+    * knows only the catalog root resolves by manifest lookup and
+    * serves the re-crawl snapshot. HASH-EQUAL to `cross_dedup`'s from-scratch oracle on
     * the full reference — the catalog lifecycle must be
     * answer-invisible. */
   def dedupCatalogServe(spark: SparkSession, dir: String,
@@ -924,25 +924,12 @@ object NearDup {
     if (shinglePostings(ref).isEmpty)
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("new_id", "ref_id", "n_inter", "jaccard")
-    val cut = ref.agg(max($"doc_id")).head().getLong(0) * 7 / 10
     val neu = ref.select(($"doc_id" + BigOffset).as("doc_id"), $"text")
-    val key = s"corpus:$dir dfCap=$dfCap"
-    graft.sources.Lake.withScratchIndex(spark, "graft_dedup_cat") { cat =>
-      // epoch artifacts promote from the session templates (the same
-      // keys the fleet cutover builds — one shingle pass per corpus
-      // snapshot per session, r17 opt); the drill still registers,
-      // supersedes, vacuums and serves real files it owns
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "dedup_sig", key,
-        stamp = "epoch-1")(Artifacts.promote(spark,
-        dedupSigTemplate(spark, dir, Some(cut), dfCap)))
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "dedup_sig", key,
-        stamp = "epoch-2")(Artifacts.promote(spark,
-        dedupSigTemplate(spark, dir, None, dfCap)))
-      graft.sources.Catalog.vacuum(spark, cat)
-      val (path, stamp) =
-        graft.sources.Catalog.lookup(spark, cat, "dedup_sig", key).get
-      require(stamp == "epoch-2", s"fleet must resolve the fresh epoch: $stamp")
-      dedupServe(spark, path, Tables.fanout(neu), threshold, dfCap,
+    // the epoch stores are copies of the session templates the fleet
+    // drill builds too (one shingle pass per corpus snapshot)
+    Catalog.drill(spark, "graft_dedup_cat", s"corpus:$dir dfCap=$dfCap", Tables.prefixCut(ref).get)(
+      "dedup_sig" -> (dedupSigTemplate(spark, dir, _, dfCap))) { p =>
+      dedupServe(spark, p("dedup_sig"), Tables.fanout(neu), threshold, dfCap,
         shingled = Some(neuShinglesFor(spark, dir)))
     }
   }

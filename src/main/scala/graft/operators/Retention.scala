@@ -220,6 +220,9 @@ object Retention {
   /** A persisted line-frequency (boilerplate-df) index
     * ([[TextAnalysis.lineIndexWrite]]). */
   case object LineDf extends IndexKind(Some(IndexLayout.Lines))
+  /** A persisted perceptual-hash band index
+    * ([[Multimodal.phashIndexWrite]]). */
+  case object Phash extends IndexKind(Some(IndexLayout.Phash))
 
   /** One index under the sweep's care: where it lives, which family's
     * forget/reclaim paths apply, and the expiry rule (metadata frame +

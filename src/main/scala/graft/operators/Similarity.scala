@@ -1425,16 +1425,7 @@ object Similarity {
                         nprobe: Int = 10, shortlist: Int = 32, k: Int = 5,
                         nQueries: Int = 50): DataFrame = {
     import spark.implicits._
-    val all = Tables.embeddings(spark, dir)
-    // deterministic 70% id split (bounded driver metadata: one max);
-    // an empty corpus has no index to build — serve the empty result
-    // rather than writing a schemaless parquet dir
-    val maxRow = all.agg(max($"vec_id")).head()
-    if (maxRow.isNullAt(0))
-      return Seq.empty[(Long, Long, Int, Int, Double)]
-        .toDF("query_id", "neighbor_id", "cell", "rank_nn", "cosine")
-    graft.sources.Lake.withScratchIndex(spark, "graft_ivf_append") { tmp =>
-      val cut = prefixIvfWrite(spark, dir, tmp, nlist, maxRow.getLong(0))
+    prefixIvfDrill(spark, dir, "graft_ivf_append", nlist) { (tmp, all, cut) =>
       ivfAppend(spark, tmp, all.filter($"vec_id" > cut))
       annIvfServe(spark, tmp, nprobe = nprobe, k = k,
         nQueries = nQueries, shortlist = Some(shortlist))
@@ -1453,13 +1444,7 @@ object Similarity {
                          nprobe: Int = 10, shortlist: Int = 32, k: Int = 5,
                          nQueries: Int = 50): DataFrame = {
     import spark.implicits._
-    val all = Tables.embeddings(spark, dir)
-    val maxRow = all.agg(max($"vec_id")).head()
-    if (maxRow.isNullAt(0))
-      return Seq.empty[(Long, Long, Int, Int, Double)]
-        .toDF("query_id", "neighbor_id", "cell", "rank_nn", "cosine")
-    graft.sources.Lake.withScratchIndex(spark, "graft_ivf_retrain") { tmp =>
-      val cut = prefixIvfWrite(spark, dir, tmp, nlist, maxRow.getLong(0))
+    prefixIvfDrill(spark, dir, "graft_ivf_retrain", nlist) { (tmp, all, cut) =>
       ivfAppend(spark, tmp, all.filter($"vec_id" > cut))
       ivfRetrain(spark, tmp)
       annIvfServe(spark, tmp, nprobe = nprobe, k = k,
@@ -1482,13 +1467,7 @@ object Similarity {
                         nprobe: Int = 10, shortlist: Int = 32, k: Int = 5,
                         nQueries: Int = 50): DataFrame = {
     import spark.implicits._
-    val all = Tables.embeddings(spark, dir)
-    val maxRow = all.agg(max($"vec_id")).head()
-    if (maxRow.isNullAt(0))
-      return Seq.empty[(Long, Long, Int, Int, Double)]
-        .toDF("query_id", "neighbor_id", "cell", "rank_nn", "cosine")
-    graft.sources.Lake.withScratchIndex(spark, "graft_ivf_delete") { tmp =>
-      val cut = prefixIvfWrite(spark, dir, tmp, nlist, maxRow.getLong(0))
+    prefixIvfDrill(spark, dir, "graft_ivf_delete", nlist) { (tmp, all, cut) =>
       ivfAppend(spark, tmp, all.filter($"vec_id" > cut))
       ivfDelete(spark, tmp,
         all.filter($"vec_id" % 3 === 0 && $"vec_id" >= nQueries).select($"vec_id"))
@@ -1498,15 +1477,33 @@ object Similarity {
     }
   }
 
+  /** The IVF lifecycle drills' skeleton (C7d/e/f, the PQ appends, E12): in
+    * a scratch index, the corpus's [[Tables.prefixCut]] prefix build
+    * ([[prefixIvfWrite]]), then `body(index, corpus, cut)` maintains
+    * and serves it. An empty corpus has no index to build: it serves
+    * the empty answer rather than writing a schemaless parquet dir. */
+  private[graft] def prefixIvfDrill(spark: SparkSession, dir: String, scratch: String, nlist: Int)(
+      body: (String, DataFrame, Long) => DataFrame): DataFrame = {
+    import spark.implicits._
+    val all = Tables.embeddings(spark, dir)
+    Tables.prefixCut(all, "vec_id").fold(Seq.empty[(Long, Long, Int, Int, Double)]
+      .toDF("query_id", "neighbor_id", "cell", "rank_nn", "cosine")) { cut =>
+      graft.sources.Lake.withScratchIndex(spark, scratch) { tmp =>
+        prefixIvfWrite(spark, dir, tmp, nlist, cut)
+        body(tmp, all, cut)
+      }
+    }
+  }
+
   /** The 70%-prefix index build shared by C7d and E12 (both registry
     * entries exercise "append into a prefix-built index" on the same
     * corpus split): the BUILD computation memoizes per (dir, nlist) —
     * one Lloyd pass per registry run — while each caller still writes
-    * its own on-disk copy to mutate. Returns the id cut. */
+    * its own on-disk copy to mutate. `cut` is the corpus's
+    * [[Tables.prefixCut]]. */
   private[graft] def prefixIvfWrite(spark: SparkSession, dir: String, path: String,
-                                    nlist: Int, maxId: Long): Long = {
+                                    nlist: Int, cut: Long): Unit = {
     import spark.implicits._
-    val cut = maxId * 7 / 10
     // the WRITTEN store is a session template (one Lloyd pass AND one
     // lists shuffle+encode per session, r17 opt); each caller promotes
     // a physical copy it then appends to / deletes from / compacts
@@ -1516,7 +1513,6 @@ object Similarity {
         Tables.embeddings(spark, dir).filter($"vec_id" <= cut), nlist), d)
     }
     Artifacts.promote(spark, src)(path)
-    cut
   }
 
   /** C16 `centroid_per_label` — mean embedding per label, emitted one
@@ -2432,13 +2428,7 @@ object Similarity {
                           shortlist: Int = 128, k: Int = 5,
                           nQueries: Int = 50, opqIters: Int = 0): DataFrame = {
     import spark.implicits._
-    val all = Tables.embeddings(spark, dir)
-    val maxRow = all.agg(max($"vec_id")).head()
-    if (maxRow.isNullAt(0))
-      return Seq.empty[(Long, Long, Int, Int, Double)]
-        .toDF("query_id", "neighbor_id", "cell", "rank_nn", "cosine")
-    graft.sources.Lake.withScratchIndex(spark, "graft_ivf_pq") { tmp =>
-      val cut = prefixIvfWrite(spark, dir, tmp, nlist, maxRow.getLong(0))
+    prefixIvfDrill(spark, dir, "graft_ivf_pq", nlist) { (tmp, all, cut) =>
       pqAttach(spark, tmp, m, kpq, opqIters)
       ivfAppend(spark, tmp, all.filter($"vec_id" > cut))
       pqRefresh(spark, tmp)

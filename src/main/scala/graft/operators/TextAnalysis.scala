@@ -3,7 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import graft.{Artifacts, GraftConfig, Tables}
-import graft.sources.IndexLayout
+import graft.sources.{Catalog, IndexLayout}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -255,7 +255,7 @@ object TextAnalysis {
     if (ref.isEmpty || neu.isEmpty)
       return Seq.empty[(Long, Long, Long, String)]
         .toDF("doc_id", "n_kept", "n_dropped", "clean_text")
-    val cut = ref.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val cut = Tables.prefixCut(ref).get
     graft.sources.Lake.withScratchIndex(spark, "graft_line_idx") { tmp =>
       // prefix build promotes from the session template ("ref3" snap —
       // this family's reference excludes the mm third); appends and
@@ -272,9 +272,9 @@ object TextAnalysis {
     * kind): epoch-1 line index (70% of the reference) registered in a
     * catalog under kind `line_df` (the SAME kind word MaintenanceMain's
     * fleet grammar uses, so a `catalog= key=` fleet line resolves
-    * these registrations directly), the corpus drifts, the stamped
-    * epoch-2 resolve rebuilds on the full reference and supersedes by
-    * seq, `Catalog.vacuum` reclaims the superseded store, and a
+    * these registrations directly), the corpus drifts, epoch-2
+    * rebuilds on the full reference and supersedes by seq, the vacuum
+    * reclaims the superseded store ([[graft.sources.Catalog.drill]]), and a
     * serving process resolves by manifest lookup and strikes the new
     * crawl batch. HASH-EQUAL to the from-scratch line dedup on
     * (full reference ∪ batch) restricted to the batch — the catalog
@@ -287,24 +287,12 @@ object TextAnalysis {
     if (ref.isEmpty || neu.isEmpty)
       return Seq.empty[(Long, Long, Long, String)]
         .toDF("doc_id", "n_kept", "n_dropped", "clean_text")
-    val cut = ref.agg(max($"doc_id")).head().getLong(0) * 7 / 10
-    val key = s"corpus:$dir"
-    graft.sources.Lake.withScratchIndex(spark, "graft_line_cat") { cat =>
-      // epoch artifacts promote from session templates (r17 opt);
-      // "ref3" snaps: this drill's reference EXCLUDES the mm third
-      // (doc_id % 3 == 0 arrives as the batch), so its artifacts must
-      // never alias the fleet's full-corpus line_df template
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "line_df", key,
-        stamp = "epoch-1")(Artifacts.promote(spark,
-        lineDfRef3Template(spark, dir, Some(cut))))
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "line_df", key,
-        stamp = "epoch-2")(Artifacts.promote(spark,
-        lineDfRef3Template(spark, dir, None)))
-      graft.sources.Catalog.vacuum(spark, cat)
-      val (path, stamp) =
-        graft.sources.Catalog.lookup(spark, cat, "line_df", key).get
-      require(stamp == "epoch-2", s"fleet must resolve the fresh epoch: $stamp")
-      lineDedupServe(spark, path, Tables.fanout(neu))
+    // "ref3" snaps: this drill's reference EXCLUDES the mm third
+    // (doc_id % 3 == 0 arrives as the batch), so its artifacts must
+    // never alias the fleet's full-corpus line_df template
+    Catalog.drill(spark, "graft_line_cat", s"corpus:$dir", Tables.prefixCut(ref).get)(
+      "line_df" -> (lineDfRef3Template(spark, dir, _))) { p =>
+      lineDedupServe(spark, p("line_df"), Tables.fanout(neu))
     }
   }
 
@@ -431,7 +419,7 @@ object TextAnalysis {
     if (ref.isEmpty || neu.isEmpty)
       return Seq.empty[(Long, Long, Long, String)]
         .toDF("doc_id", "n_kept", "n_dropped", "clean_text")
-    val cut = ref.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val cut = Tables.prefixCut(ref).get
     graft.sources.Lake.withScratchIndex(spark, "graft_para_idx") { tmp =>
       // prefix build promotes from the session template shared with
       // stream_para_index; the lifecycle mutates this drill's own copy
@@ -1399,48 +1387,31 @@ object TextAnalysis {
 
   /** C32d `nb_catalog_serve` — the MODEL REGISTRY lifecycle for the
     * learned quality filter, the same cross-process story the index
-    * kinds have (C23f/C4d): a nightly training process commits the
-    * epoch-1 model (trained on the 70% id-cut corpus) into the
-    * catalog ([[graft.sources.Catalog.resolveOrBuild]], commit-last),
-    * the corpus drifts, the stamped epoch-2 resolve RETRAINS on the
-    * full corpus and supersedes by seq, `Catalog.vacuum` reclaims the
-    * superseded epoch-1 store, and a serving process that knows only
-    * the catalog root resolves the model by manifest lookup and
-    * scores. HASH-EQUAL to `nb_quality_classify` — the whole registry
-    * lifecycle must be answer-invisible (integer weights round-trip
-    * parquet exactly). The spec additionally pins epoch-1 lookup
-    * parity before the drift, physical reclaim, and the
-    * one-commit rollback ([[graft.sources.Catalog.rollback]] is
-    * kind-generic — the C23g drill applies to models too). */
+    * kinds have (C23f/C4d), run as [[graft.sources.Catalog.drill]]: a
+    * nightly training process commits the epoch-1 model (trained on
+    * the 70% id-cut corpus), the corpus drifts, epoch-2 RETRAINS on
+    * the full corpus and supersedes, the vacuum reclaims the epoch-1
+    * store, and a serving process that knows only the catalog root
+    * resolves the model by manifest lookup and scores. HASH-EQUAL to
+    * `nb_quality_classify` — the whole registry lifecycle must be
+    * answer-invisible (integer weights round-trip parquet exactly).
+    * The spec additionally pins epoch-1 lookup parity before the
+    * drift, physical reclaim, and the one-commit rollback
+    * ([[graft.sources.Catalog.rollback]] is kind-generic — the C23g
+    * drill applies to models too). */
   def nbCatalogServe(spark: SparkSession, dir: String,
                      dim: Int = 64): DataFrame = {
     import spark.implicits._
     // empty-corpus guard: no docs → no cut, no model to register —
     // serve the empty scored frame (nbScore's schema)
-    val maxId = Tables.documents(spark, dir).agg(max($"doc_id")).head()
-    if (maxId.isNullAt(0))
-      return Seq.empty[(Long, Long, Long, String)]
+    val cut = Tables.prefixCut(Tables.documents(spark, dir)) match {
+      case Some(c) => c
+      case None => return Seq.empty[(Long, Long, Long, String)]
         .toDF("doc_id", "score_keep", "score_drop", "pred")
-    val cut = maxId.getLong(0) * 7 / 10
-    val key = s"corpus:$dir dim=$dim"
-    graft.sources.Lake.withScratchIndex(spark, "graft_nbmodel_cat") { cat =>
-      // nightly training, epoch 1: the corpus as of the cut (the
-      // prefix model promotes from a session template — one prefix
-      // train per session, r17 opt)
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "nbmodel", key,
-        stamp = "epoch-1")(Artifacts.promote(spark,
-        nbModelTemplate(spark, dir, Some(cut), dim)))
-      // the corpus drifted: the stamped epoch-2 resolve retrains on
-      // the full corpus and supersedes — never serves stale (the full
-      // train is the nbTrainFor memo's)
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "nbmodel", key,
-        stamp = "epoch-2")(Artifacts.promote(spark,
-        nbModelTemplate(spark, dir, None, dim)))
-      graft.sources.Catalog.vacuum(spark, cat)
-      val (path, stamp) =
-        graft.sources.Catalog.lookup(spark, cat, "nbmodel", key).get
-      require(stamp == "epoch-2", s"fleet must resolve the fresh epoch: $stamp")
-      val (model, priors) = nbModelRead(spark, path)
+    }
+    Catalog.drill(spark, "graft_nbmodel_cat", s"corpus:$dir dim=$dim", cut)(
+      "nbmodel" -> (nbModelTemplate(spark, dir, _, dim))) { p =>
+      val (model, priors) = nbModelRead(spark, p("nbmodel"))
       nbScoreFrom(DocFeatures.forDir(spark, dir), model, priors, dim)
     }
   }
@@ -2828,11 +2799,11 @@ object TextAnalysis {
     val live = docs.filter(length(trim($"text")) > 0)
     // a token-free corpus writes zero postings partitions (read-back
     // crash) and serves nothing — return the empty answer directly
-    val mx = live.agg(max($"doc_id")).head()
-    if (mx.isNullAt(0))
-      return Seq.empty[(Long, Long, Long, Int)]
+    val cut = Tables.prefixCut(live) match {
+      case Some(c) => c
+      case None => return Seq.empty[(Long, Long, Long, Int)]
         .toDF("query_id", "doc_id", "n_occ", "rank_phrase")
-    val cut = mx.getLong(0) * 7 / 10
+    }
     val panel = docs.filter($"doc_id" % qMod === 0)
       .withColumn("w", toks($"text")).filter(size($"w") >= 2)
       .select($"doc_id".as("query_id"), $"w".getItem(0).as("t1"),
@@ -3182,17 +3153,15 @@ object TextAnalysis {
   /** C27c `hybrid_catalog_serve` — the MULTI-KIND fleet epoch cutover
     * composed under the gate: both of C27b's serving indexes (the
     * impact-BM25 postings AND the docEmbed IVF) rebuild against the
-    * same corpus snapshot and become visible TOGETHER through
-    * [[graft.sources.Catalog.registerAll]]'s single-commit manifest
-    * write — a fleet that fuses a fresh lexical epoch with a stale
-    * semantic one mixes corpus states inside ONE RRF answer, the
-    * exact failure registerAll exists to exclude. Lifecycle under the
-    * gate: epoch-1 builds both kinds on the 70% prefix and registers
-    * them in one cutover; the corpus drifts; epoch-2 rebuilds both on
-    * the full corpus and supersedes in one cutover; `Catalog.vacuum`
-    * reclaims BOTH superseded stores (lease + pin gates); a serving
-    * process that knows only the catalog root resolves both kinds by
-    * manifest lookup and runs [[hybridServeFrom]]. HASH-EQUAL to
+    * same corpus snapshot and become visible TOGETHER in one
+    * [[graft.sources.Catalog.cutover]] — a fleet that fuses a fresh
+    * lexical epoch with a stale semantic one mixes corpus states
+    * inside ONE RRF answer, the exact failure the one-commit cutover
+    * exists to exclude. Lifecycle under the gate
+    * ([[graft.sources.Catalog.drill]]): epoch-1 on the 70% prefix,
+    * epoch-2 on the full corpus, the vacuum reclaims BOTH superseded
+    * stores, and a serving process resolves both kinds at one epoch
+    * and runs [[hybridServeFrom]]. HASH-EQUAL to
     * `hybrid_serve`'s oracle on the full corpus — the whole two-kind
     * lifecycle must be answer-invisible (nprobe = nlist keeps the IVF
     * side exact; integer dots/impacts/RRF keep every score
@@ -3205,66 +3174,19 @@ object TextAnalysis {
     if (corpusTokenFree(spark, dir))
       return Seq.empty[(Long, Long, Long, Int)]
         .toDF("query_id", "doc_id", "rrf", "rank_h")
-    val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) * 7 / 10
-    val key = s"corpus:$dir"
-    graft.sources.Lake.withScratchIndex(spark, "graft_hyb_cat") { cat =>
-      hybridCatalogCutover(spark, dir, cat, key, "epoch-1", Some(cut),
-        dfCap, dim)
-      hybridCatalogCutover(spark, dir, cat, key, "epoch-2", None, dfCap, dim)
-      graft.sources.Catalog.vacuum(spark, cat)
-      hybridCatalogResolveServe(spark, dir, cat, key, "epoch-2",
-        k, nQueries, kRrf, wLex, wSem, dim)
+    Catalog.drill(spark, "graft_hyb_cat", s"corpus:$dir",
+      Tables.prefixCut(Tables.documents(spark, dir)).get)(
+      hybridTemplates(spark, dir, dfCap, dim): _*) { p =>
+      hybridServeFrom(spark, dir, p("ivf"), p("bm25impact"), k, nQueries, kRrf, wLex, wSem, dim)
     }
   }
 
-  /** One maintenance epoch for the hybrid pair: build BOTH kinds
-    * against the same corpus snapshot (`cutId` bounds the prefix;
-    * None = full corpus) into fresh store directories, then flip them
-    * visible together in one [[graft.sources.Catalog.registerAll]]
-    * commit. Store paths follow the catalog's own store convention so
-    * its vacuum can reclaim superseded epochs. */
-  private[graft] def hybridCatalogCutover(spark: SparkSession, dir: String,
-                                          cat: String, key: String,
-                                          stamp: String, cutId: Option[Long],
-                                          dfCap: Int = 100,
-                                          dim: Int = 64): Unit = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
-    val bmDir = s"$cat/store/bm25impact/${java.util.UUID.randomUUID}"
-    val ivDir = s"$cat/store/ivf/${java.util.UUID.randomUUID}"
-    // template-and-promote (the fleet cutover's economics, r16 opt):
-    // each kind's artifact builds ONCE per (session, snapshot,
-    // params) in the shared template and this cutover pays a copy —
-    // the two INDEPENDENT legs overlap (guide §2.6), the one-commit
-    // registerAll lands strictly after both
-    graft.Par.jobs(
-      () => Artifacts.promote(spark, bm25ImpactTemplate(spark, dir, cutId, dfCap))(bmDir),
-      () => Artifacts.promote(spark, ivfTemplate(spark, dir, cutId, dim))(ivDir))
-    graft.sources.Catalog.registerAll(spark, cat, Seq(
-      ("bm25impact", key, bmDir, stamp), ("ivf", key, ivDir, stamp)))
-  }
-
-  /** The serving process's half of C27c: resolve both kinds from the
-    * manifest (requiring the expected epoch — a fleet must never fuse
-    * mixed epochs), then serve. */
-  private[graft] def hybridCatalogResolveServe(spark: SparkSession,
-                                               dir: String, cat: String,
-                                               key: String, epoch: String,
-                                               k: Int = 10, nQueries: Int = 50,
-                                               kRrf: Int = 60, wLex: Int = 2,
-                                               wSem: Int = 1,
-                                               dim: Int = 64): DataFrame = {
-    val (bmPath, bmStamp) =
-      graft.sources.Catalog.lookup(spark, cat, "bm25impact", key).get
-    val (ivPath, ivStamp) =
-      graft.sources.Catalog.lookup(spark, cat, "ivf", key).get
-    require(bmStamp == epoch && ivStamp == epoch,
-      s"fleet must resolve one fresh epoch for both kinds: " +
-        s"bm25impact=$bmStamp ivf=$ivStamp want $epoch")
-    hybridServeFrom(spark, dir, ivPath, bmPath, k, nQueries, kRrf,
-      wLex, wSem, dim)
-  }
+  /** The hybrid pair's kinds and their session templates: both are
+    * built against the same corpus snapshot in one cutover. */
+  private[graft] def hybridTemplates(spark: SparkSession, dir: String, dfCap: Int = 100,
+                                     dim: Int = 64): Seq[(String, Option[Long] => String)] =
+    Seq("bm25impact" -> (bm25ImpactTemplate(spark, dir, _, dfCap)),
+      "ivf" -> (ivfTemplate(spark, dir, _, dim)))
 
   def hybridServeSql(k: Int = 10, dfCap: Int = 100, nQueries: Int = 50,
                      kRrf: Int = 60, wLex: Int = 2, wSem: Int = 1,
@@ -3787,11 +3709,11 @@ object TextAnalysis {
                       dfCap: Int = 100, qMod: Int = 20): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
-    val maxRow = docs.agg(max($"doc_id")).head()
-    if (maxRow.isNullAt(0))
-      return Seq.empty[(Long, Long, Int, Long)]
+    val cut = Tables.prefixCut(docs) match {
+      case Some(c) => c
+      case None => return Seq.empty[(Long, Long, Int, Long)]
         .toDF("query_id", "doc_id", "rk", "score")
-    val cut = maxRow.getLong(0) * 7 / 10
+    }
     graft.sources.Lake.withScratchIndex(spark, "graft_bm25_append") { tmp =>
       // both legs' tf tables are id-filtered slices of the session
       // memo (doc-local rows: the filter commutes with the tokenize) —
@@ -3819,11 +3741,11 @@ object TextAnalysis {
                       dfCap: Int = 100, qMod: Int = 20): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
-    val maxRow = docs.agg(max($"doc_id")).head()
-    if (maxRow.isNullAt(0))
-      return Seq.empty[(Long, Long, Int, Long)]
+    val cut = Tables.prefixCut(docs) match {
+      case Some(c) => c
+      case None => return Seq.empty[(Long, Long, Int, Long)]
         .toDF("query_id", "doc_id", "rk", "score")
-    val cut = maxRow.getLong(0) * 7 / 10
+    }
     graft.sources.Lake.withScratchIndex(spark, "graft_bm25_delete") { tmp =>
       // memo-fed tf slices, same as the append drill (r17 opt)
       val tfAll = tfTableFor(spark, dir)
@@ -3867,49 +3789,33 @@ object TextAnalysis {
   }
 
   /** C23f `bm25_catalog_serve` — the CROSS-PROCESS deployment story
-    * composed end-to-end under the gate: a maintenance process builds
-    * the epoch-1 index (70% of the corpus) into a catalog
-    * ([[graft.sources.Catalog.resolveOrBuild]], commit-last
-    * registration), the corpus drifts, the stamped epoch-2 resolve
-    * REBUILDS on the full corpus and supersedes by seq (the freshness
-    * contract — no stale serve), `Catalog.vacuum` reclaims the
-    * superseded epoch-1 store under the lease+pin retention gates,
-    * and a serving process that knows only the catalog root resolves
-    * by manifest lookup and serves. HASH-EQUAL to `bm25_retrieve` on
+    * composed end-to-end under the gate ([[graft.sources.Catalog.drill]]):
+    * a maintenance process builds the epoch-1 index (70% of the
+    * corpus) into a catalog, the corpus drifts, epoch-2 REBUILDS on
+    * the full corpus and supersedes by seq (no stale serve), the
+    * vacuum reclaims the epoch-1 store under the lease+pin retention
+    * gates, and a serving process that knows only the catalog root
+    * resolves by manifest lookup and serves. HASH-EQUAL to `bm25_retrieve` on
     * the full corpus — the whole catalog lifecycle must be
     * answer-invisible. The spec additionally pins the epoch-1 fleet
     * serve (lookup parity before the drift) and the physical reclaim
     * of the superseded build. */
   def bm25CatalogServe(spark: SparkSession, dir: String, k: Int = 10,
-                       dfCap: Int = 100, qMod: Int = 20): DataFrame = {
+                       dfCap: Int = 100, qMod: Int = 20): DataFrame =
+    bm25CatalogDrill(spark, dir, "graft_catalog_srv", rollback = false, k, dfCap, qMod)
+
+  /** [[bm25CatalogServe]] and [[bm25RollbackServe]]: the single-kind
+    * drill over the impact-BM25 template, served by manifest lookup. */
+  private def bm25CatalogDrill(spark: SparkSession, dir: String, scratch: String,
+                               rollback: Boolean, k: Int, dfCap: Int, qMod: Int): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
     if (corpusTokenFree(spark, dir))
       return Seq.empty[(Long, Long, Int, Long)]
         .toDF("query_id", "doc_id", "rk", "score")
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) * 7 / 10
-    val key = s"corpus:$dir dfCap=$dfCap"
-    graft.sources.Lake.withScratchIndex(spark, "graft_catalog_srv") { cat =>
-      // nightly maintenance, epoch 1: index the corpus as of the cut.
-      // Both epoch artifacts promote from the session templates (the
-      // same keys the fleet cutover builds — one corpus pass per
-      // snapshot per session, r17 opt); the drill still registers,
-      // supersedes, vacuums and serves REAL files it owns.
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "bm25impact", key,
-        stamp = "epoch-1")(Artifacts.promote(spark,
-        bm25ImpactTemplate(spark, dir, Some(cut), dfCap)))
-      // the corpus drifted: the stamped epoch-2 resolve rebuilds on
-      // the full corpus and supersedes — never serves stale
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "bm25impact", key,
-        stamp = "epoch-2")(Artifacts.promote(spark,
-        bm25ImpactTemplate(spark, dir, None, dfCap)))
-      // reclaim the superseded epoch-1 store (lease + pin gates)
-      graft.sources.Catalog.vacuum(spark, cat)
-      // a serving process: manifest lookup only, then serve
-      val (path, stamp) =
-        graft.sources.Catalog.lookup(spark, cat, "bm25impact", key).get
-      require(stamp == "epoch-2", s"fleet must resolve the fresh epoch: $stamp")
-      bm25ServeFrom(spark, path, k, qMod)
+    Catalog.drill(spark, scratch, s"corpus:$dir dfCap=$dfCap",
+      Tables.prefixCut(Tables.documents(spark, dir)).get, rollback)(
+      "bm25impact" -> (bm25ImpactTemplate(spark, dir, _, dfCap))) { p =>
+      bm25ServeFrom(spark, p("bm25impact"), k, qMod)
     }
   }
 
@@ -3917,8 +3823,8 @@ object TextAnalysis {
     * all four durable index kinds: one maintenance epoch builds
     * bm25impact + ivf + dedup_sig + line_df against the SAME corpus
     * snapshot and flips them visible in ONE
-    * [[graft.sources.Catalog.registerAll]] commit (one manifest file,
-    * one shared seq — a fleet can never serve kind A from epoch-2 and
+    * [[graft.sources.Catalog.cutover]] commit (one manifest file, one
+    * shared seq — a fleet can never serve kind A from epoch-2 and
     * kind B from epoch-1), the corpus drifts, epoch-2 rebuilds all
     * four and supersedes atomically, vacuum reclaims every superseded
     * store, and a serving process resolves EVERY kind by manifest
@@ -3929,48 +3835,39 @@ object TextAnalysis {
     * atomicity across all four kinds and the mixed-epoch refusal. */
   def fleetCatalogServe(spark: SparkSession, dir: String,
                         threshold: Double = 0.5, dfCap: Int = 100,
-                        dim: Int = 64): DataFrame = {
+                        dim: Int = 64): DataFrame =
+    fleetDrill(spark, dir, "graft_fleet_cat", rollback = false, threshold, dfCap, dim)
+
+  /** [[fleetCatalogServe]] and [[fleetRollbackServe]]: the four-kind
+    * drill, served by its dedup-signature member. */
+  private def fleetDrill(spark: SparkSession, dir: String, scratch: String, rollback: Boolean,
+                         threshold: Double, dfCap: Int, dim: Int): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
     if (corpusTokenFree(spark, dir))
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("new_id", "ref_id", "n_inter", "jaccard")
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) * 7 / 10
     val neu = docs.select(
       ($"doc_id" + graft.operators.NearDup.BigOffset).as("doc_id"), $"text")
-    val key = s"corpus:$dir"
-    graft.sources.Lake.withScratchIndex(spark, "graft_fleet_cat") { cat =>
-      fleetCatalogCutover(spark, dir, cat, key, "epoch-1", Some(cut), dfCap, dim)
-      fleetCatalogCutover(spark, dir, cat, key, "epoch-2", None, dfCap, dim)
-      graft.sources.Catalog.vacuum(spark, cat)
-      val resolved = fleetCatalogResolve(spark, cat, key, "epoch-2")
-      graft.operators.NearDup.dedupServe(spark, resolved("dedup_sig"),
+    Catalog.drill(spark, scratch, s"corpus:$dir", Tables.prefixCut(docs).get, rollback)(
+      fleetTemplates(spark, dir, dfCap, dim): _*) { p =>
+      graft.operators.NearDup.dedupServe(spark, p("dedup_sig"),
         Tables.fanout(neu), threshold, dfCap,
         shingled = Some(graft.operators.NearDup.neuShinglesFor(spark, dir)))
     }
   }
 
-  /** The serving process's half of C27d: resolve EVERY kind from the
-    * manifest and refuse mixed epochs — a fleet must never serve kind
-    * A from one corpus state and kind B from another. */
-  private[graft] def fleetCatalogResolve(spark: SparkSession, cat: String,
-                                         key: String,
-                                         epoch: String): Map[String, String] = {
-    val resolved = FleetKinds.map(kind =>
-      kind -> graft.sources.Catalog.lookup(spark, cat, kind, key).get).toMap
-    require(resolved.values.forall(_._2 == epoch),
-      s"fleet must resolve ONE fresh epoch for all four kinds: " +
-        resolved.map { case (k, (_, st)) => s"$k=$st" }.mkString(" "))
-    resolved.map { case (k, (p, _)) => k -> p }
-  }
-
-  private[graft] val FleetKinds =
-    Seq("bm25impact", "ivf", "dedup_sig", "line_df")
+  /** The fleet's four kinds and their session templates. */
+  private[graft] def fleetTemplates(spark: SparkSession, dir: String, dfCap: Int = 100,
+                                    dim: Int = 64): Seq[(String, Option[Long] => String)] =
+    hybridTemplates(spark, dir, dfCap, dim) ++ Seq(
+      "dedup_sig" -> (graft.operators.NearDup.dedupSigTemplate(spark, dir, _, dfCap)),
+      "line_df" -> (lineDfTemplate(spark, dir, _)))
 
   /** ONE canonical builder per template kind (the r16 ADVICE fix made
     * structural: whichever caller runs first defines the artifact for
     * every consumer, so every key-sharing call site — the fleet and
-    * hybrid cutovers, the catalog/rollback/stream drills and the
+    * hybrid drills, the catalog/rollback/stream drills and the
     * read-only serves — routes through THESE, and each one's
     * [[Artifacts]] key carries the corpus snapshot and every parameter
     * its callers vary). The bm25 impacts build from the memoized tf
@@ -4055,150 +3952,44 @@ object TextAnalysis {
       })
     }
 
-  /** One maintenance epoch for the whole fleet: build all four kinds
-    * against the same corpus snapshot (`cutId` bounds the prefix; None
-    * = full), then flip them visible together in one registerAll
-    * commit. Store paths follow the catalog's store convention so its
-    * vacuum reclaims superseded epochs.
-    *
-    * Each kind's artifact is BUILT ONCE per (corpus snapshot, params)
-    * in the session's shared template dir and PROMOTED — a physical
-    * file copy — into this cutover's own catalog store. That is the
-    * economics a fleet actually runs: a rollback rehearsal (C27e) must
-    * not re-tokenize the corpus four more times to obtain the same
-    * artifacts the cutover drill (C27d) already built; one maintenance
-    * job pays the build, every catalog that registers it pays a copy.
-    * The one-time build cost stays visible — the [[Artifacts]] lineage
-    * attributes it to whichever bench entry built first (bench_out's
-    * memo_builds) — and every drill still registers, vacuums and
-    * reclaims REAL files it exclusively owns. */
-  private[graft] def fleetCatalogCutover(spark: SparkSession, dir: String,
-                                         cat: String, key: String,
-                                         stamp: String, cutId: Option[Long],
-                                         dfCap: Int = 100,
-                                         dim: Int = 64): Unit = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
-    def store(kind: String) =
-      s"$cat/store/$kind/${java.util.UUID.randomUUID}"
-    val (bm, iv, sg, ln) =
-      (store("bm25impact"), store("ivf"), store("dedup_sig"), store("line_df"))
-    // the four kind builds are INDEPENDENT (disjoint template keys,
-    // disjoint store dirs) — overlap them (guide §2.6: back-fill the
-    // tail of each build's jobs with the next build's tasks) and keep
-    // the one-commit registerAll strictly after all four land. Every
-    // leg routes through its kind's CANONICAL template builder (r17).
-    graft.Par.jobs(
-      () => Artifacts.promote(spark, bm25ImpactTemplate(spark, dir, cutId, dfCap))(bm),
-      () => Artifacts.promote(spark, ivfTemplate(spark, dir, cutId, dim))(iv),
-      () => Artifacts.promote(spark,
-        graft.operators.NearDup.dedupSigTemplate(spark, dir, cutId, dfCap))(sg),
-      () => Artifacts.promote(spark, lineDfTemplate(spark, dir, cutId))(ln))
-    graft.sources.Catalog.registerAll(spark, cat, Seq(
-      ("bm25impact", key, bm, stamp), ("ivf", key, iv, stamp),
-      ("dedup_sig", key, sg, stamp), ("line_df", key, ln, stamp)))
-  }
-
   /** C27e `fleet_rollback_serve` — the FLEET-WIDE rollback drill:
     * C23g proves the single-kind rollback; this entry proves the
     * operational story is SYMMETRIC with C27d's four-kind cutover. A
     * fleet that flipped bm25impact + ivf + dedup_sig + line_df
     * visible in one commit must be able to flip them BACK in one
     * commit — rolling kinds back one at a time recreates exactly the
-    * mixed-epoch state [[fleetCatalogResolve]]'s refusal exists to
-    * prevent. Lifecycle under the gate: epoch-1 (70% prefix) cuts all
-    * four kinds over atomically, epoch-2 (the drill's "bad" fleet
-    * build, full corpus) supersedes atomically, a keepEpochs=2 vacuum
-    * retains rollback headroom for EVERY kind,
-    * [[graft.sources.Catalog.rollbackAll]] re-registers all four
-    * prior epochs under ONE shared seq (all-or-nothing: a kind
-    * without headroom aborts the drill with nothing written), the
-    * next default vacuum reclaims the four bad-epoch stores while the
-    * four rolled-back-to ones survive (they are the newest
-    * registrations again), and the serving process resolves every
-    * kind — refusing mixed epochs — and serves. HASH-EQUAL to
+    * mixed-epoch state [[graft.sources.Catalog.resolve]]'s refusal
+    * exists to prevent. Lifecycle under the gate: the rollback variant
+    * of [[graft.sources.Catalog.drill]] — epoch-2 (full corpus) is the
+    * drill's "bad" fleet build, [[graft.sources.Catalog.rollbackAll]]
+    * re-registers all four prior epochs under ONE shared seq
+    * (all-or-nothing: a kind without headroom aborts the drill with
+    * nothing written), the four bad-epoch stores are reclaimed while
+    * the four rolled-back-to ones survive, and the serving process
+    * resolves every kind at epoch-1 and serves. HASH-EQUAL to
     * cross_dedup's from-scratch oracle on the 70% prefix reference:
     * the rollback must restore the prior fleet answer exactly,
     * through the reclaim. */
   def fleetRollbackServe(spark: SparkSession, dir: String,
                          threshold: Double = 0.5, dfCap: Int = 100,
-                         dim: Int = 64): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
-    if (corpusTokenFree(spark, dir))
-      return Seq.empty[(Long, Long, Long, Double)]
-        .toDF("new_id", "ref_id", "n_inter", "jaccard")
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) * 7 / 10
-    val neu = docs.select(
-      ($"doc_id" + graft.operators.NearDup.BigOffset).as("doc_id"), $"text")
-    val key = s"corpus:$dir"
-    graft.sources.Lake.withScratchIndex(spark, "graft_fleet_rb") { cat =>
-      fleetCatalogCutover(spark, dir, cat, key, "epoch-1", Some(cut), dfCap, dim)
-      fleetCatalogCutover(spark, dir, cat, key, "epoch-2", None, dfCap, dim)
-      // the cutover discipline that makes rollback possible at all:
-      // every kind's epoch-1 store survives the routine reclaim
-      graft.sources.Catalog.vacuum(spark, cat, keepEpochs = 2)
-      // epoch-2 is the drill's bad fleet build: one commit rolls all
-      // four kinds back together
-      val back = graft.sources.Catalog.rollbackAll(spark, cat,
-        FleetKinds.map(k => (k, key)))
-      require(back.forall(_._4 == "epoch-1"),
-        s"fleet rollback must restore the prior epoch for every kind: $back")
-      // reclaim the four bad-epoch stores; the rolled-back-to four
-      // must survive (reclaim asymmetry, spec-pinned per kind)
-      graft.sources.Catalog.vacuum(spark, cat)
-      val resolved = fleetCatalogResolve(spark, cat, key, "epoch-1")
-      graft.operators.NearDup.dedupServe(spark, resolved("dedup_sig"),
-        Tables.fanout(neu), threshold, dfCap,
-        shingled = Some(graft.operators.NearDup.neuShinglesFor(spark, dir)))
-    }
-  }
+                         dim: Int = 64): DataFrame =
+    fleetDrill(spark, dir, "graft_fleet_rb", rollback = true, threshold, dfCap, dim)
 
   /** C23g `bm25_rollback_serve` — the ROLLBACK DRILL composed under
     * the gate, the operational loop `Catalog.vacuum(keepEpochs)`'s
-    * retention headroom exists for: epoch-1 (70% prefix) registers,
+    * retention headroom exists for: the rollback variant of
+    * [[graft.sources.Catalog.drill]] — epoch-1 (70% prefix) registers,
     * epoch-2 (full corpus — the drill's "bad" build) supersedes, a
-    * keepEpochs=2 vacuum retains rollback headroom,
-    * [[graft.sources.Catalog.rollback]] re-registers the prior epoch
-    * at a new seq (one rename-atomic commit — every fleet lookup flips
-    * back together), the next DEFAULT vacuum reclaims the bad epoch's
-    * store while keeping the rolled-back-to one (it is the newest
-    * registration again), and the fleet serves. HASH-EQUAL to
+    * keepEpochs=2 vacuum retains rollback headroom, the prior epoch
+    * re-registers at a new seq (one rename-atomic commit — every fleet
+    * lookup flips back together), the next DEFAULT vacuum reclaims the
+    * bad epoch's store while keeping the rolled-back-to one, and the
+    * fleet serves. HASH-EQUAL to
     * `bm25_retrieve` on the 70% prefix — the rollback must restore the
     * prior answer exactly, through the reclaim. */
   def bm25RollbackServe(spark: SparkSession, dir: String, k: Int = 10,
-                        dfCap: Int = 100, qMod: Int = 20): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
-    if (corpusTokenFree(spark, dir))
-      return Seq.empty[(Long, Long, Int, Long)]
-        .toDF("query_id", "doc_id", "rk", "score")
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) * 7 / 10
-    val key = s"corpus:$dir dfCap=$dfCap"
-    graft.sources.Lake.withScratchIndex(spark, "graft_rollback_srv") { cat =>
-      // epoch artifacts promote from the session templates (one corpus
-      // pass per snapshot per session — r17 opt); the rollback drill's
-      // subject is the supersede/rollback/vacuum lifecycle, which
-      // still runs over real files it owns
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "bm25impact", key,
-        stamp = "epoch-1")(Artifacts.promote(spark,
-        bm25ImpactTemplate(spark, dir, Some(cut), dfCap)))
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "bm25impact", key,
-        stamp = "epoch-2")(Artifacts.promote(spark,
-        bm25ImpactTemplate(spark, dir, None, dfCap)))
-      // the cutover discipline that makes rollback possible at all
-      graft.sources.Catalog.vacuum(spark, cat, keepEpochs = 2)
-      val (_, back) = graft.sources.Catalog.rollback(spark, cat,
-        "bm25impact", key)
-      require(back == "epoch-1", s"rollback must restore the prior epoch: $back")
-      // reclaim the bad epoch; the rolled-back-to store must survive it
-      graft.sources.Catalog.vacuum(spark, cat)
-      val (path, stamp) =
-        graft.sources.Catalog.lookup(spark, cat, "bm25impact", key).get
-      require(stamp == "epoch-1", s"fleet must resolve the rollback: $stamp")
-      bm25ServeFrom(spark, path, k, qMod)
-    }
-  }
+                        dfCap: Int = 100, qMod: Int = 20): DataFrame =
+    bm25CatalogDrill(spark, dir, "graft_rollback_srv", rollback = true, k, dfCap, qMod)
 
   /** The (doc_id, dl, token, tf) table BM25 builds on. `dl` rides
     * THROUGH the tf aggregate as a functionally-dependent grouping
@@ -4614,10 +4405,14 @@ object TextAnalysis {
     * posture — a long run of retractions otherwise accumulates dead
     * delta rows every merge re-reads). Merge-preserving by
     * construction; the eager checkpoint frees the read before the
-    * overwrite lands. */
+    * overwrite lands. Runs under the writer lease and refuses while a
+    * read pin is live ([[IndexLayout.maintain]]): the overwrite retires
+    * the batches a pinned reader resolved. */
   def knStoreVacuum(spark: SparkSession, path: String): Unit =
-    knStoreLand(knStoreCounts(spark, path).localCheckpoint(), path,
-      overwrite = true, commit = true)
+    IndexLayout.maintain(spark, path, "knStoreVacuum") {
+      knStoreLand(knStoreCounts(spark, path).localCheckpoint(), path,
+        overwrite = true, commit = true)
+    }
 
   /** C21i `kn_append` gate — build the store as a nightly lifecycle
     * would (60% initial write, two appends, retract every 7th doc)

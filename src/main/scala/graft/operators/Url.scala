@@ -233,7 +233,7 @@ object Url {
     if (ref.isEmpty || neu.isEmpty)
       return Seq.empty[(Long, String, Long, Long, Boolean)]
         .toDF("doc_id", "canonical_url", "keeper_id", "n_aliases", "is_dup")
-    val cut = ref.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val cut = Tables.prefixCut(ref).get
     graft.sources.Lake.withScratchIndex(spark, "graft_url_idx") { tmp =>
       urlIndexWrite(Tables.fanout(ref.filter($"doc_id" <= cut)), tmp)
       urlIndexAppend(Tables.fanout(ref.filter($"doc_id" > cut)), tmp)

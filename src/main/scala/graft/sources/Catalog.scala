@@ -1,7 +1,9 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** CROSS-PROCESS INDEX CATALOG — the persisted form of
   * [[graft.Artifacts.directory]]'s build-once-serve-many economics.
@@ -14,7 +16,15 @@ import org.apache.spark.sql.functions._
   * (kind, key) → (index path, stamp) that any process can read. The
   * reference keeps exactly this kind of durable claim/registry state
   * in its status store (pg_engine.py's batch table) — here it is a
-  * tiny parquet log under the catalog root.
+  * tiny parquet log under the catalog root, declared as
+  * [[IndexLayout.Manifest]] and read on the driver
+  * ([[IndexLayout.Layout.local]]: no job, no schema inference).
+  *
+  * The epoch lifecycle is written once, here: [[cutover]] builds every
+  * kind of an epoch into fresh store directories and registers them in
+  * one commit, [[resolve]] reads them back at one expected epoch, and
+  * [[drill]] is the build → supersede → vacuum (→ rollback) sequence
+  * the registry's catalog entries run.
   *
   * Concurrency posture matches the index commit logs: registration is
   * an append-only row write that happens AFTER the index files are
@@ -27,92 +37,129 @@ import org.apache.spark.sql.functions._
   */
 object Catalog {
 
-  private val Manifest = "manifest"
+  private val Dir = "manifest"
   private val Store = "store"
 
-  /** JVM-wide registration lock. register/registerAll do an
-    * unserialized max(seq)+1 read-modify-write plus a mode(append)
-    * parquet write whose jobs share the manifest directory's
-    * _temporary staging — two IN-PROCESS concurrent registrations
-    * (Par-overlapped cutover legs) could tie on seq or lose a row
-    * when one job's commit cleanup deletes the other's staging.
-    * Cross-process races stay last-wins-by-seq as documented; this
-    * lock only restores the in-process serialization the old global
-    * sharedDirs lock provided. Builds stay outside the lock — only
-    * the manifest read+append is serialized. */
+  /** One manifest row. */
+  private[sources] final case class Entry(kind: String, key: String, path: String, stamp: String,
+                                          seq: Long)
+
+  /** JVM-wide registration lock. registerAll does an unserialized
+    * max(seq)+1 read-modify-write plus a mode(append) parquet write
+    * whose jobs share the manifest directory's _temporary staging —
+    * two IN-PROCESS concurrent registrations (Par-overlapped cutover
+    * legs) could tie on seq or lose a row when one job's commit
+    * cleanup deletes the other's staging. Cross-process races stay
+    * last-wins-by-seq as documented; this lock only serializes the
+    * manifest read+append in process. Builds stay outside it. */
   private val registerLock = new Object
 
-  /** All manifest rows (kind, key, path, stamp, seq) — empty frame if
-    * the catalog was never written. */
-  def entries(spark: SparkSession, catalogDir: String): DataFrame = {
+  /** All manifest rows (kind, key, path, stamp, seq) as a local
+    * relation — empty if the catalog was never written. A row a
+    * crashed [[checkpoint]] left housed twice appears twice. */
+  def entries(spark: SparkSession, catalogDir: String): DataFrame =
+    spark.createDataFrame(IndexLayout.Manifest.local(spark, catalogDir, Dir).asJava,
+      IndexLayout.Manifest.dirs(Dir))
+
+  /** The manifest's distinct rows, read on the driver: full-row dedup
+    * absorbs a crashed checkpoint's double-housed rows (they are
+    * identical), so every consumer sees exact registration semantics. */
+  private def manifest(spark: SparkSession, catalogDir: String): Seq[Entry] =
+    IndexLayout.Manifest.local(spark, catalogDir, Dir).map(r =>
+      Entry(r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).distinct
+
+  /** (kind, key)'s registrations, newest first. */
+  private def history(m: Seq[Entry], kind: String, key: String): Seq[Entry] =
+    m.filter(e => e.kind == kind && e.key == key).sortBy(-_.seq)
+
+  private def write(spark: SparkSession, rows: Seq[Entry], dir: String, mode: String): Unit = {
     import spark.implicits._
-    val m = new org.apache.hadoop.fs.Path(s"$catalogDir/$Manifest")
-    if (m.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(m))
-      spark.read.parquet(s"$catalogDir/$Manifest")
-    else Seq.empty[(String, String, String, String, Long)]
-      .toDF("kind", "key", "path", "stamp", "seq")
+    rows.toDF().coalesce(1).write.mode(mode).parquet(dir)
   }
 
-  /** Register a COMPLETE index under (kind, key). `path` must already
-    * hold the finished index — this row is the commit that makes it
-    * discoverable. `stamp` records the index state the builder served
-    * from (a snapshot id, a corpus fingerprint, a build date) so a
-    * serving process can judge freshness without opening the index. */
+  /** Register a COMPLETE index under (kind, key): a one-row
+    * [[registerAll]]. `path` must already hold the finished index —
+    * this row is the commit that makes it discoverable. `stamp`
+    * records the index state the builder served from (a snapshot id, a
+    * corpus fingerprint, a build date) so a serving process can judge
+    * freshness without opening the index. */
   def register(spark: SparkSession, catalogDir: String, kind: String,
-               key: String, path: String, stamp: String): Unit = registerLock.synchronized {
-    import spark.implicits._
-    val seq = entries(spark, catalogDir)
-      .agg(coalesce(max($"seq"), lit(0L))).head().getLong(0) + 1L
-    Seq((kind, key, path, stamp, seq))
-      .toDF("kind", "key", "path", "stamp", "seq")
-      .coalesce(1).write.mode("append").parquet(s"$catalogDir/$Manifest")
-  }
+               key: String, path: String, stamp: String): Unit =
+    registerAll(spark, catalogDir, Seq((kind, key, path, stamp)))
 
   /** Atomically supersede MANY keys in one registration — the
-    * fleet-wide EPOCH CUTOVER: a nightly maintenance job rebuilds N
-    * indexes against the same corpus snapshot and they must become
-    * visible TOGETHER (a fleet serving key A from epoch-2 and key B
-    * from epoch-1 mixes corpus states across one query). All rows
-    * land in ONE manifest file under ONE shared seq — the file
+    * fleet-wide EPOCH CUTOVER's commit: a nightly maintenance job
+    * rebuilds N indexes against the same corpus snapshot and they must
+    * become visible TOGETHER (a fleet serving key A from epoch-2 and
+    * key B from epoch-1 mixes corpus states across one query). All
+    * rows land in ONE manifest file under ONE shared seq — the file
     * create/rename is the single commit, so any reader's lookups flip
     * every key at once: old-epoch or new-epoch, never a mix. Each
-    * `path` must already hold its finished index (commit-last, like
-    * [[register]]); superseded stores stay readable until [[vacuum]]
-    * (the version-grace posture). */
+    * `path` must already hold its finished index (commit-last);
+    * superseded stores stay readable until [[vacuum]] (the
+    * version-grace posture). */
   def registerAll(spark: SparkSession, catalogDir: String,
                   rows: Seq[(String, String, String, String)]): Unit = registerLock.synchronized {
-    import spark.implicits._
     if (rows.isEmpty) return
     require(rows.map(r => (r._1, r._2)).distinct.length == rows.length,
       "registerAll: one row per (kind, key) — duplicate keys in a " +
         "single cutover would tie on seq and resolve arbitrarily")
-    val seq = entries(spark, catalogDir)
-      .agg(coalesce(max($"seq"), lit(0L))).head().getLong(0) + 1L
-    rows.map { case (kind, key, path, stamp) => (kind, key, path, stamp, seq) }
-      .toDF("kind", "key", "path", "stamp", "seq")
-      .coalesce(1).write.mode("append").parquet(s"$catalogDir/$Manifest")
+    val seq = manifest(spark, catalogDir).map(_.seq).maxOption.getOrElse(0L) + 1L
+    write(spark, rows.map { case (kind, key, path, stamp) => Entry(kind, key, path, stamp, seq) },
+      s"$catalogDir/$Dir", "append")
+  }
+
+  /** One epoch CUTOVER: build every kind into a fresh
+    * `store/<kind>/<uuid>` directory (a unique name per attempt — a
+    * racing builder can never clobber a directory a reader already
+    * resolved), the independent legs overlapped by [[graft.Par.jobs]],
+    * then land them all under `key` and `stamp` in one [[registerAll]]
+    * commit. Returns the directories, in `builds` order. A leg that
+    * throws registers nothing: once every leg has stopped, this
+    * attempt's directories — unregistered, so unresolvable — are
+    * deleted and the failure rethrown, and a re-driven cutover lands
+    * once. */
+  def cutover(spark: SparkSession, catalogDir: String, key: String, stamp: String)
+             (builds: (String, String => Unit)*): Seq[String] = {
+    val dirs = builds.map { case (kind, _) =>
+      s"$catalogDir/$Store/$kind/${java.util.UUID.randomUUID}" }
+    try graft.Par.jobs(builds.zip(dirs).map { case ((_, build), d) => () => build(d) }: _*)
+    catch { case e: Throwable =>
+      val fs = new Path(catalogDir).getFileSystem(spark.sessionState.newHadoopConf())
+      dirs.foreach(d => fs.delete(new Path(d), true))
+      throw e
+    }
+    registerAll(spark, catalogDir,
+      builds.zip(dirs).map { case ((kind, _), d) => (kind, key, d, stamp) })
+    dirs
   }
 
   /** Latest registered (path, stamp) for (kind, key) — what a serving
     * process resolves at startup or per maintenance epoch. */
   def lookup(spark: SparkSession, catalogDir: String, kind: String,
-             key: String): Option[(String, String)] = {
-    import spark.implicits._
-    entries(spark, catalogDir)
-      .filter($"kind" === kind && $"key" === key)
-      .orderBy($"seq".desc).limit(1)
-      .collect().headOption.map(r =>
-        (r.getAs[String]("path"), r.getAs[String]("stamp")))
+             key: String): Option[(String, String)] =
+    history(manifest(spark, catalogDir), kind, key).headOption.map(e => (e.path, e.stamp))
+
+  /** The serving half of a [[cutover]]: every kind's path under `key`,
+    * all registered at epoch `stamp`. A kind that is missing or serves
+    * another epoch refuses the whole fleet — a reader must never fuse
+    * corpus states inside one answer. */
+  def resolve(spark: SparkSession, catalogDir: String, key: String, stamp: String)
+             (kinds: String*): Map[String, String] = {
+    val m = manifest(spark, catalogDir)
+    val found = kinds.map(kind => kind -> history(m, kind, key).headOption)
+    require(found.forall(_._2.exists(_.stamp == stamp)),
+      s"fleet must resolve ONE epoch ($stamp) for every kind: " +
+        found.map { case (k, e) => s"$k=${e.fold("none")(_.stamp)}" }.mkString(" "))
+    found.map { case (kind, e) => kind -> e.get.path }.toMap
   }
 
   /** Resolve-or-build: the cross-process [[graft.Artifacts.directory]]. A
     * registered index for (kind, key) is reused as-is — the build
     * callback never runs, which is the whole economics: one
     * maintenance process pays the build, every serving process pays a
-    * manifest lookup. On a miss, the index is built into a fresh
-    * per-attempt directory under the catalog's store (unique name —
-    * a racing builder can never clobber a directory a reader already
-    * resolved) and registered commit-last.
+    * manifest lookup. On a miss, the index is built and registered by
+    * a one-kind [[cutover]].
     *
     * FRESHNESS CONTRACT: `stamp` names the corpus state the caller
     * needs the index built from (a snapshot id, a landed-table
@@ -129,14 +176,40 @@ object Catalog {
                      key: String, stamp: String = "")
                     (build: String => Unit): String =
     lookup(spark, catalogDir, kind, key) match {
-      case Some((path, registered))
-        if stamp.isEmpty || registered == stamp => path
-      case _ =>
-        val dir = s"$catalogDir/$Store/$kind/" +
-          java.util.UUID.randomUUID.toString
-        build(dir)
-        register(spark, catalogDir, kind, key, dir, stamp)
-        dir
+      case Some((path, registered)) if stamp.isEmpty || registered == stamp => path
+      case _ => cutover(spark, catalogDir, key, stamp)(kind -> build).head
+    }
+
+  /** The catalog lifecycle drill, in a scratch catalog: epoch-1 builds
+    * every kind on the corpus prefix (ids ≤ `cut`), the corpus drifts,
+    * epoch-2 builds them on the full corpus and supersedes — each epoch
+    * one [[cutover]] of copies of the kinds' session templates
+    * (`templates`: kind → the template directory of a snapshot, Some(cut)
+    * = prefix, None = full), so the drill registers, vacuums and serves
+    * real files it owns while the corpus pass is paid once per session.
+    * Then a vacuum reclaims the superseded stores and `serve` gets
+    * every kind's path at the serving epoch ([[resolve]]).
+    *
+    * With `rollback`, epoch-2 is the drill's bad build: a
+    * `keepEpochs = 2` vacuum keeps the rollback headroom,
+    * [[rollbackAll]] restores every kind's epoch-1 in one commit, and
+    * the default vacuum reclaims the bad stores while the
+    * rolled-back-to ones survive (they are the newest registrations
+    * again); epoch-1 serves. */
+  def drill(spark: SparkSession, scratch: String, key: String, cut: Long,
+            rollback: Boolean = false)(templates: (String, Option[Long] => String)*)
+           (serve: Map[String, String] => DataFrame): DataFrame =
+    Lake.withScratchIndex(spark, scratch) { cat =>
+      for ((stamp, snap) <- Seq("epoch-1" -> Some(cut), "epoch-2" -> None))
+        cutover(spark, cat, key, stamp)(templates.map { case (kind, template) =>
+          kind -> graft.Artifacts.promote(spark, template(snap)) }: _*)
+      val kinds = templates.map(_._1)
+      if (rollback) {
+        vacuum(spark, cat, keepEpochs = 2)
+        rollbackAll(spark, cat, kinds.map((_, key)))
+      }
+      vacuum(spark, cat)
+      serve(resolve(spark, cat, key, if (rollback) "epoch-1" else "epoch-2")(kinds: _*))
     }
 
   /** Roll a key back to its PREVIOUS epoch: re-register the
@@ -171,26 +244,63 @@ object Catalog {
   def rollbackAll(spark: SparkSession, catalogDir: String,
                   keys: Seq[(String, String)])
       : Seq[(String, String, String, String)] = {
-    import spark.implicits._
     require(keys.nonEmpty, "rollbackAll: no keys to roll back")
-    // dropDuplicates: a crashed checkpoint can leave a manifest row
-    // housed twice (merged file + not-yet-deleted original); the rows
-    // are identical, so full-row dedup restores exact semantics.
-    // eager: the manifest is metadata-sized and probed once per key
-    val all = entries(spark, catalogDir).dropDuplicates().localCheckpoint()
+    val m = manifest(spark, catalogDir)
     val prior = keys.map { case (kind, key) =>
-      val rows = all.filter($"kind" === kind && $"key" === key)
-        .orderBy($"seq".desc).limit(2)
-        .collect()
-      require(rows.length == 2,
+      val rows = history(m, kind, key)
+      require(rows.length >= 2,
         s"rollbackAll($kind, $key): no prior epoch registered — the " +
           "whole fleet rollback aborts with nothing written " +
           "(all-or-nothing); retain headroom with vacuum(keepEpochs >= 2)")
-      (kind, key, rows(1).getAs[String]("path"), rows(1).getAs[String]("stamp"))
+      (kind, key, rows(1).path, rows(1).stamp)
     }
     registerAll(spark, catalogDir, prior)
     prior
   }
+
+  /** Compact the manifest's accumulated registration FILES into one
+    * checkpoint file without dropping any epoch — the move every
+    * commit-log system makes. Every [[registerAll]] appends one
+    * parquet file and every manifest read lists and reads all of them,
+    * so a fleet doing frequent cutovers grows the listing without
+    * bound between vacuums; checkpoint bounds it at any time, with
+    * full rollback headroom intact (unlike [[vacuum]], which drops
+    * superseded epochs). Protocol: list the CURRENT manifest files,
+    * merge the manifest's rows into one file written aside, RENAME it
+    * into the manifest (the single atomic commit), then delete exactly
+    * the listed files — every one of them was read, and a registration
+    * racing the checkpoint appends a file that is never deleted, so no
+    * row can be lost. A reader in the swap window (or after a crash
+    * between the rename and the deletes), or a registration landing
+    * between the listing and the read, may leave a row housed twice;
+    * all consumers tolerate exact-duplicate rows (every manifest read
+    * dedups full rows), and the next checkpoint absorbs the
+    * duplicates. Runs under the writer lease; needs NO read-pin gate —
+    * no row is removed, only re-housed. */
+  def checkpoint(spark: SparkSession, catalogDir: String): Unit =
+    Lake.withWriterLock(spark, catalogDir, "catalogCheckpoint") {
+      val conf = spark.sessionState.newHadoopConf()
+      val files = IndexLayout.files(conf, s"$catalogDir/$Dir")
+      val fs = new Path(catalogDir).getFileSystem(conf)
+      if (files.nonEmpty) {
+        // reclaim stray merge dirs a crashed checkpoint left behind
+        // (safe under the lock: no other checkpoint is mid-write)
+        fs.listStatus(new Path(catalogDir)).toSeq
+          .filter(s => s.isDirectory && s.getPath.getName.startsWith("_ckpt_"))
+          .foreach(s => fs.delete(s.getPath, true))
+      }
+      if (files.length > 1) {
+        val tmp = s"$catalogDir/_ckpt_${java.util.UUID.randomUUID}"
+        write(spark, manifest(spark, catalogDir), tmp, "overwrite")
+        val part = IndexLayout.files(conf, tmp).head
+        // the rename is the commit: readers resolve old files or
+        // merged+old, never a missing state
+        fs.rename(new Path(part.path),
+          new Path(s"$catalogDir/$Dir/ckpt-${java.util.UUID.randomUUID}.parquet"))
+        files.foreach(f => fs.delete(new Path(f.path), false))
+        fs.delete(new Path(tmp), true)
+      }
+    }
 
   /** Reclaim store directories no longer referenced by any key's
     * `keepEpochs` newest registrations (superseded rebuilds,
@@ -198,88 +308,24 @@ object Catalog {
     * The default retains only the latest epoch per key; a fleet that
     * wants ROLLBACK headroom passes `keepEpochs = K` and the last K
     * epochs' stores stay resolvable by seq — the version-swap grace
-    * posture applied to the catalog. Runs under the writer lease and
+    * posture applied to the catalog. Only directories under the
+    * catalog's store are deleted. Runs under the writer lease and
     * refuses while a read pin is live — the same retention contract
     * as every other physical reclaim. */
-  /** Compact the manifest's accumulated registration FILES into one
-    * checkpoint file without dropping any epoch — the move every
-    * commit-log system makes. Every [[register]]/[[registerAll]]
-    * appends one parquet file and [[entries]] lists + reads all of
-    * them per lookup, so a fleet doing frequent cutovers grows the
-    * listing without bound between vacuums; checkpoint bounds it at
-    * any time, with full rollback headroom intact (unlike [[vacuum]],
-    * which drops superseded epochs). Protocol: merge the rows of the
-    * CURRENT manifest files into one file written aside, RENAME it
-    * into the manifest (the single atomic commit), then delete
-    * exactly the absorbed files — a registration racing the
-    * checkpoint appends a new file that is never absorbed, so no row
-    * can be lost. A reader in the swap window (or after a crash
-    * between the rename and the deletes) may see a row housed twice;
-    * all consumers tolerate exact-duplicate rows (lookup takes
-    * max-seq, [[rollback]]/[[vacuum]] dedup, [[register]]'s next-seq
-    * is unchanged), and the next checkpoint absorbs the duplicates.
-    * Runs under the writer lease; needs NO read-pin gate — no row is
-    * removed, only re-housed. */
-  def checkpoint(spark: SparkSession, catalogDir: String): Unit =
-    Lake.withWriterLock(spark, catalogDir, "catalogCheckpoint") {
-      val mdir = new org.apache.hadoop.fs.Path(s"$catalogDir/$Manifest")
-      val fs = mdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(mdir)) {
-        // reclaim stray merge dirs a crashed checkpoint left behind
-        // (safe under the lock: no other checkpoint is mid-write)
-        fs.listStatus(new org.apache.hadoop.fs.Path(catalogDir)).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("_ckpt_"))
-          .foreach(s => fs.delete(s.getPath, true))
-        val files = fs.listStatus(mdir).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath)
-        if (files.length > 1) {
-          val rows = spark.read.parquet(files.map(_.toString): _*)
-            .dropDuplicates().localCheckpoint()
-          val tmp = s"$catalogDir/_ckpt_${java.util.UUID.randomUUID}"
-          rows.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp)).toSeq
-            .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-          // the rename is the commit: readers resolve old files or
-          // merged+old, never a missing state
-          fs.rename(part,
-            new org.apache.hadoop.fs.Path(mdir,
-              s"ckpt-${java.util.UUID.randomUUID}.parquet"))
-          files.foreach(p => fs.delete(p, false))
-          fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        }
-      }
-    }
-
   def vacuum(spark: SparkSession, catalogDir: String,
              keepEpochs: Int = 1): Unit =
-    Lake.withWriterLock(spark, catalogDir, "catalogVacuum") {
-      Lake.requireUnpinned(spark, catalogDir, "catalogVacuum")
-      import spark.implicits._
-      // see rollback: full-row dedup absorbs a crashed checkpoint's
-      // double-housed rows before the per-key epoch ranking (a
-      // duplicated newest row must not push the true prior epoch out
-      // of the keepEpochs window)
-      val all = entries(spark, catalogDir).dropDuplicates()
-      if (!all.isEmpty) {
-        // manifest rows are maintenance metadata (O(registrations)) —
-        // the per-key rank window is bounded like the other manifest
-        // scans
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy($"kind", $"key").orderBy($"seq".desc)
-        val ranked = all.withColumn("rk", row_number().over(w))
-        val keep = ranked.filter($"rk" <= keepEpochs).drop("rk").localCheckpoint()
-        val dead = ranked.filter($"rk" > keepEpochs)
-          .select($"path").distinct()
-          // a path re-registered later under any key stays live
-          .join(keep.select($"path"), Seq("path"), "left_anti")
-          .as[String].collect()
-        val fs = new org.apache.hadoop.fs.Path(catalogDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        dead.filter(_.startsWith(s"$catalogDir/$Store/")).foreach { p =>
-          fs.delete(new org.apache.hadoop.fs.Path(p), true)
-        }
-        keep.coalesce(1).write.mode("overwrite").parquet(s"$catalogDir/$Manifest")
+    IndexLayout.maintain(spark, catalogDir, "catalogVacuum") {
+      val all = manifest(spark, catalogDir)
+      if (all.nonEmpty) {
+        val (keep, superseded) = all.groupBy(e => (e.kind, e.key)).values.toSeq
+          .map(_.sortBy(-_.seq).splitAt(keepEpochs)).unzip
+        // a path re-registered later under any key stays live
+        val live = keep.flatten.map(_.path).toSet
+        val fs = new Path(catalogDir).getFileSystem(spark.sessionState.newHadoopConf())
+        superseded.flatten.map(_.path).distinct
+          .filter(p => !live(p) && p.startsWith(s"$catalogDir/$Store/"))
+          .foreach(p => fs.delete(new Path(p), true))
+        write(spark, keep.flatten, s"$catalogDir/$Dir", "overwrite")
       }
     }
 }

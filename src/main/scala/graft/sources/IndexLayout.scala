@@ -16,8 +16,9 @@ import org.apache.spark.sql.types._
 /** The declared schemas of the on-disk index layouts graft writes and
   * serves from: every directory of the impact BM25, raw BM25, IVF,
   * PQ-sidecar, line, phrase, dedup signature, phash band and KN count
-  * layouts, in one table, and the commit-log protocol of the
-  * appendable ones ([[Appendable]]), written once.
+  * layouts and of the catalog manifest, in one table, and the
+  * commit-log protocol of the appendable ones ([[Appendable]]),
+  * written once.
   *
   * Readers go through [[Layout.read]], i.e. `spark.read.schema(s)`:
   * inferring a parquet schema runs a one-task footer-read job per
@@ -429,8 +430,15 @@ object IndexLayout {
     meta = Set("commits"),
     data = "counts", part = None, id = None)
 
+  /** [[Catalog]]'s manifest, under the catalog root: one row per
+    * registration, the (kind, key) pair's newest `seq` serving. */
+  val Manifest: Layout = new Layout("catalog manifest", Map(
+    "manifest" -> schema("kind" -> StringType, "key" -> StringType, "path" -> StringType,
+      "stamp" -> StringType, "seq" -> LongType)),
+    meta = Set("manifest"))
+
   val all: Seq[Layout] = Seq(ImpactBm25, RawBm25, Ivf, Pq, Lines, Phrase, DedupSig, Phash,
-    KnCounts)
+    KnCounts, Manifest)
 
   /** The distinct partition values (bucket or cell ids) a frame of one
     * int column names — the dirty and surviving partition sets of the

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{Artifacts, Tables}
+import graft.sources.Catalog
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -1016,14 +1017,8 @@ object Streams {
                       nlist: Int = 16, nprobe: Int = 10, shortlist: Int = 32,
                       k: Int = 5, nQueries: Int = 50): DataFrame = {
     import spark.implicits._
-    val all = Tables.embeddings(spark, dir)
-    val maxRow = all.agg(max($"vec_id")).head()
-    if (maxRow.isNullAt(0))
-      return Seq.empty[(Long, Long, Int, Int, Double)]
-        .toDF("query_id", "neighbor_id", "cell", "rank_nn", "cosine")
-    graft.sources.Lake.withScratchIndex(spark, "graft_ivf_stream") { tmp =>
-      val cut = graft.operators.Similarity.prefixIvfWrite(
-        spark, dir, tmp, nlist, maxRow.getLong(0))
+    graft.operators.Similarity.prefixIvfDrill(spark, dir, "graft_ivf_stream", nlist) {
+        (tmp, all, cut) =>
       (0 until nBatches).foreach { b =>
         graft.operators.Similarity.ivfAppend(spark, tmp,
           all.filter($"vec_id" > cut && pmod($"vec_id", lit(nBatches)) === b))
@@ -1099,24 +1094,22 @@ object Streams {
     if (NearDup.shinglePostings(docs).isEmpty)
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("new_id", "ref_id", "n_inter", "jaccard")
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) * 7 / 10
     val neu = docs.select(($"doc_id" + NearDup.BigOffset).as("doc_id"), $"text")
     val key = s"corpus:$dir"
     graft.sources.Lake.withScratchIndex(spark, "graft_stream_cat") { cat =>
-      // epoch artifacts promote from the session templates (the same
-      // keys the dedup/fleet drills build — one shingle pass per
-      // corpus snapshot per session, r17 opt); the mid-stream cutover
-      // and reclaim still run over real files this drill owns
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "dedup_sig", key,
-        stamp = "epoch-1")(Artifacts.promote(spark,
-        NearDup.dedupSigTemplate(spark, dir, Some(cut), dfCap)))
+      // epoch stores are copies of the session templates the dedup and
+      // fleet drills build too (one shingle pass per corpus snapshot);
+      // the mid-stream cutover and reclaim run over files this drill owns
+      def cutover(stamp: String, snap: Option[Long]): Unit =
+        Catalog.cutover(spark, cat, key, stamp)("dedup_sig" ->
+          Artifacts.promote(spark, NearDup.dedupSigTemplate(spark, dir, snap, dfCap)))
+      cutover("epoch-1", Tables.prefixCut(docs))
       def serveBatch(b: org.apache.spark.sql.DataFrame,
                      pred: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
         // the per-batch re-resolve — the whole point of the entry.
         // Shingle rows are doc-local, so the batch's shingles are the
         // session snapshot memo filtered by the same id predicate.
-        val (path, _) =
-          graft.sources.Catalog.lookup(spark, cat, "dedup_sig", key).get
+        val (path, _) = Catalog.lookup(spark, cat, "dedup_sig", key).get
         NearDup.dedupServe(spark, path, Tables.fanout(b), threshold, dfCap,
           shingled = Some(NearDup.neuShinglesFor(spark, dir).filter(pred)))
           .localCheckpoint()
@@ -1124,10 +1117,8 @@ object Streams {
       val before = serveBatch(neu.filter($"doc_id" % 2 === 0), $"doc_id" % 2 === 0)
       // the cutover lands mid-stream; the old store is reclaimed, so
       // a sink that cached its path would crash — re-resolving doesn't
-      graft.sources.Catalog.resolveOrBuild(spark, cat, "dedup_sig", key,
-        stamp = "epoch-2")(Artifacts.promote(spark,
-        NearDup.dedupSigTemplate(spark, dir, None, dfCap)))
-      graft.sources.Catalog.vacuum(spark, cat)
+      cutover("epoch-2", None)
+      Catalog.vacuum(spark, cat)
       before.unionAll(serveBatch(neu.filter($"doc_id" % 2 === 1),
         $"doc_id" % 2 === 1))
     }
@@ -1163,7 +1154,7 @@ object Streams {
     if (ref.filter(size(split(trim($"text"), "\\s+")) >= 3).isEmpty)
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("new_id", "ref_id", "n_inter", "jaccard")
-    val cut = ref.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val cut = Tables.prefixCut(ref).get
     graft.sources.Lake.withScratchIndex(spark, "graft_dedup_stream") { tmp =>
       // prefix build promotes from the session template; the streamed
       // appends mutate this drill's own copy (r17 opt)
@@ -1207,7 +1198,7 @@ object Streams {
     if (ref.isEmpty || neu.isEmpty)
       return Seq.empty[(Long, Long, Long, String)]
         .toDF("doc_id", "n_kept", "n_dropped", "clean_text")
-    val cut = ref.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val cut = Tables.prefixCut(ref).get
     graft.sources.Lake.withScratchIndex(spark, "graft_line_stream") { tmp =>
       // prefix build promotes from the session template; the streamed
       // appends mutate this drill's own copy (r17 opt)
@@ -1240,7 +1231,7 @@ object Streams {
     if (ref.isEmpty || neu.isEmpty)
       return Seq.empty[(Long, Long, Long, String)]
         .toDF("doc_id", "n_kept", "n_dropped", "clean_text")
-    val cut = ref.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val cut = Tables.prefixCut(ref).get
     val TA = graft.operators.TextAnalysis
     graft.sources.Lake.withScratchIndex(spark, "graft_para_stream") { tmp =>
       // prefix build promotes from the session template shared with

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Multimodal, NearDup, Similarity, TextAnalysis}
-import graft.sources.{IndexLayout, IndexRoute, Lake}
+import graft.sources.{Catalog, IndexLayout, IndexRoute, Lake}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -37,7 +37,7 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     * exists: (layout, root) pairs. */
   private lazy val built: Seq[(IndexLayout.Layout, String)] = {
     val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val cut = Tables.prefixCut(docs).get
     val impact = tmp("graft_layout_impact")
     TextAnalysis.bm25Write(spark, sf, impact)
     TextAnalysis.bm25MarkDeleted(spark, impact, docs.filter($"doc_id" % 5 === 3))
@@ -65,18 +65,24 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     IndexLayout.DedupSig.delete(spark, sig, docs.filter($"doc_id" % 7 === 0))
     val phash = tmp("graft_layout_phash")
     val bmp = Multimodal.bmpTable(spark, sf).select($"doc_id", $"payload")
-    val bcut = bmp.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val bcut = Tables.prefixCut(bmp).get
     Multimodal.phashIndexWrite(bmp.filter($"doc_id" <= bcut), phash)
     Multimodal.phashIndexAppend(bmp.filter($"doc_id" > bcut), phash)
     IndexLayout.Phash.delete(spark, phash, bmp.filter($"doc_id" % 5 === 0))
     val kn = tmp("graft_layout_kn")
     TextAnalysis.knStoreWrite(docs.filter($"doc_id" <= cut), kn)
     TextAnalysis.knStoreAppend(docs.filter($"doc_id" > cut), kn)
-    scratch ++= Seq(impact, raw, ivf, lines, phrase, sig, phash, kn)
+    // a catalog: two registrations and a two-kind cutover commit
+    val cat = tmp("graft_layout_catalog")
+    Catalog.register(spark, cat, "bm25impact", "k", impact, "epoch-1")
+    Catalog.register(spark, cat, "kn", "k", kn, "epoch-1")
+    Catalog.registerAll(spark, cat, Seq(("bm25impact", "k", impact, "epoch-2"),
+      ("ivf", "k", ivf, "epoch-2")))
+    scratch ++= Seq(impact, raw, ivf, lines, phrase, sig, phash, kn, cat)
     Seq(IndexLayout.ImpactBm25 -> Lake.currentVersionDir(spark, impact).get,
       IndexLayout.RawBm25 -> raw, IndexLayout.Ivf -> ivf, IndexLayout.Pq -> ivf,
       IndexLayout.Lines -> lines, IndexLayout.Phrase -> phrase, IndexLayout.DedupSig -> sig,
-      IndexLayout.Phash -> phash, IndexLayout.KnCounts -> kn)
+      IndexLayout.Phash -> phash, IndexLayout.KnCounts -> kn, IndexLayout.Manifest -> cat)
   }
 
   private val scratch = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -130,8 +136,8 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("local: every metadata directory reads on the driver the rows the declared read collects, with no job") {
-    assert(built.flatMap(_._1.meta).toSet ==
-      Set("stats", "stats_log", "commits", "centroids", "deletes", "pq/books", "pq/commits"))
+    assert(built.flatMap(_._1.meta).toSet == Set("stats", "stats_log", "commits", "centroids",
+      "deletes", "pq/books", "pq/commits", "manifest"))
     for ((layout, root) <- built; dir <- layout.meta) {
       // Spark's writers leave _SUCCESS and checksum files next to the data
       val names = new java.io.File(s"$root/$dir").list().toSeq
@@ -145,6 +151,12 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"${layout.name} $dir: local ${rows.take(3)} vs read ${expected.take(3)}")
       assert(rows.forall(_.schema == layout.dirs(dir)))
     }
+    // the catalog reads its manifest the same way: a lookup runs no job
+    val cat = built.collectFirst { case (IndexLayout.Manifest, root) => root }.get
+    var found = Option.empty[(String, String)]
+    assert(jobsOf { found = Catalog.lookup(spark, cat, "bm25impact", "k") } == 0,
+      "Catalog.lookup ran a job")
+    assert(found.map(_._2).contains("epoch-2"))
   }
 
   test("local: a missing directory holds no rows; a data directory is refused") {
@@ -217,7 +229,7 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     val twins = docs.filter($"doc_id" % 4 === 1).select(($"doc_id" + 1000L).as("doc_id"), $"text")
     val emb = Tables.embeddings(spark, sf)
     val bmp = Multimodal.bmpTable(spark, sf).select($"doc_id", $"payload")
-    val bcut = bmp.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val bcut = Tables.prefixCut(bmp).get
     val phrases = Seq((1L, "alpha", "beta"), (2L, "gamma", "delta"), (3L, "eta", "theta"))
       .toDF("query_id", "t1", "t2")
     def set(df: DataFrame): Set[Row] = df.collect().toSet
@@ -352,6 +364,16 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     TextAnalysis.knStoreDelta(docs.limit(5), kn, overwrite = false, sign = 1L, commit = false)
     assert(TextAnalysis.knStoreCounts(spark, kn).collect().toSet == counts,
       "a torn KN delta is invisible")
+    // the KN vacuum rewrites counts/ and commits/: a live read pin
+    // refuses it before any file is touched
+    def knFiles: Map[String, Long] = Seq("counts", "commits").flatMap { d =>
+      new java.io.File(s"$kn/$d").listFiles().toSeq.map(f => s"$d/${f.getName}" -> f.lastModified)
+    }.toMap
+    val knBefore = knFiles
+    val knPin = Lake.pinSnapshot(spark, kn, owner = "walk")
+    intercept[Lake.PinnedSnapshotException](TextAnalysis.knStoreVacuum(spark, kn))
+    assert(knFiles == knBefore, "a refused KN vacuum touches no file")
+    Lake.releasePin(spark, kn, knPin)
     TextAnalysis.knStoreVacuum(spark, kn)
     assert(IndexLayout.KnCounts.committed(spark, kn).size == 1)
     assert(IndexLayout.KnCounts.read(spark, kn, "counts").count() == counts.size,
@@ -373,11 +395,24 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
         java.nio.file.Files.readAllLines(p).asScala.take(n).reverse
           .find(_.trim.startsWith("def ")).exists(_.contains("def ivfRetrain")) },
       s"partition rewrites go through IndexLayout.Appendable.rewrite: $overwrites")
-    val metaReads = "read\\s*\\.\\s*parquet\\([^)]*/(commits|deletes|stats_log)".r
+    val metaReads = "read\\s*\\.\\s*parquet\\([^)]*/(commits|deletes|stats_log|manifest)".r
     val offenders = sources.filter(p => metaReads.findFirstIn(java.nio.file.Files.readString(p))
       .isDefined)
-    assert(offenders.isEmpty,
-      s"commit logs and tombstones are read through IndexLayout: ${offenders.mkString(", ")}")
+    assert(offenders.isEmpty, "commit logs, tombstones and the catalog manifest are read " +
+      s"through IndexLayout: ${offenders.mkString(", ")}")
+    // the catalog names its manifest directory by a constant: it reads
+    // no parquet but through its declared layout
+    val catalog = sources.find(_.getFileName.toString == "Catalog.scala").get
+    assert(!java.nio.file.Files.readString(catalog).contains("read.parquet"),
+      "Catalog reads its manifest through IndexLayout.Manifest")
+    // the registry's drills go through the one epoch lifecycle
+    // (Catalog.drill / cutover / resolve), never its lower steps
+    val steps = "\\b(resolveOrBuild|registerAll|rollbackAll)\\s*\\(".r
+    val drills = sources.filter(p => Seq("/graft/operators/", "/graft/streaming/")
+      .exists(p.toString.replace('\\', '/').contains))
+    assert(drills.nonEmpty)
+    val bypass = drills.filter(p => steps.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+    assert(bypass.isEmpty, s"drills bypass the catalog lifecycle: ${bypass.mkString(", ")}")
   }
 
   test("bm25 router: driver buckets equal SQL pmod(xxhash64(token), n)") {

@@ -570,6 +570,34 @@ class LakeSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("retention sweep: a phash band index's tombstones are reclaimed and the serve answer is unchanged") {
+    import operators.{Multimodal, Retention}
+    val s = spark
+    import s.implicits._
+    val idx = tmp("sweep_phash")
+    val bmp = Multimodal.bmpTable(s, sf).select($"doc_id", $"payload")
+    val twins = Multimodal.bmpTwinTable(s, sf)
+    Multimodal.phashIndexWrite(bmp, idx)
+    // tombstone every fifth image: a serve stops seeing them at once
+    IndexLayout.Phash.delete(s, idx, bmp.filter($"doc_id" % 5 === 0))
+    assert(IndexLayout.Phash.reclaimableFraction(s, idx) > 0.0)
+    val before = Multimodal.mmPhashServe(s, idx, twins).collect().toSet
+    assert(before.nonEmpty)
+    // the sweep's expiry names the same images (a re-delete is a no-op);
+    // the fleet line addresses the index by the `phash` kind word
+    val meta = tmp("sweep_phash_meta")
+    bmp.select($"doc_id", when($"doc_id" % 5 === 0, lit("2000-01-01").cast("date"))
+      .otherwise(current_date()).as("ingested")).write.mode("overwrite").parquet(meta)
+    val fleet = MaintenanceMain.parseFleet(s, s"index name=img kind=phash path=$idx " +
+      s"meta=$meta ts=ingested ttlDays=365 maxFiles=1000").indexes
+    assert(fleet.map(_.kind) == Seq(Retention.Phash))
+    assert(Retention.retentionSweep(s, fleet) == Map("img" -> Retention.Reclaimed))
+    assert(IndexLayout.Phash.reclaimableFraction(s, idx) == 0.0,
+      "the sweep's vacuum reclaims every tombstoned band row")
+    assert(Multimodal.mmPhashServe(s, idx, twins).collect().toSet == before,
+      "the reclaim is answer-invisible")
+  }
+
   test("retention sweep: expiry always commits, rewrite budget spent highest-dead-weight-first, converges") {
     import operators.Retention
     val s = spark
@@ -876,10 +904,12 @@ class LakeSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val cat = java.nio.file.Files.createTempDirectory("graft_fleet4").toString
-    val cut = Tables.documents(s, sf)
-      .agg(max($"doc_id")).head().getLong(0) * 7 / 10
-    TextAnalysis.fleetCatalogCutover(s, sf, cat, "spec", "epoch-1", Some(cut))
-    TextAnalysis.fleetCatalogCutover(s, sf, cat, "spec", "epoch-2", None)
+    val cut = Tables.prefixCut(Tables.documents(s, sf)).get
+    val fleet = TextAnalysis.fleetTemplates(s, sf)
+    val kinds = fleet.map(_._1)
+    for ((stamp, snap) <- Seq("epoch-1" -> Some(cut), "epoch-2" -> None))
+      Catalog.cutover(s, cat, "spec", stamp)(fleet.map { case (kind, template) =>
+        kind -> Artifacts.promote(s, template(snap)) }: _*)
     // each epoch's FOUR rows share ONE seq — the single-commit flip
     val rows = Catalog.entries(s, cat)
       .select($"kind", $"stamp", $"seq").collect()
@@ -888,16 +918,15 @@ class LakeSpec extends AnyFunSuite {
       assert(rs.map(_.getAs[Long]("seq")).distinct.length == 1,
         s"$stamp rows must share one seq")
       assert(rs.map(_.getAs[String]("kind")).sorted.toSeq ==
-        TextAnalysis.FleetKinds.sorted, s"$stamp must cover all four kinds")
+        kinds.sorted, s"$stamp must cover all four kinds")
     }
     // the resolve refuses a mixed fleet: one kind re-registered at a
     // newer epoch must fail the all-four check, never serve a mix
-    assert(TextAnalysis.fleetCatalogResolve(s, cat, "spec", "epoch-2")
-      .keySet == TextAnalysis.FleetKinds.toSet)
+    assert(Catalog.resolve(s, cat, "spec", "epoch-2")(kinds: _*).keySet == kinds.toSet)
     Catalog.register(s, cat, "ivf", "spec",
       Catalog.lookup(s, cat, "ivf", "spec").get._1, "epoch-3")
     intercept[IllegalArgumentException] {
-      TextAnalysis.fleetCatalogResolve(s, cat, "spec", "epoch-3")
+      Catalog.resolve(s, cat, "spec", "epoch-3")(kinds: _*)
     }
     val fs = new org.apache.hadoop.fs.Path(cat)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1012,9 +1041,16 @@ class LakeSpec extends AnyFunSuite {
     import s.implicits._
     val cat = tmp("hybcat")
     val docs = Tables.documents(s, sf).select($"doc_id", $"text")
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) * 7 / 10
+    val cut = Tables.prefixCut(docs).get
+    def cutover(stamp: String, snap: Option[Long]): Seq[String] =
+      Catalog.cutover(s, cat, "spec", stamp)(TextAnalysis.hybridTemplates(s, sf).map {
+        case (kind, template) => kind -> Artifacts.promote(s, template(snap)) }: _*)
+    def resolveServe(epoch: String) = {
+      val p = Catalog.resolve(s, cat, "spec", epoch)("bm25impact", "ivf")
+      TextAnalysis.hybridServeFrom(s, sf, p("ivf"), p("bm25impact"))
+    }
     // epoch 1: BOTH kinds land under one registerAll commit
-    TextAnalysis.hybridCatalogCutover(s, sf, cat, "spec", "epoch-1", Some(cut))
+    cutover("epoch-1", Some(cut))
     val (bm1, st1) = Catalog.lookup(s, cat, "bm25impact", "spec").get
     val (iv1, stv1) = Catalog.lookup(s, cat, "ivf", "spec").get
     assert(st1 == "epoch-1" && stv1 == "epoch-1")
@@ -1029,11 +1065,11 @@ class LakeSpec extends AnyFunSuite {
     TextAnalysis.bm25WriteImpactFrom(
       Tables.fanout(docs.filter($"doc_id" <= cut)), s"$ref/bm25")
     assert(sameResult(
-      TextAnalysis.hybridCatalogResolveServe(s, sf, cat, "spec", "epoch-1"),
+      resolveServe("epoch-1"),
       TextAnalysis.hybridServeFrom(s, sf, s"$ref/ivf", s"$ref/bm25")),
       "the fleet's two catalog lookups must serve the epoch-1 answer")
     // drift: epoch-2 rebuilds BOTH kinds and supersedes atomically
-    TextAnalysis.hybridCatalogCutover(s, sf, cat, "spec", "epoch-2", None)
+    cutover("epoch-2", None)
     val e2seq = Catalog.entries(s, cat).filter($"stamp" === "epoch-2")
       .select($"seq").distinct().collect()
     assert(e2seq.length == 1, "the epoch-2 pair must share one cutover seq")
@@ -1044,17 +1080,54 @@ class LakeSpec extends AnyFunSuite {
       !fs.exists(new org.apache.hadoop.fs.Path(iv1)),
       "vacuum must reclaim BOTH superseded epoch-1 stores")
     assert(sameResult(
-      TextAnalysis.hybridCatalogResolveServe(s, sf, cat, "spec", "epoch-2"),
+      resolveServe("epoch-2"),
       TextAnalysis.hybridServe(s, sf)),
       "the post-drift fleet serve must equal the full-corpus hybrid answer")
     // a mixed-epoch fleet must refuse to fuse
     Catalog.register(s, cat, "ivf", "spec",
       Catalog.lookup(s, cat, "ivf", "spec").get._1, "epoch-3")
     assertThrows[IllegalArgumentException] {
-      TextAnalysis.hybridCatalogResolveServe(s, sf, cat, "spec", "epoch-3")
+      resolveServe("epoch-3")
     }
     fs.delete(new org.apache.hadoop.fs.Path(cat), true)
     spark.catalog.clearCache()
+  }
+
+  test("a failed cutover registers nothing and leaves no store directory; the re-driven cutover lands once") {
+    import graft.sources.Catalog
+    val s = spark
+    import s.implicits._
+    val cat = tmp("failcut")
+    val fs = new org.apache.hadoop.fs.Path(cat).getFileSystem(s.sparkContext.hadoopConfiguration)
+    def build(d: String): Unit = Seq(1, 2, 3).toDF("x").write.parquet(d)
+    def stores: Set[String] = Seq("a", "b").flatMap { kind =>
+      val dir = new org.apache.hadoop.fs.Path(s"$cat/store/$kind")
+      if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath.getName).map(n => s"$kind/$n")
+      else Nil
+    }.toSet
+    val first = Catalog.cutover(s, cat, "k", "epoch-1")("a" -> build, "b" -> build)
+    val before = stores
+    assert(before.size == 2)
+    // the second leg writes its directory and then fails: both legs'
+    // directories are this attempt's and neither is registered
+    val e = intercept[IllegalStateException] {
+      Catalog.cutover(s, cat, "k", "epoch-2")("a" -> build,
+        "b" -> (d => { build(d); throw new IllegalStateException("leg b failed") }))
+    }
+    assert(e.getMessage == "leg b failed")
+    assert(Catalog.resolve(s, cat, "k", "epoch-1")("a", "b") ==
+      Map("a" -> first.head, "b" -> first(1)), "the previous epoch still resolves")
+    assert(Catalog.entries(s, cat).filter($"stamp" === "epoch-2").count() == 0,
+      "a failed cutover registers no row")
+    assert(stores == before, "a failed cutover leaves no store directory behind")
+    // the re-driven cutover lands once, under one seq
+    val second = Catalog.cutover(s, cat, "k", "epoch-2")("a" -> build, "b" -> build)
+    val landed = Catalog.entries(s, cat).filter($"stamp" === "epoch-2").collect()
+    assert(landed.length == 2 && landed.map(_.getAs[Long]("seq")).distinct.length == 1)
+    assert(Catalog.resolve(s, cat, "k", "epoch-2")("a", "b") ==
+      Map("a" -> second.head, "b" -> second(1)))
+    assert(stores == before ++ second.map(_.stripPrefix(s"$cat/store/")))
+    fs.delete(new org.apache.hadoop.fs.Path(cat), true)
   }
 
   test("fleet manifest resolves a catalog-addressed index to its serving epoch") {

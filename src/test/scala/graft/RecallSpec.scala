@@ -513,8 +513,8 @@ class RecallSpec extends AnyFunSuite {
     // ADAPTIVE loop serves: every per-width serve must go through the
     // committed+live view, so the tombstone contract holds for the
     // adaptive read path exactly as for the fixed-width one
-    val maxId = all.agg(org.apache.spark.sql.functions.max($"vec_id")).head().getLong(0)
-    val cut = Sim.prefixIvfWrite(spark, sf, idx.getAbsolutePath, 16, maxId)
+    val cut = Tables.prefixCut(all, "vec_id").get
+    Sim.prefixIvfWrite(spark, sf, idx.getAbsolutePath, 16, cut)
     Sim.ivfAppend(spark, idx.getAbsolutePath, all.filter($"vec_id" > cut))
     Sim.ivfDelete(spark, idx.getAbsolutePath,
       all.filter($"vec_id" % 3 === 0 && $"vec_id" >= 50).select($"vec_id"))
