@@ -1274,8 +1274,9 @@ object Similarity {
     * lists' partition column, so the probe join touches nprobe/nlist
     * of the index and never the raw corpus. Pass `queries` (vec_id,
     * embedding) for real serving — an external query batch routes on
-    * the driver against the centroids alone and is scored by one
-    * [[graft.sources.IndexProbe]] job over the probed cells; when
+    * the driver against the centroids alone and is scored by
+    * [[graft.sources.IndexProbe]] over the probed cells (in the calling
+    * thread when they are small, else one job); when
     * omitted, the self-query panel (vec_id < nQueries) is derived FROM
     * the lists table, which necessarily scans it once — the self-test
     * mode, not the serving path, and a Spark plan. */
@@ -1362,8 +1363,8 @@ object Similarity {
       probes.map(_.getInt(0)).distinct)
   }
 
-  /** `queries` given: routed on the driver and served by one
-    * [[graft.sources.IndexProbe]] job over the probed cells. External
+  /** `queries` given: routed on the driver and served by
+    * [[graft.sources.IndexProbe]] over the probed cells. External
     * queries number their OWN id namespace: a batch vector that happens
     * to share a corpus id must not lose that corpus neighbor, so
     * self-exclusion applies only when `selfPanel` marks the batch as

@@ -3330,12 +3330,13 @@ object TextAnalysis {
         s"no committed index version at $path — build with bm25Write first"))
 
   /** BM25 served from a persisted [[bm25Write]] index. An EXTERNAL
-    * query batch (query_id, token) is one [[graft.sources.IndexProbe]]
-    * job: the bucket count comes from the `stats` row read without a
-    * job, the batch routes on the driver to its tokens' hash buckets —
-    * O(query terms) driver ints, what a search frontend's shard router
-    * holds — and one task per routed bucket directory sums its
-    * postings' impacts, so a short query touches a handful of the
+    * query batch (query_id, token) is served by
+    * [[graft.sources.IndexProbe]]: the bucket count comes from the
+    * `stats` row read without a job, the batch routes on the driver to
+    * its tokens' hash buckets — O(query terms) driver ints, what a
+    * search frontend's shard router holds — and each routed bucket
+    * directory's postings' impacts are summed (in the calling thread
+    * when the routed files are small, else one task each of one job), so a short query touches a handful of the
     * index partitions and never the corpus. The answer comes back as a
     * local relation. Without `queries`, the self-test panel (every
     * `qMod`-th doc's terms) derives FROM the postings, which
@@ -3662,7 +3663,7 @@ object TextAnalysis {
     * successful appends/deletes, never a torn one. The bucket count
     * comes from the index's own stats log — an index built with any
     * nBuckets routes external queries correctly. With `queries`, the
-    * serve is one [[graft.sources.IndexProbe]] job over the query
+    * serve is an [[graft.sources.IndexProbe]] over the query
     * tokens' buckets ([[bm25ServeFrom]]'s routing), tombstones and
     * stats read on the driver. With `snapshot` (a
     * [[bm25Snapshot]] value), the serve reads exactly that committed

@@ -57,7 +57,10 @@ object IndexLayout {
       * `read(spark, root, dir).collect()` returns, with no job, from
       * the files [[files]] lists. Only the directories in `meta`
       * qualify: a data directory (postings, lists, codes) is
-      * corpus-sized and must be read by a job. */
+      * corpus-sized, so only its routed partitions are read, by
+      * [[IndexProbe]]: on the driver when they add up to at most
+      * `spark.sql.autoBroadcastJoinThreshold` bytes, else by a job
+      * (always, at -1). */
     def local(spark: SparkSession, root: String, dir: String): Seq[Row] = {
       require(meta(dir), s"$name: $dir is not a metadata directory")
       val schema = dirs(dir)

@@ -4,6 +4,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, AttributeReference,
@@ -11,24 +12,30 @@ import org.apache.spark.sql.catalyst.expressions.{Add, Alias, AttributeReference
   Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.LongAccumulator
 
-/** Serves an external query batch against a persisted index in ONE
-  * Spark job. The batch is routed on the driver ([[IndexRoute]]); the
-  * job has one task per routed `bucket=`/`cell=` directory, whose files
-  * are listed on the driver (a routed directory with no data file holds
-  * no rows and gets no task, and no routed file means no job). Each task
-  * reads its directory with the reader [[IndexLayout.Layout.local]]
-  * uses, applies the committed-batch and tombstone sets the driver read,
-  * and returns a bounded partial. The driver merges the partials into
-  * each query's top-k and returns them as a local relation with the
-  * Spark plan's schema, so the caller's `select(...).collect()` runs no
-  * second job.
+/** Serves an external query batch against a persisted index with at
+  * most ONE Spark job. The batch is routed on the driver ([[IndexRoute]])
+  * to `bucket=`/`cell=` directories, whose files are listed on the
+  * driver (a routed directory with no data file holds no rows, and no
+  * routed file means no work). Each routed directory is scored by one
+  * function: it reads the directory with the reader
+  * [[IndexLayout.Layout.local]] uses, applies the committed-batch and
+  * tombstone sets the driver read, and returns a bounded partial. A
+  * warm probe over at most `spark.sql.autoBroadcastJoinThreshold` routed
+  * bytes runs that function in the calling thread and starts no job; a
+  * larger probe runs it as one job with a task per routed directory,
+  * and a threshold of -1 always takes the job. The driver merges the
+  * partials into each query's top-k and returns them as a local
+  * relation with the Spark plan's schema, so the caller's
+  * `select(...).collect()` runs no job either.
   *
-  * Tasks score with the Catalyst expressions the Spark plans evaluate,
+  * Partials are scored with the Catalyst expressions the Spark plans evaluate,
   * under the session's evaluation mode: `bm25ImpactExpr` parsed and
   * analysed once per mode, and [[IndexRoute.cosine]]'s DotProductFloat,
   * Divide and Multiply. Ranks follow the plans' windows: score
@@ -37,9 +44,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`TextAnalysis.bm25TopK`, `Similarity.ivfScore`,
   * `Similarity.ivfScoreRerank`), fed the same routed batch.
   *
-  * Every task adds the number of partial rows it returns to an
-  * accumulator named [[PartialsAccumulator]], so a listener can bound
-  * what the driver receives. */
+  * Every task of the job adds the number of partial rows it returns to
+  * an accumulator named [[PartialsAccumulator]], so a listener can
+  * bound what the driver receives. */
 object IndexProbe {
 
   val PartialsAccumulator = "IndexProbe.partials"
@@ -118,7 +125,7 @@ object IndexProbe {
 
   /** The request shared by both layouts: group the batch by query_id,
     * route each non-null token to its bucket (a null token matches no
-    * posting), run `score` over the routed buckets' postings as one job,
+    * posting), run `score` over the routed buckets' postings ([[run]]),
     * sum the partials per (query, doc) and keep each query's top-k. */
   private def bm25(layout: IndexLayout.Layout, root: String, columns: Seq[String],
                    queries: DataFrame, nBuckets: Int, k: Int)(
@@ -199,9 +206,9 @@ object IndexProbe {
   /** The plain IVF request (`Similarity.annIvfServe` with `queries`):
     * the live rows (batch in `committed`, id not in `dead`) of each
     * query's routed cells, less its own id when `excludeSelf`.
-    * Single-stage, each task keeps every query's top-k of its cell by
+    * Single-stage, each routed cell's partial keeps every query's top-k of its cell by
     * exact cosine and the driver the global top-k. With `shortlist`,
-    * each task keeps the top-`shortlist` by int8-code cosine with the
+    * each cell's partial keeps the top-`shortlist` by int8-code cosine with the
     * float vector and norm carried along; the driver takes the global
     * shortlist, reranks it by exact cosine and keeps the top-k. */
   def ivf(spark: SparkSession, root: String, committed: Seq[String], dead: Seq[Long],
@@ -288,9 +295,12 @@ object IndexProbe {
 
   // ---------------------------------------------------------- shared
 
-  /** One task per routed partition `partCol=p` of `root/dir` that holds
-    * data files, each running `score(payload, rows of columns)`; the
-    * tasks' results collected by one job. */
+  /** `score(payload, rows of columns)` over every routed partition
+    * `partCol=p` of `root/dir` that holds data files, run in the calling
+    * thread when the routed files add up to at most the session's
+    * `autoBroadcastJoinThreshold` (the size Spark itself holds whole on
+    * the driver; a negative bound disables it), else as one job with a
+    * task per partition. */
   private def run[P, R: ClassTag](spark: SparkSession, layout: IndexLayout.Layout,
                                   root: String, dir: String, partCol: String,
                                   columns: Seq[String], routed: Seq[(Int, P)])(
@@ -300,14 +310,52 @@ object IndexProbe {
       (IndexLayout.files(conf, s"$root/$dir/$partCol=$p"), payload)
     }.filter(_._1.nonEmpty)
     if (parts.isEmpty) return Array.empty[R]
-    val reader = IndexLayout.rowReader(spark, StructType(columns.map(layout.dirs(dir)(_))))
+    val probe = new Probe(
+      IndexLayout.rowReader(spark, StructType(columns.map(layout.dirs(dir)(_)))), score)
+    val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (bound >= 0 && parts.iterator.flatMap(_._1).map(_.length).sum <= bound)
+      return parts.toArray.flatMap { case (files, payload) => probe(files, payload) }
     val sc = spark.sparkContext
-    val partials = sc.longAccumulator(PartialsAccumulator)
-    sc.parallelize(parts, parts.length).mapPartitions(_.flatMap { case (files, payload) =>
-      val out = score(payload, files.iterator.flatMap(f => reader(f.partitioned))).toArray
+    sc.runJob(sc.parallelize(parts, parts.length),
+      new ProbeTask(probe, sc.longAccumulator(PartialsAccumulator))).flatten
+  }
+
+  /** One routed partition's share of a request: `score(payload, rows)`
+    * over its files, read with `reader`. The file being read when
+    * `score` returns or throws is closed then: a reader closes its file
+    * at its end, and nothing else closes one that a throwing `score`
+    * abandoned (in the calling thread, no task ends). A named class rather
+    * than a lambda, as is [[ProbeTask]]: Spark's ClosureCleaner skips
+    * classes that are not closures, instead of re-reading the class
+    * files of every closure on each request. */
+  private final class Probe[P, R: ClassTag](reader: PartitionedFile => Iterator[InternalRow],
+                                            score: (P, Iterator[InternalRow]) => Iterator[R])
+    extends Serializable {
+    def apply(files: Seq[IndexLayout.DataFile], payload: P): Array[R] = {
+      var open: Iterator[InternalRow] = Iterator.empty
+      try score(payload, files.iterator.flatMap { f =>
+        open = reader(f.partitioned)
+        open
+      }).toArray
+      finally open match {
+        // the vectorized reader (Spark's default for these schemas);
+        // the row-mode reader closes its file only at its end
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }
+  }
+
+  /** The job's function: [[Probe]] over the task's partitions, adding
+    * the number of partial rows it returns to `partials`. */
+  private final class ProbeTask[P, R: ClassTag](probe: Probe[P, R], partials: LongAccumulator)
+    extends ((TaskContext, Iterator[(Seq[IndexLayout.DataFile], P)]) => Array[R])
+    with Serializable {
+    def apply(ctx: TaskContext, parts: Iterator[(Seq[IndexLayout.DataFile], P)]): Array[R] = {
+      val out = parts.toArray.flatMap { case (files, payload) => probe(files, payload) }
       partials.add(out.length)
       out
-    }).collect()
+    }
   }
 
   private def longOrNull(r: InternalRow, i: Int): java.lang.Long =

@@ -146,16 +146,16 @@ class Bm25Spec extends AnyFunSuite {
     val qTokens = tf0.filter(col("doc_id") === 0).join(dfTab, "token")
       .orderBy(col("df"), col("token")).limit(2)
       .select(lit(777L).as("query_id"), col("token"))
-    // the serve is one IndexProbe job with a task per routed bucket
-    // directory: with the batch a local relation, as a request's is,
-    // the task count is the routed read
+    // as a job (threshold -1) the serve is one IndexProbe job with a
+    // task per routed bucket directory: with the batch a local
+    // relation, as a request's is, the task count is the routed read
     val qLocal = spark.createDataFrame(
       java.util.Arrays.asList(qTokens.collect(): _*), qTokens.schema)
     var ext: org.apache.spark.sql.DataFrame = null
-    val tasks = tasksOf {
+    val tasks = withBroadcastThreshold(-1)(tasksOf {
       ext = operators.TextAnalysis.bm25ServeFrom(spark, idx.getAbsolutePath,
         k = 50, queries = Some(qLocal))
-    }
+    })
     // the impact layout is version-swapped: internals live under the
     // current committed version directory
     val vdir = new java.io.File(graft.sources.Lake
@@ -168,6 +168,13 @@ class Bm25Spec extends AnyFunSuite {
       .count(b => new java.io.File(vdir, s"postings/bucket=$b").isDirectory)
     assert(tasks == routed && tasks <= 2 && tasks < bucketDirs,
       s"2-token query must read its $routed routed bucket dirs (<= 2 of $bucketDirs), ran $tasks tasks")
+    // in process (the session's threshold): the same rows, and no job
+    var again: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf {
+      again = operators.TextAnalysis.bm25ServeFrom(spark, idx.getAbsolutePath,
+        k = 50, queries = Some(qLocal))
+    } == 0, "the in-process serve ran a job")
+    assert(again.collect().toSeq == ext.collect().toSeq, "in process vs the job")
     // the source doc is retrieved through the pruned read (a planted
     // near-duplicate may legitimately outscore it on length, so pin
     // membership, not rank 1)

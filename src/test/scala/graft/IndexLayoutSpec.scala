@@ -493,7 +493,48 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset("spark.sql.ansi.enabled")
   }
 
-  test("job budget: an external-query bm25ServeFrom runs <= 4 jobs, a shortlist annIvfServe <= 5") {
+  /** The bytes of the data files in `dirs`, listed as the probe lists
+    * them (names starting with `_` or `.` skipped): what a request
+    * weighs against the broadcast threshold. */
+  private def dataBytes(dirs: Seq[String]): Long =
+    dirs.flatMap(d => Option(new java.io.File(d).listFiles()).toSeq.flatten)
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(_.length).sum
+
+  /** The routed bytes of a BM25 request over `tokens`. */
+  private def bm25Routed(root: String, tokens: Seq[String], nBuckets: Int): Long =
+    dataBytes(IndexRoute.buckets(tokens, StringType, nBuckets).distinct
+      .map(b => s"$root/postings/bucket=$b"))
+
+  /** The routed bytes of an IVF request for `vec` at `nprobe`. */
+  private def ivfRouted(path: String, vec: Seq[Float], nprobe: Int): Long = {
+    val cents = IndexLayout.Ivf.local(spark, path, "centroids")
+    val norm = math.sqrt(vec.map(x => x.toDouble * x).sum)
+    dataBytes(IndexRoute.nearest(spark, Seq((vec, norm)), cents, nprobe).flatten
+      .map(i => s"$path/lists/cell=${cents(i).getAs[Int]("cid")}").distinct)
+  }
+
+  /** A warm request's budget: in process (the session's threshold) no
+    * job and no broadcast; with the threshold one byte below its
+    * `routed` bytes exactly one job, and at exactly them none; the same
+    * rows every time. */
+  private def budget(name: String, routed: Long)(request: => Seq[Row]): Unit = {
+    var rows: Seq[Row] = null
+    val warm = observe { rows = request }
+    info(s"$name: ${warm.jobs} jobs, ${warm.broadcasts} broadcasts, $routed routed bytes")
+    assert(rows.nonEmpty, s"$name answered nothing")
+    assert(warm.jobs == 0, s"$name ran ${warm.jobs} jobs in process")
+    assert(warm.broadcasts == 0, s"$name built ${warm.broadcasts} broadcasts")
+    for ((threshold, jobs) <- Seq(routed - 1 -> 1, routed -> 0))
+      withBroadcastThreshold(threshold) {
+        var again: Seq[Row] = null
+        val n = jobsOf { again = request }
+        assert(n == jobs, s"$name ran $n jobs at threshold $threshold (routed $routed)")
+        assert(again == rows, s"$name at threshold $threshold: $again vs $rows")
+      }
+  }
+
+  test("job budget: a warm bm25ServeFrom and shortlist annIvfServe run no job") {
     val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
     val emb = Tables.embeddings(spark, sf)
     val bm = tmp("graft_budget_bm25")
@@ -501,27 +542,24 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     scratch ++= Seq(bm, iv)
     TextAnalysis.bm25WriteImpactFrom(Tables.fanout(docs), bm)
     Similarity.ivfWriteFrom(emb, iv)
-    val toks = spark.read.parquet(s"${Lake.currentVersionDir(spark, bm).get}/postings")
+    val root = Lake.currentVersionDir(spark, bm).get
+    val toks = spark.read.parquet(s"$root/postings")
       .select($"token").orderBy($"token").limit(2).as[String].collect().toSeq
     val vec = emb.filter($"vec_id" === 3L).select($"embedding").head().getSeq[Float](0)
     // the benchmark's requests: collect the top-k like a client would
-    def bm25(): Array[_] = TextAnalysis.bm25ServeFrom(spark, bm, k = 10,
+    def bm25(): Seq[Row] = TextAnalysis.bm25ServeFrom(spark, bm, k = 10,
         queries = Some(toks.map(t => (1L, t)).toDF("query_id", "token")))
-      .select($"doc_id", $"rk", $"score").collect()
-    def ann(): Array[_] = Similarity.annIvfServe(spark, iv, nprobe = 10, k = 5,
+      .select($"doc_id", $"rk", $"score").collect().toSeq
+    def ann(): Seq[Row] = Similarity.annIvfServe(spark, iv, nprobe = 10, k = 5,
         queries = Some(Seq((1L, vec)).toDF("vec_id", "embedding")), shortlist = Some(32))
-      .select($"neighbor_id", $"rank_nn").collect()
+      .select($"neighbor_id", $"rank_nn").collect().toSeq
     assert(bm25().nonEmpty && ann().length == 5, "warm-up answers")
-    val bmJobs = jobsOf(assert(bm25().nonEmpty))
-    val annJobs = jobsOf(assert(ann().length == 5))
-    info(s"bm25ServeFrom: $bmJobs jobs, annIvfServe: $annJobs jobs")
-    // the budget has tightened since it was first set: each request is
-    // now one IndexProbe job
-    assert(bmJobs == 1, s"bm25ServeFrom ran $bmJobs jobs")
-    assert(annJobs == 1, s"annIvfServe ran $annJobs jobs")
+    val nBuckets = IndexLayout.ImpactBm25.local(spark, root, "stats").head.getAs[Int]("n_buckets")
+    budget("bm25ServeFrom", bm25Routed(root, toks, nBuckets))(bm25())
+    budget("annIvfServe", ivfRouted(iv, vec, 10))(ann())
   }
 
-  test("job budget: a tombstoned bm25ServeRaw and annIvfServe run one job each") {
+  test("job budget: a tombstoned bm25ServeRaw and annIvfServe run no job") {
     val emb = Tables.embeddings(spark, sf)
     val vec = emb.filter($"vec_id" === 3L).select($"embedding").head().getSeq[Float](0)
     // the maintenance indexes: the tombstoned raw and IVF indexes
@@ -532,21 +570,19 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
       .nonEmpty, "the maintenance indexes carry committed tombstones")
     val rawToks = IndexLayout.RawBm25.read(spark, raw, "postings").select($"token")
       .orderBy($"token").limit(2).as[String].collect().toSeq
-    def bm25Raw(): Array[_] = TextAnalysis.bm25ServeRaw(spark, raw, k = 10,
+    def bm25Raw(): Seq[Row] = TextAnalysis.bm25ServeRaw(spark, raw, k = 10,
         queries = Some(rawToks.map(t => (1L, t)).toDF("query_id", "token")))
-      .select($"doc_id", $"rk", $"score").collect()
-    def ann(): Array[_] = Similarity.annIvfServe(spark, ivfDel, nprobe = 10, k = 5,
+      .select($"doc_id", $"rk", $"score").collect().toSeq
+    def ann(): Seq[Row] = Similarity.annIvfServe(spark, ivfDel, nprobe = 10, k = 5,
         queries = Some(Seq((1L, vec)).toDF("vec_id", "embedding")), shortlist = Some(32))
-      .select($"neighbor_id", $"rank_nn").collect()
+      .select($"neighbor_id", $"rank_nn").collect().toSeq
     assert(bm25Raw().nonEmpty && ann().length == 5, "warm-up answers")
-    val budget = Seq(
-      "bm25ServeRaw" -> jobsOf(assert(bm25Raw().nonEmpty)),
-      "annIvfServe" -> jobsOf(assert(ann().length == 5)))
-    info(budget.map { case (n, j) => s"$n: $j jobs" }.mkString(", "))
-    for ((name, jobs) <- budget) assert(jobs == 1, s"$name ran $jobs jobs")
+    budget("bm25ServeRaw", bm25Routed(raw, rawToks, TextAnalysis.rawIndexLog(spark, raw)._2))(
+      bm25Raw())
+    budget("annIvfServe", ivfRouted(ivfDel, vec, 10))(ann())
   }
 
-  test("warm requests build no parquet reader: after one bm25ServeFrom and one annIvfServe, five more create no broadcast and run one job each") {
+  test("warm requests build no parquet reader and run no job") {
     val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
     val emb = Tables.embeddings(spark, sf)
     val bm = tmp("graft_warm_bm25")
@@ -554,28 +590,25 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     scratch ++= Seq(bm, iv)
     TextAnalysis.bm25WriteImpactFrom(Tables.fanout(docs), bm)
     Similarity.ivfWriteFrom(emb, iv)
-    val toks = IndexLayout.ImpactBm25.read(spark, Lake.currentVersionDir(spark, bm).get, "postings")
+    val root = Lake.currentVersionDir(spark, bm).get
+    val toks = IndexLayout.ImpactBm25.read(spark, root, "postings")
       .select($"token").distinct().orderBy($"token").limit(6).as[String].collect().toSeq
     val vecs = emb.filter($"vec_id" < 6L).orderBy($"vec_id").select($"embedding")
       .as[Seq[Float]].collect().toSeq
-    def bm25(i: Int): Array[_] = TextAnalysis.bm25ServeFrom(spark, bm, k = 10,
+    def bm25(i: Int): Seq[Row] = TextAnalysis.bm25ServeFrom(spark, bm, k = 10,
         queries = Some(toks.slice(i, i + 2).map(t => (1L, t)).toDF("query_id", "token")))
-      .select($"doc_id", $"rk", $"score").collect()
-    def ann(i: Int): Array[_] = Similarity.annIvfServe(spark, iv, nprobe = 10, k = 5,
+      .select($"doc_id", $"rk", $"score").collect().toSeq
+    def ann(i: Int): Seq[Row] = Similarity.annIvfServe(spark, iv, nprobe = 10, k = 5,
         queries = Some(Seq((1L, vecs(i))).toDF("vec_id", "embedding")), shortlist = Some(32))
-      .select($"neighbor_id", $"rank_nn").collect()
+      .select($"neighbor_id", $"rank_nn").collect().toSeq
     assert(bm25(0).nonEmpty && ann(0).length == 5, "warm-up answers")
+    val nBuckets = IndexLayout.ImpactBm25.local(spark, root, "stats").head.getAs[Int]("n_buckets")
     // other tokens and vectors than the warm-up's: the readers are
     // reused across requests, not across identical requests
-    val seen = (1 to 5).map { i =>
-      if (i % 2 == 1) s"bm25ServeFrom $i" -> observe(assert(bm25(i).nonEmpty))
-      else s"annIvfServe $i" -> observe(assert(ann(i).length == 5))
-    }
-    info(seen.map { case (n, o) => s"$n: ${o.jobs} job, ${o.broadcasts} broadcasts" }
-      .mkString("; "))
-    for ((name, o) <- seen) {
-      assert(o.broadcasts == 0, s"$name built ${o.broadcasts} broadcasts")
-      assert(o.jobs == 1, s"$name ran ${o.jobs} jobs")
+    for (i <- 1 to 5) {
+      if (i % 2 == 1)
+        budget(s"bm25ServeFrom $i", bm25Routed(root, toks.slice(i, i + 2), nBuckets))(bm25(i))
+      else budget(s"annIvfServe $i", ivfRouted(iv, vecs(i), 10))(ann(i))
     }
   }
 

@@ -46,6 +46,13 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     p
   }
 
+  /** `body(mode)` in process (the session's threshold), then with every
+    * probe one job (threshold -1). */
+  private def inBothModes(body: String => Unit): Unit = {
+    body("in process")
+    withBroadcastThreshold(-1)(body("job"))
+  }
+
   private def withAnsi[T](on: Boolean)(body: => T): T = {
     spark.conf.set("spark.sql.ansi.enabled", on.toString)
     try body finally spark.conf.unset("spark.sql.ansi.enabled")
@@ -91,22 +98,26 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val toks = sampleTokens(post)
     // doc 0's own rare token with a second doc's common one
     val q = bm25Batch(toks.take(4) :+ toks.last)
-    for (k <- Seq(1, 3, 1000)) {
-      val got = assertSame(TextAnalysis.bm25ServeFrom(spark, path, k = k, queries = Some(q)),
-        TextAnalysis.bm25TopK(post, q, k), s"impact k=$k")
-      // queries 1, 2, 3 and 5 ask for indexed tokens
-      assert(got.map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 5L), s"k=$k")
+    inBothModes { mode =>
+      for (k <- Seq(1, 3, 1000)) {
+        val got = assertSame(TextAnalysis.bm25ServeFrom(spark, path, k = k, queries = Some(q)),
+          TextAnalysis.bm25TopK(post, q, k), s"$mode impact k=$k")
+        // queries 1, 2, 3 and 5 ask for indexed tokens
+        assert(got.map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 5L), s"$mode k=$k")
+      }
     }
     TextAnalysis.bm25MarkDeleted(spark, path, docs.filter($"doc_id" % 3 === 1 || $"doc_id" === 0L))
     val live = post.join(IndexLayout.ImpactBm25.read(spark, root, "deletes"), Seq("doc_id"),
       "left_anti")
-    for (k <- Seq(2, 1000)) {
-      assertSame(TextAnalysis.bm25ServeFromLive(spark, path, k = k, queries = Some(q)),
-        TextAnalysis.bm25TopK(live, q, k), s"impact live k=$k")
+    inBothModes { mode =>
+      for (k <- Seq(2, 1000)) {
+        assertSame(TextAnalysis.bm25ServeFromLive(spark, path, k = k, queries = Some(q)),
+          TextAnalysis.bm25TopK(live, q, k), s"$mode impact live k=$k")
+      }
+      // the stale serve keeps serving the tombstoned docs
+      assertSame(TextAnalysis.bm25ServeFrom(spark, path, k = 5, queries = Some(q)),
+        TextAnalysis.bm25TopK(post, q, 5), s"$mode impact, tombstones ignored")
     }
-    // the stale serve keeps serving the tombstoned docs
-    assertSame(TextAnalysis.bm25ServeFrom(spark, path, k = 5, queries = Some(q)),
-      TextAnalysis.bm25TopK(post, q, 5), "impact, tombstones ignored")
   }
 
   /** bm25ServeRaw's plan, spelled out over the whole postings table. */
@@ -144,23 +155,25 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .unionAll(Seq((7L, torn), (7L, toks(1))).toDF("query_id", "token"))
     assert(IndexLayout.RawBm25.tombstones(spark, path, TextAnalysis.bm25Snapshot(spark, path))
       .nonEmpty)
-    for (k <- Seq(1, 4, 1000); dfCap <- Seq(2, 100)) {
-      val got = assertSame(
-        TextAnalysis.bm25ServeRaw(spark, path, k = k, dfCap = dfCap, queries = Some(q)),
-        rawPlan(path, q, k, dfCap, None), s"raw k=$k dfCap=$dfCap")
-      assert(got.nonEmpty, s"k=$k dfCap=$dfCap")
+    inBothModes { mode =>
+      for (k <- Seq(1, 4, 1000); dfCap <- Seq(2, 100)) {
+        val got = assertSame(
+          TextAnalysis.bm25ServeRaw(spark, path, k = k, dfCap = dfCap, queries = Some(q)),
+          rawPlan(path, q, k, dfCap, None), s"$mode raw k=$k dfCap=$dfCap")
+        assert(got.nonEmpty, s"$mode k=$k dfCap=$dfCap")
+      }
+      // the impact expression is parsed per evaluation mode
+      withAnsi(on = false) {
+        assertSame(TextAnalysis.bm25ServeRaw(spark, path, k = 4, queries = Some(q)),
+          rawPlan(path, q, 4, 100, None), s"$mode raw without ANSI")
+      }
+      assertSame(TextAnalysis.bm25ServeRaw(spark, path, k = 6, queries = Some(q),
+          snapshot = Some(beforeDelete)),
+        rawPlan(path, q, 6, 100, Some(beforeDelete)), s"$mode raw snapshot before the delete")
+      assertSame(TextAnalysis.bm25ServeRaw(spark, path, k = 6, queries = Some(q),
+          snapshot = Some(Seq.empty)),
+        rawPlan(path, q, 6, 100, Some(Seq.empty)), s"$mode raw, empty snapshot")
     }
-    // the impact expression is parsed per evaluation mode
-    withAnsi(on = false) {
-      assertSame(TextAnalysis.bm25ServeRaw(spark, path, k = 4, queries = Some(q)),
-        rawPlan(path, q, 4, 100, None), "raw without ANSI")
-    }
-    assertSame(TextAnalysis.bm25ServeRaw(spark, path, k = 6, queries = Some(q),
-        snapshot = Some(beforeDelete)),
-      rawPlan(path, q, 6, 100, Some(beforeDelete)), "raw snapshot before the delete")
-    assertSame(TextAnalysis.bm25ServeRaw(spark, path, k = 6, queries = Some(q),
-        snapshot = Some(Seq.empty)),
-      rawPlan(path, q, 6, 100, Some(Seq.empty)), "raw, empty snapshot")
   }
 
   /** A small IVF index of integer-valued vectors with exact duplicates
@@ -224,20 +237,22 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val onTies = Seq(1000L -> vecs(0)._2, 1001L -> vecs(3)._2.map(_ * 2f),
       1002L -> vecs(5)._2, 1003L -> vecs(40)._2)
     val zero = 1009L -> Seq.fill(8)(0f)
-    for (ansi <- Seq(true, false)) withAnsi(ansi) {
-      for ((batch, what) <- Seq(routed(onTies, cells) -> "every cell",
-             routed(onTies, cells.take(2)) -> "two cells",
-             routed(onTies.take(1), Seq(cells.head)) -> "one cell");
-           k <- Seq(1, 3, 500); sl <- Seq(None, Some(2), Some(8))) {
-        val (probe, plan) = ivfPair(batch, k, sl, excludeSelf = false)
-        assertSame(probe(), plan(), s"ansi=$ansi $what k=$k shortlist=$sl")
-      }
-      // a zero-norm query divides by zero: under ANSI both sides raise
-      // it, without ANSI its cosines are null on both sides
-      for (sl <- Seq(None, Some(4))) {
-        val (probe, plan) = ivfPair(routed(onTies :+ zero, cells), 3, sl, excludeSelf = false)
-        if (ansi) { divideByZero(probe().collect()); divideByZero(plan().collect()) }
-        else assertSame(probe(), plan(), s"zero-norm query shortlist=$sl")
+    inBothModes { mode =>
+      for (ansi <- Seq(true, false)) withAnsi(ansi) {
+        for ((batch, what) <- Seq(routed(onTies, cells) -> "every cell",
+               routed(onTies, cells.take(2)) -> "two cells",
+               routed(onTies.take(1), Seq(cells.head)) -> "one cell");
+             k <- Seq(1, 3, 500); sl <- Seq(None, Some(2), Some(8))) {
+          val (probe, plan) = ivfPair(batch, k, sl, excludeSelf = false)
+          assertSame(probe(), plan(), s"$mode ansi=$ansi $what k=$k shortlist=$sl")
+        }
+        // a zero-norm query divides by zero: under ANSI both sides raise
+        // it, without ANSI its cosines are null on both sides
+        for (sl <- Seq(None, Some(4))) {
+          val (probe, plan) = ivfPair(routed(onTies :+ zero, cells), 3, sl, excludeSelf = false)
+          if (ansi) { divideByZero(probe().collect()); divideByZero(plan().collect()) }
+          else assertSame(probe(), plan(), s"$mode zero-norm query shortlist=$sl")
+        }
       }
     }
   }
@@ -246,33 +261,82 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (path, vecs) = ivfIndex
     val cells = Similarity.liveLists(spark, path).select($"cell").distinct().as[Int]
       .collect().sorted.toSeq
-    // the index's own members as queries: each must lose itself, and
-    // its tied twin (i + 100) must then rank first
-    val members = routed(vecs.filter(v => Set(0L, 1L, 2L, 101L)(v._1)), cells)
-    for (sl <- Seq(None, Some(6)); k <- Seq(2, 1000)) {
-      val (probe, plan) = ivfPair(members, k, sl, excludeSelf = true)
-      val got = probe()
-      assertSame(got, plan(), s"selfPanel k=$k shortlist=$sl")
-      assert(got.filter($"query_id" === $"neighbor_id").isEmpty)
-      assert(got.filter($"query_id" === 0L && $"rank_nn" === 1).select($"neighbor_id")
-        .as[Long].collect().toSeq == Seq(100L))
+    inBothModes { mode =>
+      // the index's own members as queries: each must lose itself, and
+      // its tied twin (i + 100) must then rank first
+      val members = routed(vecs.filter(v => Set(0L, 1L, 2L, 101L)(v._1)), cells)
+      for (sl <- Seq(None, Some(6)); k <- Seq(2, 1000)) {
+        val (probe, plan) = ivfPair(members, k, sl, excludeSelf = true)
+        val got = probe()
+        assertSame(got, plan(), s"$mode selfPanel k=$k shortlist=$sl")
+        assert(got.filter($"query_id" === $"neighbor_id").isEmpty)
+        assert(got.filter($"query_id" === 0L && $"rank_nn" === 1).select($"neighbor_id")
+          .as[Long].collect().toSeq == Seq(100L))
+      }
+      // every live vector of the probed cells, when k exceeds them
+      val (probe, _) = ivfPair(routed(vecs.take(1), cells), 10000, None, excludeSelf = false)
+      assert(probe().count() == Similarity.liveLists(spark, path).count())
+      // no query, no job and the plan's schema
+      val (empty, emptyPlan) = ivfPair(Nil, 5, Some(8), excludeSelf = false)
+      var got: DataFrame = null
+      assert(jobsOf { got = empty() } == 0)
+      assertSame(got, emptyPlan(), s"$mode empty IVF batch")
+      // annIvfServe with queries goes through the probe: ids shifted out
+      // of the corpus namespace keep their corpus twins
+      val ext = vecs.take(3).map { case (i, v) => (i + 5000L, v) }.toDF("vec_id", "embedding")
+      val served = Similarity.annIvfServe(spark, path, nprobe = 4, k = 2, queries = Some(ext))
+      val (refProbe, refPlan) = ivfPair(
+        routed(vecs.take(3).map { case (i, v) => (i + 5000L, v) }, cells), 2, None,
+        excludeSelf = false)
+      assertSame(served, refPlan(), s"$mode annIvfServe, every cell probed")
+      assertSame(served, refProbe(), s"$mode annIvfServe vs the probe")
     }
-    // every live vector of the probed cells, when k exceeds them
-    val (probe, _) = ivfPair(routed(vecs.take(1), cells), 10000, None, excludeSelf = false)
-    assert(probe().count() == Similarity.liveLists(spark, path).count())
-    // no query, no job and the plan's schema
-    val (empty, emptyPlan) = ivfPair(Nil, 5, Some(8), excludeSelf = false)
-    var got: DataFrame = null
-    assert(jobsOf { got = empty() } == 0)
-    assertSame(got, emptyPlan(), "empty IVF batch")
-    // annIvfServe with queries goes through the probe: ids shifted out
-    // of the corpus namespace keep their corpus twins
-    val ext = vecs.take(3).map { case (i, v) => (i + 5000L, v) }.toDF("vec_id", "embedding")
-    val served = Similarity.annIvfServe(spark, path, nprobe = 4, k = 2, queries = Some(ext))
-    val (refProbe, refPlan) = ivfPair(routed(vecs.take(3).map { case (i, v) => (i + 5000L, v) },
-      cells), 2, None, excludeSelf = false)
-    assertSame(served, refPlan(), "annIvfServe, every cell probed")
-    assertSame(served, refProbe(), "annIvfServe vs the probe")
+  }
+
+  test("in process: throwing requests close their readers and raise what the job raises") {
+    val (path, vecs) = ivfIndex
+    val cells = Similarity.liveLists(spark, path).select($"cell").distinct().as[Int]
+      .collect().sorted.toSeq
+    // a zero-norm query divides by zero on the first row it scores,
+    // leaving the file being read unfinished
+    val (probe, _) = ivfPair(routed(Seq(1009L -> Seq.fill(8)(0f), vecs(0)), cells), 3, None,
+      excludeSelf = false)
+    def openFds(): Long = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean].getOpenFileDescriptorCount
+    withAnsi(on = true) {
+      withBroadcastThreshold(-1)(divideByZero(probe()))
+      assert(jobsOf(divideByZero(probe())) == 0, "the in-process request ran a job")
+      val before = openFds()
+      for (_ <- 1 to 20) divideByZero(probe())
+      val after = openFds()
+      info(s"open descriptors: $before before 20 throwing requests, $after after")
+      assert(after - before <= 5, s"$before open descriptors before, $after after")
+    }
+  }
+
+  test("concurrent requests: 8 BM25 and IVF requests under Par.jobs equal their serial answers") {
+    val (ivf, vecs) = ivfIndex
+    val bm = tmp("graft_probe_par")
+    TextAnalysis.bm25Write(spark, sf, bm)
+    val toks = sampleTokens(IndexLayout.ImpactBm25.read(spark,
+      Lake.currentVersionDir(spark, bm).get, "postings").select($"token", $"doc_id"))
+    val requests: Seq[() => Seq[Row]] = (0 until 4).flatMap { i =>
+      val q = bm25Batch(toks.drop(i) ++ toks.take(i))
+      val ext = Seq(vecs(i * 7), vecs(i * 7 + 1)).map { case (id, v) => (id + 5000L, v) }
+        .toDF("vec_id", "embedding")
+      Seq(() => TextAnalysis.bm25ServeFrom(spark, bm, k = 3 + i, queries = Some(q))
+          .collect().toSeq,
+        () => Similarity.annIvfServe(spark, ivf, nprobe = 2 + i % 3, k = 3, queries = Some(ext),
+          shortlist = if (i % 2 == 0) None else Some(8)).collect().toSeq)
+    }
+    val serial = requests.map(_())
+    assert(serial.forall(_.nonEmpty))
+    inBothModes { mode =>
+      val got = new Array[Seq[Row]](requests.size)
+      val jobs = jobsOf(Par.jobs(requests.indices.map(i => () => got(i) = requests(i)()): _*))
+      assert(jobs == (if (mode == "job") requests.size else 0), s"$mode: $jobs jobs")
+      for (i <- requests.indices) assert(got(i) == serial(i), s"$mode request $i")
+    }
   }
 
   test("BM25: an empty batch runs no job, a batch of only unknown or null tokens answers empty") {
@@ -290,10 +354,16 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nBuckets = IndexLayout.ImpactBm25.local(spark, root, "stats").head.getAs[Int]("n_buckets")
     val routedDirs = IndexRoute.buckets(Seq("no such shingle anywhere"), StringType, nBuckets)
       .count(b => new java.io.File(s"$root/postings/bucket=$b").isDirectory)
-    assert(tasksOf { got = TextAnalysis.bm25ServeFrom(spark, path, queries = Some(unknown)) } ==
-      routedDirs, "a null token routes nowhere")
+    withBroadcastThreshold(-1) {
+      assert(tasksOf { got = TextAnalysis.bm25ServeFrom(spark, path, queries = Some(unknown)) } ==
+        routedDirs, "a null token routes nowhere")
+    }
     assertSame(got, TextAnalysis.bm25TopK(post, unknown, 10), "unknown tokens")
     assert(got.isEmpty)
+    // in process: the same rows, and no job
+    var again: DataFrame = null
+    assert(jobsOf { again = TextAnalysis.bm25ServeFrom(spark, path, queries = Some(unknown)) } == 0)
+    assertSame(again, got, "unknown tokens, in process")
   }
 
   test("reused readers: every serve answers the current state through each mutation; a conf change builds a new reader") {

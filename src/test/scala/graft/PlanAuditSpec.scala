@@ -479,13 +479,17 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("hybrid_serve: every index probe returns panel-sized partials, never corpus-sized") {
     import org.apache.spark.sql.functions.col
-    // drive the un-checkpointed serving core: both of its index
-    // requests are IndexProbe jobs whose tasks return bounded partials
-    // (per routed bucket the panel's (query, doc) impact sums, per
-    // routed cell each query's top-k) and the driver merges them
+    // drive the un-checkpointed serving core: as jobs (threshold -1)
+    // both of its index requests are IndexProbe jobs whose tasks return
+    // bounded partials (per routed bucket the panel's (query, doc)
+    // impact sums, per routed cell each query's top-k) and the driver
+    // merges them
     val tmp = java.nio.file.Files.createTempDirectory("graft_hybrid_audit").toFile
-    val seen = observe(operators.TextAnalysis.hybridServeOn(spark, sf, tmp.getAbsolutePath)
-      .collect())
+    var asJobs: Seq[org.apache.spark.sql.Row] = null
+    val seen = withBroadcastThreshold(-1)(observe {
+      asJobs = operators.TextAnalysis.hybridServeOn(spark, sf, tmp.getAbsolutePath)
+        .collect().toSeq
+    })
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
     val corpusTokens = operators.TextAnalysis.bm25TfTable(docs).count()
     val panelTokens = operators.TextAnalysis.bm25TfTable(
@@ -503,6 +507,15 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(seen.partials > 0, "expected IndexProbe partials from the serve")
     assert(seen.partials <= bound,
       s"the probes returned corpus-scale partials: ${seen.partials} (bound $bound)")
+    // in process the same serve over the same indexes answers the same
+    // rows, and its requests return no partial through a task
+    var inProcess: Seq[org.apache.spark.sql.Row] = null
+    val again = observe {
+      inProcess = operators.TextAnalysis.hybridServeFrom(spark, sf, s"$tmp/ivf", s"$tmp/bm25")
+        .collect().toSeq
+    }
+    assert(again.partials == 0, s"in process, tasks returned ${again.partials} partials")
+    assert(inProcess.sortBy(_.toString) == asJobs.sortBy(_.toString), "in process vs the jobs")
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
     spark.catalog.clearCache()
   }

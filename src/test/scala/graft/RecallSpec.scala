@@ -255,7 +255,17 @@ class RecallSpec extends AnyFunSuite {
           math.sqrt(r.getSeq[Float](1).map(x => x.toDouble * x).sum))), centroids, 2)
       .flatten.map(centroids(_).getAs[Int]("cid")).distinct
       .count(c => new java.io.File(idx, s"lists/cell=$c").isDirectory)
-    val tasks = tasksOf(operators.Similarity.annIvfServe(
+    // pinned as a job (threshold -1); in process the same request
+    // answers the same rows with no job
+    def inProcessAsJob(serve: => org.apache.spark.sql.DataFrame): Int = {
+      var job: org.apache.spark.sql.DataFrame = null
+      val tasks = withBroadcastThreshold(-1)(tasksOf { job = serve })
+      var local: org.apache.spark.sql.DataFrame = null
+      assert(jobsOf { local = serve } == 0, "the in-process serve ran a job")
+      assert(local.collect().toSeq == job.collect().toSeq, "in process vs the job")
+      tasks
+    }
+    val tasks = inProcessAsJob(operators.Similarity.annIvfServe(
       spark, idx.getAbsolutePath, queries = Some(threeQ)))
     assert(tasks == routedCells && tasks <= 6 && tasks < cells,
       s"probed-cells read must cover the $routedCells routed of $cells dirs (<= 6), ran $tasks tasks")
@@ -269,7 +279,7 @@ class RecallSpec extends AnyFunSuite {
       "table-served two-stage probe must equal the memo-served rerank operator")
     // ...and its read bound: the code pass and the float rerank read
     // the same routed cell directories, one task each
-    val tasksRr = tasksOf(operators.Similarity.annIvfServe(
+    val tasksRr = inProcessAsJob(operators.Similarity.annIvfServe(
       spark, idx.getAbsolutePath, queries = Some(threeQ), shortlist = Some(8)))
     assert(tasksRr == routedCells && tasksRr <= 6,
       s"two-stage probed-cells read must cover the $routedCells routed dirs (<= 6), ran $tasksRr tasks")
