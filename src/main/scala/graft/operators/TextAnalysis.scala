@@ -3336,8 +3336,9 @@ object TextAnalysis {
     * its tokens' hash buckets — O(query terms) driver ints, what a
     * search frontend's shard router holds — and each routed bucket
     * directory's postings' impacts are summed (in the calling thread
-    * when the routed files are small, else one task each of one job), so a short query touches a handful of the
-    * index partitions and never the corpus. The answer comes back as a
+    * when the routed files are small, else one task each of one job),
+    * so a short query touches a handful of the index partitions and
+    * never the corpus. The answer comes back as a
     * local relation. Without `queries`, the self-test panel (every
     * `qMod`-th doc's terms) derives FROM the postings, which
     * necessarily scans them once — that mode stays a Spark plan and

@@ -59,8 +59,7 @@ object IndexLayout {
       * qualify: a data directory (postings, lists, codes) is
       * corpus-sized, so only its routed partitions are read, by
       * [[IndexProbe]]: on the driver when they add up to at most
-      * `spark.sql.autoBroadcastJoinThreshold` bytes, else by a job
-      * (always, at -1). */
+      * [[IndexProbe.InProcessBytes]], else by a job. */
     def local(spark: SparkSession, root: String, dir: String): Seq[Row] = {
       require(meta(dir), s"$name: $dir is not a metadata directory")
       val schema = dirs(dir)

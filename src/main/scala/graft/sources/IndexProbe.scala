@@ -27,12 +27,11 @@ import org.apache.spark.util.LongAccumulator
   * function: it reads the directory with the reader
   * [[IndexLayout.Layout.local]] uses, applies the committed-batch and
   * tombstone sets the driver read, and returns a bounded partial. A
-  * warm probe over at most `spark.sql.autoBroadcastJoinThreshold` routed
-  * bytes runs that function in the calling thread and starts no job; a
-  * larger probe runs it as one job with a task per routed directory,
-  * and a threshold of -1 always takes the job. The driver merges the
-  * partials into each query's top-k and returns them as a local
-  * relation with the Spark plan's schema, so the caller's
+  * warm probe over at most [[InProcessBytes]] routed bytes runs that
+  * function in the calling thread and starts no job; a larger probe
+  * runs it as one job with a task per routed directory. The driver
+  * merges the partials into each query's top-k and returns them as a
+  * local relation with the Spark plan's schema, so the caller's
   * `select(...).collect()` runs no job either.
   *
   * Partials are scored with the Catalyst expressions the Spark plans evaluate,
@@ -50,6 +49,20 @@ import org.apache.spark.util.LongAccumulator
 object IndexProbe {
 
   val PartialsAccumulator = "IndexProbe.partials"
+
+  /** The routed bytes (data file lengths) up to which a probe is scored
+    * in the calling thread. A job costs a fixed 10-25 ms more than the
+    * calling thread and wins it back only by scoring several routed
+    * directories at once. Measured warm on 4 vCPUs (CHANGES.md): over
+    * 4 to 16 routed directories, BM25 postings break even near 0.8-1.3
+    * MB and IVF lists near 2-4 MB; past that the job pulls ahead (1.3
+    * times faster at 8.7 MB over 4 cells, 2.5 times at 102 MB over 16).
+    * The bound is the lower crossover. */
+  val InProcessBytes: Long = 1L << 20
+
+  /** The bound [[run]] applies: [[InProcessBytes]]. Specs move it to
+    * force the job (-1) or to place it at a request's routed bytes. */
+  @volatile private[graft] var inProcessBytes: Long = InProcessBytes
 
   // ------------------------------------------------------------ BM25
 
@@ -297,10 +310,8 @@ object IndexProbe {
 
   /** `score(payload, rows of columns)` over every routed partition
     * `partCol=p` of `root/dir` that holds data files, run in the calling
-    * thread when the routed files add up to at most the session's
-    * `autoBroadcastJoinThreshold` (the size Spark itself holds whole on
-    * the driver; a negative bound disables it), else as one job with a
-    * task per partition. */
+    * thread when the routed files add up to at most [[inProcessBytes]],
+    * else as one job with a task per partition. */
   private def run[P, R: ClassTag](spark: SparkSession, layout: IndexLayout.Layout,
                                   root: String, dir: String, partCol: String,
                                   columns: Seq[String], routed: Seq[(Int, P)])(
@@ -312,8 +323,7 @@ object IndexProbe {
     if (parts.isEmpty) return Array.empty[R]
     val probe = new Probe(
       IndexLayout.rowReader(spark, StructType(columns.map(layout.dirs(dir)(_)))), score)
-    val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (bound >= 0 && parts.iterator.flatMap(_._1).map(_.length).sum <= bound)
+    if (parts.iterator.flatMap(_._1).map(_.length).sum <= inProcessBytes)
       return parts.toArray.flatMap { case (files, payload) => probe(files, payload) }
     val sc = spark.sparkContext
     sc.runJob(sc.parallelize(parts, parts.length),
@@ -338,8 +348,8 @@ object IndexProbe {
         open
       }).toArray
       finally open match {
-        // the vectorized reader (Spark's default for these schemas);
-        // the row-mode reader closes its file only at its end
+        // both of Spark's parquet readers, vectorized and row mode,
+        // return a Closeable iterator
         case c: java.io.Closeable => c.close()
         case _ =>
       }

@@ -146,13 +146,13 @@ class Bm25Spec extends AnyFunSuite {
     val qTokens = tf0.filter(col("doc_id") === 0).join(dfTab, "token")
       .orderBy(col("df"), col("token")).limit(2)
       .select(lit(777L).as("query_id"), col("token"))
-    // as a job (threshold -1) the serve is one IndexProbe job with a
+    // as a job (in-process bound -1) the serve is one IndexProbe job with a
     // task per routed bucket directory: with the batch a local
     // relation, as a request's is, the task count is the routed read
     val qLocal = spark.createDataFrame(
       java.util.Arrays.asList(qTokens.collect(): _*), qTokens.schema)
     var ext: org.apache.spark.sql.DataFrame = null
-    val tasks = withBroadcastThreshold(-1)(tasksOf {
+    val tasks = withInProcessBytes(-1)(tasksOf {
       ext = operators.TextAnalysis.bm25ServeFrom(spark, idx.getAbsolutePath,
         k = 50, queries = Some(qLocal))
     })
@@ -168,7 +168,7 @@ class Bm25Spec extends AnyFunSuite {
       .count(b => new java.io.File(vdir, s"postings/bucket=$b").isDirectory)
     assert(tasks == routed && tasks <= 2 && tasks < bucketDirs,
       s"2-token query must read its $routed routed bucket dirs (<= 2 of $bucketDirs), ran $tasks tasks")
-    // in process (the session's threshold): the same rows, and no job
+    // in process (the default bound): the same rows, and no job
     var again: org.apache.spark.sql.DataFrame = null
     assert(jobsOf {
       again = operators.TextAnalysis.bm25ServeFrom(spark, idx.getAbsolutePath,

@@ -495,7 +495,7 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The bytes of the data files in `dirs`, listed as the probe lists
     * them (names starting with `_` or `.` skipped): what a request
-    * weighs against the broadcast threshold. */
+    * weighs against `IndexProbe.InProcessBytes`. */
   private def dataBytes(dirs: Seq[String]): Long =
     dirs.flatMap(d => Option(new java.io.File(d).listFiles()).toSeq.flatten)
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
@@ -514,10 +514,10 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(i => s"$path/lists/cell=${cents(i).getAs[Int]("cid")}").distinct)
   }
 
-  /** A warm request's budget: in process (the session's threshold) no
-    * job and no broadcast; with the threshold one byte below its
-    * `routed` bytes exactly one job, and at exactly them none; the same
-    * rows every time. */
+  /** A warm request's budget: in process (the default bound) no job
+    * and no broadcast; with the bound one byte below its `routed` bytes
+    * exactly one job, and at exactly them none; the same rows every
+    * time. */
   private def budget(name: String, routed: Long)(request: => Seq[Row]): Unit = {
     var rows: Seq[Row] = null
     val warm = observe { rows = request }
@@ -525,12 +525,12 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.nonEmpty, s"$name answered nothing")
     assert(warm.jobs == 0, s"$name ran ${warm.jobs} jobs in process")
     assert(warm.broadcasts == 0, s"$name built ${warm.broadcasts} broadcasts")
-    for ((threshold, jobs) <- Seq(routed - 1 -> 1, routed -> 0))
-      withBroadcastThreshold(threshold) {
+    for ((bound, jobs) <- Seq(routed - 1 -> 1, routed -> 0))
+      withInProcessBytes(bound) {
         var again: Seq[Row] = null
         val n = jobsOf { again = request }
-        assert(n == jobs, s"$name ran $n jobs at threshold $threshold (routed $routed)")
-        assert(again == rows, s"$name at threshold $threshold: $again vs $rows")
+        assert(n == jobs, s"$name ran $n jobs at bound $bound (routed $routed)")
+        assert(again == rows, s"$name at bound $bound: $again vs $rows")
       }
   }
 

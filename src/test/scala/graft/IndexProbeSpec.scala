@@ -46,11 +46,11 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     p
   }
 
-  /** `body(mode)` in process (the session's threshold), then with every
-    * probe one job (threshold -1). */
+  /** `body(mode)` in process (the default bound), then with every
+    * probe one job (bound -1). */
   private def inBothModes(body: String => Unit): Unit = {
     body("in process")
-    withBroadcastThreshold(-1)(body("job"))
+    withInProcessBytes(-1)(body("job"))
   }
 
   private def withAnsi[T](on: Boolean)(body: => T): T = {
@@ -303,14 +303,24 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
       excludeSelf = false)
     def openFds(): Long = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean].getOpenFileDescriptorCount
+    // with the vectorized reader off, the files are read in row mode,
+    // whose abandoned iterator must be closed too
+    val vectorized = "spark.sql.parquet.enableVectorizedReader"
     withAnsi(on = true) {
-      withBroadcastThreshold(-1)(divideByZero(probe()))
-      assert(jobsOf(divideByZero(probe())) == 0, "the in-process request ran a job")
-      val before = openFds()
-      for (_ <- 1 to 20) divideByZero(probe())
-      val after = openFds()
-      info(s"open descriptors: $before before 20 throwing requests, $after after")
-      assert(after - before <= 5, s"$before open descriptors before, $after after")
+      for (on <- Seq(true, false)) {
+        spark.conf.set(vectorized, on.toString)
+        try {
+          withInProcessBytes(-1)(divideByZero(probe()))
+          assert(jobsOf(divideByZero(probe())) == 0, s"vectorized=$on: the request ran a job")
+          val before = openFds()
+          for (_ <- 1 to 20) divideByZero(probe())
+          val after = openFds()
+          info(s"vectorized=$on: $before open descriptors before 20 throwing requests, " +
+            s"$after after")
+          assert(after - before <= 5, s"vectorized=$on: $before open descriptors before, " +
+            s"$after after")
+        } finally spark.conf.unset(vectorized)
+      }
     }
   }
 
@@ -354,7 +364,7 @@ class IndexProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nBuckets = IndexLayout.ImpactBm25.local(spark, root, "stats").head.getAs[Int]("n_buckets")
     val routedDirs = IndexRoute.buckets(Seq("no such shingle anywhere"), StringType, nBuckets)
       .count(b => new java.io.File(s"$root/postings/bucket=$b").isDirectory)
-    withBroadcastThreshold(-1) {
+    withInProcessBytes(-1) {
       assert(tasksOf { got = TextAnalysis.bm25ServeFrom(spark, path, queries = Some(unknown)) } ==
         routedDirs, "a null token routes nowhere")
     }

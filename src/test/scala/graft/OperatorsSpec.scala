@@ -88,16 +88,13 @@ object TestSpark {
   /** Every task the body's jobs run. */
   def tasksOf(body: => Unit): Int = observe(body).tasks
 
-  /** `body` with `spark.sql.autoBroadcastJoinThreshold` at `bytes`: an
-    * [[graft.sources.IndexProbe]] request over at most that many routed
-    * bytes runs in the calling thread, a larger one (any, at -1) as one
-    * job. The previous setting is restored, an unset one unset, so the
-    * readers keyed by the session's conf are found again. */
-  def withBroadcastThreshold[T](bytes: Long)(body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val was = if (spark.sessionState.conf.contains(key)) Some(spark.conf.get(key)) else None
-    spark.conf.set(key, bytes)
-    try body finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  /** `body` with [[graft.sources.IndexProbe]] scoring a request over at
+    * most `bytes` routed bytes in the calling thread, and a larger one
+    * (any, at -1) as one job. The previous bound is restored. */
+  def withInProcessBytes[T](bytes: Long)(body: => T): T = {
+    val was = graft.sources.IndexProbe.inProcessBytes
+    graft.sources.IndexProbe.inProcessBytes = bytes
+    try body finally graft.sources.IndexProbe.inProcessBytes = was
   }
 }
 

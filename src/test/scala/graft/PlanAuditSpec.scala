@@ -479,14 +479,14 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("hybrid_serve: every index probe returns panel-sized partials, never corpus-sized") {
     import org.apache.spark.sql.functions.col
-    // drive the un-checkpointed serving core: as jobs (threshold -1)
+    // drive the un-checkpointed serving core: as jobs (in-process bound -1)
     // both of its index requests are IndexProbe jobs whose tasks return
     // bounded partials (per routed bucket the panel's (query, doc)
     // impact sums, per routed cell each query's top-k) and the driver
     // merges them
     val tmp = java.nio.file.Files.createTempDirectory("graft_hybrid_audit").toFile
     var asJobs: Seq[org.apache.spark.sql.Row] = null
-    val seen = withBroadcastThreshold(-1)(observe {
+    val seen = withInProcessBytes(-1)(observe {
       asJobs = operators.TextAnalysis.hybridServeOn(spark, sf, tmp.getAbsolutePath)
         .collect().toSeq
     })

@@ -255,11 +255,11 @@ class RecallSpec extends AnyFunSuite {
           math.sqrt(r.getSeq[Float](1).map(x => x.toDouble * x).sum))), centroids, 2)
       .flatten.map(centroids(_).getAs[Int]("cid")).distinct
       .count(c => new java.io.File(idx, s"lists/cell=$c").isDirectory)
-    // pinned as a job (threshold -1); in process the same request
+    // pinned as a job (in-process bound -1); in process the same request
     // answers the same rows with no job
     def inProcessAsJob(serve: => org.apache.spark.sql.DataFrame): Int = {
       var job: org.apache.spark.sql.DataFrame = null
-      val tasks = withBroadcastThreshold(-1)(tasksOf { job = serve })
+      val tasks = withInProcessBytes(-1)(tasksOf { job = serve })
       var local: org.apache.spark.sql.DataFrame = null
       assert(jobsOf { local = serve } == 0, "the in-process serve ran a job")
       assert(local.collect().toSeq == job.collect().toSeq, "in process vs the job")
