@@ -65,7 +65,7 @@ object Artifacts {
 
   // near-duplicate family
   case object Pairs extends ValueKind("pairs")
-  case object LabelProp extends ValueKind("lp")
+  case object Clusters extends ValueKind("clusters")
   case object KeepBest extends ValueKind("keepbest")
   case object PageRank extends ValueKind("pagerank")
   // embedding family

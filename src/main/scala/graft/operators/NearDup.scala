@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions._
   * CROSS-QUERY SHARING: four registry queries (`dedup_cluster`,
   * `dedup_cluster_star`, `dedup_keep_best`,
   * `pipeline_training_manifest`) all stand on the SAME ngram pair
-  * edges — and the last two on the same label-propagation closure and
-  * keeper argmax. Run standalone each builds its own; run in one
+  * edges — and on the same star-contraction closure ([[starContract]]),
+  * the last two also on the same keeper argmax. Run standalone each builds its own; run in one
   * process (Verify, Bench, the test suite — the registry sweep) the
   * shared intermediates are session artifacts ([[graft.Artifacts]]),
   * so the edge pipeline is built and checkpointed ONCE and every
@@ -969,173 +969,103 @@ object NearDup {
        |JOIN sr ON sr.doc_id = ref_id
        |WHERE CAST(n_inter AS DOUBLE) / CAST(sn.n_new + sr.n_ref - n_inter AS DOUBLE) >= $threshold""".stripMargin
 
-  /** C14 `dedup_cluster` — transitive closure of near-dup pairs into
-    * clusters with one keeper per cluster: the step that turns pairwise
-    * detections into an actual dedup decision (pairs A~B, B~C must keep
-    * ONE of {A,B,C}). Label propagation over the pair graph: every node
-    * starts labeled with its own id, then repeatedly takes the min
-    * label across its neighbors until fixpoint — cluster id = min doc
-    * id reachable; keeper = the node equal to its cluster id.
-    *
-    * Scale: each iteration is one join + one partial-agg groupBy
-    * (both keyed on the node), iterations ∝ graph diameter — near-dup
-    * graphs are overwhelmingly tiny cliques, so 2-3 rounds converge;
-    * billion-edge/long-chain graphs switch to the large-star/small-star
-    * contraction of Kiveris et al. The driver-side loop only checks a
-    * convergence count per round; labels never leave the cluster.
+  /** C14 `dedup_cluster` (and C14b `dedup_cluster_star`, the same
+    * entry) — transitive closure of near-dup pairs into clusters with
+    * one keeper per cluster: the step that turns pairwise detections
+    * into an actual dedup decision (pairs A~B, B~C must keep ONE of
+    * {A,B,C}). Cluster id = min doc id reachable; keeper = the node
+    * equal to its cluster id; only nodes that take part in a pair
+    * appear. The closure is [[starContract]] over C4's pair edges.
     * Oracle: recursive CTE over the identical edge set. */
-  def dedupCluster(spark: SparkSession, dir: String, threshold: Double = 0.5,
-                   maxIters: Int = 10): DataFrame =
-    Artifacts.value(spark, Artifacts.LabelProp, dir, threshold, maxIters) {
-      labelPropagate(ngramJaccardDedup(spark, dir, threshold), maxIters)
+  def dedupCluster(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
+    Artifacts.value(spark, Artifacts.Clusters, dir, threshold) {
+      starContract(ngramJaccardDedup(spark, dir, threshold).select(col("id1"), col("id2")))
     }
 
-  /** Frame-based label-propagation core of [[dedupCluster]]
-    * (pairs = (id1, id2, …) near-dup edges). */
-  private[operators] def labelPropagate(pairs: DataFrame, maxIters: Int = 10): DataFrame = {
-    import pairs.sparkSession.implicits._
-    // Iterative lineage management: each generation is localCheckpoint'd
-    // (eager) — the blocks are materialized and the LINEAGE IS CUT, so
-    // superseded generations can be released with no dependent-cache
-    // invalidation. (Naive persist/unpersist here is a trap in both
-    // directions: never unpersisting leaks a cached table per iteration,
-    // while unpersisting a frame the next generation's cached plan was
-    // built over drops/rebuilds that cache and re-runs the whole edge
-    // pipeline per iteration — measured 3-7x slower at sf0.1.) On a
-    // multi-executor cluster use spark.checkpoint(reliable) instead:
-    // localCheckpoint blocks die with an executor.
-    // explode to (n,nbr)+(nbr,n) in ONE pass — a unionAll of two selects
-    // would scan the edge pipeline twice, concurrently, before any
-    // cache is populated (measured: doubles the cold pipeline cost)
-    val bi = pairs
-      .select(explode(array(
-        struct($"id1".as("n"), $"id2".as("nbr")),
-        struct($"id2".as("n"), $"id1".as("nbr")))).as("e"))
-      .select($"e.n", $"e.nbr").localCheckpoint()
-    // initialization fuses iteration 1: with every node labeled by its
-    // own id, the first round's min-over-neighbors is just min(nbr), so
-    // start from label = min(n, min(nbr)) and save one full
-    // join+checkpoint round
-    var labels = bi.groupBy($"n")
-      .agg(least($"n", min($"nbr")).as("label")).localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val nbrMin = bi
-        .join(labels.select($"n".as("nbr"), $"label".as("nbr_label")), Seq("nbr"))
-        .groupBy($"n").agg(min($"nbr_label").as("nbr_min"))
-      // carry the changed-flag inside the generation: one checkpoint
-      // materialization + one filter-count, no extra join per iteration
-      val next = labels.join(nbrMin, Seq("n"))
-        .select($"n", least($"label", $"nbr_min").as("label"),
-          ($"nbr_min" < $"label").as("ch"))
-        .localCheckpoint()
-      val changed = next.filter($"ch").count()
-      labels = next.select($"n", $"label") // old generation -> GC'd
-      converged = changed == 0
-      i += 1
-    }
-    labels
-      .select($"n".as("doc_id"), $"label".as("cluster_id"))
-      .withColumn("is_keeper", ($"doc_id" === $"cluster_id").cast("boolean"))
-  }
-
-  /** C14b `dedup_cluster_star` — the same transitive closure via
+  /** Connected components of a pair graph ((id1, id2) edges) via
     * LARGE-STAR / SMALL-STAR contraction (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC 2014): the long-chain /
-    * billion-edge fallback documented on [[dedupCluster]]. Label
-    * propagation needs diameter-many rounds (a 1000-link chain = 1000
-    * joins); the star operators contract every tree toward its minimum
-    * in O(log²) rounds regardless of shape, and each round is the same
-    * join + partial-agg primitive label propagation uses — nothing
-    * is ever collected per-key (no collect_list; the neighborhood min
+    * Components in MapReduce and Beyond", SoCC 2014) — the one closure
+    * kernel: [[dedupCluster]], semdedup's dup groups and
+    * `mm_phash_cluster` all run through it. The star operators contract
+    * every tree toward its minimum in O(log²) rounds regardless of
+    * shape (a 1000-link chain takes ~10 rounds, not 1000), and nothing
+    * is ever collected per key (no collect_list; the neighborhood min
     * distributes through a hash aggregate, so a 10⁸-degree hub costs
     * the same per row as a degree-2 node).
     *
     * Round = large-star (every neighbor above a node links to that
     * node's neighborhood-min) then small-star (every neighbor below a
     * node re-links to its min), each emitted through one join against a
-    * per-node min table. Edges stay canonical (u > v). Fixpoint — a
-    * forest of min-rooted stars — is stable under both operators, and
-    * at it NO edge is rewritten (each operator maps every edge to
-    * itself), so convergence is an EXACT per-round rewrite count
-    * carried inside the edges themselves: each emitted edge marks
-    * whether it differs from its source (`m ≠ s` in large-star,
-    * `m ≠ v` in small-star), the marks OR through the same dedup
-    * aggregate that canonicalized `distinct()` anyway, and the round
-    * converges on rewrites == 0 — one cheap count over the already
-    * checkpointed generation, no fingerprint, no exceptAll re-shuffle
-    * of the edge set. (Zero rewrites ⟹ both operators were identity
-    * on every edge ⟹ set fixpoint; a set-stable round with rewrites
-    * cannot exist because the contraction potential strictly decreases
-    * off the fixpoint — Kiveris et al. §3.) Exhausting maxIters
-    * without convergence throws rather than emitting mid-contraction
-    * labels (raise maxIters for graphs beyond ~2^maxIters nodes of
-    * pure chain).
-    * Output/oracle identical to [[dedupCluster]]: cluster id = min
-    * reachable doc id. */
+    * per-node min table. Edges stay canonical (u > v). A round is ONE
+    * plan and one checkpoint: large-star's edges are hash-partitioned
+    * by u, so small-star's min aggregate and its join read them in
+    * place, through one reused exchange.
+    *
+    * The loop stops as soon as a generation is a min-rooted star
+    * forest — every source u has exactly one out-edge and no target is
+    * also a source ([[isStarForest]], one aggregate over the
+    * checkpointed generation). Both operators preserve components, and
+    * a star whose leaves all sit above its root is rooted at its
+    * component's minimum, so then the edges ARE the labels: u → v, and
+    * each root v → itself. Exhausting maxIters without reaching a star
+    * forest throws rather than emitting mid-contraction labels (raise
+    * maxIters for graphs beyond ~2^maxIters nodes of pure chain).
+    *
+    * Both large-star branches of the first round read the input (a
+    * lazy input's own exchanges are reused, its last stage runs twice),
+    * so it is not checkpointed here. Only nodes with an edge to a
+    * DIFFERENT node appear (every caller's edges have id1 < id2). */
   def starContract(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     import pairs.sparkSession.implicits._
+    // duplicate edges are fine: large-star's distinct drops them
     var edges = pairs
       .select(greatest($"id1", $"id2").as("u"), least($"id1", $"id2").as("v"))
-      .distinct().localCheckpoint()
-    // every node of the pair graph (labels must cover leaves AND roots)
-    val allNodes = edges
-      .select(explode(array($"u", $"v")).as("doc_id")).distinct().localCheckpoint()
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
       // large-star: process each edge from both endpoints; node s links
-      // every LARGER neighbor d to m(s) = min(Γ(s) ∪ {s}). Each
-      // canonical edge (u,v) appears exactly once with d > s (as
-      // (s=v, d=u)), so `m ≠ s` flags exactly the rewritten edges and
-      // zero flags ⟹ large-star emitted the input set unchanged.
+      // every LARGER neighbor d to m(s) = min(Γ(s) ∪ {s}) < d
       val bi = edges.select(explode(array(
           struct($"u".as("s"), $"v".as("d")),
           struct($"v".as("s"), $"u".as("d")))).as("e"))
         .select($"e.s", $"e.d")
-      val lsMin = bi.groupBy($"s").agg(min($"d").as("mn"))
-        .select($"s", least($"mn", $"s").as("m"))
+      val lsMin = bi.groupBy($"s").agg(least(min($"d"), $"s").as("m"))
       val ls = bi.filter($"d" > $"s").join(lsMin, Seq("s"))
-        .select($"d".as("u"), $"m".as("v"), ($"m" =!= $"s").as("chg"))
-        .filter($"u" =!= $"v")
-        .groupBy($"u", $"v").agg(max($"chg").as("chg")) // = distinct + OR of marks
-      // eager (materialization contract): ls feeds the ssMin aggregate
-      // AND the small-star join probe — lazy, both would re-run the
-      // large-star lineage. (bi stays lazy deliberately: it is one
-      // narrow explode over already-checkpointed blocks.)
-      val lsCk = ls.localCheckpoint()
+        .select($"d".as("u"), $"m".as("v"))
+        .repartition($"u").distinct()
       // small-star on the canonical orientation: all of u's neighbors
-      // are below it; re-link them (and u) to the minimum. The (u, m)
-      // emission always survives the self-edge filter (m < u), so a
-      // large-star rewrite mark always propagates into this round's
-      // output set.
-      val ssMin = lsCk.groupBy($"u").agg(min($"v").as("m"))
-      val ss = lsCk.join(ssMin, Seq("u"))
+      // are below it; re-link them (and u) to the minimum
+      val ssMin = ls.groupBy($"u").agg(min($"v").as("m"))
+      edges = ls.join(ssMin, Seq("u"))
         .select(explode(array(
-          struct($"v".as("a"), $"m".as("b"), ($"chg" || $"m" =!= $"v").as("c")),
-          struct($"u".as("a"), $"m".as("b"), ($"chg" || $"m" =!= $"v").as("c")))).as("e"))
-        .select($"e.a".as("u"), $"e.b".as("v"), $"e.c".as("chg"))
+          struct($"v".as("u"), $"m".as("v")),
+          struct($"u".as("u"), $"m".as("v")))).as("e"))
+        .select($"e.u", $"e.v")
         .filter($"u" =!= $"v")
-        .groupBy($"u", $"v").agg(max($"chg").as("chg"))
-        .localCheckpoint()
-      // one cheap action over the checkpointed generation
-      converged = ss.filter($"chg").limit(1).isEmpty
-      edges = ss.select($"u", $"v") // superseded generations → GC'd
+        .distinct().localCheckpoint() // superseded generations → GC'd
+      converged = isStarForest(edges)
       i += 1
     }
     require(converged,
       s"starContract did not converge within $maxIters rounds — raise maxIters")
-    val labels = edges.select($"u".as("doc_id"), $"v".as("cluster_id"))
-    val roots = allNodes.join(labels.select($"doc_id"), Seq("doc_id"), "left_anti")
-      .select($"doc_id", $"doc_id".as("cluster_id"))
-    labels.unionAll(roots)
-      .withColumn("is_keeper", ($"doc_id" === $"cluster_id").cast("boolean"))
+    val roots = edges.select($"v".as("doc_id")).distinct()
+    edges.select($"u".as("doc_id"), $"v".as("cluster_id"))
+      .unionAll(roots.select($"doc_id", $"doc_id".as("cluster_id")))
+      .withColumn("is_keeper", $"doc_id" === $"cluster_id")
   }
 
-  def dedupClusterStar(spark: SparkSession, dir: String,
-                       threshold: Double = 0.5): DataFrame =
-    starContract(ngramJaccardDedup(spark, dir, threshold).select(col("id1"), col("id2")))
+  /** Whether canonical (u > v) edges form a min-rooted star forest: no
+    * node is some edge's u and also has a second edge. One aggregate
+    * over the nodes' incidences. */
+  private def isStarForest(edges: DataFrame): Boolean = {
+    import edges.sparkSession.implicits._
+    edges.select(explode(array(
+        struct($"u".as("n"), lit(true).as("src")),
+        struct($"v".as("n"), lit(false).as("src")))).as("e"))
+      .groupBy($"e.n").agg(max($"e.src").as("src"), count(lit(1)).as("deg"))
+      .filter($"src" && $"deg" > 1)
+      .limit(1).isEmpty
+  }
 
   def dedupClusterSql(threshold: Double = 0.5): String =
     s"""WITH RECURSIVE pairs AS (${ngramJaccardDedupSql(threshold)}),
@@ -1268,7 +1198,7 @@ object NearDup {
     * shuffle-join (edges ⨝ ranks on src) + one hash-agg (Σ per dst)
     * + a left join back to the node set — the Pregel-as-join-agg
     * shape, cost = iters × |edges| with no driver-side state beyond
-    * loop control. Unlike [[labelPropagate]] (unbounded rounds → must
+    * loop control. Unlike [[starContract]] (unbounded rounds → must
     * checkpoint), the FIXED five iterations chain as one declarative
     * plan — und/deg materialize once and Catalyst schedules the five
     * join-aggs without per-iteration materialization barriers. */
@@ -1345,7 +1275,7 @@ object NearDup {
     * (docs outside every near-dup cluster) weigh the full 10⁶.
     *
     * Scale: cluster membership is the memoized [[dedupCluster]] table
-    * (built once per registry run; label-propagation over C4's LSH
+    * (built once per registry run; star contraction over C4's LSH
     * edges — never all-pairs); sizes are ONE hash agg over that table,
     * and the size join's build side is cluster-cardinality (AQE
     * broadcasts it when small). Nothing new shuffles the corpus. */
@@ -1392,7 +1322,7 @@ object NearDup {
     * train and test — the eval-contamination path F3's decontaminate
     * can't see (the test twin isn't a benchmark doc, it's the corpus's
     * own re-crawl). Here the split key is the doc's near-dup CLUSTER
-    * representative (C14's label-propagation label; singletons key by
+    * representative (C14's cluster id; singletons key by
     * themselves), so every cluster lands whole in one split — with
     * F4's exact salt and 80/10/10 cuts, making this a REFINEMENT of
     * F4: docs outside every cluster keep their F4 assignment

@@ -205,12 +205,11 @@ object Similarity {
     * candidate count is bounded by cellCap·n, never Σ n_c²
     * ([[semDedupTag]]/[[semDedupEdges]]; production sizing keeps
     * nlist ∝ n so cells stay near cellCap in the first place, SURVEY
-    * §5). Dup groups close
-    * transitively per cell ([[NearDup.labelPropagate]] — dup groups
-    * are tiny cliques), and each group keeps the member FARTHEST from
-    * its centroid (the paper's keeper rule — low centroid similarity
-    * = most marginal signal; ties to the lowest id) and drops the
-    * rest.
+    * §5). Dup groups close transitively per cell
+    * ([[NearDup.starContract]]), and each group keeps the member
+    * FARTHEST from its centroid (the paper's keeper rule — low centroid
+    * similarity = most marginal signal; ties to the lowest id) and
+    * drops the rest.
     *
     * Output: one row per DROPPED vector — (drop_id, witness_id,
     * cosine, keeper_id, cell) with witness = the drop's
@@ -409,7 +408,7 @@ object Similarity {
                             edges: DataFrame,
                             keeperOf: DataFrame => DataFrame): DataFrame = {
       import spark.implicits._
-      val comp = NearDup.labelPropagate(edges.select($"id1", $"id2"))
+      val comp = NearDup.starContract(edges.select($"id1", $"id2"))
         .select($"doc_id".as("vec_id"), $"cluster_id")
       val keepers = keeperOf(comp)
       // per dropped member: its strongest within-cell partner as the
@@ -965,7 +964,7 @@ object Similarity {
     * settled queries LEAVE the panel, so each round routes and scans
     * only the still-unsettled queries' cells, and a panel that
     * exhausts the budget at nlist is served exactly. Driver loop is
-    * bounded (≤ log₂ nlist rounds — the pagerank/labelPropagate
+    * bounded (≤ log₂ nlist rounds — the pagerank/starContract
     * posture; each round one broadcast-probe scan), and the doubling
     * schedule bounds total scanned cells per query at < 2× its final
     * width. On clustered production embeddings most queries settle

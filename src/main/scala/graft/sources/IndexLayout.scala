@@ -439,8 +439,15 @@ object IndexLayout {
       "stamp" -> StringType, "seq" -> LongType)),
     meta = Set("manifest"))
 
+  /** [[UpsertSink]]'s commit log, under the store root: one
+    * (batch_id, write_id) row per delivered batch, written after the
+    * batch's rows. */
+  val BatchLog: Layout = new Layout("upsert batch log", Map(
+    "batch_log" -> schema("batch_id" -> LongType, "write_id" -> StringType)),
+    meta = Set("batch_log"))
+
   val all: Seq[Layout] = Seq(ImpactBm25, RawBm25, Ivf, Pq, Lines, Phrase, DedupSig, Phash,
-    KnCounts, Manifest)
+    KnCounts, Manifest, BatchLog)
 
   /** The distinct partition values (bucket or cell ids) a frame of one
     * int column names — the dirty and surviving partition sets of the

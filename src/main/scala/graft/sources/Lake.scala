@@ -133,10 +133,10 @@ object Lake {
     * manifest holds); only dirty partitions pay a read+rewrite, so
     * cost ∝ fragmentation, not table size — the OPTIMIZE shape.
     * Runs under the writer lease and refuses while a read pin is
-    * live ([[withWriterLock]]/[[requireUnpinned]] — rewriting files
-    * a pinned scan may hold open is the same hazard as an index
-    * vacuum). The rewrite materializes each dirty partition eagerly
-    * (localCheckpoint) before overwriting the very files it read.
+    * live ([[IndexLayout.maintain]] — rewriting files a pinned scan
+    * may hold open is the same hazard as an index vacuum). The rewrite
+    * materializes each dirty partition eagerly (localCheckpoint)
+    * before overwriting the very files it read.
     * Scope: SINGLE-LEVEL hive layouts (the [[writePartitioned]]
     * shape) — a multi-level `year=/month=` tree's leaves sit one
     * directory deeper than this listing walks, so such a table
@@ -144,8 +144,7 @@ object Lake {
   def compactTable(spark: SparkSession, path: String,
                    maxFilesPerPartition: Int = 1,
                    targetBytes: Long = 128L * 1024 * 1024): Unit =
-    withWriterLock(spark, path, "lakeCompact") {
-      requireUnpinned(spark, path, "lakeCompact")
+    IndexLayout.maintain(spark, path, "lakeCompact") {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       val partDirs = fs.listStatus(root).toSeq

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +39,8 @@ object UpsertSink {
 
   /** Bounded-retry delivery: run `body`, backing off exponentially on
     * failure (initialDelayMs, doubling), rethrowing after
-    * `maxAttempts`. */
+    * `maxAttempts`. Only non-fatal failures retry: an interrupt or a
+    * VM error (out of memory) rethrows at once, without sleeping. */
   private[graft] def withRetry[T](maxAttempts: Int, initialDelayMs: Long)
                                  (body: => T): T = {
     var attempt = 1
@@ -46,7 +49,7 @@ object UpsertSink {
     while (out.isEmpty) {
       try out = Some(body)
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           if (attempt >= maxAttempts) throw e
           Thread.sleep(delay)
           delay *= 2
@@ -56,16 +59,17 @@ object UpsertSink {
     out.get
   }
 
+  /** The store's committed (batch_id, write_id) log rows, read on the
+    * driver through the declared [[IndexLayout.BatchLog]] (no job; a
+    * store with no commit yet has none). */
+  private def batchLog(spark: SparkSession, store: String): Seq[(Long, String)] =
+    IndexLayout.BatchLog.local(spark, store, "batch_log")
+      .map(r => (r.getLong(0), r.getString(1)))
+
   /** Batch ids already committed to the store's log — the idempotent-
     * replay check. O(batches) driver metadata. */
-  def appliedBatches(spark: SparkSession, store: String): Set[Long] = {
-    import spark.implicits._
-    val log = new org.apache.hadoop.fs.Path(s"$store/batch_log")
-    if (log.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(log))
-      spark.read.parquet(s"$store/batch_log").select($"batch_id")
-        .as[Long].collect().toSet
-    else Set.empty
-  }
+  def appliedBatches(spark: SparkSession, store: String): Set[Long] =
+    batchLog(spark, store).map(_._1).toSet
 
   /** The committed view of the store: only rows whose per-attempt
     * write id reached the log — orphans of failed attempts are
@@ -74,7 +78,7 @@ object UpsertSink {
   def committedRows(spark: SparkSession, store: String): DataFrame = {
     import spark.implicits._
     val rows = spark.read.parquet(s"$store/rows")
-    val writes = spark.read.parquet(s"$store/batch_log").select($"write_id")
+    val writes = batchLog(spark, store).map(_._2).toDF("write_id")
     rows.join(broadcast(writes), Seq("write_id"), "left_semi")
       .drop("write_id")
   }

@@ -23,7 +23,7 @@ class DeterminismSpec extends AnyFunSuite {
     "capped_per_group",    // hash-ordered window sampling
     "mixture_sample",      // broadcast rate lookup + md5 uniform accept
     "doc_chunk",           // per-row chunk explosion
-    "dedup_cluster_star",  // iterative contraction w/ rewrite-count stop
+    "dedup_cluster_star",  // iterative contraction w/ star-forest stop
     "corpus_shard",        // banded within-shard rank over md5 keys
     "pipeline_training_manifest", // composed closure + gates + shard
     "perplexity_score",    // rounded float mean of per-token log-probs

@@ -242,7 +242,7 @@ class DocFeaturesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dsir = jobsOf(run(TextAnalysis.dsirSelect(spark, lake)))
     info(s"dedupKeepBest: $keep jobs, nbQualityClassify: $nb, dsirSelect: $dsir")
     // keep-best builds the features (2 jobs), the pair edges, the
-    // label-propagation closure and the argmax; NB is its fit's one
+    // star-contraction closure and the argmax; NB is its fit's one
     // fold plus the scoring; DSIR its fit, the threshold histogram, the
     // in-bucket top and the scoring
     assert(keep <= 31, s"dedupKeepBest ran $keep jobs")

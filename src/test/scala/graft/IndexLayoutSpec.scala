@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Multimodal, NearDup, Similarity, TextAnalysis}
-import graft.sources.{Catalog, IndexLayout, IndexRoute, Lake}
+import graft.sources.{Catalog, IndexLayout, IndexRoute, Lake, UpsertSink}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -78,11 +78,16 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     Catalog.register(spark, cat, "kn", "k", kn, "epoch-1")
     Catalog.registerAll(spark, cat, Seq(("bm25impact", "k", impact, "epoch-2"),
       ("ivf", "k", ivf, "epoch-2")))
-    scratch ++= Seq(impact, raw, ivf, lines, phrase, sig, phash, kn, cat)
+    // an upsert store: two delivered batches
+    val store = tmp("graft_layout_upsert")
+    UpsertSink.writeBatch(docs.filter($"doc_id" <= cut), store, 1L, Seq("doc_id"))
+    UpsertSink.writeBatch(docs.filter($"doc_id" > cut), store, 2L, Seq("doc_id"))
+    scratch ++= Seq(impact, raw, ivf, lines, phrase, sig, phash, kn, cat, store)
     Seq(IndexLayout.ImpactBm25 -> Lake.currentVersionDir(spark, impact).get,
       IndexLayout.RawBm25 -> raw, IndexLayout.Ivf -> ivf, IndexLayout.Pq -> ivf,
       IndexLayout.Lines -> lines, IndexLayout.Phrase -> phrase, IndexLayout.DedupSig -> sig,
-      IndexLayout.Phash -> phash, IndexLayout.KnCounts -> kn, IndexLayout.Manifest -> cat)
+      IndexLayout.Phash -> phash, IndexLayout.KnCounts -> kn, IndexLayout.Manifest -> cat,
+      IndexLayout.BatchLog -> store)
   }
 
   private val scratch = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -137,7 +142,7 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("local: every metadata directory reads on the driver the rows the declared read collects, with no job") {
     assert(built.flatMap(_._1.meta).toSet == Set("stats", "stats_log", "commits", "centroids",
-      "deletes", "pq/books", "pq/commits", "manifest"))
+      "deletes", "pq/books", "pq/commits", "manifest", "batch_log"))
     for ((layout, root) <- built; dir <- layout.meta) {
       // Spark's writers leave _SUCCESS and checksum files next to the data
       val names = new java.io.File(s"$root/$dir").list().toSeq
@@ -395,11 +400,11 @@ class IndexLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
         java.nio.file.Files.readAllLines(p).asScala.take(n).reverse
           .find(_.trim.startsWith("def ")).exists(_.contains("def ivfRetrain")) },
       s"partition rewrites go through IndexLayout.Appendable.rewrite: $overwrites")
-    val metaReads = "read\\s*\\.\\s*parquet\\([^)]*/(commits|deletes|stats_log|manifest)".r
+    val metaReads = "read\\s*\\.\\s*parquet\\([^)]*/(commits|deletes|stats_log|manifest|batch_log)".r
     val offenders = sources.filter(p => metaReads.findFirstIn(java.nio.file.Files.readString(p))
       .isDefined)
-    assert(offenders.isEmpty, "commit logs, tombstones and the catalog manifest are read " +
-      s"through IndexLayout: ${offenders.mkString(", ")}")
+    assert(offenders.isEmpty, "commit logs, tombstones, the catalog manifest and the upsert " +
+      s"batch log are read through IndexLayout: ${offenders.mkString(", ")}")
     // the catalog names its manifest directory by a constant: it reads
     // no parquet but through its declared layout
     val catalog = sources.find(_.getFileName.toString == "Catalog.scala").get

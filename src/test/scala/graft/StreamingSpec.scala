@@ -1413,6 +1413,46 @@ class StreamingSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
   }
 
+  test("E14 upsert sink retry: an interrupt runs the body once and rethrows without sleeping") {
+    val delayMs = 2000L
+    var runs = 0
+    val t0 = System.nanoTime()
+    intercept[InterruptedException] {
+      graft.sources.UpsertSink.withRetry(maxAttempts = 3, initialDelayMs = delayMs) {
+        runs += 1
+        throw new InterruptedException("delivery interrupted")
+      }
+    }
+    val ms = (System.nanoTime() - t0) / 1000000
+    assert(runs == 1, s"an interrupted delivery must not retry: $runs runs")
+    assert(ms < delayMs, s"an interrupted delivery must not back off: $ms ms")
+    // a transient failure still backs off and retries
+    var tries = 0
+    val out = graft.sources.UpsertSink.withRetry(maxAttempts = 3, initialDelayMs = 1) {
+      tries += 1
+      if (tries < 3) throw new java.io.IOException("transient") else tries
+    }
+    assert(out == 3)
+  }
+
+  test("E14 upsert sink: a crash before the store's first commit is re-driven to one landing") {
+    val s = spark
+    import s.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft_sink_first").toString
+    // the first attempt writes rows but no batch_log exists yet; the
+    // retry must read that as "nothing committed" and land the batch
+    val failures = new java.util.concurrent.atomic.AtomicInteger(1)
+    graft.sources.UpsertSink.writeBatch(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), store, 0L,
+      Seq("k"), initialDelayMs = 1, beforeCommit = () =>
+        if (failures.getAndDecrement() > 0) throw new java.io.IOException("torn first batch"))
+    assert(failures.get() <= 0, "the injected failure must actually have fired")
+    val got = graft.sources.UpsertSink.committedRows(s, store)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(got == Set((1L, "a"), (2L, "b")))
+    assert(graft.sources.UpsertSink.appliedBatches(s, store) == Set(0L))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
+  }
+
   test("E2 batch analogue agrees with B8 declarative sessionization on session counts") {
     val typed = Streams.streamSessionize(spark, sf)
     val sql = operators.Analytics.sessionize(spark, sf)

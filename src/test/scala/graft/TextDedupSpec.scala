@@ -364,16 +364,33 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("dedup_cluster_star: 1000-node chain contracts in logarithmic rounds") {
     import spark.implicits._
-    // the adversarial shape for label propagation: one 1000-link chain
-    // (diameter 999 — LP would need ~999 rounds). The star contraction
-    // must collapse it to cluster 0 within 15 rounds, or the labels
-    // come out wrong and the asserts below fail.
+    // the adversarial shape for neighbor-min propagation: one 1000-link
+    // chain (diameter 999 — ~999 rounds). The star contraction must
+    // collapse it to cluster 0 within 15 rounds, or it throws.
     val chain = (0L until 999L).map(i => (i, i + 1)).toDF("id1", "id2")
     val out = operators.NearDup.starContract(chain, maxIters = 15)
     assert(out.count() == 1000)
     assert(out.filter(col("cluster_id") =!= 0L).count() == 0,
       "chain did not fully contract to its minimum")
     assert(out.filter(col("is_keeper")).collect().map(_.getLong(0)).toSeq == Seq(0L))
+  }
+
+  /** Driver-side ground truth: union-find that always roots at the
+    * component minimum — (node, component min) for every edge endpoint. */
+  private def unionFind(edges: Seq[(Long, Long)]): Set[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(x => (x, find(x))).toSet
   }
 
   test("dedup_cluster_star: equals driver-side union-find on seeded random graphs") {
@@ -384,32 +401,42 @@ class TextDedupSpec extends AnyFunSuite {
       val edges = (1 to nEdges)
         .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(e => e._1 != e._2)
-      // ground truth: union-find that always roots at the component min
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(x => (x, find(x.toInt).toLong)).toSet
       val out = operators.NearDup.starContract(edges.toDF("id1", "id2"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(out == expected, s"graph(n=$n, e=$nEdges) labels diverge from union-find")
+      assert(out == unionFind(edges), s"graph(n=$n, e=$nEdges) labels diverge from union-find")
     }
   }
 
-  test("dedup_cluster_star: agrees with label propagation on the corpus pair graph") {
-    val lp = operators.NearDup.dedupCluster(spark, sf)
-    val star = operators.NearDup.dedupClusterStar(spark, sf)
-    assert(lp.exceptAll(star).count() == 0 && star.exceptAll(lp).count() == 0,
-      "star contraction and label propagation disagree on cluster labels")
+  test("dedup_cluster equals driver-side union-find on the corpus pair graph") {
+    val pairs = operators.NearDup.ngramJaccardDedup(spark, sf)
+      .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val labels = operators.NearDup.dedupCluster(spark, sf)
+      .select("doc_id", "cluster_id").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.nonEmpty)
+    assert(labels.length == labels.toSet.size, "one row per clustered doc")
+    assert(labels.toSet == unionFind(pairs), "cluster labels diverge from union-find")
+  }
+
+  test("dedup_cluster: a long near-dup path closes into one cluster with one keeper") {
+    import spark.implicits._
+    // doc i = tokens p_i … p_{i+9}: docs 1 and 2 apart share 7/9 and
+    // 6/10 of their word 3-shingles (Jaccard ≥ 0.5), docs 3 apart only
+    // 5/11 — so the 40 docs and their twins form ONE cluster whose pair
+    // graph has diameter 20, beyond any fixed small number of rounds
+    val lake = java.nio.file.Files.createTempDirectory("graft_dedup_path").toFile
+    try {
+      (0 until 40).map(i => (i.toLong, (i until i + 10).map(j => s"p$j").mkString(" ")))
+        .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$lake/documents.parquet")
+      val dir = lake.getAbsolutePath
+      val cl = operators.NearDup.dedupCluster(spark, dir).collect()
+      assert(cl.length == 80, "every doc and twin is clustered")
+      assert(cl.map(_.getAs[Long]("cluster_id")).toSet == Set(0L),
+        "the path must close into the cluster of its minimum")
+      assert(cl.filter(_.getAs[Boolean]("is_keeper")).map(_.getAs[Long]("doc_id")).toSeq == Seq(0L))
+      val kb = operators.NearDup.dedupKeepBest(spark, dir).collect()
+      assert(kb.length == 80 && kb.map(_.getAs[Long]("cluster_id")).toSet == Set(0L))
+      assert(kb.count(_.getAs[Boolean]("keep")) == 1, "keep-best keeps one doc of the path")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(lake)
   }
 
   test("dedup_keep_best: one keeper per cluster, argmax quality, full corpus coverage") {
